@@ -100,14 +100,8 @@ class CheckpointStore:
         state.write.mode("overwrite").parquet(path)
         return state.sparkSession.read.parquet(path)
 
-    def log(self, superstep: int, state: DataFrame, metrics: dict) -> None:
-        entry = {
-            "superstep": superstep,
-            "rows": state.count(),
-            "partitions": state.rdd.getNumPartitions(),
-            "metrics": metrics,
-            "ts": time.time(),
-        }
+    def log(self, superstep: int, rows: int, metrics: dict) -> None:
+        entry = {"superstep": superstep, "rows": rows, "metrics": metrics, "ts": time.time()}
         with open(self.ledger_path, "a") as f:
             f.write(json.dumps(entry) + "\n")
             f.flush()
@@ -188,7 +182,7 @@ def run_supersteps(
                 materialized = store.write_state(ss, materialized)
                 on_disk = True
             if on_disk:
-                store.log(ss, materialized, metrics)
+                store.log(ss, materialized.count(), metrics)
         metrics["superstep_sec"] = time.time() - t0
         metrics["superstep"] = ss
         log.append(metrics)

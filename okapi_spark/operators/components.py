@@ -25,6 +25,8 @@ Spark plan per superstep — two physical strategies, same fixpoint:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -37,167 +39,52 @@ from okapi_spark.plans.broadcast import auto_state_broadcast
 BROADCAST_FRONTIER_ROWS = 2_000_000
 
 
-def _cc_pack(edges_pdf):
-    """Per-partition pack for the staged csr blocks: edges sorted by
-    dst so the kernel's per-dst min is a segment-reduce."""
-    import numpy as np
+def relax_min(vals, changed, spos, dpos, w=None):
+    """One send-on-change min-relaxation round over one dst-sorted block
+    (HashMin with ``w=None``, shortest paths with edge weights ``w``):
+    only edges whose src changed last round send, the dst-sorted layout
+    survives the mask, and per-dst minima are a ``minimum.reduceat``.
+    Returns (dst positions, candidate minima)."""
+    valid = changed[spos]
+    if not valid.any():
+        return dpos[:0], vals[:0]
+    dst_v = dpos[valid]
+    cand_v = vals[spos[valid]] if w is None else vals[spos[valid]] + w[valid]
+    starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
+    return dst_v[starts], np.minimum.reduceat(cand_v, starts)
 
-    dst = edges_pdf["dst"].to_numpy()
-    order = np.argsort(dst, kind="stable")
-    return {
-        "dst": dst[order].astype("int64", copy=False),
-        "src": edges_pdf["src"].to_numpy()[order].astype("int64", copy=False),
-    }
+
+def apply_min(vals, parts):
+    """Merge ``relax_min`` parts: a vertex takes a candidate only when it
+    improves (exact min). Returns (new values, changed mask)."""
+    new, changed = vals.copy(), np.zeros(len(vals), dtype=bool)
+    for tgt, cand in parts:
+        m = cand < vals[tgt]
+        new[tgt[m]] = cand[m]
+        changed[tgt[m]] = True
+    return new, changed
 
 
-def _csr_min_comp(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    frontier: DataFrame, bcast_slot: list, n_rows: int,
-) -> DataFrame:
-    """HashMin scatter over RESIDENT staged CSR blocks (same design as
-    lpa/pagerank mode='csr', plans/csr_blocks.py): the SHRINKING
-    changed-frontier ships as two sorted NumPy arrays via
-    ``sc.broadcast``; each superstep is a P-row mapInPandas job that
-    memmaps its dst-sorted block, gathers the frontier comps into the
-    edges whose src IS on the frontier (sparse searchsorted gather —
-    send-on-change falls out of the mask), and emits per-dst minima
-    via ``np.minimum.reduceat``. Zero exchange, zero edge rescan."""
-    import pandas as pd
+def _hashmin_fixpoint(graph: Graph):
+    """csr spec of HashMin in position space: comp[i] is the position
+    of the smallest id reached — ids are sorted, so min position IS min
+    id. Staged on the shared weighted block set (the weight is unused)."""
+    from okapi_spark.plans.csr_fixpoint import Fixpoint
 
-    from okapi_spark.operators.pagerank import _gather_state_arrays
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
+    def merge(state, parts):
+        comp, changed = apply_min(state["comp"], parts)
+        return {"comp": comp, "changed": changed}, {"changed": int(np.count_nonzero(changed))}
 
-    b = spark.sparkContext.broadcast(
-        _gather_state_arrays(frontier, n_rows=n_rows, value_col="comp", value_dtype="int64")
+    return Fixpoint(
+        "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w")),
+        lambda ids: {"comp": np.arange(len(ids)), "changed": np.ones(len(ids), dtype=bool)},
+        lambda st, blk, res: relax_min(st["comp"], st["changed"], res["spos"], res["dpos"]),
+        merge,
+        lambda ids, st: pd.DataFrame({"id": ids, "comp": ids[st["comp"]]}),
+        "id long, comp long",
+        halt=lambda m, history: m["changed"] == 0,
+        id_cols=("comp",),
     )
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("cc", epoch, int(pid), block_dir)
-                sid, scomp = b.value
-                if blk is None or len(blk["dst"]) == 0 or len(sid) == 0:
-                    continue
-                src, dst = blk["src"], blk["dst"]
-                pos = np.searchsorted(sid, src)
-                np.clip(pos, 0, len(sid) - 1, out=pos)
-                valid = sid[pos] == src  # src on the changed frontier
-                if not valid.any():
-                    continue
-                dst_v = dst[valid]  # dst-sorted layout survives the mask
-                comp_v = scomp[pos[valid]]
-                starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
-                cand = np.minimum.reduceat(comp_v, starts)
-                yield pd.DataFrame({"id": dst_v[starts], "cand": cand})
-
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="id long, cand long"
-    )
-
-
-def _cc_csr_fused(
-    spark, graph, vertices, n, max_supersteps, num_partitions, ensure_staged, n_edges,
-) -> BSPResult:
-    """The whole HashMin fixpoint in ONE Spark job (round 6; the same
-    fuse-the-supersteps move as PageRank's ``_pagerank_csr_fused``):
-    a single task holds every memoized staged block, so it iterates
-    rounds locally — frontier gather, per-dst ``minimum.reduceat``,
-    merge — until a round changes nothing, instead of paying the
-    per-round job floor. Integer min everywhere: the fixpoint and the
-    per-round changed counts are bit-identical to every other plan."""
-    import time
-
-    import numpy as np
-    import pandas as pd
-
-    from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.pagerank import _ids_sorted
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame, resolved_arrays
-
-    bdir, epoch = ensure_staged()
-    ids = _ids_sorted(graph, vertices, n)
-    b = spark.sparkContext.broadcast(ids)
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        sid = b.value
-        nn = len(sid)
-        comp = sid.copy()  # initial component = own id
-        changed = np.ones(nn, dtype=bool)  # round-0 frontier = all
-        blocks = []
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("cc", epoch, int(pid), bdir)
-                if blk is not None and len(blk["dst"]):
-                    # frontier gather positions are round- AND
-                    # call-invariant — memoized as sidecar files
-                    res = resolved_arrays(
-                        "cc", epoch, int(pid), bdir, ["spos"],
-                        lambda: {"spos": np.searchsorted(sid, blk["src"])},
-                    )
-                    blocks.append((res["spos"], blk["dst"]))
-        mets = []
-        for _ss in range(max_supersteps):
-            t0 = time.time()
-            new_comp = comp.copy()
-            new_changed = np.zeros(nn, dtype=bool)
-            for spos, dst in blocks:
-                valid = changed[spos]
-                if not valid.any():
-                    continue
-                dst_v = dst[valid]  # dst-sorted layout survives the mask
-                comp_v = comp[spos[valid]]
-                starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
-                cand = np.minimum.reduceat(comp_v, starts)
-                tgt = np.searchsorted(sid, dst_v[starts])
-                m = cand < comp[tgt]
-                new_comp[tgt[m]] = cand[m]
-                new_changed[tgt[m]] = True
-            comp, changed = new_comp, new_changed
-            n_changed = int(np.count_nonzero(changed))
-            mets.append((n_changed, time.time() - t0))
-            if n_changed == 0:
-                break
-        yield pd.DataFrame({
-            "comp": [comp.tobytes()],
-            "metrics": [np.asarray(mets, dtype="float64").tobytes()],
-        })
-
-    with no_adaptive(spark):
-        try:
-            row = (
-                pid_frame(spark, num_partitions, 1)
-                .mapInPandas(kernel, schema="comp binary, metrics binary")
-                .collect()[0]
-            )
-        finally:
-            b.destroy()
-    comp = np.frombuffer(row.comp, dtype="int64")
-    mets = np.frombuffer(row.metrics, dtype="float64").reshape(-1, 2)
-    log = []
-    converged = False
-    for ss in range(mets.shape[0]):
-        c = int(mets[ss, 0])
-        halted = c == 0
-        log.append({
-            "changed": c,
-            "edges_processed": n_edges,
-            "_halted": halted,
-            "superstep_sec": float(mets[ss, 1]),
-            "superstep": ss,
-        })
-        if halted:
-            converged = True
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "comp": comp}), schema="id long, comp long"
-    )
-    return BSPResult(state, (log[-1]["superstep"] + 1) if log else 0, converged, log)
 
 
 def connected_components(
@@ -219,14 +106,13 @@ def connected_components(
     the previous superstep's changed-metric) drops below
     ``BROADCAST_FRONTIER_ROWS``.
 
-    ``mode="auto"`` (default, round 6): the fused staged-kernel loop
-    (whole fixpoint in one Spark job over memoized CSR blocks, see
-    ``_cc_csr_fused``) when byte-safe and |E| is inside the fuse
-    window; else "sql". HashMin is integer min, so every plan reaches
-    the bit-identical fixpoint.
+    ``mode="auto"`` (default, round 6): "csr" when byte-safe, without
+    a store and with |E| inside the fuse window (the whole fixpoint in
+    one Spark job); else "sql". HashMin is integer min, so every plan
+    reaches the bit-identical fixpoint.
 
-    ``mode="csr"``: HashMin over resident staged CSR blocks (see
-    ``_csr_min_comp``) — identical fixpoint, parity-tested; gated by
+    ``mode="csr"``: HashMin on the csr fixpoint runner
+    (plans/csr_fixpoint.py) over resident staged CSR blocks — gated by
     the same broadcast byte budget since the round-0 frontier is |V|
     rows.
     """
@@ -241,11 +127,11 @@ def connected_components(
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if mode == "auto":
-        from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
+        from okapi_spark.plans import csr_fixpoint as fx
 
         fusable = (
             store is None
-            and graph.num_edges() <= _FUSE_MAX_EDGES
+            and graph.num_edges() <= fx._FUSE_MAX_EDGES
             and auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
         )
         mode = "csr" if fusable else "sql"
@@ -266,56 +152,14 @@ def connected_components(
             "(state_broadcast=False) at cluster-scale |V|."
         )
 
+    if mode == "csr":
+        from okapi_spark.plans import csr_fixpoint as fx
+
+        return fx.run(graph, _hashmin_fixpoint(graph), max_supersteps, num_partitions, store)
+
     n_edges = graph.num_edges()
     restore_fn = None
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-
-    epoch = next(_EPOCH_COUNTER)
-    bcast_slot: list = [None]
-    if mode == "csr":
-        # dst-hashed block layout; staged lazily on first superstep
-        # (plans/csr_blocks.py — see lpa.py mode='csr' for the design),
-        # MEMOIZED on the Graph (round 6, like by_dst/pr_blocks)
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, cleanup_blocks, default_block_dir, stage_blocks,
-        )
-
-        # stage WIDE (one block per partition); supersteps run over
-        # fewer tasks when the graph is small (see pid_frame)
-        k_tasks = choose_task_count(n_edges, num_partitions)
-
-        def _stage() -> tuple[str, int]:
-            edges_by_pid = (
-                graph.edges.select("src", "dst")
-                .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int"))
-                .repartition(num_partitions, "pid")
-            )
-            bdir = default_block_dir(spark)
-            with no_adaptive(spark):
-                staged = stage_blocks(
-                    edges_by_pid, num_partitions, _cc_pack, "cc", epoch, bdir
-                )
-            assert staged == n_edges, f"staged {staged} edge rows != |E|={n_edges}"
-            return bdir, epoch
-
-        def ensure_staged() -> tuple[str, int]:
-            return graph.derived(
-                ("cc_blocks", num_partitions),
-                _stage,
-                cleanup=lambda v: cleanup_blocks(v[0]),
-            )
-
-        if store is None:
-            from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
-
-            if n_edges <= _FUSE_MAX_EDGES:
-                return _cc_csr_fused(
-                    spark, graph, vertices, n, max_supersteps, num_partitions,
-                    ensure_staged, n_edges,
-                )
-
-        state0 = vertices.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
-    elif state_broadcast:
+    if state_broadcast:
         # dst-partitioned scatter layout: frontier broadcast + partition-
         # complete min-agg ⇒ zero shuffle exchanges per superstep
         edges = graph.by_dst(num_partitions).select("src", "dst")
@@ -363,14 +207,7 @@ def connected_components(
     last_changed = [n]
 
     def superstep(ss: int, state: DataFrame):
-        if mode == "csr":
-            bdir, staged_epoch = ensure_staged()
-            msgs = _csr_min_comp(
-                spark, num_partitions, k_tasks, staged_epoch, bdir,
-                state.filter("changed").select("id", "comp"),
-                bcast_slot, n_rows=last_changed[0],
-            )
-        elif state_broadcast or last_changed[0] <= frontier_broadcast_rows:
+        if state_broadcast or last_changed[0] <= frontier_broadcast_rows:
             frontier = F.broadcast(
                 state.filter("changed").select(F.col("id").alias("src"), "comp")
             )
@@ -386,9 +223,8 @@ def connected_components(
                 state.filter("changed"), "src", "comp"
             ).hint("shuffle_hash")
             joined = edges.join(frontier, ["src", "salt"])
-        if mode != "csr":
-            msgs = joined.groupBy(F.col("dst").alias("id")).agg(F.min("comp").alias("cand"))
-        keep = [state["nsalt"]] if (mode == "sql" and not state_broadcast) else []
+        msgs = joined.groupBy(F.col("dst").alias("id")).agg(F.min("comp").alias("cand"))
+        keep = [] if state_broadcast else [state["nsalt"]]
         new_state = state.join(msgs, "id", "left").select(
             "id",
             F.least("comp", F.coalesce("cand", "comp")).alias("comp"),
@@ -405,7 +241,7 @@ def connected_components(
 
     from contextlib import nullcontext
 
-    with no_adaptive(spark) if (state_broadcast or mode == "csr") else nullcontext():
+    with no_adaptive(spark) if state_broadcast else nullcontext():
         res = run_supersteps(
             state0,
             superstep,
@@ -415,7 +251,4 @@ def connected_components(
             restore_fn=restore_fn,
         )
     res.state = res.state.select("id", "comp")
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     return res

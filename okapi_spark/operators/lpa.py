@@ -22,8 +22,11 @@ deterministic via hash-derived per-(vertex, round) uniforms.
 
 from __future__ import annotations
 
+import hashlib
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -31,22 +34,6 @@ from pyspark.storagelevel import StorageLevel
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
 from okapi_spark.plans.broadcast import auto_state_broadcast
 from okapi_spark.graph.graph import Graph
-
-
-def _lpa_pack(edges_pdf):
-    """Per-partition CSR pack (runs once, inside ``stage_blocks``):
-    edges sorted by dst so the kernel's fused-key sort sees grouped
-    runs. Stable sort preserves the incoming row order within a dst —
-    the same float-accumulation order the unstaged kernel had."""
-    import numpy as np
-
-    dst = edges_pdf["dst"].to_numpy()
-    order = np.argsort(dst, kind="stable")
-    return {
-        "dst": dst[order].astype("int64", copy=False),
-        "src": edges_pdf["src"].to_numpy()[order].astype("int64", copy=False),
-        "w": edges_pdf["weight"].to_numpy()[order].astype("float64", copy=False),
-    }
 
 
 def _block_label_hist(blk, sid, slbl):
@@ -79,74 +66,9 @@ def _block_label_hist(blk, sid, slbl):
     return g_dst[grp], g_lbl[grp], sums
 
 
-def _lpa_block_argmax(blk, sid, slbl):
-    """Pure-NumPy LPA superstep over one packed block: the
-    ``_block_label_hist`` histogram followed by the per-dst argmax.
-
-    Tie semantics match ``_argmax_label`` exactly: max summed weight,
-    then smallest label. (Weight sums are compared as float64 in both
-    plans.) Returns (dst ids, best labels)."""
-    import numpy as np
-
-    grp_dst, grp_lbl, sums = _block_label_hist(blk, sid, slbl)
-    # per-dst argmax with min-label tie-break over the group sums
-    dgrp = np.flatnonzero(np.r_[True, grp_dst[1:] != grp_dst[:-1]])
-    wmax = np.maximum.reduceat(sums, dgrp)
-    # broadcast each dst's max back over its groups
-    seg_id = np.zeros(len(sums), dtype=np.int64)
-    seg_id[dgrp[1:]] = 1
-    seg_id = np.cumsum(seg_id)
-    is_max = sums == wmax[seg_id]
-    cand = np.where(is_max, grp_lbl, np.iinfo(np.int64).max)
-    best = np.minimum.reduceat(cand, dgrp)
-    return grp_dst[dgrp], best
-
-
-def _csr_best_labels(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    state: DataFrame, bcast_slot: list, n_rows: int,
-) -> DataFrame:
-    """North-rule kernel superstep over RESIDENT CSR blocks: the edge
-    layout (pmod(xxhash64(dst), P) — every in-edge of a dst lives in
-    ONE partition, so the per-dst argmax is FINAL, zero message
-    exchange) was packed and staged ONCE by ``csr_blocks.stage_blocks``;
-    each superstep is a P-row ``mapInPandas`` job whose tasks load
-    block i from the worker-global cache (or the page-cached block
-    file) — ZERO edge bytes cross the JVM↔Arrow boundary per superstep,
-    which was the unstaged form's 5-8× absolute-throughput tax
-    (BENCH.md "LPA csr kernel"). The only per-superstep traffic is the
-    label state, shipped as two sorted NumPy arrays via
-    ``sc.broadcast``."""
-    import pandas as pd
-
-    from okapi_spark.operators.pagerank import _gather_state_arrays
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    b = spark.sparkContext.broadcast(
-        _gather_state_arrays(state, n_rows=n_rows, value_col="lbl", value_dtype="int64")
-    )
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
-
-    def kernel(pdf_iter):
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("lpa", epoch, int(pid), block_dir)
-                if blk is None or len(blk["dst"]) == 0:
-                    continue
-                sid, slbl = b.value
-                ids, best = _lpa_block_argmax(blk, sid, slbl)
-                yield pd.DataFrame({"id": ids, "new_lbl": best})
-
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="id long, new_lbl long"
-    )
-
-
 def _csr_label_hist(
     spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    state: DataFrame, bcast_slot: list, n_rows: int, tag: str = "spin",
+    state: DataFrame, bcast_slot: list, n_rows: int, tag: str,
 ) -> DataFrame:
     """Spinner's ComputeNewPartition histogram over RESIDENT staged CSR
     blocks: emits the full (dst, neighbor-partition, Σw) table — the
@@ -158,12 +80,11 @@ def _csr_label_hist(
     JVM hash-agg path. Zero exchange, zero edge rescan."""
     import pandas as pd
 
-    from okapi_spark.operators.pagerank import _gather_state_arrays
+    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
     from okapi_spark.plans.csr_blocks import load_block, pid_frame
 
-    b = spark.sparkContext.broadcast(
-        _gather_state_arrays(state, n_rows=n_rows, value_col="lbl", value_dtype="int64")
-    )
+    ids, (lbl,) = gather_sorted_arrays(state, n_rows, [("lbl", "int64")])
+    b = spark.sparkContext.broadcast((ids, lbl))
     if bcast_slot[0] is not None:
         bcast_slot[0].destroy()
     bcast_slot[0] = b
@@ -187,7 +108,7 @@ def _csr_label_hist(
 
 def _csr_active_dsts(
     spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    moved: DataFrame, bcast_slot: list, n_rows: int, tag: str = "spin",
+    moved: DataFrame, bcast_slot: list, n_rows: int, tag: str,
 ) -> DataFrame:
     """Spinner's isActive gating over RESIDENT staged blocks: the set
     of vertices with at least one migrated in-neighbor (the sql plan's
@@ -196,10 +117,10 @@ def _csr_active_dsts(
     per-block distinct is globally distinct — no exchange needed."""
     import pandas as pd
 
-    from okapi_spark.operators.pagerank import _gather_sorted_arrays
+    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
     from okapi_spark.plans.csr_blocks import load_block, pid_frame
 
-    mv_ids, _ = _gather_sorted_arrays(moved, n_rows, [])
+    mv_ids, _ = gather_sorted_arrays(moved, n_rows, [])
     b = spark.sparkContext.broadcast(mv_ids)
     if bcast_slot[0] is not None:
         bcast_slot[0].destroy()
@@ -227,120 +148,59 @@ def _csr_active_dsts(
     return pid_frame(spark, num_blocks, num_tasks).mapInPandas(kernel, schema="id long")
 
 
-def _lpa_csr_fused(
-    spark, graph, vertices, n, iterations, num_partitions, ensure_staged,
-) -> BSPResult:
-    """Fixed-iteration LPA in ONE Spark job (round 6; the same
-    fuse-the-supersteps move as PageRank's ``_pagerank_csr_fused``,
-    gated on |E| ≤ its ``_FUSE_MAX_EDGES``): a single task holds every
-    memoized staged block — together they own every in-edge — so it
-    runs all rounds locally instead of paying the per-round mapInPandas
-    job floor. Per-round math is ``_lpa_block_argmax`` verbatim, so the
-    labels are bit-identical to the per-round csr loop (and to the sql
-    plans on the parity-tested shapes)."""
-    import time
+def _lpa_step(state, blk, res):
+    """One LPA round over one staged block in POSITION space: labels are
+    positions into the sorted id array, so index order IS id order and
+    the min-label tie-break carries over unchanged. The fused
+    (dst, label) group key fits 32 bits for |V| ≤ 46340, where numpy's
+    argsort is ~8x faster than on int64 keys (measured 0.05s vs 0.42s
+    on a 2.4M-edge block set; the per-round sort is the hot loop).
+    Histogram by sort + ``add.reduceat``, then the per-dst argmax: max
+    summed weight, ties to the smallest label. Returns (dsts, labels)."""
+    lbl = state["lbl"]
+    nn = len(lbl)
+    key = res["dpos"] * nn + lbl[res["spos"]]
+    order = np.argsort(key.astype(np.int32) if nn <= 46340 else key)
+    g_key = key[order]
+    grp = np.flatnonzero(np.r_[True, g_key[1:] != g_key[:-1]])
+    sums = np.add.reduceat(blk["w"][order], grp)
+    grp_dst = g_key[grp] // nn
+    grp_lbl = g_key[grp] - grp_dst * nn
+    dgrp = np.flatnonzero(np.r_[True, grp_dst[1:] != grp_dst[:-1]])
+    wmax = np.maximum.reduceat(sums, dgrp)
+    is_max = sums == np.repeat(wmax, np.diff(np.r_[dgrp, len(sums)]))
+    cand = np.where(is_max, grp_lbl, np.iinfo(np.int64).max)
+    return grp_dst[dgrp], np.minimum.reduceat(cand, dgrp)
 
-    import numpy as np
-    import pandas as pd
 
-    from okapi_spark.operators.pagerank import _ids_sorted
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
+def _lpa_fixpoint(graph: Graph, weighted: bool, converge: bool):
+    """csr spec of classic LPA. Convergence mode halts on no change or
+    on an exact repeat of the label state (digest of the label array,
+    only computed in that mode — fixed-iteration runs have no halt)."""
+    from okapi_spark.plans.csr_fixpoint import Fixpoint
 
-    from okapi_spark.plans.csr_blocks import resolved_arrays
+    w_col = F.col("weight") if weighted else F.lit(1.0)
 
-    bdir, epoch = ensure_staged()
-    ids = _ids_sorted(graph, vertices, n)
-    b = spark.sparkContext.broadcast(ids)
+    def merge(state, parts):
+        lbl = state["lbl"]
+        new = lbl.copy()
+        for dst, best in parts:
+            new[dst] = best
+        m = {"changed": int(np.count_nonzero(new != lbl))}
+        if converge:
+            digest = hashlib.blake2b(new.tobytes(), digest_size=8).digest()
+            m["state_hash"] = int.from_bytes(digest, "little", signed=True)
+        return {"lbl": new}, m
 
-    def kernel(pdf_iter):
-        import numpy as np
+    def halt(m, history):
+        return m["changed"] == 0 or any(h.get("state_hash") == m["state_hash"] for h in history)
 
-        sid = b.value
-        nn = len(sid)
-        # work in INDEX space: labels as positions into the sorted id
-        # array. sid is ascending, so index order IS id order — the
-        # min-label tie-break carries over unchanged — and the fused
-        # (dst_idx, lbl_idx) group key fits 32 bits for nn ≤ 46340,
-        # where numpy's argsort is ~8x faster than on int64 keys
-        # (measured 0.05s vs 0.42s on the 2.4M-edge bench block set;
-        # the per-round sort is this kernel's hot loop).
-        lbl = np.arange(nn, dtype=np.int64)  # initial label = own id
-        blocks = []
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("lpa", epoch, int(pid), bdir)
-                if blk is not None and len(blk["dst"]):
-                    # gather/scatter positions are round- AND
-                    # call-invariant — memoized as sidecar files
-                    # (resolved_arrays; measured 0.42s/call re-resolve)
-                    res = resolved_arrays(
-                        "lpa", epoch, int(pid), bdir, ["spos", "dpos"],
-                        lambda: {
-                            "spos": np.searchsorted(sid, blk["src"]),
-                            "dpos": np.searchsorted(sid, blk["dst"]).astype(np.int64),
-                        },
-                    )
-                    blocks.append((res["spos"], res["dpos"], blk["w"]))
-        use32 = nn <= 46340  # nn² < 2^31
-        mets = []
-        for _ss in range(iterations):
-            t0 = time.time()
-            new = lbl.copy()
-            for spos, dpos, w in blocks:
-                key = dpos * nn + lbl[spos]
-                order = np.argsort(key.astype(np.int32) if use32 else key)
-                g_key = key[order]
-                g_w = w[order]
-                grp = np.flatnonzero(np.r_[True, g_key[1:] != g_key[:-1]])
-                sums = np.add.reduceat(g_w, grp)
-                grp_dst = g_key[grp] // nn
-                grp_lbl = g_key[grp] - grp_dst * nn
-                # per-dst argmax, min-label tie-break (same math as
-                # _lpa_block_argmax, in index space)
-                dgrp = np.flatnonzero(np.r_[True, grp_dst[1:] != grp_dst[:-1]])
-                wmax = np.maximum.reduceat(sums, dgrp)
-                seg_id = np.zeros(len(sums), dtype=np.int64)
-                seg_id[dgrp[1:]] = 1
-                seg_id = np.cumsum(seg_id)
-                is_max = sums == wmax[seg_id]
-                cand = np.where(is_max, grp_lbl, np.iinfo(np.int64).max)
-                best = np.minimum.reduceat(cand, dgrp)
-                new[grp_dst[dgrp]] = best
-            changed = int(np.count_nonzero(new != lbl))
-            lbl = new
-            mets.append((changed, time.time() - t0))
-        yield pd.DataFrame({
-            "labels": [sid[lbl].tobytes()],
-            "metrics": [np.asarray(mets, dtype="float64").tobytes()],
-        })
-
-    with no_adaptive(spark):
-        try:
-            row = (
-                pid_frame(spark, num_partitions, 1)
-                .mapInPandas(kernel, schema="labels binary, metrics binary")
-                .collect()[0]
-            )
-        finally:
-            b.destroy()
-    import numpy as np
-    import pandas as pd
-
-    lbl = np.frombuffer(row.labels, dtype="int64")
-    mets = np.frombuffer(row.metrics, dtype="float64").reshape(-1, 2)
-    log = [
-        {
-            "changed": int(mets[ss, 0]),
-            "_halted": False,
-            "superstep_sec": float(mets[ss, 1]),
-            "superstep": ss,
-        }
-        for ss in range(mets.shape[0])
-    ]
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "lbl": lbl}), schema="id long, lbl long"
+    return Fixpoint(
+        "w" if weighted else "w1", lambda: graph.edges.select("src", "dst", w_col.alias("w")),
+        lambda ids: {"lbl": np.arange(len(ids))}, _lpa_step, merge,
+        lambda ids, st: pd.DataFrame({"id": ids, "lbl": ids[st["lbl"]]}),
+        "id long, lbl long", halt=halt if converge else None, id_cols=("lbl",),
     )
-    return BSPResult(state, iterations, False, log)
 
 
 def _argmax_label(msgs: DataFrame, key: str = "id") -> DataFrame:
@@ -376,19 +236,17 @@ def label_propagation(
     classic two-shuffle plan runs (state shuffles into the src join,
     histogram agg combines map-side).
 
-    ``mode="auto"`` (default, round 6): the fused staged-kernel loop
-    (all rounds in one Spark job over memoized CSR blocks — see
-    ``_lpa_csr_fused``) when it is measured-better and byte-safe:
-    fixed-iteration runs without a store, |E| within the fuse window,
+    ``mode="auto"`` (default, round 6): "csr" when it is
+    measured-better and byte-safe — fixed-iteration runs without a
+    store, |E| within the fuse window (all rounds in one Spark job),
     label state within the broadcast budget. Everything else resolves
-    to "sql". Kernel math is shared with mode="csr", so results are
-    bit-identical to it (and parity-tested against sql).
+    to "sql".
 
-    ``mode="csr"``: partition-local sparse gather-scatter over
-    CSR-packed adjacency blocks (see ``_csr_best_labels``) — the
+    ``mode="csr"``: LPA on the csr fixpoint runner
+    (plans/csr_fixpoint.py) over resident staged CSR blocks — the
     north-rule physical form. Identical results to the sql plans
     (parity-tested); same byte gate as the broadcast plan since the
-    label state is NumPy-broadcast each superstep.
+    label state is NumPy-broadcast.
     """
     if mode not in ("auto", "sql", "csr"):
         raise ValueError(f"unknown lpa mode {mode!r}")
@@ -402,12 +260,12 @@ def label_propagation(
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if mode == "auto":
-        from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
+        from okapi_spark.plans import csr_fixpoint as fx
 
         fusable = (
             iterations is not None
             and store is None
-            and graph.num_edges() <= _FUSE_MAX_EDGES
+            and graph.num_edges() <= fx._FUSE_MAX_EDGES
             and auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
         )
         mode = "csr" if fusable else "sql"
@@ -424,61 +282,15 @@ def label_propagation(
         # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
         state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
 
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-
-    epoch = next(_EPOCH_COUNTER)
-    salted = not state_broadcast and mode == "sql"
-    restore_fn = None
     if mode == "csr":
-        # pid = hash(dst): the partition owns ALL in-edges of its dsts,
-        # so the kernel's per-dst argmax is final — zero exchange. The
-        # packed blocks are staged to disk ONCE (one pass over the
-        # edges, same I/O shape as a shuffle map write); supersteps
-        # never scan the edge table again (csr_blocks module doc).
-        # Staging is LAZY (first superstep) so re-invoking a completed
-        # checkpointed run still resumes instantly without an edge pass,
-        # and MEMOIZED on the Graph (round 6, like by_dst/pr_blocks) so
-        # repeated calls skip the re-stage.
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, cleanup_blocks, default_block_dir, stage_blocks,
-        )
+        from okapi_spark.plans import csr_fixpoint as fx
 
-        # stage WIDE (one block per partition); supersteps run over
-        # fewer tasks when the graph is small (see pid_frame)
-        k_tasks = choose_task_count(graph.num_edges(), num_partitions)
+        spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
+        return fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
+                      num_partitions, store)
 
-        def _stage() -> tuple[str, int]:
-            edges_by_pid = (
-                graph.edges.select("src", "dst", w_col.alias("weight"))
-                .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int"))
-                .repartition(num_partitions, "pid")
-            )
-            bdir = default_block_dir(spark)
-            with no_adaptive(spark):
-                staged = stage_blocks(
-                    edges_by_pid, num_partitions, _lpa_pack, "lpa", epoch, bdir
-                )
-            n_edges = graph.num_edges()
-            assert staged == n_edges, f"staged {staged} edge rows != |E|={n_edges}"
-            return bdir, epoch
-
-        def ensure_staged() -> tuple[str, int]:
-            return graph.derived(
-                ("lpa_blocks", weighted, num_partitions),
-                _stage,
-                cleanup=lambda v: cleanup_blocks(v[0]),
-            )
-
-        state0 = vertices.select("id", F.col("id").alias("lbl"))
-        if iterations is not None and store is None:
-            from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
-
-            if graph.num_edges() <= _FUSE_MAX_EDGES:
-                return _lpa_csr_fused(
-                    spark, graph, vertices, n, iterations, num_partitions,
-                    ensure_staged,
-                )
-    elif state_broadcast:
+    restore_fn = None
+    if state_broadcast:
         # dst-partitioned scatter layout (see Graph.by_dst): labels are
         # broadcast into the src join; groupBy(dst, lbl) and the argmax
         # groupBy(dst) are both partition-complete ⇒ zero exchanges
@@ -525,16 +337,8 @@ def label_propagation(
                 "id", "lbl", F.coalesce("nsalt", F.lit(1)).alias("nsalt")
             )
 
-    bcast_slot: list = [None]
-
     def superstep(ss: int, state: DataFrame):
-        if mode == "csr":
-            bdir, staged_epoch = ensure_staged()
-            best = _csr_best_labels(
-                spark, num_partitions, k_tasks, staged_epoch, bdir,
-                state, bcast_slot, n_rows=n,
-            )
-        elif state_broadcast:
+        if state_broadcast:
             labels = F.broadcast(
                 state.select(F.col("id").alias("src"), F.col("lbl").alias("slbl"))
             )
@@ -548,13 +352,12 @@ def label_propagation(
                 .hint("shuffle_hash")
             )
             joined = edges.join(labels, ["src", "salt"])
-        if mode != "csr":
-            hist = (
-                joined.groupBy(F.col("dst").alias("id"), F.col("slbl").alias("lbl"))
-                .agg(F.sum("weight").alias("w"))
-            )
-            best = _argmax_label(hist)
-        keep = [state["nsalt"]] if salted else []
+        hist = (
+            joined.groupBy(F.col("dst").alias("id"), F.col("slbl").alias("lbl"))
+            .agg(F.sum("weight").alias("w"))
+        )
+        best = _argmax_label(hist)
+        keep = [] if state_broadcast else [state["nsalt"]]
         new_state = state.join(best, "id", "left").select(
             "id",
             F.coalesce("new_lbl", "lbl").alias("lbl"),
@@ -575,7 +378,7 @@ def label_propagation(
             row = materialized.agg(*aggs).collect()[0]
             out = {"changed": int(row["c"])}
             if iterations is None:
-                out["state_hash"] = int(row["h"])
+                out["state_hash"] = int(row["h"] or 0)  # bit_xor of no rows is NULL
             return out
 
         return new_state, post
@@ -609,15 +412,10 @@ def label_propagation(
 
     from contextlib import nullcontext
 
-    with no_adaptive(spark) if (state_broadcast or mode == "csr") else nullcontext():
+    with no_adaptive(spark) if state_broadcast else nullcontext():
         res = run_supersteps(state0, superstep, max_supersteps=max_ss, halt_fn=halt,
                              store=store, restore_fn=restore_fn)
     res.state = res.state.select("id", "lbl")
-    if bcast_slot[0] is not None:
-        # final state is materialized by run_supersteps; the last
-        # superstep's label broadcast is no longer referenced
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     return res
 
 
@@ -737,46 +535,33 @@ def spinner_partition(
     capacity = total_edges * (1.0 + additional_capacity) / k_total
 
     csr_fns = None
-    block_slot: list = [None]
     lbl_slot: list = [None]
     mv_slot: list = [None]
     if mode == "csr":
-        from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, default_block_dir, stage_blocks,
-        )
+        from okapi_spark.plans.csr_blocks import choose_task_count
+        from okapi_spark.plans.csr_fixpoint import stage
 
-        epoch = next(_EPOCH_COUNTER)
         k_tasks = choose_task_count(total_edges, num_partitions)
-        edges_by_pid = (
-            g.edges.select("src", "dst", "weight")
-            .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int"))
-            .repartition(num_partitions, "pid")
-        )
 
-        def ensure_staged() -> str:
-            if block_slot[0] is None:
-                block_slot[0] = default_block_dir(spark)
-                with no_adaptive(spark):
-                    staged = stage_blocks(
-                        edges_by_pid, num_partitions, _lpa_pack, "spin", epoch, block_slot[0]
-                    )
-                assert staged == total_edges, (
-                    f"staged {staged} edge rows != |E|={total_edges}"
-                )
-            return block_slot[0]
+        def ensure_staged() -> tuple:
+            # (tag, epoch, block_dir), staged once on first use; the
+            # symmetrized graph is released (blocks included) on return
+            return stage(g, "w", lambda: g.edges.select("src", "dst", F.col("weight").alias("w")),
+                         num_partitions)
 
         def hist_fn(st: DataFrame) -> DataFrame:
+            tag, epoch, bdir = ensure_staged()
             return _csr_label_hist(
-                spark, num_partitions, k_tasks, epoch, ensure_staged(),
+                spark, num_partitions, k_tasks, epoch, bdir,
                 st.select("id", F.col("part").cast("long").alias("lbl")),
-                lbl_slot, n_rows=n,
+                lbl_slot, n_rows=n, tag=tag,
             )
 
         def active_fn(moved: DataFrame, n_moved: int) -> DataFrame:
+            tag, epoch, bdir = ensure_staged()
             return _csr_active_dsts(
-                spark, num_partitions, k_tasks, epoch, ensure_staged(),
-                moved, mv_slot, n_rows=n_moved,
+                spark, num_partitions, k_tasks, epoch, bdir,
+                moved, mv_slot, n_rows=n_moved, tag=tag,
             )
 
         csr_fns = (hist_fn, active_fn)
@@ -833,10 +618,8 @@ def spinner_partition(
                 csr_fns=csr_fns,
             )
     finally:
-        if block_slot[0] is not None:
-            from okapi_spark.plans.csr_blocks import cleanup_blocks
-
-            cleanup_blocks(block_slot[0])
+        if mode == "csr":
+            g.unpersist()
     for slot in (lbl_slot, mv_slot):
         if slot[0] is not None:
             slot[0].destroy()

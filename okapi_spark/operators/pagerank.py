@@ -24,27 +24,21 @@ Two physical strategies, same fixpoint:
   ``state_broadcast=False`` (cluster-scale |V|) it falls back to the
   classic two-shuffle plan: state shuffles into the src join,
   Catalyst partial aggregation combines messages map-side.
-* ``mode="csr"`` — partition-local sparse gather-scatter over RESIDENT
-  staged blocks (north rule; plans/csr_blocks.py): edges are
-  hash-partitioned by pmod(xxhash64(dst), P), packed dst-sorted, and
-  staged ONCE as memmapped ``.npy`` block files; the rank state is
-  collected to two sorted NumPy arrays and broadcast via
-  ``SparkContext.broadcast`` each superstep. Each superstep is a P-row
-  Range → ``mapInPandas`` job whose kernel opens its blocks from the
-  OS page cache: gather = vectorized ``searchsorted`` into the
-  broadcast ranks, scatter = ``np.add.reduceat`` over the dst-sorted
-  layout — zero per-row Python, zero shuffle (the partition owns ALL
-  in-edges of its dst's, so the partial sums are final), and zero edge
-  bytes across the JVM↔Arrow boundary per superstep.
-* ``mode="csr_cogroup"`` — the earlier variant (src-partitioned
-  cogroup of edges with state + final groupBy(dst)); kept for
-  reference/comparison.
+* ``mode="csr"`` — the csr fixpoint runner (plans/csr_fixpoint.py):
+  shares (src, dst, share) are staged ONCE per Graph as dst-hashed,
+  dst-sorted memmapped ``.npy`` blocks (plans/csr_blocks.py) and the
+  rank state lives on the driver as a NumPy array. A round gathers
+  ``rank[src]·share`` through memoized ``searchsorted`` positions and
+  sums per dst with ``np.add.reduceat`` — zero per-row Python, zero
+  shuffle (a block owns ALL in-edges of its dsts, so its sums are
+  final), zero edge bytes across the JVM↔Arrow boundary. Inside the
+  fuse window all rounds run in one Spark job; beyond it, or with a
+  checkpoint store, one job per round.
 """
 
 from __future__ import annotations
 
-import itertools
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,16 +47,6 @@ from pyspark.storagelevel import StorageLevel
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
 from okapi_spark.plans.broadcast import auto_state_broadcast
 from okapi_spark.graph.graph import Graph
-
-# worker-global CSR cache: (mode, epoch, pid) -> packed arrays; reused
-# across supersteps because Spark reuses Python workers
-# (spark.python.worker.reuse). The epoch is a driver-side monotonic
-# counter drawn fresh per pagerank() call — NOT id(graph), which CPython
-# reuses after GC and would let a second Graph at the same address
-# silently hit a stale adjacency. Entries from older epochs are pruned
-# on first touch so worker memory stays bounded across calls.
-_CSR_CACHE: dict = {}
-_EPOCH_COUNTER = itertools.count(1)
 
 # sql-mode layout sizing: ~300k edge rows per partition keeps each
 # per-superstep task well above the scheduling floor (see pagerank())
@@ -99,6 +83,8 @@ def pagerank(
     recorded in metrics_log either way."""
     if tol_norm not in ("max", "l1"):
         raise ValueError(f"unknown tol_norm {tol_norm!r}")
+    if mode not in ("sql", "csr"):
+        raise ValueError(f"unknown pagerank mode {mode!r}")
     spark = graph.edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -120,85 +106,42 @@ def pagerank(
     # operator calls (guide §2.4: don't recompute what a layout holds)
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
+    if n == 0:
+        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None)
     base = (1.0 - damping) / n
 
     # share = fraction of rank sent along each out-edge; out_deg kept
     # for the shuffle-mode salting census
     degw = graph.degree_weights()
-    share_expr = (
-        (F.col("weight") / F.col("wsum")) if weighted else (F.lit(1.0) / F.col("out_deg"))
-    )
-    shares = graph.edges.join(degw, "src").select(
-        "src", "dst", share_expr.alias("share"), "out_deg"
-    )
+    shares = _shares(graph, weighted)
 
-    if mode in ("csr", "csr_cogroup") and not auto_state_broadcast(
+    if mode == "csr" and not auto_state_broadcast(
         n, row_bytes=32, rows_override=broadcast_threshold
     ):
-        # both csr modes move the full |V|-row rank state through the
-        # driver every superstep (binary arrow gather + sc.broadcast,
-        # _gather_state_arrays) — beyond the
-        # broadcast threshold that is a guaranteed driver OOM, so the
-        # guard is shared with the sql-mode state_broadcast switch.
+        # the csr runner holds the full |V|-row rank state on the
+        # driver and broadcasts it — beyond the broadcast threshold
+        # that is a guaranteed driver OOM, so the guard is shared with
+        # the sql-mode state_broadcast switch.
         raise ValueError(
             f"mode={mode!r} broadcasts the full rank state each superstep; "
             f"|V|={n} exceeds the broadcast budget (threshold={broadcast_threshold}). "
             "Use mode='sql' (auto-selects the shuffle plan at this scale)."
         )
-    epoch = next(_EPOCH_COUNTER)  # unique CSR cache namespace per call
     if mode == "csr":
-        # pack + stage the dst-partitioned share blocks ONCE (one pass
-        # over the edges, same I/O shape as a shuffle map write);
-        # supersteps never scan or re-ship the edge table again
-        # (plans.csr_blocks module doc). Staging is LAZY (first
-        # superstep) so re-invoking a completed checkpointed run still
-        # resumes instantly without an edge pass. The staged layout is
-        # MEMOIZED on the Graph (round 6): like ``by_dst``, it is a
-        # pure physical layout of the immutable edge set keyed by
-        # (weighted, P), so repeated pagerank calls on one Graph skip
-        # the re-stage; Graph.unpersist()/atexit reclaim the files.
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, cleanup_blocks, default_block_dir, stage_blocks,
-        )
+        from okapi_spark.plans import csr_fixpoint as fx
 
-        # stage WIDE (one block per partition — the pandas pack wants
-        # full parallelism); supersteps run over fewer tasks when the
-        # graph is small (each task reads several blocks)
-        k_tasks = choose_task_count(graph.num_edges(), num_partitions)
-
-        def _stage() -> tuple[str, int]:
-            shares_by_pid = (
-                shares.select("src", "dst", "share")
-                .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int"))
-                .repartition(num_partitions, "pid")
-            )
-            bdir = default_block_dir(spark)
-            with no_adaptive(spark):
-                staged = stage_blocks(
-                    shares_by_pid, num_partitions, _pr_pack, "pr", epoch, bdir
-                )
-            assert staged == graph.num_edges(), (
-                f"staged {staged} share rows != |E|={graph.num_edges()}"
-            )
-            return bdir, epoch
-
-        def ensure_staged() -> tuple[str, int]:
-            return graph.derived(
-                ("pr_blocks", weighted, num_partitions),
-                _stage,
-                cleanup=lambda v: cleanup_blocks(v[0]),
-            )
-    elif mode == "csr_cogroup":
-        shares = shares.select("src", "dst", "share").withColumn(
-            "pid", F.pmod(F.xxhash64("src"), F.lit(num_partitions)).cast("int")
-        )
-        shares = shares.repartition(num_partitions, "pid").persist(StorageLevel.MEMORY_AND_DISK)
-    elif state_broadcast is None:
+        spec = power_fixpoint(graph, weighted, lambda ids: {"rank": np.full(len(ids), 1.0 / n)},
+                              base, damping)
+        if iterations is None:
+            key = "l1_delta" if tol_norm == "l1" else "max_delta"
+            spec.halt = lambda m, history: m[key] < tol
+        return fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
+                      num_partitions, store)
+    if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): (id, rank) state ~32B/row
         state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
     n_edges = graph.num_edges()
-    salted = mode == "sql" and not state_broadcast
-    if mode == "sql" and state_broadcast:
+    if state_broadcast:
         # zero-exchange layout: edges by dst, state broadcast into the
         # src join, groupBy(dst) is partition-complete (Graph.by_dst).
         # Memoized per (weighted, P) — the dst-partitioned share cache
@@ -210,7 +153,7 @@ def pagerank(
             .repartition(num_partitions, "dst")
             .persist(StorageLevel.MEMORY_AND_DISK),
         )
-    elif salted:
+    else:
         # SALTED co-partitioned layout (north rule: explicit salted-key
         # repartitioning for high-degree skew; see
         # plans.skew.shard_count_expr for the measured rationale).
@@ -233,31 +176,12 @@ def pagerank(
             F.col("src").alias("id"), nsalt_expr.alias("nsalt")
         )
     # materialize once — AQE off for the cache fill (see lpa.py: Spark
-    # 4.1.2 TableCacheQueryStageExec recache race on this plan shape).
-    # mode='csr' already materialized through the staging pass.
-    if mode != "csr":
-        with no_adaptive(graph.edges.sparkSession):
-            shares.count()
-
-    if mode == "csr" and store is None:
-        # driver-resident state loop (round 6, guide §1.2 step 1): the
-        # csr mode already moves the full |V|-row state through the
-        # driver every superstep (gather → sc.broadcast), so holding it
-        # AS the driver-side NumPy pair makes each superstep exactly ONE
-        # Spark job (the kernel scatter, collected via Arrow) instead of
-        # three (gather job + shuffle-join state update + localCheckpoint
-        # cache fill). Float semantics are identical: msum comes from the
-        # same staged kernel, and base + damping·msum is the same IEEE
-        # double expression the SQL projection evaluated. Only the
-        # crash-resumable path (store=) keeps the DataFrame loop.
-        return _pagerank_csr_driver_loop(
-            spark, graph, vertices, n, base, damping, tol, tol_norm,
-            iterations, max_supersteps, num_partitions, k_tasks,
-            ensure_staged, n_edges,
-        )
+    # 4.1.2 TableCacheQueryStageExec recache race on this plan shape)
+    with no_adaptive(graph.edges.sparkSession):
+        shares.count()
 
     restore_fn = None
-    if salted:
+    if not state_broadcast:
         # carry each vertex's shard count in the state so the explode
         # needs no per-superstep join against a salt table
         state0 = vertices.join(nsalt_map, "id", "left").select(
@@ -278,18 +202,8 @@ def pagerank(
     else:
         state0 = vertices.select("id", F.lit(1.0 / n).alias("rank"))
 
-    bcast_slot: list = [None]  # previous superstep's rank broadcast
-
     def superstep(ss: int, state: DataFrame):
-        if mode == "csr":
-            bdir, staged_epoch = ensure_staged()
-            msgs = _csr_messages_bcast(
-                spark, num_partitions, k_tasks, staged_epoch, bdir,
-                state, bcast_slot, n_rows=n,
-            )
-        elif mode == "csr_cogroup":
-            msgs = _csr_messages(shares, state, num_partitions, epoch)
-        elif state_broadcast:
+        if state_broadcast:
             ranks = F.broadcast(state.select("id", "rank").withColumnRenamed("id", "src"))
             msgs = (
                 shares.join(ranks, "src")
@@ -313,7 +227,7 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum("m").alias("msum"))
             )
-        keep = [state["nsalt"]] if salted else []
+        keep = [] if state_broadcast else [state["nsalt"]]
         new_state = (
             state.join(msgs, state["id"] == msgs["dst"], "left")
             .select(
@@ -342,421 +256,66 @@ def pagerank(
 
         return new_state, post
 
-    # zero-exchange plans (broadcast state / csr) gain nothing from AQE;
-    # its per-job planning overhead is the loop's serial floor
+    # the zero-exchange broadcast plan gains nothing from AQE; its
+    # per-job planning overhead is the loop's serial floor
     from contextlib import nullcontext
 
-    aqe_off = no_adaptive(spark) if (mode != "sql" or state_broadcast) else nullcontext()
-    with aqe_off:
-        if iterations is not None:
-            result = run_supersteps(
-                state0, superstep, max_supersteps=iterations, halt_fn=None, store=store,
-                restore_fn=restore_fn,
-            )
-        else:
-            result = run_supersteps(
-                state0,
-                superstep,
-                max_supersteps=max_supersteps,
-                halt_fn=lambda ss, m: m["l1_delta" if tol_norm == "l1" else "max_delta"] < tol,
-                store=store,
-                restore_fn=restore_fn,
-            )
+    with no_adaptive(spark) if state_broadcast else nullcontext():
+        result = run_supersteps(
+            state0, superstep,
+            max_supersteps=iterations if iterations is not None else max_supersteps,
+            halt_fn=None if iterations is not None else (
+                lambda ss, m: m["l1_delta" if tol_norm == "l1" else "max_delta"] < tol
+            ),
+            store=store, restore_fn=restore_fn,
+        )
     result.state = result.state.select("id", "rank")
-    if bcast_slot[0] is not None:
-        # result.state is materialized by run_supersteps, so the last
-        # superstep's rank broadcast is no longer referenced
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     return result
 
 
-_GATHER_PANDAS_MAX_ROWS = 1_000_000
-
-
-def _ids_sorted(graph, vertices: DataFrame, n: int):
-    """Memoized driver-side sorted vertex-id array (round 6): the
-    fused/driver-loop csr paths need it every call, and it is exactly
-    the |V|·8B payload the state broadcast already budgets for —
-    holding it on the Graph skips a per-call gather job."""
-    return graph.derived(
-        ("ids_sorted",),
-        lambda: _gather_sorted_arrays(vertices.select("id"), n, [])[0],
-        cleanup=lambda v: None,
+def _shares(graph: Graph, weighted: bool) -> DataFrame:
+    """(src, dst, share, out_deg): share = fraction of rank sent along
+    each out-edge (w/Σw or 1/out_deg); out_deg feeds the salting census."""
+    share = (F.col("weight") / F.col("wsum")) if weighted else (F.lit(1.0) / F.col("out_deg"))
+    return graph.edges.join(graph.degree_weights(), "src").select(
+        "src", "dst", share.alias("share"), "out_deg"
     )
 
 
-def _gather_state_arrays(
-    state: DataFrame,
-    n_rows: int | None = None,
-    value_col: str = "rank",
-    value_dtype: str = "float64",
-) -> tuple:
-    """Executor-side state gather (VERDICT r4 "what's wrong" #2): each
-    partition packs and SORTS its (id, rank) rows into two raw numpy
-    buffers inside ``mapInArrow`` — the driver receives one ~16B/row
-    binary blob per partition (no pandas materialization, no per-row
-    objects) and k-way-concatenates the presorted runs. The full state
-    still transits the driver once per superstep — inherent to
-    ``sc.broadcast`` — but the driver-side work is now O(P) object
-    handling + one argsort over presorted runs, and the csr modes are
-    byte-gated (≤256MB state) before this path can run.
+def power_fixpoint(graph: Graph, weighted: bool, init, base: float, damping: float):
+    """csr spec of one power-iteration round over the staged shares,
+    ``rank' = base + damping · Σ rank[src]·share`` (PageRank; SybilRank
+    is base=0, damping=1 over the weighted shares). Dsts with no
+    in-edge get ``base``; both norms of Δrank are the metrics."""
+    from okapi_spark.plans.csr_fixpoint import Fixpoint
 
-    Below ``_GATHER_PANDAS_MAX_ROWS`` the plain Arrow collect wins: the
-    mapInArrow pack pays a Python-worker round per partition, measured
-    ~+0.4s/superstep at |V|=20k for zero benefit when the driver-side
-    pandas materialization is microseconds — so small states take the
-    direct path and the binary pack engages where it matters."""
-    ids, (vals,) = _gather_sorted_arrays(state, n_rows, [(value_col, value_dtype)])
-    return ids, vals
+    def merge(state, parts):
+        r = state["rank"]
+        new = np.full(len(r), base, dtype="float64")
+        for pos, msum in parts:
+            new[pos] = base + damping * msum
+        d = np.abs(new - r)
+        return {"rank": new}, {"max_delta": float(d.max()) if len(d) else 0.0, "l1_delta": float(d.sum())}
 
-
-def _gather_sorted_arrays(
-    df: DataFrame, n_rows: int | None, cols: list[tuple[str, str]]
-) -> tuple:
-    """General form of the state gather: returns ``(ids, [arr, ...])``
-    with every array id-sorted on the SAME stable order (value columns
-    stay row-aligned — two independent collects would not be). ``cols``
-    is a list of ``(column, numpy dtype)``."""
-    import numpy as np
-    import pyarrow as pa
-
-    names = [c for c, _ in cols]
-    dtypes = [np.dtype(d) for _, d in cols]
-    if n_rows is not None and n_rows <= _GATHER_PANDAS_MAX_ROWS:
-        pdf = df.select("id", *names).toPandas()
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        return ids[order], [
-            pdf[c].to_numpy().astype(dt, copy=False)[order]
-            for c, dt in zip(names, dtypes)
-        ]
-
-    def pack(batches):
-        ids, vals = [], [[] for _ in names]
-        for b in batches:
-            ids.append(b.column("id").to_numpy(zero_copy_only=False))
-            for j, c in enumerate(names):
-                vals[j].append(b.column(c).to_numpy(zero_copy_only=False))
-        if ids:
-            i = np.concatenate(ids)
-            o = np.argsort(i, kind="stable")
-            arrays = [pa.array([i[o].tobytes()])]
-            for j, dt in enumerate(dtypes):
-                arrays.append(pa.array([np.concatenate(vals[j])[o].astype(dt).tobytes()]))
-            yield pa.RecordBatch.from_arrays(arrays, names=["ids"] + [f"v{j}" for j in range(len(names))])
-
-    schema = ", ".join(["ids binary"] + [f"v{j} binary" for j in range(len(names))])
-    blobs = df.select(F.col("id").cast("long").alias("id"), *names).mapInArrow(
-        pack, schema
-    ).collect()
-    ids = np.concatenate(
-        [np.frombuffer(b.ids, dtype=np.int64) for b in blobs] or [np.array([], dtype=np.int64)]
-    )
-    out = []
-    for j, dt in enumerate(dtypes):
-        out.append(np.concatenate(
-            [np.frombuffer(getattr(b, f"v{j}"), dtype=dt) for b in blobs] or [np.array([], dtype=dt)]
-        ))
-    order = np.argsort(ids, kind="stable")
-    return ids[order], [a[order] for a in out]
-
-
-def _csr_messages_bcast(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    state: DataFrame, bcast_slot: list | None = None, n_rows: int | None = None,
-    tag: str = "pr",
-) -> DataFrame:
-    """dst-partitioned CSR gather-scatter over RESIDENT staged blocks
-    with numpy-broadcast state: the partition owns every in-edge of
-    its dst's, so the per-dst sums it emits are FINAL — no message
-    shuffle at all. The packed blocks were staged once by
-    ``csr_blocks.stage_blocks``; each superstep is a P-row
-    ``mapInPandas`` job that loads block i from the worker-global
-    cache (or the page-cached block file) — ZERO edge bytes cross the
-    JVM↔Arrow boundary per superstep. The only per-superstep traffic
-    is the (id, rank) state shipped via ``sc.broadcast``."""
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    b = spark.sparkContext.broadcast(_gather_state_arrays(state, n_rows=n_rows))
-    if bcast_slot is not None:
-        if bcast_slot[0] is not None:
-            # previous superstep's state is materialized (localCheckpoint
-            # or parquet) before this one runs — safe to free its blocks
-            bcast_slot[0].destroy()
-        bcast_slot[0] = b
-    return _csr_messages_job(spark, num_blocks, num_tasks, epoch, block_dir, b, tag)
-
-
-def _csr_messages_job(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str, b, tag: str = "pr"
-) -> DataFrame:
-    """The per-superstep scatter job given an already-built (ids, vals)
-    state broadcast ``b`` — shared by the DataFrame loop (via
-    ``_csr_messages_bcast``) and the driver-resident NumPy loop."""
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block(tag, epoch, int(pid), block_dir)
-                if blk is None or len(blk["src"]) == 0:
-                    continue
-                rid, rv = b.value
-                pos = np.searchsorted(rid, blk["src"])
-                contrib = rv[pos] * blk["share"]
-                # dst-sorted layout (staged once) ⇒ per-dst sums are a
-                # sequential segment-reduce, not a random-access scatter
-                out = np.add.reduceat(contrib, blk["starts"])
-                yield pd.DataFrame({"dst": blk["uniq_dst"], "msum": out})
-
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="dst long, msum double"
+    return Fixpoint(
+        "pr_w" if weighted else "pr",
+        lambda: _shares(graph, weighted).select("src", "dst", "share"), init, _power_step, merge,
+        lambda ids, state: pd.DataFrame({"id": ids, "rank": state["rank"]}),
+        "id long, rank double", resolve=_segments,
     )
 
 
-# Below this many edges the per-superstep mapInPandas job FLOOR
-# (~0.35-0.6s measured at 32 cores: scheduling + Python round trip +
-# Arrow collect, regardless of kernel size — the kernel itself is
-# ~20-40ms) dwarfs the single-core kernel time, so the driver loop
-# fuses ALL supersteps into ONE job whose task iterates the staged
-# blocks per superstep locally. 8M edges ≈ 120ms/superstep single
-# core — still well under the job floor; past it, per-superstep jobs
-# with one task per ~2M edges win back the parallelism.
-_FUSE_MAX_EDGES = 8_000_000
-
-
-def _pagerank_csr_driver_loop(
-    spark, graph, vertices, n, base, damping, tol, tol_norm,
-    iterations, max_supersteps, num_partitions, k_tasks, ensure_staged, n_edges,
-) -> BSPResult:
-    """mode='csr' without a checkpoint store: the |V|-row rank state —
-    which the csr design already round-trips through the driver every
-    superstep for ``sc.broadcast`` — lives as two sorted NumPy arrays
-    between supersteps. Each superstep is exactly ONE Spark job: the
-    staged-block scatter kernel, Arrow-collected. The DataFrame loop's
-    other two per-superstep jobs (state gather, shuffle-join state
-    update + localCheckpoint cache fill) disappear; float semantics are
-    unchanged (same kernel msum, same ``base + damping·msum`` double
-    expression, same max|Δ| halt predicate)."""
-    import time
-
-    import numpy as np
-
-    bdir, staged_epoch = ensure_staged()
-    ids = _ids_sorted(graph, vertices, n)
-    ranks = np.full(n, 1.0 / n, dtype="float64")
-    log: list[dict] = []
-    converged = False
-    n_ss = iterations if iterations is not None else max_supersteps
-    if n_edges <= _FUSE_MAX_EDGES:
-        return _pagerank_csr_fused(
-            spark, ids, ranks, n, base, damping, tol, tol_norm, iterations,
-            n_ss, num_partitions, staged_epoch, bdir, n_edges,
-        )
-    with no_adaptive(spark):
-        for ss in range(n_ss):
-            t0 = time.time()
-            b = spark.sparkContext.broadcast((ids, ranks))
-            try:
-                pdf = _csr_messages_job(
-                    spark, num_partitions, k_tasks, staged_epoch, bdir, b
-                ).toPandas()
-            finally:
-                b.destroy()
-            new = np.full(n, base, dtype="float64")
-            if len(pdf):
-                # each dst lives in exactly one block ⇒ one row per dst
-                pos = np.searchsorted(ids, pdf["dst"].to_numpy())
-                new[pos] = base + damping * pdf["msum"].to_numpy()
-            metrics: dict = {"edges_processed": n_edges}
-            halted = False
-            if iterations is None:
-                mx = float(np.max(np.abs(new - ranks))) if n else 0.0
-                l1 = float(np.sum(np.abs(new - ranks)))
-                metrics["max_delta"] = mx
-                metrics["l1_delta"] = l1
-                halted = (l1 if tol_norm == "l1" else mx) < tol
-            ranks = new
-            metrics["_halted"] = halted
-            metrics["superstep_sec"] = time.time() - t0
-            metrics["superstep"] = ss
-            log.append(metrics)
-            if halted:
-                converged = True
-                break
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "rank": ranks}), schema="id long, rank double"
-    )
-    return BSPResult(state, (log[-1]["superstep"] + 1) if log else 0, converged, log)
-
-
-def _pagerank_csr_fused(
-    spark, ids, ranks0, n, base, damping, tol, tol_norm, iterations,
-    n_ss, num_partitions, epoch, block_dir, n_edges, tag: str = "pr",
-) -> BSPResult:
-    """All supersteps in ONE Spark job (|E| ≤ ``_FUSE_MAX_EDGES``): a
-    single task holds every staged block — together they own every
-    in-edge — so it can run the whole fixpoint locally, paying the job
-    floor once instead of per superstep. Identical float semantics to
-    the per-superstep loop: same per-block ``searchsorted`` gather +
-    ``add.reduceat`` segment sums, same ``base + damping·msum`` update,
-    same max|Δ| / Σ|Δ| halt values. Returns the packed final ranks and
-    per-superstep metrics as two binary blobs."""
-    import time
-
-    import numpy as np
-
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame, resolved_arrays
-
-    b = spark.sparkContext.broadcast((ids, ranks0))
-    run_to_tol = iterations is None
-    tol_is_l1 = tol_norm == "l1"
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        rid, r = b.value
-        r = r.copy()
-        nn = len(rid)
-        blocks = []
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block(tag, epoch, int(pid), block_dir)
-                if blk is not None and len(blk["src"]):
-                    # gather/scatter positions are superstep-invariant
-                    # AND call-invariant — resolved once per staging,
-                    # memoized as sidecar files (resolved_arrays)
-                    res = resolved_arrays(
-                        tag, epoch, int(pid), block_dir, ["spos", "udpos"],
-                        lambda: {
-                            "spos": np.searchsorted(rid, blk["src"]),
-                            "udpos": np.searchsorted(rid, blk["uniq_dst"]),
-                        },
-                    )
-                    blocks.append((
-                        res["spos"], blk["share"], blk["starts"], res["udpos"],
-                    ))
-        mets = []
-        for ss in range(n_ss):
-            t0 = time.time()
-            new = np.full(nn, base, dtype="float64")
-            for pos, share, starts, dpos in blocks:
-                contrib = r[pos] * share
-                msum = np.add.reduceat(contrib, starts)
-                new[dpos] = base + damping * msum
-            halted = False
-            mx = l1 = 0.0
-            if run_to_tol:
-                mx = float(np.max(np.abs(new - r))) if nn else 0.0
-                l1 = float(np.sum(np.abs(new - r)))
-                halted = (l1 if tol_is_l1 else mx) < tol
-            r = new
-            mets.append((mx, l1, time.time() - t0))
-            if halted:
-                break
-        yield pd.DataFrame({
-            "ranks": [r.tobytes()],
-            "metrics": [np.asarray(mets, dtype="float64").tobytes()],
-        })
-
-    try:
-        row = (
-            pid_frame(spark, num_partitions, 1)
-            .mapInPandas(kernel, schema="ranks binary, metrics binary")
-            .collect()[0]
-        )
-    finally:
-        b.destroy()
-    ranks = np.frombuffer(row.ranks, dtype="float64")
-    mets = np.frombuffer(row.metrics, dtype="float64").reshape(-1, 3)
-    log: list[dict] = []
-    converged = False
-    for ss in range(mets.shape[0]):
-        mx, l1, wall = mets[ss]
-        metrics: dict = {"edges_processed": n_edges}
-        halted = False
-        if run_to_tol:
-            metrics["max_delta"] = float(mx)
-            metrics["l1_delta"] = float(l1)
-            halted = (float(l1) if tol_is_l1 else float(mx)) < tol
-        metrics["_halted"] = halted
-        metrics["superstep_sec"] = float(wall)
-        metrics["superstep"] = ss
-        log.append(metrics)
-        if halted:
-            converged = True
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "rank": ranks}), schema="id long, rank double"
-    )
-    return BSPResult(state, (log[-1]["superstep"] + 1) if log else 0, converged, log)
-
-
-def _pr_pack(edges_pdf):
-    """Per-partition pack for the staged csr blocks (runs once, inside
-    ``stage_blocks``): edges sorted by dst with segment starts, so the
-    kernel's per-dst sum is ``np.add.reduceat`` over a contiguous run —
-    sequential-bandwidth-friendly, vs the unstaged kernel's
-    ``np.add.at`` random-access scatter."""
-    import numpy as np
-
-    dst = edges_pdf["dst"].to_numpy()
-    order = np.argsort(dst, kind="stable")
-    dst_sorted = dst[order].astype("int64", copy=False)
-    starts = np.flatnonzero(np.r_[True, dst_sorted[1:] != dst_sorted[:-1]])
+def _segments(blk, ids) -> dict:
+    """Round-invariant gather positions, dst segment starts and the
+    segments' scatter positions of one dst-sorted share block."""
+    dst = blk["dst"]
+    starts = np.flatnonzero(np.r_[True, dst[1:] != dst[:-1]])
     return {
-        "src": edges_pdf["src"].to_numpy()[order].astype("int64", copy=False),
-        "share": edges_pdf["share"].to_numpy()[order].astype("float64", copy=False),
-        "uniq_dst": dst_sorted[starts],
-        "starts": starts.astype("int64", copy=False),
+        "spos": np.searchsorted(ids, blk["src"]), "starts": starts,
+        "udpos": np.searchsorted(ids, dst[starts]),
     }
 
 
-def _csr_messages(shares: DataFrame, state: DataFrame, p: int, epoch: int) -> DataFrame:
-    """Partition-local gather-scatter: per co-group, partial Σ per dst."""
-    import numpy as np  # imported on workers
-
-    ranks = state.withColumn("pid", F.pmod(F.xxhash64("id"), F.lit(p)).cast("int"))
-
-    def kernel(key, edges_it, ranks_pdf_it):
-        # cogroup hands full pandas frames (not iterators) per key
-        edges_pdf, ranks_pdf = edges_it, ranks_pdf_it
-        pid = int(key[0])
-        ck = ("cog", epoch, pid)
-        packed = _CSR_CACHE.get(ck)
-        if packed is None:
-            for k in [k for k in _CSR_CACHE if k[1] != epoch]:
-                _CSR_CACHE.pop(k, None)
-            # pack: factorize src against a sorted unique index so rank
-            # lookup is a vectorized searchsorted, not a hash probe
-            src = edges_pdf["src"].to_numpy()
-            order = np.argsort(src, kind="stable")
-            src_sorted = src[order]
-            dst_sorted = edges_pdf["dst"].to_numpy()[order]
-            share_sorted = edges_pdf["share"].to_numpy()[order]
-            uniq_src = np.unique(src_sorted)
-            packed = (src_sorted, dst_sorted, share_sorted, uniq_src)
-            _CSR_CACHE[ck] = packed
-        src_sorted, dst_sorted, share_sorted, uniq_src = packed
-        if len(ranks_pdf) == 0 or len(src_sorted) == 0:
-            return pd.DataFrame({"dst": pd.Series([], dtype="int64"),
-                                 "msum_p": pd.Series([], dtype="float64")})
-        rid = ranks_pdf["id"].to_numpy()
-        rv = ranks_pdf["rank"].to_numpy()
-        ro = np.argsort(rid, kind="stable")
-        rid, rv = rid[ro], rv[ro]
-        # gather: rank of each edge's src (co-partitioned ⇒ always present)
-        pos = np.searchsorted(rid, src_sorted)
-        contrib = rv[pos] * share_sorted
-        # scatter: partial sums per dst within the partition
-        uniq_dst, inv = np.unique(dst_sorted, return_inverse=True)
-        partial = np.zeros(len(uniq_dst), dtype="float64")
-        np.add.at(partial, inv, contrib)
-        return pd.DataFrame({"dst": uniq_dst, "msum_p": partial})
-
-    partials = shares.groupBy("pid").cogroup(ranks.groupBy("pid")).applyInPandas(
-        kernel, schema="dst long, msum_p double"
-    )
-    return partials.groupBy("dst").agg(F.sum("msum_p").alias("msum"))
+def _power_step(state, blk, res):
+    # dst-sorted layout ⇒ per-dst sums are a sequential segment-reduce
+    return res["udpos"], np.add.reduceat(state["rank"][res["spos"]] * blk["share"], res["starts"])

@@ -10,213 +10,20 @@ MSSP (graphs/MultipleSourceShortestPaths.java:78-235): the reference
 keeps a per-vertex map source→distance and propagates only changed
 entries. Here the state is the exploded long form (id, src, dist) —
 the delta-only propagation falls out of the same frontier logic, and
-the "map" is just a groupBy away.
+the "map" is just a groupBy away. SSSP is MSSP with one source and the
+origin column dropped.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, run_supersteps
 from okapi_spark.graph.graph import Graph
-
-
-def _ensure_sp_blocks(graph: Graph, num_partitions: int) -> tuple[str, int]:
-    """Memoized dst-sorted (src, w) staged block set SHARED by sssp and
-    mssp (round 6): both pack the identical weighted layout
-    (``_lpa_pack``), so one staging pass per Graph serves every
-    shortest-path call; before this each call re-staged per invocation
-    (guide §2.4 — don't rebuild a layout you already hold). Released by
-    ``Graph.unpersist()`` with the csr_blocks atexit sweep as backstop."""
-    from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.lpa import _lpa_pack
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-    from okapi_spark.plans.csr_blocks import (
-        cleanup_blocks, default_block_dir, stage_blocks,
-    )
-
-    spark = graph.edges.sparkSession
-
-    def _stage() -> tuple[str, int]:
-        epoch = next(_EPOCH_COUNTER)
-        edges_by_pid = (
-            graph.edges.select("src", "dst", F.col("weight"))
-            .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int"))
-            .repartition(num_partitions, "pid")
-        )
-        bdir = default_block_dir(spark)
-        with no_adaptive(spark):
-            staged = stage_blocks(
-                edges_by_pid, num_partitions, _lpa_pack, "sp", epoch, bdir
-            )
-        n_edges = graph.num_edges()
-        assert staged == n_edges, f"staged {staged} edge rows != |E|={n_edges}"
-        return bdir, epoch
-
-    return graph.derived(
-        ("sp_blocks", num_partitions), _stage, cleanup=lambda v: cleanup_blocks(v[0])
-    )
-
-
-def _sssp_csr_fused(
-    spark, graph, vertices, n, source, max_supersteps, num_partitions, n_edges,
-) -> BSPResult:
-    """The whole relaxation fixpoint in ONE Spark job (round 6; the same
-    fuse-the-supersteps move as components' ``_cc_csr_fused``): a single
-    task holds every memoized staged block — together they own every
-    in-edge — so it iterates rounds locally (frontier gather, per-dst
-    ``minimum.reduceat``, improvement merge) until nothing improves,
-    instead of paying 3 jobs per round. Float semantics are identical to
-    the per-round loop: the same ``dist + w`` IEEE additions, and min is
-    exact — the fixpoint is bit-identical by construction."""
-    import time
-
-    import numpy as np
-    import pandas as pd
-
-    from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.pagerank import _ids_sorted
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    bdir, epoch = _ensure_sp_blocks(graph, num_partitions)
-    ids = _ids_sorted(graph, vertices, n)
-    b = spark.sparkContext.broadcast(ids)
-    src_id = int(source)
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        sid = b.value
-        nn = len(sid)
-        dist = np.full(nn, np.inf, dtype="float64")
-        changed = np.zeros(nn, dtype=bool)
-        p0 = int(np.searchsorted(sid, src_id))
-        if p0 < nn and sid[p0] == src_id:
-            dist[p0] = 0.0
-            changed[p0] = True
-        blocks = []
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("sp", epoch, int(pid), bdir)
-                if blk is not None and len(blk["dst"]):
-                    # frontier gather positions are round-invariant
-                    blocks.append((np.searchsorted(sid, blk["src"]), blk["dst"], blk["w"]))
-        mets = []
-        for _ss in range(max_supersteps):
-            t0 = time.time()
-            new_dist = dist.copy()
-            new_changed = np.zeros(nn, dtype=bool)
-            for spos, dst, w in blocks:
-                valid = changed[spos]
-                if not valid.any():
-                    continue
-                dst_v = dst[valid]  # dst-sorted layout survives the mask
-                cand_v = dist[spos[valid]] + w[valid]
-                starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
-                cand = np.minimum.reduceat(cand_v, starts)
-                tgt = np.searchsorted(sid, dst_v[starts])
-                m = cand < dist[tgt]  # send-on-improvement
-                new_dist[tgt[m]] = cand[m]
-                new_changed[tgt[m]] = True
-            dist, changed = new_dist, new_changed
-            nch = int(np.count_nonzero(changed))
-            mets.append((nch, time.time() - t0))
-            if nch == 0:
-                break
-        fin = np.isfinite(dist)  # unreachable vertices stay absent
-        yield pd.DataFrame({
-            "ids": [sid[fin].tobytes()],
-            "dist": [dist[fin].tobytes()],
-            "metrics": [np.asarray(mets, dtype="float64").tobytes()],
-        })
-
-    with no_adaptive(spark):
-        try:
-            row = (
-                pid_frame(spark, num_partitions, 1)
-                .mapInPandas(kernel, schema="ids binary, dist binary, metrics binary")
-                .collect()[0]
-            )
-        finally:
-            b.destroy()
-    rid = np.frombuffer(row.ids, dtype="int64")
-    rdist = np.frombuffer(row.dist, dtype="float64")
-    if src_id not in rid:
-        # parity with the DataFrame loop: state0 carries the source row
-        # even when the source id is not a graph vertex
-        rid = np.concatenate([rid, np.array([src_id], dtype="int64")])
-        rdist = np.concatenate([rdist, np.array([0.0])])
-    mets = np.frombuffer(row.metrics, dtype="float64").reshape(-1, 2)
-    log = []
-    converged = False
-    for ss in range(mets.shape[0]):
-        c = int(mets[ss, 0])
-        halted = c == 0
-        log.append({
-            "changed": c,
-            "_halted": halted,
-            "superstep_sec": float(mets[ss, 1]),
-            "superstep": ss,
-        })
-        if halted:
-            converged = True
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": rid, "dist": rdist}), schema="id long, dist double"
-    )
-    return BSPResult(state, (log[-1]["superstep"] + 1) if log else 0, converged, log)
-
-
-def _sssp_csr_cand(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    frontier: DataFrame, bcast_slot: list, n_rows: int,
-) -> DataFrame:
-    """Relaxation scatter over RESIDENT staged CSR blocks (same design
-    as lpa/pagerank/components mode='csr', plans/csr_blocks.py): the
-    changed-frontier (id, dist) ships as two sorted NumPy arrays via
-    ``sc.broadcast``; each superstep is a P-row mapInPandas job that
-    memmaps its dst-sorted block, gathers frontier distances into the
-    edges whose src is on the frontier (sparse searchsorted gather —
-    send-on-improvement falls out of the mask), adds the edge weight,
-    and emits per-dst minima via ``np.minimum.reduceat``. Zero
-    exchange, zero edge rescan."""
-    import pandas as pd
-
-    from okapi_spark.operators.pagerank import _gather_state_arrays
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    b = spark.sparkContext.broadcast(
-        _gather_state_arrays(frontier, n_rows=n_rows, value_col="dist", value_dtype="float64")
-    )
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("sp", epoch, int(pid), block_dir)
-                sid, sdist = b.value
-                if blk is None or len(blk["dst"]) == 0 or len(sid) == 0:
-                    continue
-                src, dst = blk["src"], blk["dst"]
-                pos = np.searchsorted(sid, src)
-                np.clip(pos, 0, len(sid) - 1, out=pos)
-                valid = sid[pos] == src  # src on the changed frontier
-                if not valid.any():
-                    continue
-                dst_v = dst[valid]  # dst-sorted layout survives the mask
-                cand_v = sdist[pos[valid]] + blk["w"][valid]
-                starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
-                cand = np.minimum.reduceat(cand_v, starts)
-                yield pd.DataFrame({"id": dst_v[starts], "cand": cand})
-
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="id long, cand double"
-    )
+from okapi_spark.operators.components import apply_min, relax_min
 
 
 def sssp(
@@ -230,23 +37,14 @@ def sssp(
     """Returns state (id long, dist double) — unreachable vertices absent
     (the reference leaves them at ∞; filter-out is the relational view).
 
-    ``mode="csr"``: relaxation over resident staged CSR blocks (see
-    ``_sssp_csr_cand``) — identical fixpoint, parity-tested."""
-    if mode not in ("sql", "csr"):
-        raise ValueError(f"unknown sssp mode {mode!r}")
-    spark = graph.edges.sparkSession
-    edges = graph.edges
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-
-    bcast_slot: list = [None]
-    last_changed = [1]  # frontier row count (source only at round 0)
+    ``mode="csr"``: relaxation on the csr fixpoint runner over resident
+    staged CSR blocks (see ``mssp``) — identical fixpoint, parity-tested."""
     if mode == "csr":
+        from okapi_spark.plans import csr_fixpoint as fx
+        from okapi_spark.plans.broadcast import auto_state_broadcast
+
         # the worst-case frontier is |V| rows broadcast to every
         # executor — same byte gate as the other csr operators
-        from okapi_spark.plans.broadcast import auto_state_broadcast
-        from okapi_spark.plans.csr_blocks import choose_task_count
-
         n = graph.num_vertices()
         if not auto_state_broadcast(n, row_bytes=32):
             raise ValueError(
@@ -254,247 +52,59 @@ def sssp(
                 f"the worst-case frontier is |V|={n} rows, exceeding the "
                 "broadcast budget. Use mode='sql' at cluster-scale |V|."
             )
-        from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
-
-        if store is None and graph.num_edges() <= _FUSE_MAX_EDGES:
-            # whole fixpoint in one job over the memoized staged blocks
-            return _sssp_csr_fused(
-                spark, graph, graph.vertices_by_id(num_partitions), n, source,
-                max_supersteps, num_partitions, graph.num_edges(),
-            )
-        # per-superstep loop (crash-resumable / large-|E| path): staged
-        # blocks memoized on the Graph and shared with mssp
-        k_tasks = choose_task_count(graph.num_edges(), num_partitions)
-
-    state0 = spark.createDataFrame(
-        [(int(source), 0.0, True)], "id long, dist double, changed boolean"
-    )
-
-    def superstep(ss: int, state: DataFrame) -> tuple[DataFrame, dict]:
-        if mode == "csr":
-            bdir, epoch = _ensure_sp_blocks(graph, num_partitions)
-            cand = _sssp_csr_cand(
-                spark, num_partitions, k_tasks, epoch, bdir,
-                state.filter("changed").select("id", "dist"),
-                bcast_slot, n_rows=last_changed[0],
-            )
-        else:
-            frontier = state.filter("changed").select(F.col("id").alias("src"), "dist")
-            cand = (
-                edges.join(frontier, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
-            )
-        merged = (
-            state.select("id", "dist").join(cand, "id", "full_outer")
-            .select(
-                "id",
-                F.least(F.coalesce("dist", F.lit(float("inf"))), F.coalesce("cand", F.lit(float("inf")))).alias("dist"),
-                (
-                    F.coalesce("cand", F.lit(float("inf")))
-                    < F.coalesce("dist", F.lit(float("inf")))
-                ).alias("changed"),
-            )
-        )
-
-        def post(materialized: DataFrame) -> dict:
-            n_changed = materialized.filter("changed").count()
-            last_changed[0] = n_changed
-            return {"changed": n_changed}
-
-        return merged, post
-
-    res = run_supersteps(
-        state0, superstep, max_supersteps=max_supersteps,
-        halt_fn=lambda ss, m: m["changed"] == 0, store=store,
-    )
+        P = num_partitions or graph.edges.sparkSession.sparkContext.defaultParallelism
+        res = fx.run(graph, _relax_fixpoint(graph, [int(source)]), max_supersteps, P, store)
+    elif mode == "sql":
+        res = mssp(graph, [int(source)], max_supersteps, store, mode, num_partitions)
+    else:
+        raise ValueError(f"unknown sssp mode {mode!r}")
     res.state = res.state.select("id", "dist")
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     return res
 
 
-def _mssp_csr_cand(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    frontier: DataFrame, bcast_slot: list, n_rows: int,
-) -> DataFrame:
-    """Multi-source relaxation over RESIDENT staged CSR blocks: the
-    changed-frontier ships as THREE row-aligned id-sorted arrays
-    (id, origin, dist); a src can carry SEVERAL frontier entries (one
-    per origin), so the kernel expands each block edge over its src's
-    frontier run (searchsorted left/right bounds + np.repeat) before
-    the per-(dst, origin) segment-min. Zero exchange, zero edge
-    rescan — the reference's per-vertex source→distance map delta
-    propagation re-expressed as a vectorized gather."""
-    import pandas as pd
+def _relax_fixpoint(graph: Graph, origins: list[int]):
+    """csr spec of |sources| synchronized relaxations: dense (sources ×
+    |V|) float64 distances, ∞ = unreached, each origin row relaxed by
+    ``relax_min`` with the same ``dist + w`` additions and exact mins as
+    the sql plan. Duplicate source rows and sources that are not graph
+    vertices keep the DataFrame loop's output shape: one (o, o, 0) row
+    per source row that no relaxation produces."""
+    from okapi_spark.plans.csr_fixpoint import Fixpoint, locate
 
-    from okapi_spark.operators.pagerank import _gather_sorted_arrays
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
+    origs, counts = np.unique(np.asarray(origins, dtype="int64"), return_counts=True)
 
-    sid, (sorig, sdist) = _gather_sorted_arrays(
-        frontier, n_rows, [("origin", "int64"), ("dist", "float64")]
-    )
-    b = spark.sparkContext.broadcast((sid, sorig, sdist))
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
+    def init(ids):
+        dist = np.full((len(origs), len(ids)), np.inf)
+        pos, hit = locate(ids, origs)
+        dist[np.flatnonzero(hit), pos[hit]] = 0.0
+        return {"dist": dist, "changed": np.isfinite(dist)}
 
-    def kernel(pdf_iter):
-        import numpy as np
+    def step(st, blk, res):
+        return [relax_min(d, c, res["spos"], res["dpos"], blk["w"]) for d, c in zip(st["dist"], st["changed"])]
 
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("sp", epoch, int(pid), block_dir)
-                sid, sorig, sdist = b.value
-                if blk is None or len(blk["dst"]) == 0 or len(sid) == 0:
-                    continue
-                src, dst, w = blk["src"], blk["dst"], blk["w"]
-                lo = np.searchsorted(sid, src, side="left")
-                hi = np.searchsorted(sid, src, side="right")
-                cnt = hi - lo
-                total = int(cnt.sum())
-                if total == 0:
-                    continue
-                # expand edge i over its src's frontier run [lo_i, hi_i)
-                eidx = np.repeat(np.arange(len(src)), cnt)
-                off = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                fidx = np.repeat(lo, cnt) + off
-                dsts = dst[eidx]
-                orig = sorig[fidx]
-                cand_v = sdist[fidx] + w[eidx]
-                # per-(dst, origin) min via sort + segment-reduce
-                order = np.lexsort((orig, dsts))
-                g_dst, g_org, g_c = dsts[order], orig[order], cand_v[order]
-                starts = np.flatnonzero(
-                    np.r_[True, (g_dst[1:] != g_dst[:-1]) | (g_org[1:] != g_org[:-1])]
-                )
-                cand = np.minimum.reduceat(g_c, starts)
-                yield pd.DataFrame(
-                    {"id": g_dst[starts], "origin": g_org[starts], "cand": cand}
-                )
+    def merge(st, parts):
+        rows = [apply_min(d, [p[j] for p in parts]) for j, d in enumerate(st["dist"])]
+        dist = np.array([r[0] for r in rows], dtype="float64").reshape(st["dist"].shape)
+        changed = np.array([r[1] for r in rows], dtype=bool).reshape(dist.shape)
+        return {"dist": dist, "changed": changed}, {"changed": int(np.count_nonzero(changed))}
 
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="id long, origin long, cand double"
-    )
-
-
-def _mssp_csr_fused(
-    spark, graph, vertices, n, origins, max_supersteps, num_partitions, n_edges,
-) -> BSPResult:
-    """All landmarks' relaxation fixpoints in ONE Spark job (round 6):
-    the per-origin distances are independent, so the single task that
-    holds every memoized staged block runs |sources| synchronized
-    relaxations locally — same rounds, same ``dist + w`` additions,
-    same exact mins as the per-round loop, bit-identical fixpoint. The
-    dense (|sources| × |V|) float64 state is bounded by the same
-    |V|·|sources| byte gate the per-round broadcast already enforces."""
-    import time
-
-    import numpy as np
-    import pandas as pd
-
-    from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.pagerank import _ids_sorted
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    bdir, epoch = _ensure_sp_blocks(graph, num_partitions)
-    ids = _ids_sorted(graph, vertices, n)
-    origins_arr = np.asarray(sorted(origins), dtype="int64")
-    b = spark.sparkContext.broadcast((ids, origins_arr))
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        sid, origs = b.value
-        nn, s = len(sid), len(origs)
-        dist = np.full((s, nn), np.inf, dtype="float64")
-        changed = np.zeros((s, nn), dtype=bool)
-        for j, o in enumerate(origs):
-            p = int(np.searchsorted(sid, o))
-            if p < nn and sid[p] == o:
-                dist[j, p] = 0.0
-                changed[j, p] = True
-        blocks = []
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block("sp", epoch, int(pid), bdir)
-                if blk is not None and len(blk["dst"]):
-                    blocks.append((np.searchsorted(sid, blk["src"]), blk["dst"], blk["w"]))
-        mets = []
-        for _ss in range(max_supersteps):
-            t0 = time.time()
-            new_dist = dist.copy()
-            new_changed = np.zeros((s, nn), dtype=bool)
-            for spos, dst, w in blocks:
-                for j in range(s):
-                    valid = changed[j, spos]
-                    if not valid.any():
-                        continue
-                    dst_v = dst[valid]  # dst-sorted layout survives the mask
-                    cand_v = dist[j, spos[valid]] + w[valid]
-                    starts = np.flatnonzero(np.r_[True, dst_v[1:] != dst_v[:-1]])
-                    cand = np.minimum.reduceat(cand_v, starts)
-                    tgt = np.searchsorted(sid, dst_v[starts])
-                    m = cand < dist[j, tgt]  # send-on-improvement
-                    new_dist[j, tgt[m]] = cand[m]
-                    new_changed[j, tgt[m]] = True
-            dist, changed = new_dist, new_changed
-            nch = int(np.count_nonzero(changed))
-            mets.append((nch, time.time() - t0))
-            if nch == 0:
-                break
-        out_id, out_org, out_d = [], [], []
-        for j, o in enumerate(origs):
-            fin = np.isfinite(dist[j])
-            out_id.append(sid[fin])
-            out_org.append(np.full(int(fin.sum()), o, dtype="int64"))
-            out_d.append(dist[j][fin])
-        yield pd.DataFrame({
-            "ids": [np.concatenate(out_id).tobytes() if out_id else b""],
-            "origin": [np.concatenate(out_org).tobytes() if out_org else b""],
-            "dist": [np.concatenate(out_d).tobytes() if out_d else b""],
-            "metrics": [np.asarray(mets, dtype="float64").tobytes()],
+    def output(ids, st):
+        j, v = np.nonzero(np.isfinite(st["dist"]))
+        pos, present = locate(ids, origs)
+        self_d = np.zeros(len(origs))
+        self_d[present] = st["dist"][np.flatnonzero(present), pos[present]]
+        extra = counts - present  # source rows beyond the relaxation's own
+        return pd.DataFrame({
+            "id": np.r_[ids[v], np.repeat(origs, extra)],
+            "origin": np.r_[origs[j], np.repeat(origs, extra)],
+            "dist": np.r_[st["dist"][j, v], np.repeat(self_d, extra)],
         })
 
-    with no_adaptive(spark):
-        try:
-            row = (
-                pid_frame(spark, num_partitions, 1)
-                .mapInPandas(kernel, schema="ids binary, origin binary, dist binary, metrics binary")
-                .collect()[0]
-            )
-        finally:
-            b.destroy()
-    rid = np.frombuffer(row.ids, dtype="int64")
-    rorg = np.frombuffer(row.origin, dtype="int64")
-    rdist = np.frombuffer(row.dist, dtype="float64")
-    missing = [o for o in origins_arr.tolist() if o not in set(rorg[rid == o].tolist())]
-    if missing:
-        # parity with the DataFrame loop: state0 carries each source row
-        # even when that id is not a graph vertex
-        rid = np.concatenate([rid, np.array(missing, dtype="int64")])
-        rorg = np.concatenate([rorg, np.array(missing, dtype="int64")])
-        rdist = np.concatenate([rdist, np.zeros(len(missing))])
-    mets = np.frombuffer(row.metrics, dtype="float64").reshape(-1, 2)
-    log = []
-    converged = False
-    for ss in range(mets.shape[0]):
-        c = int(mets[ss, 0])
-        halted = c == 0
-        log.append({
-            "changed": c,
-            "_halted": halted,
-            "superstep_sec": float(mets[ss, 1]),
-            "superstep": ss,
-        })
-        if halted:
-            converged = True
-    state = spark.createDataFrame(
-        pd.DataFrame({"id": rid, "origin": rorg, "dist": rdist}),
-        schema="id long, origin long, dist double",
+    return Fixpoint(
+        "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w")),
+        init, step, merge, output, "id long, origin long, dist double",
+        halt=lambda m, history: m["changed"] == 0,
     )
-    return BSPResult(state, (log[-1]["superstep"] + 1) if log else 0, converged, log)
 
 
 def mssp(
@@ -513,9 +123,9 @@ def mssp(
     column for source sets that should never transit the driver
     (fraction mode can select O(|V|) sources).
 
-    ``mode="csr"``: relaxation over resident staged CSR blocks (see
-    ``_mssp_csr_cand``); byte-gated on the worst-case frontier
-    |V|·|sources| since the frontier broadcasts each superstep."""
+    ``mode="csr"``: relaxation on the csr fixpoint runner over resident
+    staged CSR blocks (see ``_relax_fixpoint``); byte-gated on the
+    worst-case state |V|·|sources| since it is broadcast."""
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown mssp mode {mode!r}")
     spark = graph.edges.sparkSession
@@ -530,18 +140,17 @@ def mssp(
             F.lit(0.0).alias("dist"),
             F.lit(True).alias("changed"),
         )
+        n_sources = state0.count()
     else:
         state0 = spark.createDataFrame(
             [(int(s), int(s), 0.0, True) for s in sources],
             "id long, origin long, dist double, changed boolean",
         )
+        n_sources = len(sources)
 
-    bcast_slot: list = [None]
-    n_sources = state0.count()
-    last_changed = [n_sources]
     if mode == "csr":
+        from okapi_spark.plans import csr_fixpoint as fx
         from okapi_spark.plans.broadcast import auto_state_broadcast
-        from okapi_spark.plans.csr_blocks import choose_task_count
 
         worst_frontier = graph.num_vertices() * n_sources
         if not auto_state_broadcast(worst_frontier, row_bytes=48):
@@ -550,38 +159,18 @@ def mssp(
                 f"the worst case is |V|·|sources|={worst_frontier} rows, "
                 "exceeding the broadcast budget. Use mode='sql'."
             )
-        from okapi_spark.operators.pagerank import _FUSE_MAX_EDGES
-
-        if store is None and graph.num_edges() <= _FUSE_MAX_EDGES:
-            origins = [r.id for r in state0.select("id").collect()]
-            if len(set(origins)) == len(origins):
-                # whole fixpoint in one job over the memoized staged
-                # blocks (duplicate source rows keep the loop path so
-                # its duplicate-row output shape is preserved exactly)
-                return _mssp_csr_fused(
-                    spark, graph, graph.vertices_by_id(num_partitions),
-                    graph.num_vertices(), origins, max_supersteps,
-                    num_partitions, graph.num_edges(),
-                )
-        # per-superstep loop (crash-resumable / large-|E| path): staged
-        # blocks memoized on the Graph and shared with sssp
-        k_tasks = choose_task_count(graph.num_edges(), num_partitions)
+        origins = sources if not isinstance(sources, DataFrame) else [
+            r.id for r in state0.select("id").collect()
+        ]
+        return fx.run(graph, _relax_fixpoint(graph, origins), max_supersteps, num_partitions, store)
 
     def superstep(ss: int, state: DataFrame) -> tuple[DataFrame, dict]:
-        if mode == "csr":
-            bdir, epoch = _ensure_sp_blocks(graph, num_partitions)
-            cand = _mssp_csr_cand(
-                spark, num_partitions, k_tasks, epoch, bdir,
-                state.filter("changed").select("id", "origin", "dist"),
-                bcast_slot, n_rows=last_changed[0],
-            )
-        else:
-            frontier = state.filter("changed").select(F.col("id").alias("src"), "origin", "dist")
-            cand = (
-                edges.join(frontier, "src")
-                .groupBy(F.col("dst").alias("id"), "origin")
-                .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
-            )
+        frontier = state.filter("changed").select(F.col("id").alias("src"), "origin", "dist")
+        cand = (
+            edges.join(frontier, "src")
+            .groupBy(F.col("dst").alias("id"), "origin")
+            .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
+        )
         merged = (
             state.select("id", "origin", "dist").join(cand, ["id", "origin"], "full_outer")
             .select(
@@ -593,22 +182,13 @@ def mssp(
                 ).alias("changed"),
             )
         )
-
-        def post(materialized: DataFrame) -> dict:
-            n_changed = materialized.filter("changed").count()
-            last_changed[0] = n_changed
-            return {"changed": n_changed}
-
-        return merged, post
+        return merged, lambda materialized: {"changed": materialized.filter("changed").count()}
 
     res = run_supersteps(
         state0, superstep, max_supersteps=max_supersteps,
         halt_fn=lambda ss, m: m["changed"] == 0, store=store,
     )
     res.state = res.state.select("id", "origin", "dist")
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     return res
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -49,10 +50,11 @@ def sybilrank(
     (state shuffles into the src join, map-side partial sum combines
     messages).
 
-    ``mode="csr"``: the scatter is weighted-PageRank-shaped, so the
-    resident-staged-block kernel is PageRank's own
-    ``_csr_messages_bcast`` over the trust shares — zero exchange,
-    zero edge rescan (plans/csr_blocks.py); same byte gate.
+    ``mode="csr"``: the scatter is weighted-PageRank-shaped, so it runs
+    PageRank's power-iteration spec (``power_fixpoint``, base=0,
+    damping=1 — ``0.0 + 1.0·msum`` is IEEE-identical to ``msum``) on
+    the csr fixpoint runner over the memoized weighted share blocks —
+    zero exchange, zero edge rescan; same byte gate.
     """
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown sybilrank mode {mode!r}")
@@ -77,53 +79,35 @@ def sybilrank(
         # byte-budgeted gate (plans/broadcast.py, CC/LPA/PageRank
         # precedent): (id, send) ~ 32B/row vs the 256MB budget
         state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
-    n_trusted = trusted.select("id").distinct().count()
+    if n == 0:
+        # a fixed iteration count (⌈c·log10 N⌉) is undefined on no vertices
+        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, False)
+    # a driver-side seed list — trusted sets are small side tables, and
+    # a local one collects without a Spark job
+    t_ids = np.unique(np.asarray([r.id for r in trusted.select("id").collect()], dtype="int64"))
+    n_trusted = len(t_ids)
     if n_trusted == 0:
         raise ValueError("sybilrank needs at least one trusted vertex")
     power_iterations = int(math.ceil(iteration_multiplier * math.log10(n))) or 1
 
     deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("deg"))
-    shares = graph.edges.join(deg.withColumnRenamed("id", "src"), "src").select(
-        "src", "dst", (F.col("weight") / F.col("deg")).alias("share")
-    )
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-
-    epoch = next(_EPOCH_COUNTER)
-    bcast_slot: list = [None]
     if mode == "csr":
-        # same staged layout and kernel as pagerank mode='csr' — and
-        # MEMOIZED on the Graph (round 6, like pr_blocks/sp_blocks):
-        # the trust-share blocks are a pure layout of the edge set
-        from okapi_spark.operators.pagerank import _pr_pack
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, cleanup_blocks, default_block_dir, stage_blocks,
-        )
+        from okapi_spark.operators.pagerank import power_fixpoint
+        from okapi_spark.plans import csr_fixpoint as fx
 
-        n_edges = graph.num_edges()
-        k_tasks = choose_task_count(n_edges, num_partitions)
+        def init(ids):
+            rank = np.zeros(len(ids))
+            pos, hit = fx.locate(ids, t_ids)  # seeds absent from V drop out
+            rank[pos[hit]] = total_trust / n_trusted
+            return {"rank": rank}
 
-        def _stage() -> tuple[str, int]:
-            stage_epoch = next(_EPOCH_COUNTER)
-            shares_by_pid = (
-                shares.withColumn(
-                    "pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int")
-                ).repartition(num_partitions, "pid")
-            )
-            bdir = default_block_dir(spark)
-            with no_adaptive(spark):
-                staged = stage_blocks(
-                    shares_by_pid, num_partitions, _pr_pack, "sr", stage_epoch, bdir
-                )
-            assert staged == n_edges, f"staged {staged} share rows != |E|={n_edges}"
-            return bdir, stage_epoch
-
-        def ensure_staged() -> tuple[str, int]:
-            return graph.derived(
-                ("sr_blocks", num_partitions),
-                _stage,
-                cleanup=lambda v: cleanup_blocks(v[0]),
-            )
+        spec = power_fixpoint(graph, True, init, 0.0, 1.0)
+        res = fx.run(graph, spec, power_iterations, num_partitions)
+        res.state = res.state.withColumnRenamed("rank", "send")
     else:
+        shares = graph.edges.join(deg.withColumnRenamed("id", "src"), "src").select(
+            "src", "dst", (F.col("weight") / F.col("deg")).alias("share")
+        )
         # broadcast mode: dst-partitioned scatter layout (see
         # Graph.by_dst); shuffle mode: src layout so the state
         # equi-join co-locates on src
@@ -132,23 +116,13 @@ def sybilrank(
         )
         shares.count()
 
-    init_rank = F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0)
-    state0 = (
-        vertices.join(trusted.select("id").distinct().withColumn("is_trusted", F.lit(True)), "id", "left")
-        .select("id", init_rank.alias("send"))
-    )
+        init_rank = F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0)
+        state0 = (
+            vertices.join(trusted.select("id").distinct().withColumn("is_trusted", F.lit(True)), "id", "left")
+            .select("id", init_rank.alias("send"))
+        )
 
-    def superstep(ss: int, state: DataFrame):
-        if mode == "csr":
-            from okapi_spark.operators.pagerank import _csr_messages_bcast
-
-            bdir, staged_epoch = ensure_staged()
-            recv = _csr_messages_bcast(
-                spark, num_partitions, k_tasks, staged_epoch, bdir,
-                state.select("id", F.col("send").alias("rank")),
-                bcast_slot, n_rows=n, tag="sr",
-            ).select(F.col("dst").alias("id"), F.col("msum").alias("recv"))
-        else:
+        def superstep(ss: int, state: DataFrame):
             sends = state.select("id", "send").withColumnRenamed("id", "src")
             if state_broadcast:
                 sends = F.broadcast(sends)
@@ -162,54 +136,17 @@ def sybilrank(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("m").alias("recv"))
             )
-        new_state = vertices.join(recv, "id", "left").select(
-            "id", F.coalesce("recv", F.lit(0.0)).alias("send")
-        )
-        return new_state, {}
-
-    from contextlib import nullcontext
-
-    res = None
-    if mode == "csr":
-        from okapi_spark.operators.pagerank import (
-            _FUSE_MAX_EDGES, _ids_sorted, _pagerank_csr_fused,
-        )
-
-        if n_edges <= _FUSE_MAX_EDGES:
-            # ALL power iterations in ONE Spark job (round 6): the
-            # update is exactly weighted PageRank's fused kernel with
-            # base=0, damping=1 — ``0.0 + 1.0·msum`` is IEEE-identical
-            # to the per-iteration plan's ``coalesce(recv, 0)``, so the
-            # trust vector is bit-identical by construction.
-            import numpy as np
-
-            bdir, staged_epoch = ensure_staged()
-            ids = _ids_sorted(graph, vertices, n)
-            t_ids = np.asarray(
-                sorted(r.id for r in trusted.select("id").distinct().collect()),
-                dtype="int64",
+            new_state = vertices.join(recv, "id", "left").select(
+                "id", F.coalesce("recv", F.lit(0.0)).alias("send")
             )
-            ranks0 = np.zeros(n, dtype="float64")
-            if len(t_ids) and n:
-                pos = np.searchsorted(ids, t_ids)
-                np.clip(pos, 0, n - 1, out=pos)
-                valid = ids[pos] == t_ids  # seeds absent from V drop out
-                ranks0[pos[valid]] = total_trust / n_trusted
-            res = _pagerank_csr_fused(
-                spark, ids, ranks0, n, 0.0, 1.0, 0.0, "max",
-                power_iterations, power_iterations, num_partitions,
-                staged_epoch, bdir, n_edges, tag="sr",
-            )
-            res.state = res.state.withColumnRenamed("rank", "send")
-    if res is None:
-        with no_adaptive(spark) if (state_broadcast or mode == "csr") else nullcontext():
+            return new_state, {}
+
+        from contextlib import nullcontext
+
+        with no_adaptive(spark) if state_broadcast else nullcontext():
             res = run_supersteps(state0, superstep, max_supersteps=power_iterations)
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
-    final = res.state.join(deg, "id", "left").select(
+    res.state = res.state.join(deg, "id", "left").select(
         "id",
         F.when(F.col("deg") > 0, F.col("send") / F.col("deg")).otherwise(0.0).alias("rank"),
     )
-    res.state = final
     return res

@@ -201,7 +201,7 @@ def _oriented_array(
 
     The |V|-row degree table is gathered executor-side into two sorted
     int64 numpy arrays (ids, degrees — the same ``mapInArrow`` pack
-    PageRank's csr gather uses, pagerank.py:_gather_sorted_arrays) and
+    csr fixpoint runner's gather, csr_fixpoint.gather_sorted_arrays) and
     shipped once through ``sc.broadcast`` torrent transport. The
     orientation itself is then a map: each Arrow batch of canonical
     (u, v) rows looks both degrees up with a vectorized
@@ -216,9 +216,9 @@ def _oriented_array(
     import numpy as np
     import pyarrow as pa
 
-    from okapi_spark.operators.pagerank import _gather_sorted_arrays
+    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
 
-    ids, (degs,) = _gather_sorted_arrays(
+    ids, (degs,) = gather_sorted_arrays(
         deg.select(F.col("x").alias("id"), "d"), deg.count(), [("d", "int64")]
     )
     sc = graph.edges.sparkSession.sparkContext
@@ -601,7 +601,7 @@ def _triangle_count_csr(
     from pyspark.storagelevel import StorageLevel
 
     from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER, _gather_sorted_arrays
+    from okapi_spark.plans.csr_fixpoint import _EPOCH_COUNTER, gather_sorted_arrays
     from okapi_spark.plans.broadcast import auto_state_broadcast
     from okapi_spark.plans.csr_blocks import (
         cleanup_blocks,
@@ -631,9 +631,10 @@ def _triangle_count_csr(
             if row[0] is None:
                 timings["deg_sec"] = round(time.time() - t0, 2)
                 return None
+            # Σdeg counts each canonical edge at both endpoints — plus,
+            # on a symmetric graph's memoized census, each self-loop
+            # once; the canonical set (src < dst) stages no self-loop
             sum_d, nv = int(row[0]), int(row[1])
-            assert sum_d % 2 == 0, f"degree sum {sum_d} is odd"
-            m = sum_d // 2
             M = nv  # ranks are dense [0, |V|) by construction
             if not auto_state_broadcast(
                 nv, row_bytes=16, budget_bytes=ONE_SHOT_ARRAY_BUDGET_BYTES
@@ -645,7 +646,7 @@ def _triangle_count_csr(
                 )
             import numpy as np
 
-            ids_arr, (degs_arr,) = _gather_sorted_arrays(
+            ids_arr, (degs_arr,) = gather_sorted_arrays(
                 deg.select(F.col("x").alias("id"), "d"), nv, [("d", "int64")]
             )
             ranks = np.empty(nv, dtype=np.int64)
@@ -681,7 +682,10 @@ def _triangle_count_csr(
                         w, P, functools.partial(_tri_wedge_pack, M=M),
                         "triw", epoch, bdir,
                     )
-                assert staged == m, f"staged {staged} rows != oriented |E|={m}"
+                m = staged
+                assert 2 * m == sum_d or (graph.symmetric_distinct and 2 * m < sum_d), (
+                    f"staged {m} rows vs degree sum {sum_d}"
+                )
             finally:
                 # the relabel broadcast only feeds the staging pass
                 bmap.destroy()

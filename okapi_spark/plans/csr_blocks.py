@@ -120,28 +120,14 @@ def stage_blocks(
     block_dir: str,
 ) -> int:
     """One pass over the pid-partitioned edges: pack each partition with
-    ``pack_fn(pandas_df) -> dict[str, np.ndarray]`` and write each
-    array to ``{block_dir}/{tag}-{epoch}-{pid}.{key}.npy`` (tmp-file +
-    atomic rename per array; the ``.keys`` manifest is renamed LAST, so
-    a task retry can never expose a half-written block). Returns the
-    total edge-row count staged (caller asserts it against the graph's
-    edge count)."""
-    import numpy as np
+    ``pack_fn(pandas_df) -> dict[str, np.ndarray]`` and ``_save`` it as
+    block ``{block_dir}/{tag}-{epoch}-{pid}``. Returns the total edge-row
+    count staged (caller asserts it against the graph's edge count)."""
     import pandas as pd
 
     def writer(key, pdf):
         pid = int(key[0])
-        packed = pack_fn(pdf)
-        base = os.path.join(block_dir, f"{tag}-{epoch}-{pid}")
-        for k, arr in packed.items():
-            tmp = f"{base}.{k}.npy.tmp{os.getpid()}"
-            with open(tmp, "wb") as f:
-                np.save(f, np.ascontiguousarray(arr))
-            os.replace(tmp, f"{base}.{k}.npy")
-        mtmp = f"{base}.keys.tmp{os.getpid()}"
-        with open(mtmp, "w") as f:
-            f.write("\n".join(packed.keys()))
-        os.replace(mtmp, f"{base}.keys")
+        _save(os.path.join(block_dir, f"{tag}-{epoch}-{pid}"), pack_fn(pdf))
         return pd.DataFrame({"pid": [pid], "n": [len(pdf)]})
 
     counts = edges_by_pid.groupBy("pid").applyInPandas(
@@ -151,65 +137,79 @@ def stage_blocks(
 
 
 def load_block(tag: str, epoch: int, pid: int, block_dir: str):
-    """Worker-side block open: cached memmap handles, else
-    ``np.load(mmap_mode="r")`` — the data pages come from the node's
-    shared OS page cache, not a per-worker copy. Returns None for a
-    pid that owns no edges (no block was staged)."""
-    import numpy as np
-
+    """Worker-side block open: cached memmap handles, else ``_open`` —
+    the data pages come from the node's shared OS page cache, not a
+    per-worker copy. None for a pid that owns no edges."""
     key = (tag, epoch, pid)
     blk = _BLOCK_CACHE.get(key)
     if blk is None:
-        base = os.path.join(block_dir, f"{tag}-{epoch}-{pid}")
-        if not os.path.exists(base + ".keys"):
+        blk = _open(os.path.join(block_dir, f"{tag}-{epoch}-{pid}"))
+        if blk is None:
             return None
-        with open(base + ".keys") as f:
-            keys = [k for k in f.read().split("\n") if k]
-        blk = {k: np.load(f"{base}.{k}.npy", mmap_mode="r") for k in keys}
         _prune_stale(tag, epoch)
         _BLOCK_CACHE[key] = blk
     return blk
 
 
+def _save(base: str, arrays: dict) -> None:
+    """Write each array to ``{base}.{key}.npy`` (tmp + atomic rename),
+    the ``.keys`` manifest LAST: no reader sees a half-written set."""
+    import numpy as np
+
+    for k, arr in arrays.items():
+        tmp = f"{base}.{k}.npy.tmp{os.getpid()}"
+        with open(tmp, "wb") as f:
+            np.save(f, np.ascontiguousarray(arr))
+        os.replace(tmp, f"{base}.{k}.npy")
+    mtmp = f"{base}.keys.tmp{os.getpid()}"
+    with open(mtmp, "w") as f:
+        f.write("\n".join(arrays))
+    os.replace(mtmp, f"{base}.keys")
+
+
+def _open(base: str):
+    """Memmap (read-only) every array of a set written by ``_save``;
+    None when its manifest does not exist."""
+    import numpy as np
+
+    if not os.path.exists(base + ".keys"):
+        return None
+    with open(base + ".keys") as f:
+        keys = [k for k in f.read().split("\n") if k]
+    return {k: np.load(f"{base}.{k}.npy", mmap_mode="r") for k in keys}
+
+
 def _prune_stale(tag: str, epoch: int) -> None:
-    # prune only this TAG's older epochs: block sets for different
-    # operators (pr/lpa/cc/triw) now live concurrently on a memoizing
-    # Graph, and evicting each other's handles per load would force a
-    # reopen on every touch
+    # prune only this TAG's older epochs: block sets of different
+    # operators live concurrently on a memoizing Graph, and evicting
+    # each other's handles would force a reopen on every touch
     for k in [k for k in _BLOCK_CACHE if k[0] == tag and k[1] != epoch]:
         _BLOCK_CACHE.pop(k, None)
 
 
-def resolved_arrays(tag: str, epoch: int, pid: int, block_dir: str, names, builder):
+def resolved_arrays(tag: str, epoch: int, pid: int, block_dir: str, name: str, builder):
     """Memoize a kernel's superstep-invariant DERIVATIVES of a staged
     block (e.g. the ``searchsorted`` gather/scatter position arrays,
     which are pure functions of the block plus the graph's sorted
-    vertex-id array) as sidecar ``.npy`` files in the staging dir.
+    vertex-id array) as the sidecar set ``name`` in the staging dir.
 
     The fused kernels run as ONE task, and Spark's per-core Python
     workers give no affinity for 1-task jobs — a worker-global cache of
     the resolved arrays would miss on most repeat calls (measured: the
     pre-resolve is ~0.4s of a warm lpa_4 call at 2.4M edges). Files in
     the shared staging dir are worker-agnostic: the first toucher
-    resolves and writes (tmp + atomic rename per array; a concurrent
-    writer produces identical bytes), everyone after memmaps from the
-    OS page cache. Cleaned up with the block dir."""
-    import numpy as np
-
-    key = (tag + "#res", epoch, pid)
+    resolves and writes (a concurrent writer produces identical bytes),
+    then re-opens, so every caller gets read-only memmaps from the OS
+    page cache. Cleaned up with the block dir."""
+    key = (tag + "#" + name, epoch, pid)
     v = _BLOCK_CACHE.get(key)
     if v is None:
-        base = os.path.join(block_dir, f"{tag}-{epoch}-{pid}.res")
-        if all(os.path.exists(f"{base}.{n}.npy") for n in names):
-            v = {n: np.load(f"{base}.{n}.npy", mmap_mode="r") for n in names}
-        else:
-            v = builder()
-            for n, arr in v.items():
-                tmp = f"{base}.{n}.npy.tmp{os.getpid()}"
-                with open(tmp, "wb") as f:
-                    np.save(f, np.ascontiguousarray(arr))
-                os.replace(tmp, f"{base}.{n}.npy")
-        _prune_stale(tag + "#res", epoch)
+        base = os.path.join(block_dir, f"{tag}-{epoch}-{pid}.{name}")
+        v = _open(base)
+        if v is None:
+            _save(base, builder())
+            v = _open(base)
+        _prune_stale(key[0], epoch)
         _BLOCK_CACHE[key] = v
     return v
 

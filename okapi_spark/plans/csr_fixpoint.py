@@ -1,0 +1,350 @@
+"""One runner for every csr fixpoint: staged CSR blocks + NumPy state.
+
+PageRank, SybilRank, connected components, LPA and SSSP/MSSP reduce
+their ``mode="csr"`` to a ``Fixpoint`` spec of pure NumPy functions
+over a |V|-indexed state (a dict of arrays whose last axis is the
+position in the sorted vertex-id array):
+
+* ``init(ids)`` builds the round-0 state on the driver;
+* ``resolve(blk, ids)`` derives a block's round-invariant arrays
+  (memoized as sidecar files next to the block, csr_blocks);
+* ``step(state, blk, res)`` runs one round over one staged block and
+  returns a part — every in-edge of a dst lives in ONE block
+  (pmod(xxhash64(dst), P) layout), so a part is final for its dsts;
+* ``merge(state, parts)`` folds the parts into the next state plus a
+  metrics dict; ``halt(metrics, history)`` decides from the metrics;
+* ``output(ids, state)`` decodes the state into the result rows.
+
+The runner owns everything else. Staging (``stage``) packs the edges
+dst-sorted once per Graph. The loop runs in one of two placements:
+inside the fuse window one single-task Spark job holds every block and
+runs all rounds locally, paying the per-job floor once; beyond it each
+round is one job over ``choose_task_count`` tasks that return their
+per-block parts for the driver to merge. Both placements call the
+same functions, so they are bit-identical by construction. With a
+``CheckpointStore`` every job runs one round and the driver itself
+writes the state as ``(id, <state cols>)`` parquet at the store's
+superstep path, committed by the store's ledger — no Spark job; a
+re-run resumes from the ledger tip, and a halted tip returns the
+stored state with no staging and no edge pass. Every broadcast is
+destroyed in a ``finally``.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+import pickle
+import shutil
+import time
+from dataclasses import dataclass, replace
+from typing import Callable
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive
+from okapi_spark.plans.csr_blocks import (
+    choose_task_count, cleanup_blocks, default_block_dir, load_block,
+    pid_frame, resolved_arrays, stage_blocks,
+)
+
+# Below this many edges the per-round mapInPandas job FLOOR (~0.35-0.6s
+# measured at 32 cores: scheduling + Python round trip + Arrow collect,
+# regardless of kernel size — the kernel itself is ~20-40ms) dwarfs the
+# single-core kernel time, so every round runs inside ONE job. 8M edges
+# ≈ 120ms/round single core — still well under the job floor; past it,
+# per-round jobs with one task per ~2M edges win back the parallelism.
+_FUSE_MAX_EDGES = 8_000_000
+
+# driver-side monotonic namespace for staged block files — NOT
+# id(graph), which CPython reuses after GC
+_EPOCH_COUNTER = itertools.count(1)
+
+_GATHER_PANDAS_MAX_ROWS = 1_000_000
+
+def positions(blk, ids) -> dict:
+    """The default ``resolve``: gather (src) and scatter (dst) positions
+    into the sorted id array — dst-sorted blocks give sorted ``dpos``."""
+    return {"spos": np.searchsorted(ids, blk["src"]), "dpos": np.searchsorted(ids, blk["dst"])}
+
+
+def locate(ids, keys) -> tuple:
+    """(positions, present mask) of ``keys`` in the sorted ``ids`` — one
+    vectorized pass."""
+    pos = np.searchsorted(ids, keys)
+    present = pos < len(ids)
+    present[present] = ids[pos[present]] == keys[present]
+    return pos, present
+
+
+@dataclass
+class Fixpoint:
+    name: str  # staged block set (memo key + file tag)
+    frame: Callable[[], DataFrame]  # (src, dst, <value cols>) to stage
+    init: Callable
+    step: Callable
+    merge: Callable
+    output: Callable
+    schema: str
+    resolve: Callable = positions
+    halt: Callable | None = None
+    id_cols: tuple = ()  # state arrays holding positions, checkpointed as ids
+
+
+def _pack(pdf) -> dict:
+    """Per-partition pack (runs once inside ``stage_blocks``): every
+    staged column sorted by dst — stable, so each dst's segment keeps
+    its incoming row order — for segment-reduce kernels."""
+    order = np.argsort(pdf["dst"].to_numpy(), kind="stable")
+    return {
+        c: pdf[c].to_numpy()[order].astype("int64" if c in ("src", "dst") else "float64")
+        for c in pdf.columns if c != "pid"
+    }
+
+
+def stage(graph, name: str, frame: Callable[[], DataFrame], P: int) -> tuple:
+    """Stage ``frame()`` as P dst-hashed, dst-sorted blocks ONCE per
+    (Graph, name, P) — one pass over the edges, the I/O shape of a
+    shuffle map write; rounds never scan or re-ship the edge table.
+    Memoized on the Graph (Graph.unpersist()/atexit reclaim the files).
+    Returns ``(tag, epoch, block_dir)``."""
+    def build():
+        spark = graph.edges.sparkSession
+        epoch = next(_EPOCH_COUNTER)
+        by_pid = (
+            frame()
+            .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(P)).cast("int"))
+            .repartition(P, "pid")
+        )
+        bdir = default_block_dir(spark)
+        with no_adaptive(spark):
+            staged = stage_blocks(by_pid, P, _pack, name, epoch, bdir)
+        assert staged == graph.num_edges(), f"staged {staged} rows != |E|={graph.num_edges()}"
+        return name, epoch, bdir
+
+    return graph.derived(("csr_blocks", name, P), build, cleanup=lambda v: cleanup_blocks(v[2]))
+
+
+def ids_sorted(graph, P: int):
+    """Memoized driver-side sorted vertex-id array: every csr call needs
+    it, and it is exactly the |V|·8B payload the state broadcast
+    already budgets for — held on the Graph, no per-call gather job."""
+    return graph.derived(
+        ("ids_sorted",),
+        lambda: gather_sorted_arrays(graph.vertices_by_id(P).select("id"), graph.num_vertices(), [])[0],
+        cleanup=lambda v: None,
+    )
+
+
+def gather_sorted_arrays(df: DataFrame, n_rows: int | None, cols: list[tuple[str, str]]) -> tuple:
+    """Returns ``(ids, [arr, ...])`` with every array id-sorted on the
+    SAME stable order (value columns stay row-aligned). ``cols`` is a
+    list of ``(column, numpy dtype)``.
+
+    Below ``_GATHER_PANDAS_MAX_ROWS`` the plain Arrow collect wins (the
+    mapInArrow pack pays a Python-worker round per partition, measured
+    ~+0.4s at |V|=20k). Above it each partition packs and SORTS its rows
+    into raw NumPy buffers inside ``mapInArrow``: the driver receives one
+    binary blob per partition, no per-row objects, and merges the
+    presorted runs."""
+    import pyarrow as pa
+
+    names = [c for c, _ in cols]
+    dtypes = [np.dtype(d) for _, d in cols]
+    if n_rows is not None and n_rows <= _GATHER_PANDAS_MAX_ROWS:
+        pdf = df.select("id", *names).toPandas()
+        ids = pdf["id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        return ids[order], [pdf[c].to_numpy().astype(dt, copy=False)[order] for c, dt in zip(names, dtypes)]
+
+    def pack(batches):
+        ids, vals = [], [[] for _ in names]
+        for b in batches:
+            ids.append(b.column("id").to_numpy(zero_copy_only=False))
+            for j, c in enumerate(names):
+                vals[j].append(b.column(c).to_numpy(zero_copy_only=False))
+        if ids:
+            i = np.concatenate(ids)
+            o = np.argsort(i, kind="stable")
+            arrays = [pa.array([i[o].tobytes()])]
+            for j, dt in enumerate(dtypes):
+                arrays.append(pa.array([np.concatenate(vals[j])[o].astype(dt).tobytes()]))
+            yield pa.RecordBatch.from_arrays(arrays, names=["ids"] + [f"v{j}" for j in range(len(names))])
+
+    schema = ", ".join(["ids binary"] + [f"v{j} binary" for j in range(len(names))])
+    blobs = df.select(F.col("id").cast("long").alias("id"), *names).mapInArrow(pack, schema).collect()
+    ids = np.concatenate([np.frombuffer(b.ids, dtype=np.int64) for b in blobs] or [np.array([], dtype=np.int64)])
+    out = [
+        np.concatenate([np.frombuffer(getattr(b, f"v{j}"), dtype=dt) for b in blobs] or [np.array([], dtype=dt)])
+        for j, dt in enumerate(dtypes)
+    ]
+    order = np.argsort(ids, kind="stable")
+    return ids[order], [a[order] for a in out]
+
+
+def _open_blocks(spec: Fixpoint, layout: tuple, pdf_iter, b_ids) -> list:
+    """Worker side: this task's (block, resolved arrays) pairs."""
+    tag, epoch, bdir = layout
+    out = []
+    for pdf in pdf_iter:
+        for pid in pdf["pid"].tolist():
+            blk = load_block(tag, epoch, int(pid), bdir)
+            if blk is not None:
+                res = resolved_arrays(
+                    tag, epoch, int(pid), bdir, spec.resolve.__name__,
+                    lambda: spec.resolve(blk, b_ids.value),
+                )
+                out.append((blk, res))
+    return out
+
+
+def _shippable(spec: Fixpoint) -> Fixpoint:
+    # tasks get the round functions only — frame/init/output may close
+    # over DataFrames, which cannot ship to a worker
+    return replace(spec, frame=None, init=None, output=None)
+
+
+def _round(spec: Fixpoint, state: dict, parts: list, history: list) -> tuple:
+    state, m = spec.merge(state, parts)
+    m["_halted"] = bool(spec.halt is not None and spec.halt(m, history))
+    return state, m
+
+
+def round_job(spark, spec: Fixpoint, layout: tuple, P: int, k: int, b_ids, b_state) -> DataFrame:
+    """One per-round job: a P-row Range sliced over ``k`` tasks, each
+    returning the pickled parts of its blocks — no shuffle, no edge
+    scan, the state rides the broadcast ``b_state``."""
+    spec = _shippable(spec)
+
+    def kernel(pdf_iter):
+        state = b_state.value
+        parts = [spec.step(state, blk, res) for blk, res in _open_blocks(spec, layout, pdf_iter, b_ids)]
+        yield pd.DataFrame({"blob": [pickle.dumps(parts, protocol=5)]})
+
+    return pid_frame(spark, P, k).mapInPandas(kernel, schema="blob binary")
+
+
+def _fused_job(spark, spec: Fixpoint, layout: tuple, P: int, b_ids, b_run) -> tuple:
+    """Every remaining round in ONE single-task job; returns the final
+    state and the per-round metrics."""
+    spec = _shippable(spec)
+
+    def kernel(pdf_iter):
+        state, history, rounds = b_run.value
+        blocks = _open_blocks(spec, layout, pdf_iter, b_ids)
+        out: list[dict] = []
+        for _ in range(rounds):
+            t0 = time.time()
+            state, m = _round(spec, state, [spec.step(state, blk, res) for blk, res in blocks], history + out)
+            m["superstep_sec"] = time.time() - t0
+            out.append(m)
+            if m["_halted"]:
+                break
+        yield pd.DataFrame({"blob": [pickle.dumps((state, out), protocol=5)]})
+
+    row = pid_frame(spark, P, 1).mapInPandas(kernel, schema="blob binary").collect()[0]
+    return pickle.loads(row.blob)
+
+
+def _write_state(store: CheckpointStore, ss: int, spec: Fixpoint, ids, state: dict) -> None:
+    """The state as ``(id, <state cols>)`` parquet (a (k, |V|) array is a
+    k-list column) at the store's superstep path, written from the
+    driver with pyarrow — the store is a driver-local directory, and a
+    Spark write would cost a job (plus a schema-inference job to
+    re-read) per checkpoint. tmp + atomic rename, like every store
+    write; the ledger line that commits it is appended after."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {"id": pa.array(ids)}
+    for k, a in state.items():
+        a = ids[a] if k in spec.id_cols else a
+        cols[k] = pa.FixedSizeListArray.from_arrays(a.T.ravel(), a.shape[0]) if a.ndim == 2 else pa.array(a)
+    path = store.state_path(ss)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(pa.table(cols), os.path.join(path, ".part-0.tmp"))
+    os.replace(os.path.join(path, ".part-0.tmp"), os.path.join(path, "part-0.parquet"))
+
+
+def _read_state(store: CheckpointStore, ss: int, spec: Fixpoint) -> tuple:
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(store.state_path(ss))
+    ids = t.column("id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    if not len(ids):
+        return ids, spec.init(ids)
+    state = {}
+    for k in t.column_names[1:]:
+        col = t.column(k).combine_chunks()
+        if hasattr(col, "flatten"):  # list column: one k-vector per vertex
+            a = col.flatten().to_numpy(zero_copy_only=False).reshape(len(ids), -1)[order].T.copy()
+        else:
+            a = col.to_numpy(zero_copy_only=False)[order]
+        state[k] = np.searchsorted(ids, a) if k in spec.id_cols else a
+    return ids, state
+
+
+def run(graph, spec: Fixpoint, max_rounds: int, P: int, store: CheckpointStore | None = None) -> BSPResult:
+    """Run ``spec`` to halt or ``max_rounds``; resumes from ``store``."""
+    spark = graph.edges.sparkSession
+    sc = spark.sparkContext
+    n_edges = graph.num_edges()
+    start, log, ids = 0, [], None
+    if store is not None and (tip := store.latest()) is not None:
+        ids, state = _read_state(store, int(tip["superstep"]), spec)
+        log = [e["metrics"] | {"superstep": e["superstep"]} for e in store.lineage()]
+        start = int(tip["superstep"]) + 1
+        if tip["metrics"].get("_halted"):
+            return _result(spark, spec, ids, state, start, log)
+        if not np.array_equal(ids, ids_sorted(graph, P)):
+            raise ValueError("checkpointed state does not match this graph's vertex set")
+    if ids is None:
+        ids = ids_sorted(graph, P)
+        state = spec.init(ids)
+    if start >= max_rounds:  # nothing left to run: no staging, no job
+        return _result(spark, spec, ids, state, start, log)
+    layout = stage(graph, spec.name, spec.frame, P)
+    b_ids = sc.broadcast(ids)
+    try:
+        with no_adaptive(spark):
+            if store is None and n_edges <= _FUSE_MAX_EDGES:
+                b_run = sc.broadcast((state, log, max_rounds - start))
+                try:
+                    state, steps = _fused_job(spark, spec, layout, P, b_ids, b_run)
+                finally:
+                    b_run.destroy()
+                for ss, m in enumerate(steps, start):
+                    log.append(m | {"edges_processed": n_edges, "superstep": ss})
+            else:
+                k = choose_task_count(n_edges, P)
+                for ss in range(start, max_rounds):
+                    t0 = time.time()
+                    b_state = sc.broadcast(state)
+                    try:
+                        blobs = round_job(spark, spec, layout, P, k, b_ids, b_state).collect()
+                    finally:
+                        b_state.destroy()
+                    parts = [p for r in blobs for p in pickle.loads(r.blob)]
+                    state, m = _round(spec, state, parts, log)
+                    m["edges_processed"] = n_edges
+                    if store is not None:
+                        _write_state(store, ss, spec, ids, state)
+                        store.log(ss, len(ids), m)
+                    log.append(m | {"superstep_sec": time.time() - t0, "superstep": ss})
+                    if m["_halted"]:
+                        break
+    finally:
+        b_ids.destroy()
+    return _result(spark, spec, ids, state, log[-1]["superstep"] + 1 if log else start, log)
+
+
+def _result(spark, spec: Fixpoint, ids, state: dict, supersteps: int, log: list) -> BSPResult:
+    converged = bool(log and log[-1].get("_halted"))
+    df = spark.createDataFrame(spec.output(ids, state), schema=spec.schema)
+    return BSPResult(df, supersteps, converged, log)

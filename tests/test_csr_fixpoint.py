@@ -1,0 +1,249 @@
+"""The csr fixpoint runner: every physical path agrees on every input.
+
+For each csr operator the fused placement (all rounds in one job), the
+per-round placement (fuse window patched to 0) and a checkpointed run
+stopped after k rounds and resumed must be BIT-identical — they call
+the same step/merge functions. Each is also compared with
+``mode="sql"``: exactly for the integer operators and shortest paths,
+within 1e-12 for PageRank and SybilRank. Plus job-count pins, the
+degenerate-input regressions and the read-only sidecar contract.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from okapi_spark.bsp import CheckpointStore
+from okapi_spark.graph.graph import Graph
+from okapi_spark.operators.components import connected_components
+from okapi_spark.operators.lpa import label_propagation
+from okapi_spark.operators.pagerank import pagerank
+from okapi_spark.operators.sssp import mssp, sssp
+from okapi_spark.operators.sybilrank import sybilrank
+from okapi_spark.plans import csr_blocks
+from okapi_spark.plans import csr_fixpoint as fx
+from tests.conftest import toy_edges
+
+STAR = [(0, i, 1.0) for i in range(1, 13)] + [(1, 2, 1.0)]
+_rng = np.random.RandomState(71)
+# weights k/8 are exact in binary: float sums cannot flip a tie or a min
+RANDOM = [
+    (int(s), int(d), float(w) / 8.0)
+    for s, d, w in zip(_rng.randint(0, 80, 240), _rng.randint(0, 80, 240), _rng.randint(1, 9, 240))
+    if s != d
+]
+
+INPUTS = {
+    "empty": ([], False),
+    "single_edge": ([(1, 2, 1.0)], False),
+    "self_loop": ([(1, 1, 1.0), (1, 2, 0.5), (2, 3, 1.0)], True),
+    # kept as rows: duplicate (src, dst) pairs are not deduplicated
+    "duplicate_edges": ([(1, 2, 1.0), (1, 2, 1.0), (2, 3, 2.0), (3, 1, 0.25), (3, 1, 0.75)], False),
+    "star_hub": (STAR, True),
+    "two_components": ([(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (7, 8, 2.0), (8, 9, 0.5)], True),
+    # vertex 5 hears weight 2.0 from label 1's side and 2.0 from label 2's
+    "lpa_tie": ([(1, 5, 2.0), (2, 5, 2.0), (3, 1, 1.0), (4, 2, 1.0)], True),
+    "random": (RANDOM, True),
+}
+
+# name -> (run(g, mode, store, budget), first-leg budget or None when the
+# operator takes no store, float tolerance vs sql or None for exact)
+OPS = {
+    # capped: a star's rank oscillation decays only 0.85× per round
+    "pagerank": (lambda g, m, s, b: pagerank(g, tol=1e-6, max_supersteps=b or 12, mode=m, store=s), 2, 1e-12),
+    "sybilrank": (lambda g, m, s, b: sybilrank(g, _trusted(g), mode=m), None, 1e-12),
+    "cc": (lambda g, m, s, b: connected_components(g, max_supersteps=b or 200, mode=m, store=s), 1, None),
+    "lpa_fixed": (lambda g, m, s, b: label_propagation(g, iterations=b or 4, mode=m, store=s), 2, None),
+    "lpa_converge": (lambda g, m, s, b: label_propagation(g, max_supersteps=b or 15, mode=m, store=s), 2, None),
+    "sssp": (lambda g, m, s, b: sssp(g, 1, max_supersteps=b or 200, mode=m, store=s), 1, None),
+    "mssp": (lambda g, m, s, b: mssp(g, [1, 2], max_supersteps=b or 200, mode=m, store=s), 1, None),
+}
+
+_GRAPHS: dict = {}
+
+
+def _graph(spark, name: str) -> Graph:
+    """One Graph per input for the module, so operators share its
+    staged layouts the way repeated calls on one Graph do."""
+    if name not in _GRAPHS:
+        edges, symmetric = INPUTS[name]
+        if symmetric:
+            df = toy_edges(spark, edges)
+        else:
+            df = spark.createDataFrame(edges, "src long, dst long, weight double")
+        _GRAPHS[name] = Graph.from_edges(df)
+    return _GRAPHS[name]
+
+
+def _trusted(g: Graph):
+    # a local table: collecting it runs no Spark job
+    return g.edges.sparkSession.createDataFrame(pd.DataFrame({"id": [1, 3]}), "id long")
+
+
+def _rows(res) -> list:
+    return sorted(tuple(r) for r in res.state.collect())
+
+
+def _same_run(a, b) -> None:
+    assert _rows(a) == _rows(b)
+    assert (a.supersteps, a.converged) == (b.supersteps, b.converged)
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_graphs():
+    yield
+    for g in _GRAPHS.values():
+        g.unpersist()
+    _GRAPHS.clear()
+
+
+@pytest.mark.parametrize("inp", list(INPUTS))
+@pytest.mark.parametrize("op", list(OPS))
+def test_csr_paths_agree(spark, monkeypatch, tmp_path, op, inp):
+    run, first_leg, tol = OPS[op]
+    # several blocks per task set, so per-round jobs span several tasks
+    monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 4)
+    g = _graph(spark, inp)
+    fused = run(g, "csr", None, None)
+    with monkeypatch.context() as mp:
+        mp.setattr(fx, "_FUSE_MAX_EDGES", 0)
+        _same_run(fused, run(g, "csr", None, None))
+    if first_leg is not None:
+        store = CheckpointStore(str(tmp_path / "ckpt"))
+        run(g, "csr", store, first_leg)
+        _same_run(fused, run(g, "csr", store, None))
+        # a finished run's ledger tip is halted or at budget: re-running
+        # resumes to the same answer without new rounds
+        n = len(store.lineage())
+        _same_run(fused, run(g, "csr", store, None))
+        assert len(store.lineage()) == n
+    sql = run(g, "sql", None, None)
+    assert fused.converged == sql.converged
+    if tol is None:
+        assert _rows(fused) == _rows(sql)
+    else:
+        a, b = dict(_rows(fused)), dict(_rows(sql))
+        assert set(a) == set(b)
+        assert all(abs(a[v] - b[v]) <= tol for v in a)
+
+
+def test_mssp_duplicate_source_rows(spark, monkeypatch):
+    """Duplicate source rows (and a source that is not a vertex) keep
+    the DataFrame loop's output: one (o, o, 0) row per source row."""
+    g = _graph(spark, "two_components")
+    srcs = [1, 1, 7, 99, 99]
+    fused = mssp(g, srcs, mode="csr")
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
+    _same_run(fused, mssp(g, srcs, mode="csr"))
+    rows = _rows(fused)
+    assert rows == _rows(mssp(g, srcs, mode="sql"))
+    assert rows.count((1, 1, 0.0)) == 2 and rows.count((99, 99, 0.0)) == 2
+    assert rows.count((7, 7, 0.0)) == 1
+
+
+def test_pagerank_csr_fixed_iters_matches_sql_and_reuses_blocks(spark):
+    """Fixed-iteration csr ranks match the sql broadcast plan, the
+    metrics_log keeps the bench-consumed keys, and a second call on
+    the same Graph reuses the memoized staged blocks."""
+    rng = np.random.default_rng(9)
+    edges = [(i, j, 1.0) for i in range(1, 91) for j in range(1, 91) if i != j and rng.random() < 0.06]
+    g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long, weight double"))
+    rs = pagerank(g, iterations=6, mode="sql")
+    rc = pagerank(g, iterations=6, mode="csr")
+    a, b = dict(_rows(rs)), dict(_rows(rc))
+    assert set(a) == set(b)
+    assert max(abs(a[v] - b[v]) for v in a) < 1e-12
+    assert rc.supersteps == 6 and not rc.converged
+    for m in rc.metrics_log:
+        assert "superstep_sec" in m and "edges_processed" in m
+    P = spark.sparkContext.defaultParallelism
+    staged = g._derived[("csr_blocks", "pr", P)]
+    assert dict(_rows(pagerank(g, iterations=6, mode="csr"))) == b
+    assert g._derived[("csr_blocks", "pr", P)] is staged
+    with pytest.raises(ValueError):
+        pagerank(g, mode="csr_cogroup")
+    g.unpersist()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, read from ``statusTracker()`` under a
+    fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_csr_operator_on_warm_graph_is_one_job(spark):
+    g = _graph(spark, "two_components")
+    trusted = _trusted(g)
+    calls = {
+        "pagerank": lambda: pagerank(g, mode="csr"),
+        "sybilrank": lambda: sybilrank(g, trusted, mode="csr"),
+        "cc": lambda: connected_components(g, mode="csr"),
+        "lpa": lambda: label_propagation(g, iterations=4, mode="csr"),
+        "sssp": lambda: sssp(g, 1, mode="csr"),
+        "mssp": lambda: mssp(g, [1, 7], mode="csr"),
+    }
+    for name, call in calls.items():
+        call()  # cold: stages the blocks, gathers the ids
+        assert _jobs(spark, call) == 1, name
+
+
+def test_checkpointed_pagerank_jobs(spark, tmp_path):
+    """A checkpointed csr PageRank of N supersteps on a warm Graph is N
+    kernel jobs: the driver writes and reads the NumPy checkpoints
+    itself, so there is no per-superstep gather, count or parquet job."""
+    g = _graph(spark, "star_hub")
+    pagerank(g, mode="csr", iterations=1)
+    store = CheckpointStore(str(tmp_path / "pr"))
+    assert _jobs(spark, lambda: pagerank(g, mode="csr", iterations=3, store=store)) == 3
+    assert _jobs(spark, lambda: pagerank(g, mode="csr", iterations=4, store=store)) == 1
+    # the store stays readable by Spark, one (id, rank) row per vertex
+    assert store.load(spark, 3).count() == g.num_vertices()
+
+
+def test_degenerate_inputs(spark):
+    """Empty graphs return zero rows of the operator's schema (converged
+    unless a fixed iteration count was asked for); a self-loop on a
+    symmetric graph no longer trips the csr triangle staging."""
+    from okapi_spark.operators.triangles import triangle_count
+
+    g = _graph(spark, "empty")
+    for kw in ({"mode": "sql"}, {"mode": "csr"}, {"mode": "csr", "iterations": 3}, {"iterations": 3}):
+        res = pagerank(g, **kw)
+        assert res.state.count() == 0 and res.state.columns == ["id", "rank"]
+        assert res.converged == ("iterations" not in kw)
+    res = label_propagation(g, mode="sql")
+    assert res.state.count() == 0 and res.converged
+    res = sybilrank(g, _trusted(g))
+    assert res.state.count() == 0 and res.state.columns == ["id", "rank"]
+
+    tri = Graph.from_edges(
+        toy_edges(spark, [(1, 2, 1.0), (2, 3, 1.0), (1, 3, 1.0), (3, 3, 1.0), (3, 4, 1.0)]),
+        symmetric_distinct=True,
+    )
+    assert triangle_count(tri) == triangle_count(tri, mode="csr") == triangle_count(tri, mode="sql") == 1
+    tri.unpersist()
+
+
+def test_resolved_arrays_read_only(tmp_path):
+    """Sidecar position arrays are read-only on both the cold (builder)
+    and the warm (memmap) path."""
+    built = csr_blocks.resolved_arrays("t", 1, 0, str(tmp_path), "pos", lambda: {"a": np.arange(5)})
+    with pytest.raises(ValueError):
+        built["a"][0] = 1
+    csr_blocks._BLOCK_CACHE.pop(("t#pos", 1, 0))
+    warm = csr_blocks.resolved_arrays("t", 1, 0, str(tmp_path), "pos", lambda: pytest.fail("rebuilt"))
+    assert warm["a"].tolist() == [0, 1, 2, 3, 4]
+    with pytest.raises(ValueError):
+        warm["a"][0] = 1

@@ -138,33 +138,3 @@ def test_sybilrank_csr_matches_sql(spark, monkeypatch):
         }
         assert set(got) == set(sql)
         assert max(abs(got[k] - sql[k]) for k in sql) < 1e-9, f"p={nparts}"
-
-
-def test_sybilrank_fused_matches_per_superstep_loop(spark, monkeypatch):
-    """The round-6 fused SybilRank loop (all power iterations in one job
-    — PageRank's fused kernel with base=0, damping=1) is BIT-identical
-    to the per-superstep csr loop it replaces inside the fuse window."""
-    import numpy as np
-
-    from okapi_spark.graph.graph import Graph
-    from okapi_spark.operators import pagerank as prmod
-    from okapi_spark.operators.sybilrank import sybilrank
-    from okapi_spark.plans import csr_blocks
-
-    monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 16)
-    rng = np.random.RandomState(61)
-    edges = [
-        (int(s), int(d), float(w))
-        for s, d, w in zip(
-            rng.randint(0, 120, 500), rng.randint(0, 120, 500), rng.randint(1, 5, 500)
-        )
-        if s != d
-    ]
-    g = Graph.from_edges(
-        spark.createDataFrame(edges, "src long, dst long, weight double")
-    )
-    trusted = spark.createDataFrame([(0,), (3,), (7,)], "id long")
-    fused = {r.id: r.rank for r in sybilrank(g, trusted, mode="csr").state.collect()}
-    monkeypatch.setattr(prmod, "_FUSE_MAX_EDGES", 0)  # force the loop path
-    loop = {r.id: r.rank for r in sybilrank(g, trusted, mode="csr").state.collect()}
-    assert fused == loop  # exact equality, not approx

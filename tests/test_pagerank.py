@@ -26,7 +26,7 @@ def _er_graph(n=120, p=0.05, seed=3):
     return edges
 
 
-@pytest.mark.parametrize("mode", ["sql", "csr", "csr_cogroup"])
+@pytest.mark.parametrize("mode", ["sql", "csr"])
 def test_pagerank_toy(spark, mode):
     edges = toy_edges(spark, FIVE_VERTEX)
     g = Graph.from_edges(edges)
@@ -38,7 +38,7 @@ def test_pagerank_toy(spark, mode):
         assert abs(got[v] - r) < 1e-6
 
 
-@pytest.mark.parametrize("mode", ["sql", "csr", "csr_cogroup"])
+@pytest.mark.parametrize("mode", ["sql", "csr"])
 def test_pagerank_erdos_renyi(spark, mode):
     edges = _er_graph()
     g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long, weight double"))
@@ -88,17 +88,17 @@ def test_gather_state_arrays_paths_identical(spark):
     the csr broadcast is built from whichever the size gate picks."""
     from pyspark.sql import functions as F
 
-    from okapi_spark.operators.pagerank import _gather_state_arrays
+    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
 
     df = (
         spark.range(0, 5000)
         .select(F.col("id"), (F.col("id") * 0.001).alias("rank"))
         .repartition(8)
     )
-    small = _gather_state_arrays(df, n_rows=5000)   # direct collect path
-    packed = _gather_state_arrays(df, n_rows=None)  # mapInArrow pack path
+    small = gather_sorted_arrays(df, 5000, [("rank", "float64")])  # direct collect
+    packed = gather_sorted_arrays(df, None, [("rank", "float64")])  # mapInArrow pack
     assert (small[0] == packed[0]).all()
-    assert (small[1] == packed[1]).all()
+    assert (small[1][0] == packed[1][0]).all()
 
 
 def test_pagerank_l1_tolerance(spark):
@@ -148,29 +148,3 @@ def test_pagerank_weighted_matches_oracle(spark, mode):
     # and differs from the unweighted fixpoint (the weights matter)
     unw = pagerank_oracle([(s, d) for s, d, _ in edges], tol=1e-9)
     assert any(abs(want[v] - unw[v]) > 1e-4 for v in want)
-
-
-def test_pagerank_csr_driver_loop_matches_sql_fixed_iters(spark):
-    """Round-6: mode='csr' without a store runs the driver-resident
-    NumPy state loop (one Spark job per superstep). Fixed-iteration
-    ranks must match the sql broadcast plan, metrics_log must keep the
-    bench-consumed keys, and a second call on the same Graph reuses
-    the memoized staged blocks."""
-    edges = _er_graph(n=90, p=0.06, seed=9)
-    g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long, weight double"))
-    rs = pagerank(g, iterations=6, mode="sql")
-    rc = pagerank(g, iterations=6, mode="csr")
-    a = {r.id: r.rank for r in rs.state.collect()}
-    b = {r.id: r.rank for r in rc.state.collect()}
-    assert set(a) == set(b)
-    assert max(abs(a[v] - b[v]) for v in a) < 1e-12
-    assert rc.supersteps == 6 and not rc.converged
-    for m in rc.metrics_log:
-        assert "superstep_sec" in m and "edges_processed" in m
-    # memoized staged layout present; second call reuses it
-    P = spark.sparkContext.defaultParallelism
-    assert ("pr_blocks", False, P) in g._derived
-    rc2 = pagerank(g, iterations=6, mode="csr")
-    b2 = {r.id: r.rank for r in rc2.state.collect()}
-    assert b2 == b
-    g.unpersist()

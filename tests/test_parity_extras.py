@@ -128,38 +128,3 @@ def test_mssp_csr_matches_oracle_and_sql(spark, monkeypatch):
             for r in mssp(g, srcs, mode="csr", num_partitions=nparts).state.collect()
         }
         assert got == want, f"csr p={nparts}"
-
-
-def test_sp_fused_matches_per_superstep_loop(spark, monkeypatch):
-    """The round-6 fused shortest-path loops (all supersteps in one job
-    over the memoized staged blocks) are BIT-identical to the
-    per-superstep csr loops they replace inside the fuse window — same
-    ``dist + w`` additions, exact mins — for both sssp and mssp."""
-    import numpy as np
-
-    from okapi_spark.operators import pagerank as prmod
-    from okapi_spark.plans import csr_blocks
-
-    monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 16)
-    rng = np.random.RandomState(71)
-    edges = [
-        (int(s), int(d), float(w) / 8.0)
-        for s, d, w in zip(
-            rng.randint(0, 140, 600), rng.randint(0, 140, 600), rng.randint(1, 9, 600)
-        )
-        if s != d
-    ]
-    g = Graph.from_edges(toy_edges(spark, edges))
-    fused = {r.id: r.dist for r in sssp(g, 0, mode="csr").state.collect()}
-    fused_m = {
-        (r.id, r.origin): r.dist
-        for r in mssp(g, [0, 11, 47], mode="csr").state.collect()
-    }
-    monkeypatch.setattr(prmod, "_FUSE_MAX_EDGES", 0)  # force the loop path
-    loop = {r.id: r.dist for r in sssp(g, 0, mode="csr").state.collect()}
-    loop_m = {
-        (r.id, r.origin): r.dist
-        for r in mssp(g, [0, 11, 47], mode="csr").state.collect()
-    }
-    assert fused == loop  # exact equality, not approx
-    assert fused_m == loop_m
