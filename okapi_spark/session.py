@@ -12,6 +12,49 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of the box's memory the driver heap may take by default. The JVM
+# grows its heap lazily towards -Xmx, and Python workers, off-heap
+# buffers and staged blocks need the rest; a heap sized past physical
+# memory gets the driver OOM-killed mid-session.
+_HEAP_FRACTION = 0.4
+_HEAP_CAP_MB = 48 * 1024
+
+
+def _box_memory_mb() -> int | None:
+    """Memory available to this process tree in MB: the smaller of
+    /proc/meminfo's MemTotal and a cgroup (v2 or v1) limit, if any."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) // 1024)
+                    break
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw) // (1024 * 1024))
+    return min(limits) if limits else None
+
+
+def default_driver_memory() -> str:
+    """Driver heap for get_spark: $OKAPI_DRIVER_MEM if set, else
+    _HEAP_FRACTION of the box's memory, at least 1g and at most 48g."""
+    env = os.environ.get("OKAPI_DRIVER_MEM")
+    if env:
+        return env
+    box = _box_memory_mb()
+    if box is None:
+        return f"{_HEAP_CAP_MB}m"
+    return f"{max(1024, min(_HEAP_CAP_MB, int(box * _HEAP_FRACTION)))}m"
+
 
 def get_spark(
     cores: int | None = None,
@@ -58,7 +101,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("OKAPI_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         # Commit-and-zero the heap at JVM startup (untimed setup)
         # instead of page-faulting it in lazily DURING the first big
         # shuffle: without this, vmstat during a 60M-edge triangle job
