@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Corpus → link graph → PageRank (converged) → top-20 hubs."""
+    """Corpus → link graph → PageRank (converged) → top-20 hubs.
+
+    PageRank runs in its default ``mode="auto"``: inside the csr fuse
+    window (and with no checkpoint store) every superstep runs in one
+    fused Spark job; ``res.plan`` records the choice."""
     from okapi_spark.graph.induce import induce_edges, vertices_table
     from okapi_spark.operators.pagerank import pagerank
     from okapi_spark.sources.corpus import generate_documents
@@ -123,6 +127,18 @@ def _q_pagerank10(spark, sf_dir):
 
     g = _graph(spark, sf_dir)
     res = pagerank(g, iterations=10)
+    return res.state.select("id", F.round("rank", 9).alias("rank_r"))
+
+
+def _q_pagerank10_sql(spark, sf_dir):
+    """Same semantics as pagerank_10 through the mode='sql' physical
+    plan (broadcast rank state into the dst-partitioned share join);
+    pagerank_10's default mode resolves to csr at this size, so this
+    keeps the sql plan hash-checked against the same unrolled oracle."""
+    from okapi_spark.operators.pagerank import pagerank
+
+    g = _graph(spark, sf_dir)
+    res = pagerank(g, iterations=10, mode="sql")
     return res.state.select("id", F.round("rank", 9).alias("rank_r"))
 
 
@@ -594,6 +610,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "connected_components": _q_connected_components,
         "connected_components_csr": _q_connected_components_csr,
         "pagerank_10": _q_pagerank10,
+        "pagerank_10_sql": _q_pagerank10_sql,
         "lpa_4": _q_lpa4,
         "lpa_4_csr": _q_lpa4_csr,
         "sssp_hops": _q_sssp,
@@ -1339,6 +1356,7 @@ cc(id, comp) AS (
 SELECT id, MIN(comp) AS comp FROM cc GROUP BY id"""
         ),
         "pagerank_10": _pagerank_sql(10),
+        "pagerank_10_sql": _pagerank_sql(10),
         "lpa_4": _lpa_sql(4),
         "lpa_4_csr": _lpa_sql(4),
         "sssp_hops": _sssp_sql(6),

@@ -121,6 +121,9 @@ class BSPResult:
     supersteps: int
     converged: bool
     metrics_log: list[dict] = field(default_factory=list)
+    # which physical plan ran and why (operators with several modes):
+    # requested/resolved mode plus the gate values behind the choice
+    plan: dict = field(default_factory=dict)
 
 
 def run_supersteps(

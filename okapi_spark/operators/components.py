@@ -33,6 +33,7 @@ from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
 from okapi_spark.graph.graph import Graph
+from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import auto_state_broadcast
 
 # below this many frontier rows, hint a broadcast join into the scatter
@@ -109,7 +110,8 @@ def connected_components(
     ``mode="auto"`` (default, round 6): "csr" when byte-safe, without
     a store and with |E| inside the fuse window (the whole fixpoint in
     one Spark job); else "sql". HashMin is integer min, so every plan
-    reaches the bit-identical fixpoint.
+    reaches the bit-identical fixpoint. ``res.plan`` records the choice
+    and the gate values behind it (csr_fixpoint.plan).
 
     ``mode="csr"``: HashMin on the csr fixpoint runner
     (plans/csr_fixpoint.py) over resident staged CSR blocks — gated by
@@ -126,15 +128,9 @@ def connected_components(
     # before round 6
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    if mode == "auto":
-        from okapi_spark.plans import csr_fixpoint as fx
-
-        fusable = (
-            store is None
-            and graph.num_edges() <= fx._FUSE_MAX_EDGES
-            and auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
-        )
-        mode = "csr" if fusable else "sql"
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold)
+    mode = plan["resolved"]
+    fx.check_state_budget(plan, "frontier")
     if state_broadcast is None:
         # byte-based gate (kcore.py precedent; VERDICT r3 #4): (id, comp)
         # state ~32B/row incl. broadcast-relation overhead vs 256MB budget
@@ -142,20 +138,10 @@ def connected_components(
     if frontier_broadcast_rows is None:
         frontier_broadcast_rows = BROADCAST_FRONTIER_ROWS
 
-    if mode == "csr" and not auto_state_broadcast(
-        n, row_bytes=32, rows_override=broadcast_threshold
-    ):
-        raise ValueError(
-            f"mode='csr' broadcasts the changed frontier each superstep and the "
-            f"round-0 frontier is |V|={n} rows, exceeding the broadcast budget "
-            f"(threshold={broadcast_threshold}). Use the salted shuffle plan "
-            "(state_broadcast=False) at cluster-scale |V|."
-        )
-
     if mode == "csr":
-        from okapi_spark.plans import csr_fixpoint as fx
-
-        return fx.run(graph, _hashmin_fixpoint(graph), max_supersteps, num_partitions, store)
+        res = fx.run(graph, _hashmin_fixpoint(graph), max_supersteps, num_partitions, store)
+        res.plan = plan
+        return res
 
     n_edges = graph.num_edges()
     restore_fn = None
@@ -251,4 +237,5 @@ def connected_components(
             restore_fn=restore_fn,
         )
     res.state = res.state.select("id", "comp")
+    res.plan = plan
     return res

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
+from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import auto_state_broadcast
 from okapi_spark.graph.graph import Graph
 
@@ -240,7 +241,8 @@ def label_propagation(
     measured-better and byte-safe — fixed-iteration runs without a
     store, |E| within the fuse window (all rounds in one Spark job),
     label state within the broadcast budget. Everything else resolves
-    to "sql".
+    to "sql". ``res.plan`` records the choice and the gate values
+    behind it (csr_fixpoint.plan).
 
     ``mode="csr"``: LPA on the csr fixpoint runner
     (plans/csr_fixpoint.py) over resident staged CSR blocks — the
@@ -259,35 +261,22 @@ def label_propagation(
     # before round 6
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    if mode == "auto":
-        from okapi_spark.plans import csr_fixpoint as fx
-
-        fusable = (
-            iterations is not None
-            and store is None
-            and graph.num_edges() <= fx._FUSE_MAX_EDGES
-            and auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
-        )
-        mode = "csr" if fusable else "sql"
-    if mode == "csr" and not auto_state_broadcast(
-        n, row_bytes=32, rows_override=broadcast_threshold
-    ):
-        raise ValueError(
-            f"mode='csr' broadcasts the full label state each superstep; "
-            f"|V|={n} exceeds the broadcast budget "
-            f"(threshold={broadcast_threshold}). Use the salted shuffle plan "
-            "(state_broadcast=False) at cluster-scale |V|."
-        )
+    # auto picks csr only for fixed-iteration runs (measured-better
+    # there; convergence runs stay on sql)
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold,
+                   fixed_iterations=iterations is not None)
+    mode = plan["resolved"]
+    fx.check_state_budget(plan, "label")
     if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
         state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
 
     if mode == "csr":
-        from okapi_spark.plans import csr_fixpoint as fx
-
         spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
-        return fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
-                      num_partitions, store)
+        res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
+                     num_partitions, store)
+        res.plan = plan
+        return res
 
     restore_fn = None
     if state_broadcast:
@@ -416,6 +405,7 @@ def label_propagation(
         res = run_supersteps(state0, superstep, max_supersteps=max_ss, halt_fn=halt,
                              store=store, restore_fn=restore_fn)
     res.state = res.state.select("id", "lbl")
+    res.plan = plan
     return res
 
 

@@ -10,7 +10,12 @@ Dangling vertices: the reference's edge-list inputs give every vertex
 out-edges, and it never redistributes dangling mass — we preserve that
 behavior (a dangling vertex absorbs rank and sends nothing).
 
-Two physical strategies, same fixpoint:
+Two physical strategies, same fixpoint. The default ``mode="auto"``
+picks between them (csr_fixpoint.plan): "csr" when there is no
+checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob),
+|E| inside the csr fuse window and the rank state inside the broadcast
+budget — the whole converged fixpoint is then one Spark job instead of
+~3 per superstep — else "sql". ``BSPResult.plan`` records the choice.
 
 * ``mode="sql"`` — messages as an equi-join + hash aggregation.
   Default physical plan (``state_broadcast`` auto when |V| ≤
@@ -45,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
+from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import auto_state_broadcast
 from okapi_spark.graph.graph import Graph
 
@@ -59,7 +65,7 @@ def pagerank(
     max_supersteps: int = 100,
     damping: float = 0.85,
     weighted: bool = False,
-    mode: str = "sql",
+    mode: str = "auto",
     store: CheckpointStore | None = None,
     num_partitions: int | None = None,
     iterations: int | None = None,
@@ -67,7 +73,14 @@ def pagerank(
     broadcast_threshold: int | None = None,
     tol_norm: str = "max",
 ) -> BSPResult:
-    """Returns BSPResult whose state is (id long, rank double).
+    """Returns BSPResult whose state is (id long, rank double) and whose
+    ``plan`` records the requested and resolved mode and the gate values.
+
+    ``mode``: "auto" (default) resolves to "csr" when the call is
+    fusable — no ``store``, ``state_broadcast`` unset, |E| ≤
+    ``csr_fixpoint._FUSE_MAX_EDGES`` and the |V|-row state within the
+    broadcast budget — else to "sql". csr and sql reach the same ranks
+    within 1e-12.
 
     ``iterations``: run exactly that many supersteps ignoring ``tol`` —
     the reference's fixed-budget mode (pagerank.max.supersteps=30,
@@ -83,60 +96,47 @@ def pagerank(
     recorded in metrics_log either way."""
     if tol_norm not in ("max", "l1"):
         raise ValueError(f"unknown tol_norm {tol_norm!r}")
-    if mode not in ("sql", "csr"):
+    if mode not in ("auto", "sql", "csr"):
         raise ValueError(f"unknown pagerank mode {mode!r}")
     spark = graph.edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-        if mode == "sql":
-            # scale-adaptive layout width (guide §2.2: fewer, larger
-            # partitions; derived from input size, NOT a local-mode
-            # constant): a small graph spread over every core pays more
-            # per-superstep task scheduling than compute — measured at
-            # 2.4M edges / 32 cores: pagerank_10_sql 2.73s at P=32 vs
-            # 1.91s at P=8 (min-of-3). Capped at defaultParallelism so
-            # cluster-scale graphs keep one partition per core.
-            num_partitions = max(
-                1, min(num_partitions, -(-graph.num_edges() // _LAYOUT_TARGET_EDGES))
-            )
+    width = num_partitions or spark.sparkContext.defaultParallelism
+    sql_width = width if num_partitions else _sql_layout_width(graph, width)
+    # n counts through (and so fills) the vertex dictionary the likely
+    # plan reads: the csr id gather's, or an explicit sql plan's
+    graph.vertices_by_id(sql_width if mode == "sql" else width)
+    n = graph.num_vertices()  # scalar memo — no per-call count job
+    # an explicit state_broadcast is a sql-plan knob: the caller asked
+    # for a sql plan
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold,
+                   state_broadcast_unset=state_broadcast is None)
+    mode = plan["resolved"]
+    fx.check_state_budget(plan, "rank")
+    num_partitions = sql_width if mode == "sql" else width
+    if n == 0:
+        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
+    base = (1.0 - damping) / n
+
+    if mode == "csr":
+        spec = power_fixpoint(graph, weighted, lambda ids: {"rank": np.full(len(ids), 1.0 / n)},
+                              base, damping)
+        if iterations is None:
+            key = "l1_delta" if tol_norm == "l1" else "max_delta"
+            spec.halt = lambda m, history: m[key] < tol
+        res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
+                     num_partitions, store)
+        res.plan = plan
+        return res
 
     # memoized one-time layouts (Graph.derived): the vertex dictionary
     # and degree census are pure functions of the edge set, rebuilt per
     # call before round 6 — now built once per Graph and shared across
     # operator calls (guide §2.4: don't recompute what a layout holds)
     vertices = graph.vertices_by_id(num_partitions)
-    n = graph.num_vertices()  # scalar memo — no per-call count job
-    if n == 0:
-        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None)
-    base = (1.0 - damping) / n
-
     # share = fraction of rank sent along each out-edge; out_deg kept
     # for the shuffle-mode salting census
     degw = graph.degree_weights()
     shares = _shares(graph, weighted)
 
-    if mode == "csr" and not auto_state_broadcast(
-        n, row_bytes=32, rows_override=broadcast_threshold
-    ):
-        # the csr runner holds the full |V|-row rank state on the
-        # driver and broadcasts it — beyond the broadcast threshold
-        # that is a guaranteed driver OOM, so the guard is shared with
-        # the sql-mode state_broadcast switch.
-        raise ValueError(
-            f"mode={mode!r} broadcasts the full rank state each superstep; "
-            f"|V|={n} exceeds the broadcast budget (threshold={broadcast_threshold}). "
-            "Use mode='sql' (auto-selects the shuffle plan at this scale)."
-        )
-    if mode == "csr":
-        from okapi_spark.plans import csr_fixpoint as fx
-
-        spec = power_fixpoint(graph, weighted, lambda ids: {"rank": np.full(len(ids), 1.0 / n)},
-                              base, damping)
-        if iterations is None:
-            key = "l1_delta" if tol_norm == "l1" else "max_delta"
-            spec.halt = lambda m, history: m[key] < tol
-        return fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
-                      num_partitions, store)
     if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): (id, rank) state ~32B/row
         state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
@@ -270,7 +270,18 @@ def pagerank(
             store=store, restore_fn=restore_fn,
         )
     result.state = result.state.select("id", "rank")
+    result.plan = plan
     return result
+
+
+def _sql_layout_width(graph: Graph, parallelism: int) -> int:
+    """Scale-adaptive sql layout width (guide §2.2: fewer, larger
+    partitions; derived from input size, NOT a local-mode constant): a
+    small graph spread over every core pays more per-superstep task
+    scheduling than compute — measured at 2.4M edges / 32 cores:
+    pagerank_10_sql 2.73s at P=32 vs 1.91s at P=8 (min-of-3). Capped at
+    ``parallelism`` so cluster-scale graphs keep one partition per core."""
+    return max(1, min(parallelism, -(-graph.num_edges() // _LAYOUT_TARGET_EDGES)))
 
 
 def _shares(graph: Graph, weighted: bool) -> DataFrame:

@@ -32,6 +32,14 @@ def auto_state_broadcast(
     passing ``broadcast_threshold=N`` get exactly the old behavior);
     by default the decision is estimated bytes vs the 256MB budget.
     """
+    return n_rows * row_bytes <= state_budget_bytes(row_bytes, rows_override, budget_bytes)
+
+
+def state_budget_bytes(
+    row_bytes: int, rows_override: int | None = None, budget_bytes: int | None = None
+) -> int:
+    """The byte budget ``auto_state_broadcast`` compares against: the
+    explicit row-count knob in bytes when given, else the budget."""
     if rows_override is not None:
-        return n_rows <= rows_override
-    return n_rows * row_bytes <= (budget_bytes or STATE_BROADCAST_BUDGET_BYTES)
+        return rows_override * row_bytes
+    return budget_bytes or STATE_BROADCAST_BUDGET_BYTES

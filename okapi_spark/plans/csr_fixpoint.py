@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive
+from okapi_spark.plans.broadcast import state_budget_bytes
 from okapi_spark.plans.csr_blocks import (
     choose_task_count, cleanup_blocks, default_block_dir, load_block,
     pid_frame, resolved_arrays, stage_blocks,
@@ -64,6 +65,53 @@ _FUSE_MAX_EDGES = 8_000_000
 _EPOCH_COUNTER = itertools.count(1)
 
 _GATHER_PANDAS_MAX_ROWS = 1_000_000
+
+# (id, state) bytes per vertex the auto gate budgets for — the csr runner
+# broadcasts the full |V|-row state, like the sql broadcast plan
+_STATE_ROW_BYTES = 32
+
+
+def plan(mode: str, graph, n: int, store: CheckpointStore | None,
+         broadcast_threshold: int | None, **conditions: bool) -> dict:
+    """The plan record of one operator call (``BSPResult.plan``): the
+    requested and resolved mode plus the gate values behind the choice.
+
+    ``mode="auto"`` resolves to "csr" when the fixpoint is fusable — no
+    checkpoint store, |E| inside the fuse window (the whole fixpoint
+    in one Spark job) and the |V|-row state inside the broadcast
+    budget — and every operator-specific entry of ``conditions`` holds;
+    else to "sql". An explicit "sql"/"csr" is kept as asked."""
+    n_edges = graph.num_edges()
+    rec = {
+        "requested": mode,
+        "n_edges": n_edges,
+        "fuse_max_edges": _FUSE_MAX_EDGES,
+        "state_bytes": n * _STATE_ROW_BYTES,
+        "state_budget_bytes": state_budget_bytes(_STATE_ROW_BYTES, broadcast_threshold),
+        "store": store is not None,
+        **conditions,
+    }
+    fusable = (
+        store is None
+        and n_edges <= _FUSE_MAX_EDGES
+        and rec["state_bytes"] <= rec["state_budget_bytes"]
+        and all(conditions.values())
+    )
+    rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
+    return rec
+
+
+def check_state_budget(plan: dict, what: str) -> None:
+    """Reject an explicit ``mode="csr"`` whose |V|-row state would not
+    fit the broadcast budget: the runner broadcasts it every round."""
+    if plan["resolved"] == "csr" and plan["state_bytes"] > plan["state_budget_bytes"]:
+        raise ValueError(
+            f"mode='csr' broadcasts the full {what} state each superstep; "
+            f"its {plan['state_bytes']} bytes exceed the broadcast budget of "
+            f"{plan['state_budget_bytes']} bytes. Use mode='sql' (state_broadcast=False "
+            "selects the salted shuffle plan at cluster-scale |V|)."
+        )
+
 
 def positions(blk, ids) -> dict:
     """The default ``resolve``: gather (src) and scatter (dst) positions

@@ -26,6 +26,7 @@ from okapi_spark.operators.sssp import mssp, sssp
 from okapi_spark.operators.sybilrank import sybilrank
 from okapi_spark.plans import csr_blocks
 from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans.broadcast import STATE_BROADCAST_BUDGET_BYTES
 from tests.conftest import toy_edges
 
 STAR = [(0, i, 1.0) for i in range(1, 13)] + [(1, 2, 1.0)]
@@ -62,6 +63,10 @@ OPS = {
     "sssp": (lambda g, m, s, b: sssp(g, 1, max_supersteps=b or 200, mode=m, store=s), 1, None),
     "mssp": (lambda g, m, s, b: mssp(g, [1, 2], max_supersteps=b or 200, mode=m, store=s), 1, None),
 }
+
+# operators whose mode="auto" resolves to csr on these inputs (no store,
+# tiny |E| and |V|): auto must be the csr run, bit for bit
+AUTO_CSR = ("pagerank", "cc", "lpa_fixed")
 
 _GRAPHS: dict = {}
 
@@ -109,6 +114,10 @@ def test_csr_paths_agree(spark, monkeypatch, tmp_path, op, inp):
     monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 4)
     g = _graph(spark, inp)
     fused = run(g, "csr", None, None)
+    if op in AUTO_CSR:
+        auto = run(g, "auto", None, None)
+        assert (auto.plan["requested"], auto.plan["resolved"]) == ("auto", "csr")
+        _same_run(fused, auto)
     with monkeypatch.context() as mp:
         mp.setattr(fx, "_FUSE_MAX_EDGES", 0)
         _same_run(fused, run(g, "csr", None, None))
@@ -188,6 +197,7 @@ def test_csr_operator_on_warm_graph_is_one_job(spark):
     trusted = _trusted(g)
     calls = {
         "pagerank": lambda: pagerank(g, mode="csr"),
+        "pagerank_auto": lambda: pagerank(g),
         "sybilrank": lambda: sybilrank(g, trusted, mode="csr"),
         "cc": lambda: connected_components(g, mode="csr"),
         "lpa": lambda: label_propagation(g, iterations=4, mode="csr"),
@@ -197,6 +207,46 @@ def test_csr_operator_on_warm_graph_is_one_job(spark):
     for name, call in calls.items():
         call()  # cold: stages the blocks, gathers the ids
         assert _jobs(spark, call) == 1, name
+
+
+def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
+    """mode="auto" resolves through one gate and records it in
+    ``res.plan``: csr when fusable, sql with a store, with PageRank's
+    explicit ``state_broadcast``, past the fuse window or past the
+    state budget; CC and LPA keep their resolution (LPA: csr only for
+    fixed-iteration runs). Explicit modes are kept as asked."""
+    g = _graph(spark, "two_components")
+    n, m = g.num_vertices(), g.num_edges()
+    pr = pagerank(g)
+    assert pr.plan == {
+        "requested": "auto", "resolved": "csr", "n_edges": m, "fuse_max_edges": fx._FUSE_MAX_EDGES,
+        "state_bytes": 32 * n, "state_budget_bytes": STATE_BROADCAST_BUDGET_BYTES, "store": False,
+        "state_broadcast_unset": True,
+    }
+    resolved = {
+        "pr_store": pagerank(g, iterations=1, store=CheckpointStore(str(tmp_path / "pr"))),
+        "pr_state_broadcast": pagerank(g, iterations=1, state_broadcast=True),
+        "pr_threshold": pagerank(g, iterations=1, broadcast_threshold=n - 1),
+        "pr_sql": pagerank(g, iterations=1, mode="sql"),
+        "cc_store": connected_components(g, store=CheckpointStore(str(tmp_path / "cc"))),
+        "lpa_converge": label_propagation(g, max_supersteps=3),
+        "lpa_store": label_propagation(g, iterations=1, store=CheckpointStore(str(tmp_path / "lpa"))),
+    }
+    for name, res in resolved.items():
+        assert res.plan["resolved"] == "sql", name
+    assert resolved["pr_store"].plan["store"]
+    assert not resolved["pr_state_broadcast"].plan["state_broadcast_unset"]
+    p = resolved["pr_threshold"].plan
+    assert p["state_budget_bytes"] == 32 * (n - 1) < p["state_bytes"]
+    assert resolved["pr_sql"].plan["requested"] == "sql"
+    assert not resolved["lpa_converge"].plan["fixed_iterations"]
+    assert connected_components(g).plan["resolved"] == "csr"
+    assert label_propagation(g, iterations=2).plan["resolved"] == "csr"
+    assert pagerank(g, iterations=1, mode="csr", store=CheckpointStore(str(tmp_path / "pr_csr"))).plan[
+        "resolved"] == "csr"
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
+    for res in (pagerank(g, iterations=1), connected_components(g), label_propagation(g, iterations=1)):
+        assert (res.plan["resolved"], res.plan["fuse_max_edges"]) == ("sql", 0)
 
 
 def test_checkpointed_pagerank_jobs(spark, tmp_path):
