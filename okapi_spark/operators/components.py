@@ -34,7 +34,6 @@ from pyspark.storagelevel import StorageLevel
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
 from okapi_spark.graph.graph import Graph
 from okapi_spark.plans import csr_fixpoint as fx
-from okapi_spark.plans.broadcast import auto_state_broadcast
 
 # below this many frontier rows, hint a broadcast join into the scatter
 BROADCAST_FRONTIER_ROWS = 2_000_000
@@ -128,13 +127,12 @@ def connected_components(
     # before round 6
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold)
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "frontier")
     mode = plan["resolved"]
-    fx.check_state_budget(plan, "frontier")
     if state_broadcast is None:
         # byte-based gate (kcore.py precedent; VERDICT r3 #4): (id, comp)
         # state ~32B/row incl. broadcast-relation overhead vs 256MB budget
-        state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
+        state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
     if frontier_broadcast_rows is None:
         frontier_broadcast_rows = BROADCAST_FRONTIER_ROWS
 

@@ -263,10 +263,9 @@ def label_propagation(
     n = graph.num_vertices()  # scalar memo — no per-call count job
     # auto picks csr only for fixed-iteration runs (measured-better
     # there; convergence runs stay on sql)
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold,
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "label",
                    fixed_iterations=iterations is not None)
     mode = plan["resolved"]
-    fx.check_state_budget(plan, "label")
     if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
         state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)

@@ -51,7 +51,6 @@ from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
 from okapi_spark.plans import csr_fixpoint as fx
-from okapi_spark.plans.broadcast import auto_state_broadcast
 from okapi_spark.graph.graph import Graph
 
 # sql-mode layout sizing: ~300k edge rows per partition keeps each
@@ -101,16 +100,19 @@ def pagerank(
     spark = graph.edges.sparkSession
     width = num_partitions or spark.sparkContext.defaultParallelism
     sql_width = width if num_partitions else _sql_layout_width(graph, width)
-    # n counts through (and so fills) the vertex dictionary the likely
-    # plan reads: the csr id gather's, or an explicit sql plan's
-    graph.vertices_by_id(sql_width if mode == "sql" else width)
-    n = graph.num_vertices()  # scalar memo — no per-call count job
     # an explicit state_broadcast is a sql-plan knob: the caller asked
     # for a sql plan
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold,
+    likely_csr = mode == "csr" or (
+        mode == "auto" and store is None and state_broadcast is None
+        and graph.num_edges() <= fx._FUSE_MAX_EDGES
+    )
+    # n counts through (and so fills) the vertex dictionary the likely
+    # plan reads: the csr id gather's, or the sql plan's
+    graph.vertices_by_id(width if likely_csr else sql_width)
+    n = graph.num_vertices()  # scalar memo — no per-call count job
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "rank",
                    state_broadcast_unset=state_broadcast is None)
     mode = plan["resolved"]
-    fx.check_state_budget(plan, "rank")
     num_partitions = sql_width if mode == "sql" else width
     if n == 0:
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
@@ -139,7 +141,7 @@ def pagerank(
 
     if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): (id, rank) state ~32B/row
-        state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
+        state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
     n_edges = graph.num_edges()
     if state_broadcast:
         # zero-exchange layout: edges by dst, state broadcast into the

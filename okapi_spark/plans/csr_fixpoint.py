@@ -72,7 +72,7 @@ _STATE_ROW_BYTES = 32
 
 
 def plan(mode: str, graph, n: int, store: CheckpointStore | None,
-         broadcast_threshold: int | None, **conditions: bool) -> dict:
+         broadcast_threshold: int | None, what: str, **conditions: bool) -> dict:
     """The plan record of one operator call (``BSPResult.plan``): the
     requested and resolved mode plus the gate values behind the choice.
 
@@ -80,7 +80,9 @@ def plan(mode: str, graph, n: int, store: CheckpointStore | None,
     checkpoint store, |E| inside the fuse window (the whole fixpoint
     in one Spark job) and the |V|-row state inside the broadcast
     budget — and every operator-specific entry of ``conditions`` holds;
-    else to "sql". An explicit "sql"/"csr" is kept as asked."""
+    else to "sql". An explicit "sql"/"csr" is kept as asked, but an
+    explicit "csr" whose ``what`` state would not fit the budget is
+    rejected: the runner broadcasts it every round."""
     n_edges = graph.num_edges()
     rec = {
         "requested": mode,
@@ -91,26 +93,17 @@ def plan(mode: str, graph, n: int, store: CheckpointStore | None,
         "store": store is not None,
         **conditions,
     }
-    fusable = (
-        store is None
-        and n_edges <= _FUSE_MAX_EDGES
-        and rec["state_bytes"] <= rec["state_budget_bytes"]
-        and all(conditions.values())
-    )
-    rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
-    return rec
-
-
-def check_state_budget(plan: dict, what: str) -> None:
-    """Reject an explicit ``mode="csr"`` whose |V|-row state would not
-    fit the broadcast budget: the runner broadcasts it every round."""
-    if plan["resolved"] == "csr" and plan["state_bytes"] > plan["state_budget_bytes"]:
+    fits = rec["state_bytes"] <= rec["state_budget_bytes"]
+    if mode == "csr" and not fits:
         raise ValueError(
             f"mode='csr' broadcasts the full {what} state each superstep; "
-            f"its {plan['state_bytes']} bytes exceed the broadcast budget of "
-            f"{plan['state_budget_bytes']} bytes. Use mode='sql' (state_broadcast=False "
+            f"its {rec['state_bytes']} bytes exceed the broadcast budget of "
+            f"{rec['state_budget_bytes']} bytes. Use mode='sql' (state_broadcast=False "
             "selects the salted shuffle plan at cluster-scale |V|)."
         )
+    fusable = store is None and n_edges <= _FUSE_MAX_EDGES and fits and all(conditions.values())
+    rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
+    return rec
 
 
 def positions(blk, ids) -> dict:

@@ -14,8 +14,9 @@ from tests.conftest import FIVE_VERTEX, toy_edges
 
 def test_pagerank_kill_and_resume(spark, tmp_path):
     g = Graph.from_edges(toy_edges(spark, FIVE_VERTEX))
-    # uninterrupted run = golden
-    golden = pagerank(g, tol=1e-8)
+    # uninterrupted run = golden, on the sql plan the checkpointed
+    # calls resolve to
+    golden = pagerank(g, tol=1e-8, mode="sql")
     want = {r.id: r.rank for r in golden.state.collect()}
 
     store = CheckpointStore(str(tmp_path / "ckpt"))

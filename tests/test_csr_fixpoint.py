@@ -27,7 +27,7 @@ from okapi_spark.operators.sybilrank import sybilrank
 from okapi_spark.plans import csr_blocks
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import STATE_BROADCAST_BUDGET_BYTES
-from tests.conftest import toy_edges
+from tests.conftest import FIVE_VERTEX, toy_edges
 
 STAR = [(0, i, 1.0) for i in range(1, 13)] + [(1, 2, 1.0)]
 _rng = np.random.RandomState(71)
@@ -247,6 +247,23 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
     for res in (pagerank(g, iterations=1), connected_components(g), label_propagation(g, iterations=1)):
         assert (res.plan["resolved"], res.plan["fuse_max_edges"]) == ("sql", 0)
+
+
+@pytest.mark.parametrize("kw", ["store", "state_broadcast"])
+def test_auto_sql_pagerank_builds_one_vertex_dictionary(spark, tmp_path, kw):
+    """A default-mode PageRank that resolves to sql before |V| is known
+    (a store or an explicit state_broadcast) counts |V| through the sql
+    plan's own vertex dictionary: one persisted dictionary, not a csr
+    width one as well."""
+    g = Graph.from_edges(toy_edges(spark, FIVE_VERTEX))
+    try:
+        arg = CheckpointStore(str(tmp_path / "pr")) if kw == "store" else True
+        res = pagerank(g, iterations=2, **{kw: arg})
+        assert res.plan["resolved"] == "sql"
+        dicts = [k for k in g._derived if k[0] == "verts_by_id"]
+        assert dicts == [("verts_by_id", 1)]  # _sql_layout_width of a toy graph
+    finally:
+        g.unpersist()
 
 
 def test_checkpointed_pagerank_jobs(spark, tmp_path):

@@ -52,15 +52,17 @@ def test_pagerank_erdos_renyi(spark, mode):
 
 
 def test_pagerank_partitioning_invariance(spark):
-    """Same fixpoint at different shuffle widths (SURVEY.md §5)."""
+    """Same fixpoint at different shuffle widths (SURVEY.md §5), on
+    both physical plans."""
     edges = toy_edges(spark, FIVE_VERTEX)
     g = Graph.from_edges(edges)
-    r4 = pagerank(g, tol=1e-8, num_partitions=4)
-    r8 = pagerank(g, tol=1e-8, num_partitions=8)
-    a = {r.id: r.rank for r in r4.state.collect()}
-    b = {r.id: r.rank for r in r8.state.collect()}
-    for v in a:
-        assert abs(a[v] - b[v]) < 1e-9
+    for mode in ("sql", "csr"):
+        r4 = pagerank(g, tol=1e-8, num_partitions=4, mode=mode)
+        r8 = pagerank(g, tol=1e-8, num_partitions=8, mode=mode)
+        a = {r.id: r.rank for r in r4.state.collect()}
+        b = {r.id: r.rank for r in r8.state.collect()}
+        for v in a:
+            assert abs(a[v] - b[v]) < 1e-9, (mode, v)
 
 
 def test_pagerank_salted_shuffle_branch_matches_oracle(spark):
@@ -104,22 +106,24 @@ def test_gather_state_arrays_paths_identical(spark):
 def test_pagerank_l1_tolerance(spark):
     """tol_norm="l1": scale-free criterion (Σ|Δ| over ranks that sum
     to 1). Tighter than the same absolute max-delta at fixed |V|, and
-    both norms land in metrics_log regardless of which one halts."""
+    both norms land in metrics_log regardless of which one halts — on
+    both physical plans (each has its own halt predicate)."""
     edges = toy_edges(spark, FIVE_VERTEX)
     g = Graph.from_edges(edges)
-    res = pagerank(g, tol=1e-6, tol_norm="l1", max_supersteps=100)
-    assert res.converged
-    m = res.metrics_log[-1]
-    assert m["l1_delta"] < 1e-6 and "max_delta" in m
-    # L1 < tol implies max < tol: the fixpoint matches the oracle
-    got = {r.id: r.rank for r in res.state.collect()}
     want = pagerank_oracle([(s, d) for s, d, _ in FIVE_VERTEX] + [(d, s) for s, d, _ in FIVE_VERTEX])
-    for v, r in want.items():
-        assert abs(got[v] - r) < 1e-6
-    # L1 is the stricter norm: it needs at least as many supersteps as
-    # the max-delta run at the same tol on the same graph
-    res_max = pagerank(g, tol=1e-6, tol_norm="max", max_supersteps=100)
-    assert res.supersteps >= res_max.supersteps
+    for mode in ("sql", "csr"):
+        res = pagerank(g, tol=1e-6, tol_norm="l1", max_supersteps=100, mode=mode)
+        assert res.converged, mode
+        m = res.metrics_log[-1]
+        assert m["l1_delta"] < 1e-6 and "max_delta" in m, mode
+        # L1 < tol implies max < tol: the fixpoint matches the oracle
+        got = {r.id: r.rank for r in res.state.collect()}
+        for v, r in want.items():
+            assert abs(got[v] - r) < 1e-6, (mode, v)
+        # L1 is the stricter norm: it needs at least as many supersteps
+        # as the max-delta run at the same tol on the same graph
+        res_max = pagerank(g, tol=1e-6, tol_norm="max", max_supersteps=100, mode=mode)
+        assert res.supersteps >= res_max.supersteps, mode
     with pytest.raises(ValueError):
         pagerank(g, tol_norm="l2")
 
