@@ -122,6 +122,18 @@ def _q_connected_components_csr(spark, sf_dir):
     return connected_components(g, mode="csr").state
 
 
+def _q_connected_components_sql(spark, sf_dir):
+    """Same HashMin fixpoint through the mode='sql' physical plan
+    (broadcast frontier into the dst-partitioned scatter layout,
+    plans/scatter.py); connected_components' default mode resolves to
+    csr at this size, so this keeps the sql plan hash-checked against
+    the same recursive-CTE DuckDB oracle."""
+    from okapi_spark.operators.components import connected_components
+
+    g = _graph(spark, sf_dir)
+    return connected_components(g, mode="sql").state
+
+
 def _q_pagerank10(spark, sf_dir):
     from okapi_spark.operators.pagerank import pagerank
 
@@ -147,6 +159,18 @@ def _q_lpa4(spark, sf_dir):
 
     g = _graph(spark, sf_dir)
     return label_propagation(g, iterations=4).state
+
+
+def _q_lpa4_sql(spark, sf_dir):
+    """Same semantics as lpa_4 through the mode='sql' physical plan
+    (broadcast labels into the dst-partitioned scatter layout,
+    plans/scatter.py); lpa_4's default mode resolves to csr at this
+    size, so this keeps the sql plan hash-checked against the same
+    unrolled DuckDB oracle."""
+    from okapi_spark.operators.lpa import label_propagation
+
+    g = _graph(spark, sf_dir)
+    return label_propagation(g, iterations=4, mode="sql").state
 
 
 def _q_lpa4_csr(spark, sf_dir):
@@ -609,10 +633,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triangle_per_vertex": _q_triangle_per_vertex,
         "connected_components": _q_connected_components,
         "connected_components_csr": _q_connected_components_csr,
+        "connected_components_sql": _q_connected_components_sql,
         "pagerank_10": _q_pagerank10,
         "pagerank_10_sql": _q_pagerank10_sql,
         "lpa_4": _q_lpa4,
         "lpa_4_csr": _q_lpa4_csr,
+        "lpa_4_sql": _q_lpa4_sql,
         "sssp_hops": _q_sssp,
         "sssp_hops_csr": _q_sssp_csr,
         "mssp_hops": _q_mssp,
@@ -1319,6 +1345,13 @@ def oracle_sql() -> dict[str, str]:
         # the staged kernels) and is verified bit-identical — so it is
         # checked against the SAME ref_impl-guarded golden snapshot.
         out["spinner_8_csr"] = out["spinner_8"]
+    cc_sql = "WITH RECURSIVE " + _EDGES_CTE + """,
+cc(id, comp) AS (
+  SELECT id, id FROM verts
+  UNION
+  SELECT e.dst, cc.comp FROM cc JOIN edges e ON e.src = cc.id AND cc.comp < e.dst
+)
+SELECT id, MIN(comp) AS comp FROM cc GROUP BY id"""
     return out | {
         "degree": "WITH " + _EDGES_CTE + "\nSELECT id, degree FROM deg",
         "triangle_total": (
@@ -1337,28 +1370,14 @@ SELECT e2.dst AS id, COUNT(*) AS triangles
 FROM e0 e1 JOIN e0 e2 ON e1.dst = e2.src JOIN e0 e3 ON e3.src = e1.src AND e3.dst = e2.dst
 GROUP BY e2.dst"""
         ),
-        "connected_components": (
-            "WITH RECURSIVE " + _EDGES_CTE + """,
-cc(id, comp) AS (
-  SELECT id, id FROM verts
-  UNION
-  SELECT e.dst, cc.comp FROM cc JOIN edges e ON e.src = cc.id AND cc.comp < e.dst
-)
-SELECT id, MIN(comp) AS comp FROM cc GROUP BY id"""
-        ),
-        "connected_components_csr": (
-            "WITH RECURSIVE " + _EDGES_CTE + """,
-cc(id, comp) AS (
-  SELECT id, id FROM verts
-  UNION
-  SELECT e.dst, cc.comp FROM cc JOIN edges e ON e.src = cc.id AND cc.comp < e.dst
-)
-SELECT id, MIN(comp) AS comp FROM cc GROUP BY id"""
-        ),
+        "connected_components": cc_sql,
+        "connected_components_csr": cc_sql,
+        "connected_components_sql": cc_sql,
         "pagerank_10": _pagerank_sql(10),
         "pagerank_10_sql": _pagerank_sql(10),
         "lpa_4": _lpa_sql(4),
         "lpa_4_csr": _lpa_sql(4),
+        "lpa_4_sql": _lpa_sql(4),
         "sssp_hops": _sssp_sql(6),
         "sssp_hops_csr": _sssp_sql(6),
         "mssp_hops": _mssp_sql(8),

@@ -42,10 +42,9 @@ class Graph:
     symmetric_distinct: bool = False
     _num_vertices: int | None = field(default=None, repr=False)
     _num_edges: int | None = field(default=None, repr=False)
-    _by_dst: DataFrame | None = field(default=None, repr=False)
     #: memoized derived physical layouts (vertex dictionary, degree
-    #: table, per-operator cached share/CSR-block layouts) — the same
-    #: prepare-once-iterate-many pattern as ``by_dst``. Values are
+    #: table, dst-partitioned edges, per-operator scatter/CSR-block
+    #: layouts) — prepare once, iterate many. Values are
     #: persisted DataFrames or arbitrary handles registered with a
     #: cleanup callable; ``unpersist()`` releases everything.
     _derived: dict = field(default_factory=dict, repr=False)
@@ -85,26 +84,18 @@ class Graph:
         return Graph(edges=e, symmetric_distinct=symmetric_distinct)
 
     def by_dst(self, partitions: int | None = None) -> DataFrame:
-        """Edges hash-partitioned by ``dst``, cached.
-
-        This is the physical layout the iterative operators scatter
-        over: with edges partitioned by dst and the (small) vertex
-        state broadcast into the src-join, the per-superstep message
-        aggregation ``groupBy(dst)`` is partition-complete — ZERO
-        shuffle exchanges per superstep, and no per-task partial-agg
-        hash maps (which we measured to anti-scale with task count:
-        each task otherwise builds an O(|V|) map regardless of its row
-        share). The one-time cost is a second cached copy of the edge
-        set; at cluster scale this is bucketed storage by dst.
-        """
-        if self._by_dst is None:
+        """Edges hash-partitioned by ``dst``, cached (memoized per
+        ``partitions``) — Spinner's broadcast-mode scatter layout. With
+        the (small) vertex state broadcast into the src join, the
+        message aggregation ``groupBy(dst)`` is partition-complete;
+        plans/scatter.py builds the same layout for the fixpoint
+        operators' edge frames."""
+        def build() -> DataFrame:
             e = self.edges
-            if partitions:
-                e = e.repartition(partitions, "dst")
-            else:
-                e = e.repartition("dst")
-            self._by_dst = e.persist(StorageLevel.MEMORY_AND_DISK)
-        return self._by_dst
+            e = e.repartition(partitions, "dst") if partitions else e.repartition("dst")
+            return e.persist(StorageLevel.MEMORY_AND_DISK)
+
+        return self.derived(("by_dst", partitions), build)
 
     # -- derived views ----------------------------------------------------
     def vertices(self) -> DataFrame:
@@ -129,11 +120,10 @@ class Graph:
 
         The iterative operators all rebuild the same one-time layouts
         on every call — the vertex dictionary, the degree table, the
-        dst-partitioned share table, the staged CSR blocks. Each is a
-        pure function of the (immutable) edge set plus the key's
-        parameters, so building it once per Graph and reusing it across
-        operator calls is the same prepare-once-iterate-many pattern as
-        ``by_dst`` (and, at cluster scale, bucketed/derived tables).
+        scatter layouts, the staged CSR blocks. Each is a pure function
+        of the (immutable) edge set plus the key's parameters, so it is
+        built once per Graph and reused across operator calls (at
+        cluster scale: bucketed/derived tables).
         ``cleanup(value)`` (default: ``value.unpersist()``) runs in
         ``unpersist()``.
         """
@@ -225,8 +215,6 @@ class Graph:
 
     def unpersist(self) -> None:
         self.edges.unpersist()
-        if self._by_dst is not None:
-            self._by_dst.unpersist()
         for key, value in self._derived.items():
             cleanup = self._cleanups.get(key)
             if cleanup is not None:

@@ -6,21 +6,19 @@ own label and incoming neighbor labels, and propagates ONLY on
 improvement (send-on-change, lines 80-94) — the frontier shrinks every
 superstep, converging when no label changes. Exact integer fixpoint.
 
-Spark plan per superstep — two physical strategies, same fixpoint:
-
-* broadcast mode (auto when |V| ≤ ``broadcast_threshold``): edges
-  cached partitioned by dst, frontier broadcast into the src join →
-  groupBy(dst).min is partition-complete, ZERO shuffle exchanges.
-* shuffle mode (cluster-scale |V|): edges cached in the degree-
-  proportional SALTED (src, salt) layout (plans.skew — hub edge lists
-  otherwise serialize the join behind one task); the frontier explodes
-  over each vertex's shard count, shuffles into the co-partitioned
-  join, and groupBy(dst) shuffles messages (map-side partial min =
-  Giraph's combiner). Because HashMin's frontier is send-on-change it
-  SHRINKS every superstep, so once the previous round's changed-count
-  drops under ``BROADCAST_FRONTIER_ROWS`` the loop flips the frontier
-  side to a broadcast join adaptively — late supersteps on a
-  10^10-vertex graph still get the cheap plan.
+Per-vertex semantics, shared by both modes: a changed vertex sends its
+label, a vertex keeps the min of its label and the messages, and the
+loop halts when nothing changed. ``mode="csr"`` runs them as a
+``Fixpoint`` on the csr runner (plans/csr_fixpoint.py); ``mode="sql"``
+as a scatter on the shared sql message plan (plans/scatter.py): its
+broadcast layout (zero shuffle exchanges per superstep) or, at
+cluster-scale |V|, its salted (src, salt) layout, where
+``groupBy(dst).min`` shuffles map-side-combined messages (Giraph's
+combiner). Because HashMin's frontier is send-on-change it SHRINKS
+every superstep, so once the previous round's changed-count drops
+under ``BROADCAST_FRONTIER_ROWS`` the salted loop broadcasts the
+frontier into the join — late supersteps on a 10^10-vertex graph
+still get the cheap plan.
 """
 
 from __future__ import annotations
@@ -29,11 +27,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
+from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
 from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans import scatter
 
 # below this many frontier rows, hint a broadcast join into the scatter
 BROADCAST_FRONTIER_ROWS = 2_000_000
@@ -107,8 +105,9 @@ def connected_components(
     ``BROADCAST_FRONTIER_ROWS``.
 
     ``mode="auto"`` (default, round 6): "csr" when byte-safe, without
-    a store and with |E| inside the fuse window (the whole fixpoint in
-    one Spark job); else "sql". HashMin is integer min, so every plan
+    a store or an explicit ``state_broadcast`` (a sql-plan knob) and
+    with |E| inside the fuse window (the whole fixpoint in one Spark
+    job); else "sql". HashMin is integer min, so every plan
     reaches the bit-identical fixpoint. ``res.plan`` records the choice
     and the gate values behind it (csr_fixpoint.plan).
 
@@ -127,93 +126,34 @@ def connected_components(
     # before round 6
     vertices = graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "frontier")
-    mode = plan["resolved"]
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "frontier")
+    spec = _hashmin_fixpoint(graph)
+    if plan["resolved"] == "csr":
+        res = fx.run(graph, spec, max_supersteps, num_partitions, store)
+        res.plan = plan
+        return res
+
     if state_broadcast is None:
         # byte-based gate (kcore.py precedent; VERDICT r3 #4): (id, comp)
         # state ~32B/row incl. broadcast-relation overhead vs 256MB budget
         state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
     if frontier_broadcast_rows is None:
         frontier_broadcast_rows = BROADCAST_FRONTIER_ROWS
-
-    if mode == "csr":
-        res = fx.run(graph, _hashmin_fixpoint(graph), max_supersteps, num_partitions, store)
-        res.plan = plan
-        return res
-
+    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
     n_edges = graph.num_edges()
-    restore_fn = None
-    if state_broadcast:
-        # dst-partitioned scatter layout: frontier broadcast + partition-
-        # complete min-agg ⇒ zero shuffle exchanges per superstep
-        edges = graph.by_dst(num_partitions).select("src", "dst")
-        # superstep 0 of the reference folds the local min over
-        # neighbors; here the uniform loop does it — same fixpoint,
-        # one extra round.
-        state0 = vertices.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
-    else:
-        # cluster-scale: SALTED (src, salt) layout (plans.skew) — the
-        # early-round frontier is ~|V| rows and a power-law hub's edge
-        # list in one task would skew-bind the join exactly as in
-        # pagerank's fallback; degree-proportional sharding rebalances
-        # it, and the shrinking frontier still flips to a broadcast
-        # join below frontier_broadcast_rows
-        from okapi_spark.plans.skew import shard_count_expr
-
-        degw = graph.edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        nsalt_expr = shard_count_expr("out_deg", num_partitions, n_edges)
-        edges = (
-            graph.edges.join(degw, "src")
-            .select(
-                "src", "dst",
-                F.pmod(F.xxhash64("dst"), nsalt_expr).cast("int").alias("salt"),
-            )
-            .repartition(num_partitions, "src", "salt")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # AQE off for the one-time cache fill (see lpa.py: Spark 4.1.2
-        # TableCacheQueryStageExec recache race on this plan shape)
-        with no_adaptive(graph.edges.sparkSession):
-            edges.count()
-        nsalt_map = degw.select(F.col("src").alias("id"), nsalt_expr.alias("nsalt"))
-        state0 = vertices.join(nsalt_map, "id", "left").select(
-            "id", F.col("id").alias("comp"), F.lit(True).alias("changed"),
-            F.coalesce("nsalt", F.lit(1)).alias("nsalt"),
-        )
-
-        # nsalt is plan-dependent; re-derive on checkpoint resume
-        def restore_fn(df: DataFrame) -> DataFrame:
-            return df.drop("nsalt").join(nsalt_map, "id", "left").select(
-                "id", "comp", "changed", F.coalesce("nsalt", F.lit(1)).alias("nsalt")
-            )
-
     # frontier size from the previous superstep's metric (|V| at ss 0)
     last_changed = [n]
 
     def superstep(ss: int, state: DataFrame):
-        if state_broadcast or last_changed[0] <= frontier_broadcast_rows:
-            frontier = F.broadcast(
-                state.filter("changed").select(F.col("id").alias("src"), "comp")
-            )
-            joined = edges.join(frontier, "src")
-        else:
-            # explode the frontier over each vertex's shard count and
-            # equi-join on (src, salt) — co-partitioned with the cached
-            # salted edge layout; shuffle_hash streams the edges (no
-            # SortMergeJoin re-sort; see pagerank.py shuffle branch)
-            from okapi_spark.plans.skew import explode_shards
-
-            frontier = explode_shards(
-                state.filter("changed"), "src", "comp"
-            ).hint("shuffle_hash")
-            joined = edges.join(frontier, ["src", "salt"])
+        # send-on-change: only the frontier scatters; once it is small
+        # enough it is broadcast even over the salted layout
+        joined = sc.join(state.filter("changed"), "comp",
+                         broadcast=last_changed[0] <= frontier_broadcast_rows)
         msgs = joined.groupBy(F.col("dst").alias("id")).agg(F.min("comp").alias("cand"))
-        keep = [] if state_broadcast else [state["nsalt"]]
-        new_state = state.join(msgs, "id", "left").select(
-            "id",
+        new_state = sc.update(
+            state, msgs, "id",
             F.least("comp", F.coalesce("cand", "comp")).alias("comp"),
             (F.coalesce("cand", "comp") < F.col("comp")).alias("changed"),
-            *keep,
         )
 
         def post(materialized: DataFrame) -> dict:
@@ -223,17 +163,10 @@ def connected_components(
 
         return new_state, post
 
-    from contextlib import nullcontext
-
-    with no_adaptive(spark) if state_broadcast else nullcontext():
-        res = run_supersteps(
-            state0,
-            superstep,
-            max_supersteps=max_supersteps,
-            halt_fn=lambda ss, m: m["changed"] == 0,
-            store=store,
-            restore_fn=restore_fn,
-        )
+    # superstep 0 of the reference folds the local min over neighbors;
+    # here the uniform loop does it — same fixpoint, one extra round
+    state0 = vertices.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
+    res = sc.run(state0, superstep, max_supersteps, lambda ss, m: m["changed"] == 0, store)
     res.state = res.state.select("id", "comp")
     res.plan = plan
     return res

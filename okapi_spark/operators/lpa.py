@@ -31,10 +31,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
-from okapi_spark.plans import csr_fixpoint as fx
-from okapi_spark.plans.broadcast import auto_state_broadcast
+from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
+from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans import scatter
+from okapi_spark.plans.broadcast import auto_state_broadcast
 
 
 def _block_label_hist(blk, sid, slbl):
@@ -230,19 +231,23 @@ def label_propagation(
     ``iterations``: run exactly that many rounds (oracle-parity mode);
     otherwise run to no-change / oscillation / max_supersteps.
 
-    ``state_broadcast``: LPA's label state is a full |V|-row table
-    every round (unlike CC there is no shrinking frontier), so the
-    zero-exchange broadcast plan is only safe when |V| fits a
-    broadcast — auto-selected vs ``broadcast_threshold``; above it the
-    classic two-shuffle plan runs (state shuffles into the src join,
-    histogram agg combines map-side).
+    ``mode="sql"``: per round one scatter of the source labels on the
+    shared sql message plan (plans/scatter.py), then the (dst, label)
+    weight histogram and its argmax. ``state_broadcast``: LPA's label
+    state is a full |V|-row table every round (unlike CC there is no
+    shrinking frontier), so the zero-exchange broadcast layout is only
+    safe when |V| fits a broadcast — auto-selected vs
+    ``broadcast_threshold``; above it the salted layout runs (the
+    exploded state shuffles into the src join, the histogram agg
+    combines map-side).
 
     ``mode="auto"`` (default, round 6): "csr" when it is
     measured-better and byte-safe — fixed-iteration runs without a
-    store, |E| within the fuse window (all rounds in one Spark job),
-    label state within the broadcast budget. Everything else resolves
-    to "sql". ``res.plan`` records the choice and the gate values
-    behind it (csr_fixpoint.plan).
+    store or an explicit ``state_broadcast`` (a sql-plan knob), |E|
+    within the fuse window (all rounds in one Spark job), label state
+    within the broadcast budget. Everything else resolves to "sql".
+    ``res.plan`` records the choice and the gate values behind it
+    (csr_fixpoint.plan).
 
     ``mode="csr"``: LPA on the csr fixpoint runner
     (plans/csr_fixpoint.py) over resident staged CSR blocks — the
@@ -255,7 +260,6 @@ def label_propagation(
     spark = graph.edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    w_col = F.col("weight") if weighted else F.lit(1.0)
 
     # memoized vertex dictionary (Graph.derived) — rebuilt per call
     # before round 6
@@ -263,94 +267,30 @@ def label_propagation(
     n = graph.num_vertices()  # scalar memo — no per-call count job
     # auto picks csr only for fixed-iteration runs (measured-better
     # there; convergence runs stay on sql)
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "label",
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "label",
                    fixed_iterations=iterations is not None)
-    mode = plan["resolved"]
-    if state_broadcast is None:
-        # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
-        state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
-
-    if mode == "csr":
-        spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
+    spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
+    if plan["resolved"] == "csr":
         res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
                      num_partitions, store)
         res.plan = plan
         return res
 
-    restore_fn = None
-    if state_broadcast:
-        # dst-partitioned scatter layout (see Graph.by_dst): labels are
-        # broadcast into the src join; groupBy(dst, lbl) and the argmax
-        # groupBy(dst) are both partition-complete ⇒ zero exchanges
-        edges = graph.by_dst(num_partitions).select("src", "dst", w_col.alias("weight"))
-        state0 = vertices.select("id", F.col("id").alias("lbl"))
-    else:
-        # SALTED co-partitioned layout, same as pagerank's shuffle
-        # fallback (plans.skew): a power-law hub's edge list in one
-        # task makes the per-superstep join skew-bound; degree-
-        # proportional (src, salt) sharding rebalances it, and only
-        # the ~|V|-row exploded label state shuffles per superstep
-        from okapi_spark.plans.skew import shard_count_expr
-
-        n_edges = graph.num_edges()
-        degw = graph.edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        nsalt_expr = shard_count_expr("out_deg", num_partitions, n_edges)
-        edges = (
-            graph.edges.join(degw, "src")
-            .select(
-                "src", "dst", w_col.alias("weight"),
-                F.pmod(F.xxhash64("dst"), nsalt_expr).cast("int").alias("salt"),
-            )
-            .repartition(num_partitions, "src", "salt")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # AQE off for the one-time cache fill: the explicit
-        # repartition(n) layout leaves AQE nothing to improve, and
-        # Spark 4.1.2's TableCacheQueryStageExec occasionally dies in
-        # CacheManager.recacheByPlan ("SparkPlan.session() is null")
-        # while adaptively materializing a fresh cache — rare
-        # subprocess-fatal race, observed on this exact plan shape
-        with no_adaptive(graph.edges.sparkSession):
-            edges.count()
-        nsalt_map = degw.select(F.col("src").alias("id"), nsalt_expr.alias("nsalt"))
-        state0 = vertices.join(nsalt_map, "id", "left").select(
-            "id", F.col("id").alias("lbl"), F.coalesce("nsalt", F.lit(1)).alias("nsalt")
-        )
-
-        # nsalt is plan-dependent (current parallelism); re-derive on
-        # checkpoint resume instead of trusting the persisted column
-        # (same hazard as pagerank's salted fallback)
-        def restore_fn(df: DataFrame) -> DataFrame:
-            return df.drop("nsalt").join(nsalt_map, "id", "left").select(
-                "id", "lbl", F.coalesce("nsalt", F.lit(1)).alias("nsalt")
-            )
+    if state_broadcast is None:
+        # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
+        state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
+    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
 
     def superstep(ss: int, state: DataFrame):
-        if state_broadcast:
-            labels = F.broadcast(
-                state.select(F.col("id").alias("src"), F.col("lbl").alias("slbl"))
-            )
-            joined = edges.join(labels, "src")
-        else:
-            from okapi_spark.plans.skew import explode_shards
-
-            labels = (
-                explode_shards(state, "src", "lbl")
-                .withColumnRenamed("lbl", "slbl")
-                .hint("shuffle_hash")
-            )
-            joined = edges.join(labels, ["src", "salt"])
         hist = (
-            joined.groupBy(F.col("dst").alias("id"), F.col("slbl").alias("lbl"))
-            .agg(F.sum("weight").alias("w"))
+            sc.join(state, "lbl")
+            .groupBy(F.col("dst").alias("id"), "lbl")
+            .agg(F.sum("w").alias("w"))
         )
-        best = _argmax_label(hist)
-        keep = [] if state_broadcast else [state["nsalt"]]
-        new_state = state.join(best, "id", "left").select(
-            "id",
+        new_state = sc.update(
+            state, _argmax_label(hist), "id",
             F.coalesce("new_lbl", "lbl").alias("lbl"),
             (F.coalesce("new_lbl", "lbl") != F.col("lbl")).alias("changed"),
-            *keep,
         )
 
         def post(materialized: DataFrame) -> dict:
@@ -398,11 +338,8 @@ def label_propagation(
 
         max_ss = max_supersteps
 
-    from contextlib import nullcontext
-
-    with no_adaptive(spark) if state_broadcast else nullcontext():
-        res = run_supersteps(state0, superstep, max_supersteps=max_ss, halt_fn=halt,
-                             store=store, restore_fn=restore_fn)
+    state0 = vertices.select("id", F.col("id").alias("lbl"))
+    res = sc.run(state0, superstep, max_ss, halt, store)
     res.state = res.state.select("id", "lbl")
     res.plan = plan
     return res
@@ -594,25 +531,21 @@ def spinner_partition(
         for r in state.groupBy("part").agg(F.sum("deg").alias("load")).collect()
     }
 
-    from contextlib import ExitStack, nullcontext
-
     try:
-        with ExitStack() as loop_ctx:
-            loop_ctx.enter_context(
-                no_adaptive(spark) if (state_broadcast or mode == "csr") else nullcontext()
-            )
+        with scatter.zero_exchange_loop(spark, state_broadcast or mode == "csr"):
             state, rounds, converged, log = _spinner_loop(
                 spark, state, edges, _maybe_bcast, loads, capacity, lam, k_total,
                 max_iterations, threshold, window, seed, total_edges, _ceil3,
                 csr_fns=csr_fns,
             )
     finally:
-        if mode == "csr":
-            g.unpersist()
-    for slot in (lbl_slot, mv_slot):
-        if slot[0] is not None:
-            slot[0].destroy()
-            slot[0] = None
+        # the state is localCheckpointed every round, so the symmetrized
+        # graph (its layouts and staged blocks) and the vertex table go
+        g.unpersist()
+        vertices.unpersist()
+        for slot in (lbl_slot, mv_slot):
+            if slot[0] is not None:
+                slot[0].destroy()
     return BSPResult(state.select("id", "part"), rounds, converged, log)
 
 

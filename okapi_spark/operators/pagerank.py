@@ -17,18 +17,13 @@ checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob),
 budget — the whole converged fixpoint is then one Spark job instead of
 ~3 per superstep — else "sql". ``BSPResult.plan`` records the choice.
 
-* ``mode="sql"`` — messages as an equi-join + hash aggregation.
-  Default physical plan (``state_broadcast`` auto when |V| ≤
-  ``broadcast_threshold``): ``edges_share`` (src, dst, share=w/Σw) is
-  repartitioned by DST and cached once; per superstep the rank state
-  is broadcast into the src join and ``groupBy(dst)`` is partition-
-  complete — ZERO shuffle exchanges per superstep. (Measured: the
-  naive src-partitioned plan builds an O(|V|)-entry partial-agg hash
-  map per task, which anti-scales with task count; the dst layout is
-  7× faster at 32 cores on 30M edges and actually scales.) With
-  ``state_broadcast=False`` (cluster-scale |V|) it falls back to the
-  classic two-shuffle plan: state shuffles into the src join,
-  Catalyst partial aggregation combines messages map-side.
+* ``mode="sql"`` — ``power_sql``: per superstep one scatter of
+  ``rank·share`` over the (src, dst, share) frame, summed per dst, on
+  the shared sql message plan (plans/scatter.py). ``state_broadcast``
+  (default: the ~32 B/vertex rank state within the broadcast budget,
+  or |V| ≤ ``broadcast_threshold``) picks its zero-exchange broadcast
+  layout; ``state_broadcast=False`` (cluster-scale |V|) its salted
+  (src, salt) shuffle layout.
 * ``mode="csr"`` — the csr fixpoint runner (plans/csr_fixpoint.py):
   shares (src, dst, share) are staged ONCE per Graph as dst-hashed,
   dst-sorted memmapped ``.npy`` blocks (plans/csr_blocks.py) and the
@@ -47,11 +42,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive, run_supersteps
-from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
+from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans import scatter
 
 # sql-mode layout sizing: ~300k edge rows per partition keeps each
 # per-superstep task well above the scheduling floor (see pagerank())
@@ -100,8 +95,6 @@ def pagerank(
     spark = graph.edges.sparkSession
     width = num_partitions or spark.sparkContext.defaultParallelism
     sql_width = width if num_partitions else _sql_layout_width(graph, width)
-    # an explicit state_broadcast is a sql-plan knob: the caller asked
-    # for a sql plan
     likely_csr = mode == "csr" or (
         mode == "auto" and store is None and state_broadcast is None
         and graph.num_edges() <= fx._FUSE_MAX_EDGES
@@ -110,170 +103,29 @@ def pagerank(
     # plan reads: the csr id gather's, or the sql plan's
     graph.vertices_by_id(width if likely_csr else sql_width)
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, "rank",
-                   state_broadcast_unset=state_broadcast is None)
-    mode = plan["resolved"]
-    num_partitions = sql_width if mode == "sql" else width
+    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "rank")
+    num_partitions = sql_width if plan["resolved"] == "sql" else width
     if n == 0:
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
     base = (1.0 - damping) / n
+    rounds = iterations if iterations is not None else max_supersteps
+    key = "l1_delta" if tol_norm == "l1" else "max_delta"
+    halt = None if iterations is not None else (lambda m: m[key] < tol)
 
-    if mode == "csr":
+    if plan["resolved"] == "csr":
         spec = power_fixpoint(graph, weighted, lambda ids: {"rank": np.full(len(ids), 1.0 / n)},
                               base, damping)
-        if iterations is None:
-            key = "l1_delta" if tol_norm == "l1" else "max_delta"
-            spec.halt = lambda m, history: m[key] < tol
-        res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
-                     num_partitions, store)
-        res.plan = plan
-        return res
-
-    # memoized one-time layouts (Graph.derived): the vertex dictionary
-    # and degree census are pure functions of the edge set, rebuilt per
-    # call before round 6 — now built once per Graph and shared across
-    # operator calls (guide §2.4: don't recompute what a layout holds)
-    vertices = graph.vertices_by_id(num_partitions)
-    # share = fraction of rank sent along each out-edge; out_deg kept
-    # for the shuffle-mode salting census
-    degw = graph.degree_weights()
-    shares = _shares(graph, weighted)
-
-    if state_broadcast is None:
-        # byte-based gate (VERDICT r3 #4): (id, rank) state ~32B/row
-        state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
-    n_edges = graph.num_edges()
-    if state_broadcast:
-        # zero-exchange layout: edges by dst, state broadcast into the
-        # src join, groupBy(dst) is partition-complete (Graph.by_dst).
-        # Memoized per (weighted, P) — the dst-partitioned share cache
-        # is a pure layout of the edge set, shared across calls.
-        _sh = shares
-        shares = graph.derived(
-            ("pr_shares_dst", weighted, num_partitions),
-            lambda: _sh.select("src", "dst", "share")
-            .repartition(num_partitions, "dst")
-            .persist(StorageLevel.MEMORY_AND_DISK),
-        )
+        if halt is not None:
+            spec.halt = lambda m, history: halt(m)
+        res = fx.run(graph, spec, rounds, num_partitions, store)
     else:
-        # SALTED co-partitioned layout (north rule: explicit salted-key
-        # repartitioning for high-degree skew; see
-        # plans.skew.shard_count_expr for the measured rationale).
-        # Each src gets nsalt = ceil(out_deg / target) shards with
-        # rows spread by hash(dst); the rank state explodes each
-        # vertex over ITS OWN nsalt (tail vertices: 1 row), so the
-        # exploded state stays ~|V| + a few rows per hub shard.
-        from okapi_spark.plans.skew import shard_count_expr
-
-        nsalt_expr = shard_count_expr("out_deg", num_partitions, n_edges)
-        shares = (
-            shares.select(
-                "src", "dst", "share",
-                F.pmod(F.xxhash64("dst"), nsalt_expr).cast("int").alias("salt"),
-            )
-            .repartition(num_partitions, "src", "salt")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        nsalt_map = degw.select(
-            F.col("src").alias("id"), nsalt_expr.alias("nsalt")
-        )
-    # materialize once — AQE off for the cache fill (see lpa.py: Spark
-    # 4.1.2 TableCacheQueryStageExec recache race on this plan shape)
-    with no_adaptive(graph.edges.sparkSession):
-        shares.count()
-
-    restore_fn = None
-    if not state_broadcast:
-        # carry each vertex's shard count in the state so the explode
-        # needs no per-superstep join against a salt table
-        state0 = vertices.join(nsalt_map, "id", "left").select(
-            "id", F.lit(1.0 / n).alias("rank"),
-            F.coalesce("nsalt", F.lit(1)).alias("nsalt"),
-        )
-
-        # nsalt is plan-dependent (derived from THIS run's parallelism
-        # and edge count). A checkpointed state from a crashed run may
-        # carry smaller shard counts than the current salted edge
-        # layout uses — edges with salt >= the stale nsalt would match
-        # no exploded state row and silently drop rank mass. Re-derive
-        # on resume instead of trusting the persisted column.
-        def restore_fn(df: DataFrame) -> DataFrame:
-            return df.drop("nsalt").join(nsalt_map, "id", "left").select(
-                "id", "rank", F.coalesce("nsalt", F.lit(1)).alias("nsalt")
-            )
-    else:
-        state0 = vertices.select("id", F.lit(1.0 / n).alias("rank"))
-
-    def superstep(ss: int, state: DataFrame):
-        if state_broadcast:
-            ranks = F.broadcast(state.select("id", "rank").withColumnRenamed("id", "src"))
-            msgs = (
-                shares.join(ranks, "src")
-                .select("dst", (F.col("rank") * F.col("share")).alias("m"))
-                .groupBy("dst")
-                .agg(F.sum("m").alias("msum"))
-            )
-        else:
-            # shuffle fallback: explode each vertex over its own shard
-            # count and equi-join on (src, salt) — co-partitioned with
-            # the cached salted edge layout, so only the ~|V|-row
-            # exploded state shuffles. shuffle_hash builds the hash on
-            # that small side and STREAMS the edges (a SortMergeJoin
-            # would re-sort the edge set every superstep)
-            from okapi_spark.plans.skew import explode_shards
-
-            ranks = explode_shards(state, "src", "rank").hint("shuffle_hash")
-            msgs = (
-                shares.join(ranks, ["src", "salt"])
-                .select("dst", (F.col("rank") * F.col("share")).alias("m"))
-                .groupBy("dst")
-                .agg(F.sum("m").alias("msum"))
-            )
-        keep = [] if state_broadcast else [state["nsalt"]]
-        new_state = (
-            state.join(msgs, state["id"] == msgs["dst"], "left")
-            .select(
-                state["id"],
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
-                state["rank"].alias("prev"),
-                *keep,
-            )
-        )
-        if iterations is not None:
-            # fixed budget: no convergence metric → one action per superstep
-            return new_state.drop("prev"), {"edges_processed": n_edges}
-
-        def post(materialized: DataFrame) -> dict:
-            # one scan computes both norms; the halt predicate picks
-            # per tol_norm and both land in metrics_log/lineage
-            agg = materialized.agg(
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("mx"),
-                F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
-            ).collect()[0]
-            return {
-                "max_delta": float(agg["mx"]),
-                "l1_delta": float(agg["l1"]),
-                "edges_processed": n_edges,
-            }
-
-        return new_state, post
-
-    # the zero-exchange broadcast plan gains nothing from AQE; its
-    # per-job planning overhead is the loop's serial floor
-    from contextlib import nullcontext
-
-    with no_adaptive(spark) if state_broadcast else nullcontext():
-        result = run_supersteps(
-            state0, superstep,
-            max_supersteps=iterations if iterations is not None else max_supersteps,
-            halt_fn=None if iterations is not None else (
-                lambda ss, m: m["l1_delta" if tol_norm == "l1" else "max_delta"] < tol
-            ),
-            store=store, restore_fn=restore_fn,
-        )
-    result.state = result.state.select("id", "rank")
-    result.plan = plan
-    return result
+        if state_broadcast is None:
+            state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
+        state0 = graph.vertices_by_id(num_partitions).select("id", F.lit(1.0 / n).alias("rank"))
+        res = power_sql(graph, weighted, state0, base, damping, num_partitions, state_broadcast,
+                        rounds, halt, store)
+    res.plan = plan
+    return res
 
 
 def _sql_layout_width(graph: Graph, parallelism: int) -> int:
@@ -287,12 +139,49 @@ def _sql_layout_width(graph: Graph, parallelism: int) -> int:
 
 
 def _shares(graph: Graph, weighted: bool) -> DataFrame:
-    """(src, dst, share, out_deg): share = fraction of rank sent along
-    each out-edge (w/Σw or 1/out_deg); out_deg feeds the salting census."""
+    """(src, dst, share): share = fraction of rank sent along each
+    out-edge (w/Σw or 1/out_deg) — the frame both modes lay out."""
     share = (F.col("weight") / F.col("wsum")) if weighted else (F.lit(1.0) / F.col("out_deg"))
-    return graph.edges.join(graph.degree_weights(), "src").select(
-        "src", "dst", share.alias("share"), "out_deg"
-    )
+    return graph.edges.join(graph.degree_weights(), "src").select("src", "dst", share.alias("share"))
+
+
+def power_sql(graph: Graph, weighted: bool, state0: DataFrame, base: float, damping: float,
+              P: int, broadcast: bool, rounds: int, halt=None,
+              store: CheckpointStore | None = None) -> BSPResult:
+    """sql mirror of ``power_fixpoint`` over the same shares: per
+    superstep one scatter (plans/scatter.py) of ``rank·share`` summed
+    per dst, ``rank' = base + damping · msum``. With ``halt(metrics)``
+    one scan of the materialized state computes both norms of Δrank;
+    without it the rounds are fixed and cost no metric action."""
+    sc = scatter.plan(graph, "pr_w" if weighted else "pr", lambda: _shares(graph, weighted),
+                      P, broadcast)
+    n_edges = graph.num_edges()
+
+    def superstep(ss: int, state: DataFrame):
+        msgs = (
+            sc.join(state, "rank")
+            .select("dst", (F.col("rank") * F.col("share")).alias("m"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("m").alias("msum"))
+        )
+        rank = (F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank")
+        if halt is None:
+            return sc.update(state, msgs, "id", rank), {"edges_processed": n_edges}
+
+        def post(materialized: DataFrame) -> dict:
+            # one scan computes both norms; the halt predicate picks
+            # per tol_norm and both land in metrics_log/lineage
+            agg = materialized.agg(
+                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("mx"),
+                F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
+            ).collect()[0]
+            return {"max_delta": float(agg["mx"]), "l1_delta": float(agg["l1"]), "edges_processed": n_edges}
+
+        return sc.update(state, msgs, "id", rank, state["rank"].alias("prev")), post
+
+    res = sc.run(state0, superstep, rounds, None if halt is None else (lambda ss, m: halt(m)), store)
+    res.state = res.state.select("id", "rank")
+    return res
 
 
 def power_fixpoint(graph: Graph, weighted: bool, init, base: float, damping: float):
@@ -311,8 +200,7 @@ def power_fixpoint(graph: Graph, weighted: bool, init, base: float, damping: flo
         return {"rank": new}, {"max_delta": float(d.max()) if len(d) else 0.0, "l1_delta": float(d.sum())}
 
     return Fixpoint(
-        "pr_w" if weighted else "pr",
-        lambda: _shares(graph, weighted).select("src", "dst", "share"), init, _power_step, merge,
+        "pr_w" if weighted else "pr", lambda: _shares(graph, weighted), init, _power_step, merge,
         lambda ids, state: pd.DataFrame({"id": ids, "rank": state["rank"]}),
         "id long, rank double", resolve=_segments,
     )

@@ -10,9 +10,9 @@ Semantics (verified against the reference source):
 * Exactly ⌈c·log10(N)⌉ power iterations (:227-234), c =
   sybilrank.iteration.multiplier (default 1).
 
-Spark: identical scatter joins as weighted PageRank without teleport;
-trusted seeds come from a side table (SybilRankVertexValueInputFormat
-:321-350 analogue).
+Spark: weighted PageRank's power iteration without teleport (base=0,
+damping=1), on either physical mode; trusted seeds come from a side
+table (SybilRankVertexValueInputFormat :321-350 analogue).
 """
 
 from __future__ import annotations
@@ -22,11 +22,11 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from okapi_spark.bsp import BSPResult, no_adaptive, run_supersteps
+from okapi_spark.bsp import BSPResult
 from okapi_spark.graph.graph import Graph
-from okapi_spark.plans.broadcast import auto_state_broadcast
+from okapi_spark.operators.pagerank import power_fixpoint, power_sql
+from okapi_spark.plans import csr_fixpoint as fx
 
 
 def sybilrank(
@@ -42,19 +42,20 @@ def sybilrank(
     """trusted: (id long). Returns state (id long, rank double) where
     rank is the degree-normalized trust after the final iteration.
 
-    ``state_broadcast``: the trust state is |V| rows every power
-    iteration, so the zero-exchange broadcast plan is auto-gated on
-    estimated state bytes vs the shared 256MB budget
+    ``mode="sql"``: weighted PageRank's sql power plan (``power_sql``,
+    base=0, damping=1) over the memoized weighted shares — one scatter
+    per power iteration on the shared sql message plan
+    (plans/scatter.py). ``state_broadcast``: the trust state is |V|
+    rows every power iteration, so its zero-exchange broadcast layout
+    is auto-gated on estimated state bytes vs the shared 256MB budget
     (plans/broadcast.py; ``broadcast_threshold`` overrides with an
-    explicit row count); above it the classic two-shuffle plan runs
-    (state shuffles into the src join, map-side partial sum combines
-    messages).
+    explicit row count); above it the salted layout runs.
 
-    ``mode="csr"``: the scatter is weighted-PageRank-shaped, so it runs
-    PageRank's power-iteration spec (``power_fixpoint``, base=0,
-    damping=1 — ``0.0 + 1.0·msum`` is IEEE-identical to ``msum``) on
-    the csr fixpoint runner over the memoized weighted share blocks —
-    zero exchange, zero edge rescan; same byte gate.
+    ``mode="csr"``: the same power iteration as a csr spec
+    (``power_fixpoint``, base=0, damping=1) on the csr fixpoint runner
+    over the same memoized weighted share blocks — zero exchange, zero
+    edge rescan; same byte gate. ``res.plan`` records the mode and the
+    gate values (csr_fixpoint.plan).
     """
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown sybilrank mode {mode!r}")
@@ -67,21 +68,10 @@ def sybilrank(
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if total_trust is None:
         total_trust = float(n)
-    if mode == "csr" and not auto_state_broadcast(
-        n, row_bytes=32, rows_override=broadcast_threshold
-    ):
-        raise ValueError(
-            f"mode='csr' broadcasts the full trust state each superstep; "
-            f"|V|={n} exceeds the broadcast budget "
-            f"(threshold={broadcast_threshold}). Use mode='sql'."
-        )
-    if state_broadcast is None:
-        # byte-budgeted gate (plans/broadcast.py, CC/LPA/PageRank
-        # precedent): (id, send) ~ 32B/row vs the 256MB budget
-        state_broadcast = auto_state_broadcast(n, row_bytes=32, rows_override=broadcast_threshold)
+    plan = fx.plan(mode, graph, n, None, broadcast_threshold, state_broadcast, "trust")
     if n == 0:
         # a fixed iteration count (⌈c·log10 N⌉) is undefined on no vertices
-        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, False)
+        return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, False, plan=plan)
     # a driver-side seed list — trusted sets are small side tables, and
     # a local one collects without a Spark job
     t_ids = np.unique(np.asarray([r.id for r in trusted.select("id").collect()], dtype="int64"))
@@ -90,63 +80,31 @@ def sybilrank(
         raise ValueError("sybilrank needs at least one trusted vertex")
     power_iterations = int(math.ceil(iteration_multiplier * math.log10(n))) or 1
 
-    deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("deg"))
+    # the trust scatter is weighted PageRank's power iteration with
+    # base=0, damping=1 (``0.0 + 1.0·msum`` is IEEE-identical to msum)
     if mode == "csr":
-        from okapi_spark.operators.pagerank import power_fixpoint
-        from okapi_spark.plans import csr_fixpoint as fx
-
         def init(ids):
             rank = np.zeros(len(ids))
             pos, hit = fx.locate(ids, t_ids)  # seeds absent from V drop out
             rank[pos[hit]] = total_trust / n_trusted
             return {"rank": rank}
 
-        spec = power_fixpoint(graph, True, init, 0.0, 1.0)
-        res = fx.run(graph, spec, power_iterations, num_partitions)
-        res.state = res.state.withColumnRenamed("rank", "send")
+        res = fx.run(graph, power_fixpoint(graph, True, init, 0.0, 1.0), power_iterations, num_partitions)
     else:
-        shares = graph.edges.join(deg.withColumnRenamed("id", "src"), "src").select(
-            "src", "dst", (F.col("weight") / F.col("deg")).alias("share")
+        if state_broadcast is None:
+            # byte-budgeted gate (plans/broadcast.py, CC/LPA/PageRank
+            # precedent): (id, rank) ~ 32B/row vs the 256MB budget
+            state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
+        seeds = trusted.select("id").distinct().withColumn("is_trusted", F.lit(True))
+        state0 = vertices.join(seeds, "id", "left").select(
+            "id", F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0).alias("rank")
         )
-        # broadcast mode: dst-partitioned scatter layout (see
-        # Graph.by_dst); shuffle mode: src layout so the state
-        # equi-join co-locates on src
-        shares = shares.repartition("dst" if state_broadcast else "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        shares.count()
-
-        init_rank = F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0)
-        state0 = (
-            vertices.join(trusted.select("id").distinct().withColumn("is_trusted", F.lit(True)), "id", "left")
-            .select("id", init_rank.alias("send"))
-        )
-
-        def superstep(ss: int, state: DataFrame):
-            sends = state.select("id", "send").withColumnRenamed("id", "src")
-            if state_broadcast:
-                sends = F.broadcast(sends)
-            else:
-                # stream cached edges vs per-partition trust hash (no SMJ
-                # re-sort of the edge set; see pagerank.py shuffle branch)
-                sends = sends.hint("shuffle_hash")
-            recv = (
-                shares.join(sends, "src")
-                .select("dst", (F.col("send") * F.col("share")).alias("m"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("m").alias("recv"))
-            )
-            new_state = vertices.join(recv, "id", "left").select(
-                "id", F.coalesce("recv", F.lit(0.0)).alias("send")
-            )
-            return new_state, {}
-
-        from contextlib import nullcontext
-
-        with no_adaptive(spark) if state_broadcast else nullcontext():
-            res = run_supersteps(state0, superstep, max_supersteps=power_iterations)
+        res = power_sql(graph, True, state0, 0.0, 1.0, num_partitions, state_broadcast, power_iterations)
+    # stored value = trust / weighted degree (the census's Σw)
+    deg = graph.degree_weights().select(F.col("src").alias("id"), F.col("wsum").alias("deg"))
     res.state = res.state.join(deg, "id", "left").select(
         "id",
-        F.when(F.col("deg") > 0, F.col("send") / F.col("deg")).otherwise(0.0).alias("rank"),
+        F.when(F.col("deg") > 0, F.col("rank") / F.col("deg")).otherwise(0.0).alias("rank"),
     )
+    res.plan = plan
     return res

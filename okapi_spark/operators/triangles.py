@@ -250,53 +250,20 @@ def _oriented_array(
 
 def triangles_df(graph: Graph, chunks: int = 1) -> DataFrame:
     """All triangles as rows (low, mid, high), low < mid < high (by id).
-
-    The oriented edge set backing the returned plan stays cached for
-    the session (it feeds every downstream action on the plan);
-    consume-once callers should prefer the count wrappers below, which
-    release it after their action."""
-    tri, _o = _triangles_plan(graph, chunks)
-    return tri
+    The oriented edge set behind the plan stays memoized on the Graph
+    until ``Graph.unpersist()``."""
+    return _triangles_plan(graph, chunks)
 
 
-class _OrientedHandle:
-    """Persisted-state handle for a triangle plan: the oriented edge
-    set plus the degree table backing it. ``count()`` materializes the
-    oriented set (phase-1 boundary for the scaling bench). Round 6:
-    when the oriented set is MEMOIZED on the Graph (``owned=False``,
-    the default path through ``_triangles_plan``) ``unpersist()`` is a
-    no-op — the Graph owns the cache and releases it in its own
-    ``unpersist()``; callers keep their release calls unchanged."""
-
-    def __init__(self, oriented: DataFrame, extras: list[DataFrame], owned: bool = True):
-        self._o = oriented
-        self._extras = extras
-        self._owned = owned
-
-    def count(self) -> int:
-        return self._o.count()
-
-    def unpersist(self) -> None:
-        if not self._owned:
-            return
-        self._o.unpersist()
-        for df in self._extras:
-            df.unpersist()
-
-
-def _triangles_plan(graph: Graph, chunks: int = 1) -> tuple[DataFrame, _OrientedHandle]:
-    """(triangles, oriented_handle) — the handle owns the persisted
-    oriented edge set (+ degree table); callers that fully consume the
-    triangle plan in one action must unpersist it afterwards."""
+def _oriented_memo(graph: Graph) -> DataFrame:
+    """The persisted oriented edge set, memoized on the Graph: it feeds
+    THREE plan legs (both wedge sides + the closing semi-join);
+    uncached it is recomputed per leg — its canonical-distinct + degree
+    joins dominated the whole job (measured 65s of a 238s run, ×3).
+    Repeated triangle/coefficient calls on one Graph reuse it;
+    ``Graph.unpersist()`` releases it with its degree table."""
     from pyspark.storagelevel import StorageLevel
 
-    # the oriented set feeds THREE plan legs (both wedge sides + the
-    # closing semi-join); uncached it is recomputed per leg — its
-    # canonical-distinct + degree joins dominated the whole job
-    # (measured 65s of a 238s run, ×3) — so materialize it once.
-    # Round 6: MEMOIZED on the Graph (like by_dst) — repeated triangle/
-    # coefficient calls on one Graph reuse the cached oriented set
-    # instead of re-deriving and re-persisting it per call.
     def build():
         o_df, extras = _oriented(graph)
         return o_df.persist(StorageLevel.MEMORY_AND_DISK), extras
@@ -307,7 +274,13 @@ def _triangles_plan(graph: Graph, chunks: int = 1) -> tuple[DataFrame, _Oriented
         for df in extras_c:
             df.unpersist()
 
-    o, extras = graph.derived(("tri_oriented",), build, cleanup=release)
+    return graph.derived(("tri_oriented",), build, cleanup=release)[0]
+
+
+def _triangles_plan(graph: Graph, chunks: int = 1) -> DataFrame:
+    """The sql wedge plan: (low, mid, high) rows over the memoized
+    oriented edge set."""
+    o = _oriented_memo(graph)
     wedges_parts = []
     for c in range(chunks):
         e1 = o.alias("e1")
@@ -349,7 +322,7 @@ def _triangles_plan(graph: Graph, chunks: int = 1) -> tuple[DataFrame, _Oriented
     tri = tri.select(
         ids[0].alias("low"), ids[1].alias("mid"), ids[2].alias("high")
     )
-    return tri, _OrientedHandle(o, extras, owned=False)
+    return tri
 
 
 def triangle_count(
@@ -389,11 +362,7 @@ def triangle_count(
             graph, num_partitions=num_partitions, block_dir=block_dir
         )
         return n
-    tri, o = _triangles_plan(graph, chunks)
-    try:
-        return tri.count()
-    finally:
-        o.unpersist()
+    return _triangles_plan(graph, chunks).count()
 
 
 # ---------------------------------------------------------------------------
@@ -721,29 +690,24 @@ def triangle_count_per_vertex(graph: Graph, chunks: int = 1) -> DataFrame:
     """(id, triangles) — count placed at the max-id vertex of each
     triangle, matching TriangleCount output (Triangles.java:131-151;
     null-valued vertices dropped per TriangleOutputFormat :323-370).
-    The aggregate is materialized (localCheckpoint) so the oriented
-    edge cache can be released before returning."""
-    tri, o = _triangles_plan(graph, chunks)
-    out = (
-        tri.groupBy(F.col("high").alias("id"))
+    The aggregate is materialized (localCheckpoint)."""
+    return (
+        _triangles_plan(graph, chunks)
+        .groupBy(F.col("high").alias("id"))
         .agg(F.count("*").alias("triangles"))
         .localCheckpoint(eager=True)
     )
-    o.unpersist()
-    return out
 
 
 def triangles_per_vertex_all(graph: Graph) -> DataFrame:
     """(id, triangles) counting each triangle at ALL three corners —
     the building block for clustering coefficient
-    (graphs/ClusteringCoefficient.java:89-192). Materialized, so the
-    oriented edge cache is released before returning."""
-    t, o = _triangles_plan(graph)
+    (graphs/ClusteringCoefficient.java:89-192). Materialized
+    (localCheckpoint)."""
+    t = _triangles_plan(graph)
     stacked = (
         t.select(F.col("low").alias("id"))
         .unionAll(t.select(F.col("mid").alias("id")))
         .unionAll(t.select(F.col("high").alias("id")))
     )
-    out = stacked.groupBy("id").agg(F.count("*").alias("triangles")).localCheckpoint(eager=True)
-    o.unpersist()
-    return out
+    return stacked.groupBy("id").agg(F.count("*").alias("triangles")).localCheckpoint(eager=True)

@@ -1,9 +1,10 @@
 """Byte-budget gate for the zero-exchange state-broadcast plans.
 
-The iterative operators (PageRank/CC/LPA/Spinner) have two physical
-strategies: broadcast the full |V|-row vertex state into the cached
-dst-partitioned edge scan (zero shuffle exchanges per superstep), or
-the salted co-partitioned shuffle fallback. The switch must be sized
+The iterative operators' sql plans (PageRank/SybilRank/CC/LPA through
+plans/scatter.py, and Spinner) have two physical strategies: broadcast
+the full |V|-row vertex state into the cached dst-partitioned edge
+scan (zero shuffle exchanges per superstep), or the shuffle fallback
+(scatter's salted (src, salt) layout). The switch must be sized
 in BYTES, not rows — a 20M-row gate ships ~500MB+ of broadcast hash
 relation to every executor every superstep, which is well past what a
 4-8GB executor tolerates (k-core learned this first: kcore.py's

@@ -72,17 +72,19 @@ _STATE_ROW_BYTES = 32
 
 
 def plan(mode: str, graph, n: int, store: CheckpointStore | None,
-         broadcast_threshold: int | None, what: str, **conditions: bool) -> dict:
+         broadcast_threshold: int | None, state_broadcast: bool | None,
+         what: str, **conditions: bool) -> dict:
     """The plan record of one operator call (``BSPResult.plan``): the
     requested and resolved mode plus the gate values behind the choice.
 
     ``mode="auto"`` resolves to "csr" when the fixpoint is fusable — no
-    checkpoint store, |E| inside the fuse window (the whole fixpoint
-    in one Spark job) and the |V|-row state inside the broadcast
-    budget — and every operator-specific entry of ``conditions`` holds;
-    else to "sql". An explicit "sql"/"csr" is kept as asked, but an
-    explicit "csr" whose ``what`` state would not fit the budget is
-    rejected: the runner broadcasts it every round."""
+    checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob:
+    the caller asked for a sql layout), |E| inside the fuse window (the
+    whole fixpoint in one Spark job) and the |V|-row state inside the
+    broadcast budget — and every operator-specific entry of
+    ``conditions`` holds; else to "sql". An explicit "sql"/"csr" is
+    kept as asked, but an explicit "csr" whose ``what`` state would not
+    fit the budget is rejected: the runner broadcasts it every round."""
     n_edges = graph.num_edges()
     rec = {
         "requested": mode,
@@ -91,6 +93,7 @@ def plan(mode: str, graph, n: int, store: CheckpointStore | None,
         "state_bytes": n * _STATE_ROW_BYTES,
         "state_budget_bytes": state_budget_bytes(_STATE_ROW_BYTES, broadcast_threshold),
         "store": store is not None,
+        "state_broadcast": state_broadcast,
         **conditions,
     }
     fits = rec["state_bytes"] <= rec["state_budget_bytes"]
@@ -101,7 +104,8 @@ def plan(mode: str, graph, n: int, store: CheckpointStore | None,
             f"{rec['state_budget_bytes']} bytes. Use mode='sql' (state_broadcast=False "
             "selects the salted shuffle plan at cluster-scale |V|)."
         )
-    fusable = store is None and n_edges <= _FUSE_MAX_EDGES and fits and all(conditions.values())
+    fusable = (store is None and state_broadcast is None and n_edges <= _FUSE_MAX_EDGES and fits
+               and all(conditions.values()))
     rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
     return rec
 

@@ -7,7 +7,9 @@ broadcast-ineligible joins against a hub-keyed side. Pattern: explode
 the hub side over ``salt`` shards + two-level aggregation (partial per
 (key, salt), final per key) — the Giraph-era equivalent was Spinner's
 prefix-hash partitioner spreading hot vertices
-(spinner/PrefixHashPartitionerFactory.java:32-58).
+(spinner/PrefixHashPartitionerFactory.java:32-58). The iterative
+operators' degree-proportional salted edge layout lives with the rest
+of their sql message plan in plans/scatter.py.
 """
 
 from __future__ import annotations
@@ -45,40 +47,6 @@ def salted_agg(
             raise ValueError(f"non-decomposable agg: {fn}")
     partial = salted.groupBy(key, "__salt").agg(*partial_exprs)
     return partial.groupBy(key).agg(*final_exprs)
-
-
-def shard_count_expr(
-    deg_col: Column | str,
-    num_partitions: int,
-    n_edges: int,
-    target_min: int = 1024,
-    cap_factor: int = 4,
-) -> Column:
-    """Per-vertex salt shard count for the degree-proportional salted
-    edge layout (the cluster-scale shuffle fallback of the iterative
-    operators): nsalt = clamp(1, cap_factor·P, ceil(out_deg/target))
-    with target = max(target_min, |E|/(8P)). Hash-partitioning a
-    power-law edge set by raw src puts a hub's entire edge list in ONE
-    task — measured flat (skew-bound) from 8 to 32 cores; sharding
-    each hub over nsalt (src, salt) keys rebalances it (BENCH.md
-    round-2 shuffle-fallback analysis: 14.5s → 2.9s/superstep)."""
-    target = max(target_min, n_edges // (num_partitions * 8))
-    deg = F.col(deg_col) if isinstance(deg_col, str) else deg_col
-    return F.greatest(
-        F.lit(1),
-        F.least(F.lit(cap_factor * num_partitions), F.ceil(deg / F.lit(target))),
-    ).cast("int")
-
-
-def explode_shards(state: DataFrame, id_as: str, *carry: str) -> DataFrame:
-    """Explode a per-vertex state row over its own ``nsalt`` shard
-    count → (id_as, *carry, salt). Tail vertices stay 1 row, hubs get
-    a few — the exploded state is ~|V| + a handful of hub rows, so
-    only that small side shuffles into the (src, salt) edge join."""
-    return state.select(
-        F.col("id").alias(id_as), *carry,
-        F.explode(F.sequence(F.lit(0), F.col("nsalt") - 1)).alias("salt"),
-    )
 
 
 def hub_split(

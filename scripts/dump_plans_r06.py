@@ -45,9 +45,7 @@ def main() -> None:
     # ---- triangle_count (sql): the full triangle plan -----------------
     from okapi_spark.operators.triangles import _triangles_plan
 
-    tri, o = _triangles_plan(g)
-    put("triangle_count", grab(tri.groupBy().count()))
-    o.unpersist()
+    put("triangle_count", grab(_triangles_plan(g).groupBy().count()))
 
     # ---- pagerank sql broadcast-state: one superstep's plan -----------
     # (reproduces pagerank() mode='sql' state_broadcast=True internals)

@@ -53,6 +53,8 @@ def test_cc_shuffle_branch_matches_broadcast(spark):
         g, max_supersteps=100, state_broadcast=False, frontier_broadcast_rows=0
     )
     assert res_b.converged and res_s.converged
+    # an explicit state_broadcast asks for a sql layout
+    assert res_b.plan["resolved"] == res_s.plan["resolved"] == "sql"
     got_b = {r.id: r.comp for r in res_b.state.collect()}
     got_s = {r.id: r.comp for r in res_s.state.collect()}
     assert got_b == got_s

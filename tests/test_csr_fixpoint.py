@@ -211,9 +211,9 @@ def test_csr_operator_on_warm_graph_is_one_job(spark):
 
 def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     """mode="auto" resolves through one gate and records it in
-    ``res.plan``: csr when fusable, sql with a store, with PageRank's
-    explicit ``state_broadcast``, past the fuse window or past the
-    state budget; CC and LPA keep their resolution (LPA: csr only for
+    ``res.plan``: csr when fusable, sql with a store, with an explicit
+    ``state_broadcast`` (PageRank, CC and LPA alike), past the fuse
+    window or past the state budget (LPA: csr only for
     fixed-iteration runs). Explicit modes are kept as asked."""
     g = _graph(spark, "two_components")
     n, m = g.num_vertices(), g.num_edges()
@@ -221,7 +221,7 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     assert pr.plan == {
         "requested": "auto", "resolved": "csr", "n_edges": m, "fuse_max_edges": fx._FUSE_MAX_EDGES,
         "state_bytes": 32 * n, "state_budget_bytes": STATE_BROADCAST_BUDGET_BYTES, "store": False,
-        "state_broadcast_unset": True,
+        "state_broadcast": None,
     }
     resolved = {
         "pr_store": pagerank(g, iterations=1, store=CheckpointStore(str(tmp_path / "pr"))),
@@ -229,13 +229,19 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
         "pr_threshold": pagerank(g, iterations=1, broadcast_threshold=n - 1),
         "pr_sql": pagerank(g, iterations=1, mode="sql"),
         "cc_store": connected_components(g, store=CheckpointStore(str(tmp_path / "cc"))),
+        "cc_state_broadcast": connected_components(g, state_broadcast=True),
+        "cc_salted": connected_components(g, state_broadcast=False),
+        "lpa_state_broadcast": label_propagation(g, iterations=1, state_broadcast=True),
+        "lpa_salted": label_propagation(g, iterations=1, state_broadcast=False),
         "lpa_converge": label_propagation(g, max_supersteps=3),
         "lpa_store": label_propagation(g, iterations=1, store=CheckpointStore(str(tmp_path / "lpa"))),
     }
     for name, res in resolved.items():
         assert res.plan["resolved"] == "sql", name
     assert resolved["pr_store"].plan["store"]
-    assert not resolved["pr_state_broadcast"].plan["state_broadcast_unset"]
+    for name in ("pr_state_broadcast", "cc_state_broadcast", "lpa_state_broadcast"):
+        assert resolved[name].plan["state_broadcast"] is True, name
+    assert resolved["cc_salted"].plan["state_broadcast"] is False
     p = resolved["pr_threshold"].plan
     assert p["state_budget_bytes"] == 32 * (n - 1) < p["state_bytes"]
     assert resolved["pr_sql"].plan["requested"] == "sql"

@@ -2,12 +2,12 @@
 correctness gate only ever runs at sf0.01 (2,000 vertices), so
 scale-dependent drift — integer overflow, skew-path divergence, a
 broadcast/shuffle plan boundary crossed only at larger |V| — would be
-invisible to it.  This slow test replays seven oracle queries at sf0.1
+invisible to it.  This slow test replays eight oracle queries at sf0.1
 (20,000 vertices / 2.39M edges) against DuckDB with the driver's own
 comparison (sorted columns, 9dp float rounding, order-insensitive).
 
-Query choice: degree, triangle_total, pagerank_10 (and its sql plan,
-pagerank_10_sql), lpa_4, kcore_80 —
+Query choice: degree, triangle_total, pagerank_10 and lpa_4 (and their
+sql plans, pagerank_10_sql and lpa_4_sql), kcore_80 —
 the flagship aggregation/join/iteration/mutation shapes whose DuckDB
 oracles stay tractable at this sf (measured 0.6-26s each).  The
 connected-components recursive CTE and the jaccard wedge join are
@@ -33,7 +33,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 SF_DIR = "/root/testdata/sf0.1"
 QUERIES = [
     "degree", "triangle_total", "triangle_total_csr", "pagerank_10",
-    "pagerank_10_sql", "lpa_4", "kcore_80",
+    "pagerank_10_sql", "lpa_4", "lpa_4_sql", "kcore_80",
 ]
 
 

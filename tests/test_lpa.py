@@ -63,6 +63,8 @@ def test_lpa_shuffle_branch_matches_broadcast(spark):
     for iters in (2, 4):
         res_b = label_propagation(g, iterations=iters, state_broadcast=True)
         res_s = label_propagation(g, iterations=iters, state_broadcast=False)
+        # an explicit state_broadcast asks for a sql layout
+        assert res_b.plan["resolved"] == res_s.plan["resolved"] == "sql"
         got_b = {r.id: r.lbl for r in res_b.state.collect()}
         got_s = {r.id: r.lbl for r in res_s.state.collect()}
         assert got_b == got_s, f"iterations={iters}"

@@ -10,60 +10,76 @@ from okapi_spark.plans.inspect import count_broadcast_joins, count_exchanges
 from okapi_spark.sources.synth_graph import generate_edges
 
 
+def _pr_scatter(g: Graph, broadcast: bool):
+    """PageRank's sql scatter plan over 8 partitions, as the operator
+    builds it (plans/scatter.py over the (src, dst, share) frame)."""
+    from okapi_spark.operators.pagerank import _shares
+    from okapi_spark.plans import scatter
+
+    return scatter.plan(g, "pr", lambda: _shares(g, False), 8, broadcast)
+
+
+def _pr_messages(sc, state):
+    return (
+        sc.join(state, "rank")
+        .select("dst", (F.col("rank") * F.col("share")).alias("m"))
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.sum("m").alias("msum"))
+    )
+
+
 def test_superstep_message_plan_zero_exchange(spark):
     """In broadcast-state mode the per-superstep message aggregation
     must contain zero shuffle exchanges: edges cached by dst +
     broadcast state makes groupBy(dst) partition-complete."""
     e = generate_edges(spark, 50_000, 2_000)
     g = Graph.from_edges(e)
-    shares = g.by_dst(8).select("src", "dst", (F.lit(1.0)).alias("share"))
-    shares.count()  # materialize the dst-partitioned cache
-    state = g.vertices().select(F.col("id").alias("src"), F.lit(0.1).alias("rank"))
-    msgs = (
-        shares.join(F.broadcast(state), "src")
-        .select("dst", (F.col("rank") * F.col("share")).alias("m"))
-        .groupBy("dst")
-        .agg(F.sum("m").alias("msum"))
-    )
+    sc = _pr_scatter(g, broadcast=True)  # builds + materializes the dst layout
+    state = g.vertices().select("id", F.lit(0.1).alias("rank"))
+    msgs = _pr_messages(sc, state)
     assert count_exchanges(msgs) == 0, "superstep plan must not shuffle"
     assert count_broadcast_joins(msgs) == 1
+    g.unpersist()
 
 
 def test_fallback_superstep_plan_shape(spark):
     """The cluster-scale fallback (state_broadcast=False): edges stay
-    in their cached src layout, the state shuffles into the src join
-    (no broadcast of |V|-row state anywhere), and groupBy(dst) shuffles
-    the (combined) messages — bounded shuffles, bounded memory."""
+    in their cached salted (src, salt) layout, the exploded state
+    shuffles into the (src, salt) join (no broadcast of |V|-row state
+    anywhere), and groupBy(dst) shuffles the (combined) messages —
+    bounded shuffles, bounded memory."""
     e = generate_edges(spark, 50_000, 2_000)
     g = Graph.from_edges(e)
-    g.edges.count()  # materialize the src-partitioned cache
-    state = g.vertices().select(F.col("id").alias("src"), F.lit(0.1).alias("rank"))
-    msgs = (
-        g.edges.join(state.hint("shuffle_hash"), "src")
-        .select("dst", (F.lit(1.0) * F.col("rank")).alias("m"))
-        .groupBy("dst")
-        .agg(F.sum("m").alias("msum"))
-    )
+    sc = _pr_scatter(g, broadcast=False)
+    # a superstep reads the previous round's materialized state
+    state = sc.with_shards(g.vertices().select("id", F.lit(0.1).alias("rank"))).localCheckpoint()
+    msgs = _pr_messages(sc, state)
     assert count_broadcast_joins(msgs) == 0, "fallback must not broadcast |V|-row state"
     assert 1 <= count_exchanges(msgs) <= 3
+    g.unpersist()
 
 
 def test_cc_adaptive_frontier_broadcast_plan(spark):
     """CC's shuffle mode flips the shrunk frontier to a broadcast join:
     the late-superstep message plan with a broadcast frontier over the
-    src-layout edges has exactly one shuffle (the message combine) and
-    one broadcast join."""
+    salted edge layout has exactly one shuffle (the message combine)
+    and one broadcast join."""
+    from okapi_spark.operators.components import _hashmin_fixpoint
+    from okapi_spark.plans import scatter
+
     e = generate_edges(spark, 50_000, 2_000)
     g = Graph.from_edges(e)
-    g.edges.count()
-    frontier = g.vertices().limit(10).select(F.col("id").alias("src"), F.col("id").alias("comp"))
+    spec = _hashmin_fixpoint(g)
+    sc = scatter.plan(g, spec.name, spec.frame, 8, False)
+    frontier = g.vertices().limit(10).select("id", F.col("id").alias("comp"))
     msgs = (
-        g.edges.join(F.broadcast(frontier), "src")
+        sc.join(frontier, "comp", broadcast=True)
         .groupBy(F.col("dst").alias("id"))
         .agg(F.min("comp").alias("cand"))
     )
     assert count_broadcast_joins(msgs) == 1
     assert count_exchanges(msgs) == 1
+    g.unpersist()
 
 
 def test_naive_plan_does_shuffle(spark):
@@ -108,20 +124,12 @@ def test_shuffle_mode_superstep_builds_hash_not_sort(spark):
 
     e = generate_edges(spark, 50_000, 2_000)
     g = Graph.from_edges(e)
-    shares = g.edges.select("src", "dst", F.lit(1.0).alias("share"))
-    shares = shares.repartition(8, "src").persist()
-    shares.count()
-    state = g.vertices().select(F.col("id").alias("src"), F.lit(0.1).alias("rank"))
-    msgs = (
-        shares.join(state.hint("shuffle_hash"), "src")
-        .select("dst", (F.col("rank") * F.col("share")).alias("m"))
-        .groupBy("dst")
-        .agg(F.sum("m").alias("msum"))
-    )
-    names = plan_node_names(msgs)
+    sc = _pr_scatter(g, broadcast=False)
+    state = sc.with_shards(g.vertices().select("id", F.lit(0.1).alias("rank"))).localCheckpoint()
+    names = plan_node_names(_pr_messages(sc, state))
     assert any("ShuffledHashJoin" in n for n in names), names
     assert not any("SortMergeJoin" in n for n in names), names
-    shares.unpersist()
+    g.unpersist()
 
 
 def test_lpa_csr_kernel_plan_zero_exchange_zero_edge_scan(spark):
