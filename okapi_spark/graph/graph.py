@@ -43,10 +43,10 @@ class Graph:
     _num_vertices: int | None = field(default=None, repr=False)
     _num_edges: int | None = field(default=None, repr=False)
     #: memoized derived physical layouts (vertex dictionary, degree
-    #: table, dst-partitioned edges, per-operator scatter/CSR-block
-    #: layouts) — prepare once, iterate many. Values are
-    #: persisted DataFrames or arbitrary handles registered with a
-    #: cleanup callable; ``unpersist()`` releases everything.
+    #: table, per-operator scatter/CSR-block layouts) — prepare once,
+    #: iterate many. Values are persisted DataFrames or arbitrary
+    #: handles registered with a cleanup callable; ``unpersist()``
+    #: releases everything.
     _derived: dict = field(default_factory=dict, repr=False)
     _cleanups: dict = field(default_factory=dict, repr=False)
 
@@ -82,20 +82,6 @@ class Graph:
         if cache:
             e = e.persist(StorageLevel.MEMORY_AND_DISK)
         return Graph(edges=e, symmetric_distinct=symmetric_distinct)
-
-    def by_dst(self, partitions: int | None = None) -> DataFrame:
-        """Edges hash-partitioned by ``dst``, cached (memoized per
-        ``partitions``) — Spinner's broadcast-mode scatter layout. With
-        the (small) vertex state broadcast into the src join, the
-        message aggregation ``groupBy(dst)`` is partition-complete;
-        plans/scatter.py builds the same layout for the fixpoint
-        operators' edge frames."""
-        def build() -> DataFrame:
-            e = self.edges
-            e = e.repartition(partitions, "dst") if partitions else e.repartition("dst")
-            return e.persist(StorageLevel.MEMORY_AND_DISK)
-
-        return self.derived(("by_dst", partitions), build)
 
     # -- derived views ----------------------------------------------------
     def vertices(self) -> DataFrame:

@@ -8,8 +8,8 @@ Spinner, spinner/Spinner.java:186-204, builds exactly this
 neighbor-label histogram before applying its balance penalty.)
 
 Synchronous LPA can 2-cycle on bipartite structures, so the loop
-halts on no-change OR on a repeat of the previous changed-count with
-``max_supersteps`` as the backstop; a fixed ``iterations`` mode exists
+halts on no-change OR on an exact repeat of an earlier label state,
+with ``max_supersteps`` as the backstop; a fixed ``iterations`` mode exists
 for oracle parity (the DuckDB oracle unrolls the same rounds).
 
 Balanced mode (``spinner_partition``) implements Spinner's scoring
@@ -18,11 +18,18 @@ Balanced mode (``spinner_partition``) implements Spinner's scoring
 round (the persistent-aggregator feedback loop, :586-597) and
 probabilistic migration damped by remaining capacity (:341-418) made
 deterministic via hash-derived per-(vertex, round) uniforms.
+
+Both run on the engine's shared plans, reduced to their per-vertex
+semantics: ``mode="sql"`` on the sql message plan (plans/scatter.py:
+broadcast or salted edge layout, memoized on the Graph), ``mode="csr"``
+on the staged CSR blocks (plans/csr_fixpoint.py), the mode chosen and
+recorded in ``BSPResult.plan`` by ``csr_fixpoint.plan``.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 import time
 
 import numpy as np
@@ -34,120 +41,74 @@ from pyspark.storagelevel import StorageLevel
 from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
 from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans.csr_blocks import choose_task_count
 from okapi_spark.plans import scatter
 from okapi_spark.plans.broadcast import auto_state_broadcast
 
 
-def _block_label_hist(blk, sid, slbl):
-    """Neighbor-label weight histogram over one packed block: group by
-    (dst, label-of-src) via a sorted segment-reduce (fused-key sort +
-    add.reduceat) instead of the JVM hash aggregation — the hash agg
-    touches up-to-|E| distinct (dst, lbl) groups through random
-    access, which is what DRAM-binds the sql plans at 10^8-edge scale
-    (BENCH.md "LPA broadcast floor decomposition"); the sort is
-    sequential-bandwidth-friendly. Returns (grp_dst, grp_lbl, sums)."""
-    import numpy as np
-
-    dst_sorted, src_sorted, w_sorted = blk["dst"], blk["src"], blk["w"]
-    lab = slbl[np.searchsorted(sid, src_sorted)]  # gather src labels
-    # Both keys are vertex ids < maxv, so below ~3×10⁹ vertices the
-    # pair packs into one int64 and a single argsort replaces the
-    # two-pass lexsort (~2× less per-superstep sort bandwidth —
-    # this sort is the kernel's hot loop, paid every round because
-    # labels change; the dst-sorted pack is paid once at staging).
-    maxv = int(sid[-1]) + 1 if len(sid) else 1
+def _block_part_hist(blk, ids, part):
+    """Spinner's neighbor-partition weight histogram over one staged
+    block: the (dst, partition-of-src, Σw) rows of the sql plan's
+    ``edges ⋈ labels → groupBy(dst, spart)``, by a sorted segment-reduce
+    (fused-key sort + add.reduceat) instead of the JVM hash aggregation
+    — the hash agg touches up-to-|E| distinct (dst, part) groups through
+    random access, which is what DRAM-binds the sql plans at 10^8-edge
+    scale (BENCH.md "LPA broadcast floor decomposition"); the sort is
+    sequential-bandwidth-friendly."""
+    dst_sorted, w_sorted = blk["dst"], blk["w"]
+    lab = part[np.searchsorted(ids, blk["src"])]  # gather src partitions
+    # Both keys are below maxv, so below ~3×10⁹ vertices the pair packs
+    # into one int64 and a single argsort replaces the two-pass lexsort
+    # (~2× less per-round sort bandwidth — this sort is the kernel's hot
+    # loop, paid every round because partitions change; the dst-sorted
+    # pack is paid once at staging).
+    maxv = int(ids[-1]) + 1 if len(ids) else 1
     if maxv <= (1 << 31):
         order = np.argsort(dst_sorted * maxv + lab)
     else:
         order = np.lexsort((lab, dst_sorted))
     g_dst = dst_sorted[order]
     g_lbl = lab[order]
-    g_w = w_sorted[order]
     grp = np.flatnonzero(np.r_[True, (g_dst[1:] != g_dst[:-1]) | (g_lbl[1:] != g_lbl[:-1])])
-    sums = np.add.reduceat(g_w, grp)
-    return g_dst[grp], g_lbl[grp], sums
+    return pd.DataFrame({
+        "id": g_dst[grp], "cand": g_lbl[grp].astype("int32"), "w": np.add.reduceat(w_sorted[order], grp),
+    })
 
 
-def _csr_label_hist(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    state: DataFrame, bcast_slot: list, n_rows: int, tag: str,
-) -> DataFrame:
-    """Spinner's ComputeNewPartition histogram over RESIDENT staged CSR
-    blocks: emits the full (dst, neighbor-partition, Σw) table — the
-    same rows as the sql plan's ``edges ⋈ labels → groupBy(dst, spart)``
-    — via ``_block_label_hist``'s sorted segment-reduce. The |V|-scale
-    scoring/migration logic downstream stays in SQL unchanged, so the
-    protocol (including the hash-uniform migration coin flips) is
-    byte-identical between modes; only this |E|-scale job moves off the
-    JVM hash-agg path. Zero exchange, zero edge rescan."""
-    import pandas as pd
+def _block_active_dsts(blk, moved):
+    """Spinner's isActive gating over one staged block: its dsts with at
+    least one migrated in-neighbor (the sql plan's ``edges ⋈ moved →
+    distinct(dst)``). Each block owns all in-edges of its dsts, so the
+    per-block distinct is global."""
+    _, hit = fx.locate(moved, blk["src"])
+    dst = blk["dst"][hit]  # dst-sorted ⇒ uniques are run starts
+    return pd.DataFrame({"id": dst[np.r_[True, dst[1:] != dst[:-1]]]}) if len(dst) else None
 
-    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
+
+def _block_map(spark, layout: tuple, P: int, k_tasks: int, df: DataFrame, n_rows: int,
+               cols: list, fn, schema: str, bcasts: list) -> DataFrame:
+    """One zero-exchange job over the resident staged blocks: gather
+    ``df``'s id-sorted ``cols`` (csr_fixpoint.gather_sorted_arrays),
+    broadcast them — appended to ``bcasts``, which the caller destroys
+    once the round has consumed the job — and yield ``fn(blk, ids,
+    *cols)`` for each non-empty block."""
     from okapi_spark.plans.csr_blocks import load_block, pid_frame
 
-    ids, (lbl,) = gather_sorted_arrays(state, n_rows, [("lbl", "int64")])
-    b = spark.sparkContext.broadcast((ids, lbl))
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
+    ids, vals = fx.gather_sorted_arrays(df, n_rows, cols)
+    b = spark.sparkContext.broadcast((ids, *vals))
+    bcasts.append(b)
+    tag, epoch, bdir = layout
 
     def kernel(pdf_iter):
         for pdf in pdf_iter:
             for pid in pdf["pid"].tolist():
-                blk = load_block(tag, epoch, int(pid), block_dir)
-                if blk is None or len(blk["dst"]) == 0:
-                    continue
-                sid, slbl = b.value
-                grp_dst, grp_lbl, sums = _block_label_hist(blk, sid, slbl)
-                yield pd.DataFrame(
-                    {"id": grp_dst, "cand": grp_lbl.astype("int32"), "w": sums}
-                )
+                blk = load_block(tag, epoch, int(pid), bdir)
+                if blk is not None and len(blk["dst"]):
+                    out = fn(blk, *b.value)
+                    if out is not None:
+                        yield out
 
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(
-        kernel, schema="id long, cand int, w double"
-    )
-
-
-def _csr_active_dsts(
-    spark, num_blocks: int, num_tasks: int, epoch: int, block_dir: str,
-    moved: DataFrame, bcast_slot: list, n_rows: int, tag: str,
-) -> DataFrame:
-    """Spinner's isActive gating over RESIDENT staged blocks: the set
-    of vertices with at least one migrated in-neighbor (the sql plan's
-    ``edges ⋈ moved → distinct(dst)``). Each block's dst set is
-    disjoint from every other block's (dst-hash layout), so the
-    per-block distinct is globally distinct — no exchange needed."""
-    import pandas as pd
-
-    from okapi_spark.plans.csr_fixpoint import gather_sorted_arrays
-    from okapi_spark.plans.csr_blocks import load_block, pid_frame
-
-    mv_ids, _ = gather_sorted_arrays(moved, n_rows, [])
-    b = spark.sparkContext.broadcast(mv_ids)
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-    bcast_slot[0] = b
-
-    def kernel(pdf_iter):
-        import numpy as np
-
-        for pdf in pdf_iter:
-            for pid in pdf["pid"].tolist():
-                blk = load_block(tag, epoch, int(pid), block_dir)
-                mv = b.value
-                if blk is None or len(blk["dst"]) == 0 or len(mv) == 0:
-                    continue
-                src, dst = blk["src"], blk["dst"]
-                pos = np.searchsorted(mv, src)
-                np.clip(pos, 0, len(mv) - 1, out=pos)
-                valid = mv[pos] == src
-                if not valid.any():
-                    continue
-                dst_v = dst[valid]  # dst-sorted ⇒ uniques are run starts
-                uniq = dst_v[np.r_[True, dst_v[1:] != dst_v[:-1]]]
-                yield pd.DataFrame({"id": uniq})
-
-    return pid_frame(spark, num_blocks, num_tasks).mapInPandas(kernel, schema="id long")
+    return pid_frame(spark, P, k_tasks).mapInPandas(kernel, schema=schema)
 
 
 def _lpa_step(state, blk, res):
@@ -364,12 +325,21 @@ def spinner_partition(
     """Spinner balanced k-way partitioning — spinner/Spinner.java:103-736,
     full protocol. state (id long, part int).
 
-    ``mode="csr"``: the two |E|-scale jobs per round — the
-    ComputeNewPartition histogram and the isActive gating — run over
-    resident staged CSR blocks (``_csr_label_hist`` /
-    ``_csr_active_dsts``); every |V|-scale scoring/migration step,
-    including the hash-uniform coin flips, is the SAME SQL as
-    mode='sql', so the protocol is identical by construction.
+    ``mode="sql"`` (default): the two |E|-scale joins per round — the
+    ComputeNewPartition histogram ``edges ⋈ labels → groupBy(dst,
+    spart)`` and the isActive gating ``edges ⋈ moved → distinct(dst)``
+    — run on the shared sql message plan (plans/scatter.py) over the
+    symmetrized (src, dst, w) edges: the zero-exchange broadcast layout
+    while the ~40 B/row (id, deg, wdeg, part) state fits the broadcast
+    budget (``state_broadcast``, gated like LPA's), else the salted
+    (src, salt) layout, the state then carrying each vertex's
+    ``nsalt``. ``mode="csr"``: the same two jobs run over resident
+    staged CSR blocks (``_block_map``); every |V|-scale scoring /
+    migration step, including the hash-uniform coin flips, is the SAME
+    SQL in both modes, so the protocol is identical by construction.
+    ``res.plan`` records the mode and the byte gate
+    (csr_fixpoint.plan); an explicit "csr" whose state would not fit
+    the broadcast budget is rejected.
 
     Faithful pieces (reference file:line):
 
@@ -422,313 +392,247 @@ def spinner_partition(
         raise ValueError("k + repartition must be positive")
 
     g = graph.symmetrize()
-    deg = g.edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg"), F.sum("weight").alias("wdeg")
-    )
-    vertices = (
-        g.vertices().join(deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.coalesce("wdeg", F.lit(0.0)).alias("wdeg"),
-        )
-        .repartition(num_partitions, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = vertices.count()
-    if mode == "csr" and not auto_state_broadcast(
-        n, row_bytes=32, rows_override=broadcast_threshold
-    ):
-        raise ValueError(
-            f"mode='csr' broadcasts the full partition state each round; "
-            f"|V|={n} exceeds the broadcast budget "
-            f"(threshold={broadcast_threshold}). Use mode='sql' "
-            "(state_broadcast=False selects the shuffle plan)."
-        )
-    if state_broadcast is None:
-        # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
-        state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
-    if mode == "csr":
-        edges = None  # |E|-scale jobs run over the staged blocks
-    else:
-        edges = (g.by_dst(num_partitions) if state_broadcast else g.edges).select(
-            "src", "dst", "weight"
-        )
-    # shuffle mode: per-partition hash build on the (big-|V|) state
-    # side, streaming the cached edges — avoids a per-round SMJ re-sort
-    _maybe_bcast = F.broadcast if state_broadcast else (lambda df: df.hint("shuffle_hash"))
-    total_edges = g.num_edges()  # directed count of the symmetrized graph
-    capacity = total_edges * (1.0 + additional_capacity) / k_total
+    bcasts: list = []  # the csr block jobs' broadcasts of the current round
 
-    csr_fns = None
-    lbl_slot: list = [None]
-    mv_slot: list = [None]
-    if mode == "csr":
-        from okapi_spark.plans.csr_blocks import choose_task_count
-        from okapi_spark.plans.csr_fixpoint import stage
-
-        k_tasks = choose_task_count(total_edges, num_partitions)
-
-        def ensure_staged() -> tuple:
-            # (tag, epoch, block_dir), staged once on first use; the
-            # symmetrized graph is released (blocks included) on return
-            return stage(g, "w", lambda: g.edges.select("src", "dst", F.col("weight").alias("w")),
-                         num_partitions)
-
-        def hist_fn(st: DataFrame) -> DataFrame:
-            tag, epoch, bdir = ensure_staged()
-            return _csr_label_hist(
-                spark, num_partitions, k_tasks, epoch, bdir,
-                st.select("id", F.col("part").cast("long").alias("lbl")),
-                lbl_slot, n_rows=n, tag=tag,
-            )
-
-        def active_fn(moved: DataFrame, n_moved: int) -> DataFrame:
-            tag, epoch, bdir = ensure_staged()
-            return _csr_active_dsts(
-                spark, num_partitions, k_tasks, epoch, bdir,
-                moved, mv_slot, n_rows=n_moved, tag=tag,
-            )
-
-        csr_fns = (hist_fn, active_fn)
-
-    # --- init + optional prior + repartition adaptation -------------------
-    rand_part = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(k)).cast("int")
-    if prior is not None:
-        state = vertices.join(
-            prior.select("id", F.col("part").cast("int").alias("prior_part")), "id", "left"
-        ).select("id", "deg", "wdeg", F.coalesce("prior_part", rand_part).alias("part"))
-    else:
-        state = vertices.select("id", "deg", "wdeg", rand_part.alias("part"))
-    if repartition < 0:
-        state = state.select(
-            "id", "deg", "wdeg",
-            F.when(
-                F.col("part") >= k_total,
-                F.pmod(F.xxhash64("id", F.lit("down"), F.lit(seed)), F.lit(k_total)).cast("int"),
-            ).otherwise(F.col("part")).alias("part"),
-        )
-    elif repartition > 0:
-        u0 = F.pmod(F.xxhash64("id", F.lit("up"), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
-        state = state.select(
-            "id", "deg", "wdeg",
-            F.when(
-                u0 < F.lit(repartition / k_total),
-                (F.lit(k) + F.pmod(F.xxhash64("id", F.lit("new"), F.lit(seed)), F.lit(repartition))).cast("int"),
-            ).otherwise(F.col("part")).alias("part"),
-        )
-    state = state.localCheckpoint(eager=True)
-
-    def _ceil3(x: float) -> float:
-        import math
-        return math.ceil(x * 1000.0) / 1000.0
-
-    # loads in edge counts (persistent LOAD aggregators, :352-366);
-    # computed once here, then carried forward from each round's fused
-    # migration-stats job (3 Spark jobs per round total, not 6)
-    loads = {
-        int(r.part): float(r.load)
-        for r in state.groupBy("part").agg(F.sum("deg").alias("load")).collect()
-    }
+    def release() -> None:
+        while bcasts:
+            bcasts.pop().destroy()
 
     try:
-        with scatter.zero_exchange_loop(spark, state_broadcast or mode == "csr"):
-            state, rounds, converged, log = _spinner_loop(
-                spark, state, edges, _maybe_bcast, loads, capacity, lam, k_total,
-                max_iterations, threshold, window, seed, total_edges, _ceil3,
-                csr_fns=csr_fns,
+        n = g.num_vertices()
+        plan = fx.plan(mode, g, n, None, broadcast_threshold, state_broadcast, "partition")
+        total_edges = g.num_edges()  # directed count of the symmetrized graph
+        capacity = total_edges * (1.0 + additional_capacity) / k_total
+
+        def frame() -> DataFrame:
+            return g.edges.select("src", "dst", F.col("weight").alias("w"))
+
+        sc = None
+        if mode == "csr":
+            layout = fx.stage(g, "w", frame, num_partitions)
+            k_tasks = choose_task_count(total_edges, num_partitions)
+        else:
+            if state_broadcast is None:
+                # byte-based gate (VERDICT r3 #4): (id, deg, wdeg, part) ~40B/row
+                state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
+            sc = scatter.plan(g, "w", frame, num_partitions, state_broadcast)
+        # the salted layout's join explodes each state row over its nsalt
+        shards = [] if sc is None or sc.broadcast else ["nsalt"]
+        vcols = ["id", "deg", "wdeg", *shards]
+
+        # --- init + optional prior + repartition adaptation ---------------
+        # every vertex of the symmetrized graph is a src, so the memoized
+        # degree census is the vertex table (deg = edges, wdeg = Σw)
+        vertices = g.degree_weights().select(
+            F.col("src").alias("id"), F.col("out_deg").alias("deg"), F.col("wsum").alias("wdeg")
+        )
+        if shards:
+            vertices = sc.with_shards(vertices)
+        part = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(k)).cast("int")
+        if prior is not None:
+            vertices = vertices.join(
+                prior.select("id", F.col("part").cast("int").alias("prior_part")), "id", "left"
             )
+            part = F.coalesce("prior_part", part)
+        if repartition < 0:
+            down = F.pmod(F.xxhash64("id", F.lit("down"), F.lit(seed)), F.lit(k_total)).cast("int")
+            part = F.when(part >= k_total, down).otherwise(part)
+        elif repartition > 0:
+            u0 = F.pmod(F.xxhash64("id", F.lit("up"), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
+            new = (F.lit(k) + F.pmod(F.xxhash64("id", F.lit("new"), F.lit(seed)), F.lit(repartition))).cast("int")
+            part = F.when(u0 < F.lit(repartition / k_total), new).otherwise(part)
+        state = vertices.select(*vcols, part.alias("part")).localCheckpoint(eager=True)
+
+        # loads in edge counts (persistent LOAD aggregators, :352-366);
+        # computed once here, then carried forward from each round's fused
+        # migration-stats job (3 Spark jobs per round total, not 6)
+        loads = {
+            int(r.part): float(r.load)
+            for r in state.groupBy("part").agg(F.sum("deg").alias("load")).collect()
+        }
+        score_window: list[float] = []
+        log: list[dict] = []
+        moved: DataFrame | None = None  # frontier: who migrated last round
+        n_moved = total_migrations = rounds = 0
+        converged = False
+
+        # only the salted join shuffles the state into the edges
+        with scatter.zero_exchange_loop(spark, not shards):
+            for rnd in range(max_iterations):
+                t0 = time.time()
+                rounds = rnd + 1
+                pf = {p: lam * _ceil3(loads.get(p, 0.0) / capacity) for p in range(k_total)}
+                pf_expr = F.create_map(*[x for p in range(k_total) for x in (F.lit(p), F.lit(pf[p]))])
+                # constant best-absent-label candidate: max over l of λ − PF(l)
+                l_star = min(range(k_total), key=lambda p: (pf[p], p))
+                h_star = lam - pf[l_star]
+
+                # --- ComputeNewPartition (:292-313) ------------------------
+                if sc is None:
+                    hist = _block_map(spark, layout, num_partitions, k_tasks, state.select("id", "part"), n,
+                                      [("part", "int64")], _block_part_hist, "id long, cand int, w double",
+                                      bcasts)
+                else:
+                    hist = (
+                        sc.join(state, F.col("part").alias("spart"))
+                        .groupBy(F.col("dst").alias("id"), F.col("spart").alias("cand"))
+                        .agg(F.sum("w").alias("w"))
+                    )
+                hist = hist.persist(StorageLevel.MEMORY_AND_DISK)
+
+                # normalize by the vertex's total label weight Σw (:264-268);
+                # carry w so the local-edge counter (:186-204) folds into
+                # the fused per-round stats job below
+                scored = (
+                    hist.join(state.select("id", "wdeg", "part"), "id")
+                    .select(
+                        "id", "cand", "part", "w",
+                        (F.lit(lam) + F.col("w") / F.col("wdeg") - pf_expr[F.col("cand")]).alias("h"),
+                    )
+                )
+                star = state.select(
+                    "id", F.lit(l_star).alias("cand"), "part", F.lit(0.0).alias("w"), F.lit(h_star).alias("h")
+                )
+                allc = scored.unionByName(star)
+                # H and freq-weight at the current partition (currentState
+                # aggregator :284 + locals counter)
+                cur_stats = (
+                    allc.filter(F.col("cand") == F.col("part"))
+                    .groupBy("id")
+                    .agg(F.max("h").alias("h_cur"), F.max("w").alias("w_cur"))
+                )
+                best = (
+                    allc.groupBy("id")
+                    .agg(F.max(F.struct(F.col("h"), (-F.col("cand")).alias("neg"))).alias("m"))
+                    .select("id", (-F.col("m.neg")).cast("int").alias("best_cand"), F.col("m.h").alias("h_best"))
+                )
+                decided = (
+                    state.join(best, "id", "left")
+                    .join(cur_stats, "id", "left")
+                    .select(
+                        *vcols, "part",
+                        F.coalesce("w_cur", F.lit(0.0)).alias("w_cur"),
+                        F.coalesce(
+                            "h_cur",
+                            F.lit(lam) - pf_expr[F.col("part")],  # freq 0 at current
+                        ).alias("h_now"),
+                        # prefer current on ties (chooseMinLabelPartition :226-240)
+                        F.when(
+                            F.col("h_best") > F.coalesce("h_cur", F.lit(lam) - pf_expr[F.col("part")]),
+                            F.col("best_cand"),
+                        ).otherwise(F.col("part")).alias("want"),
+                    )
+                )
+                # isActive gating (:295-313): only vertices with a migrated
+                # neighbor request migration (round 0: everyone, Initializer
+                # messages all edges :425-466)
+                if moved is not None:
+                    if sc is None:
+                        active = _block_map(spark, layout, num_partitions, k_tasks, moved, n_moved, [],
+                                            _block_active_dsts, "id long", bcasts)
+                    else:
+                        active = sc.join(moved).select(F.col("dst").alias("id")).distinct()
+                    decided = decided.join(active.withColumn("act", F.lit(True)), "id", "left").select(
+                        *vcols, "part", "w_cur", "h_now",
+                        F.when(F.col("act").isNotNull(), F.col("want")).otherwise(F.col("part")).alias("want"),
+                    )
+                decided = decided.persist(StorageLevel.MEMORY_AND_DISK)
+
+                # fused stats: score (Σ h_now), local edges (Σ w_cur) and
+                # per-target demand (Σ deg of movers) in ONE job — grouped
+                # by the migration target, null group = stayers
+                stats_rows = (
+                    decided.groupBy(
+                        F.when(F.col("want") != F.col("part"), F.col("want")).alias("tgt")
+                    )
+                    .agg(
+                        F.sum("h_now").alias("sh"),
+                        F.sum("w_cur").alias("sw"),
+                        F.sum("deg").alias("sd"),
+                    )
+                    .collect()
+                )
+                score = float(sum((r.sh or 0.0) for r in stats_rows))
+                local_edges = float(sum((r.sw or 0.0) for r in stats_rows))
+                demand = {int(r.tgt): float(r.sd) for r in stats_rows if r.tgt is not None}
+
+                # --- convergence check BEFORE migrating (:700-736) ---------
+                if len(score_window) >= window and rnd > window:
+                    best_prev = max(score_window[-window:])
+                    if best_prev != 0 and abs(1.0 - score / best_prev) < threshold:
+                        converged = True
+                score_window.append(score)
+                if converged:
+                    hist.unpersist()
+                    state = decided.select(*vcols, "part").localCheckpoint(eager=True)
+                    decided.unpersist()
+                    log.append({
+                        "superstep": rnd, "score": score, "migrations": 0,
+                        "local_edges_pct": 100.0 * local_edges / max(total_edges, 1),
+                        "loads": loads, "_halted": True,
+                        "superstep_sec": time.time() - t0,
+                    })
+                    break
+
+                # --- ComputeMigration (:343-418) ---------------------------
+                probs = {}
+                for p in range(k_total):
+                    remaining = capacity - loads.get(p, 0.0)
+                    d = demand.get(p, 0.0)
+                    probs[p] = 0.0 if (d == 0 or remaining <= 0) else remaining / d
+                prob_expr = F.create_map(*[x for p in range(k_total) for x in (F.lit(p), F.lit(probs[p]))])
+                u = F.pmod(F.xxhash64("id", F.lit(rnd), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
+                migrated = decided.select(
+                    *vcols,
+                    F.when(
+                        (F.col("want") != F.col("part")) & (u < prob_expr[F.col("want")]),
+                        F.col("want"),
+                    ).otherwise(F.col("part")).alias("part"),
+                    F.col("part").alias("old_part"),
+                ).localCheckpoint(eager=True)
+                # fused migration stats: next round's loads AND the migration
+                # counter from one scan of the (cached) migrated state
+                mig_rows = (
+                    migrated.groupBy("part")
+                    .agg(
+                        F.sum("deg").alias("load"),
+                        F.sum(F.when(F.col("part") != F.col("old_part"), 1).otherwise(0)).alias("mig"),
+                    )
+                    .collect()
+                )
+                next_loads = {int(r.part): float(r.load) for r in mig_rows}
+                n_moved = int(sum(r.mig for r in mig_rows))
+                total_migrations += n_moved
+                moved = migrated.filter(F.col("part") != F.col("old_part")).select("id", *shards)
+
+                hist.unpersist()
+                decided.unpersist()
+                release()
+                state = migrated.select(*vcols, "part")
+
+                load_vals = [loads.get(p, 0.0) for p in range(k_total)]
+                expected = total_edges / k_total
+                log.append({
+                    "superstep": rnd,
+                    "score": score,
+                    "migrations": n_moved,
+                    "total_migrations": total_migrations,
+                    "local_edges_pct": 100.0 * local_edges / max(total_edges, 1),
+                    "maxmin_unbalance": (max(load_vals) / min(load_vals)) if min(load_vals) > 0 else float("inf"),
+                    "max_norm_load": max(load_vals) / expected if expected else 0.0,
+                    "loads": loads,  # this round's pre-migration loads
+                    "_halted": False,
+                    "superstep_sec": time.time() - t0,
+                })
+                loads = next_loads
     finally:
         # the state is localCheckpointed every round, so the symmetrized
-        # graph (its layouts and staged blocks) and the vertex table go
+        # graph (its layouts and staged blocks) can go
         g.unpersist()
-        vertices.unpersist()
-        for slot in (lbl_slot, mv_slot):
-            if slot[0] is not None:
-                slot[0].destroy()
-    return BSPResult(state.select("id", "part"), rounds, converged, log)
+        release()
+    return BSPResult(state.select("id", "part"), rounds, converged, log, plan=plan)
 
 
-def _spinner_loop(
-    spark, state, edges, _maybe_bcast, loads, capacity, lam, k_total,
-    max_iterations, threshold, window, seed, total_edges, _ceil3,
-    csr_fns=None,
-):
-    score_window: list[float] = []
-    log: list[dict] = []
-    moved_prev: DataFrame | None = None  # frontier: who migrated last round
-    n_moved_prev = 0
-    total_migrations = 0
-    converged = False
-    rounds = 0
-
-    for rnd in range(max_iterations):
-        _round_t0 = time.time()
-        rounds = rnd + 1
-        pf = {p: lam * _ceil3(loads.get(p, 0.0) / capacity) for p in range(k_total)}
-        pf_expr = F.create_map(*[x for p in range(k_total) for x in (F.lit(p), F.lit(pf[p]))])
-        # constant best-absent-label candidate: max over l of λ − PF(l)
-        l_star = min(range(k_total), key=lambda p: (pf[p], p))
-        h_star = lam - pf[l_star]
-
-        # --- ComputeNewPartition (:292-313) -------------------------------
-        if csr_fns is not None:
-            hist = csr_fns[0](state).persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            labels = state.select(F.col("id").alias("src"), F.col("part").alias("spart"))
-            hist = (
-                edges.join(_maybe_bcast(labels), "src")
-                .groupBy(F.col("dst").alias("id"), F.col("spart").alias("cand"))
-                .agg(F.sum("weight").alias("w"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        # normalize by the vertex's total label weight Σw (:264-268);
-        # carry w so the local-edge counter (:186-204) folds into the
-        # fused per-round stats job below
-        scored = (
-            hist.join(state.select("id", "wdeg", "part"), "id")
-            .select(
-                "id", "cand", "part", "w",
-                (F.lit(lam) + F.col("w") / F.col("wdeg") - pf_expr[F.col("cand")]).alias("h"),
-            )
-        )
-        star = state.select(
-            "id", F.lit(l_star).alias("cand"), "part", F.lit(0.0).alias("w"), F.lit(h_star).alias("h")
-        )
-        allc = scored.unionByName(star)
-        # H and freq-weight at the current partition (currentState
-        # aggregator :284 + locals counter)
-        cur_stats = (
-            allc.filter(F.col("cand") == F.col("part"))
-            .groupBy("id")
-            .agg(F.max("h").alias("h_cur"), F.max("w").alias("w_cur"))
-        )
-        best = (
-            allc.groupBy("id")
-            .agg(F.max(F.struct(F.col("h"), (-F.col("cand")).alias("neg"))).alias("m"))
-            .select("id", (-F.col("m.neg")).cast("int").alias("best_cand"), F.col("m.h").alias("h_best"))
-        )
-        decided = (
-            state.join(best, "id", "left")
-            .join(cur_stats, "id", "left")
-            .select(
-                "id", "deg", "wdeg", "part",
-                F.coalesce("w_cur", F.lit(0.0)).alias("w_cur"),
-                F.coalesce(
-                    "h_cur",
-                    F.lit(lam) - pf_expr[F.col("part")],  # freq 0 at current
-                ).alias("h_now"),
-                # prefer current on ties (chooseMinLabelPartition :226-240)
-                F.when(
-                    F.col("h_best") > F.coalesce("h_cur", F.lit(lam) - pf_expr[F.col("part")]),
-                    F.col("best_cand"),
-                ).otherwise(F.col("part")).alias("want"),
-            )
-        )
-        # isActive gating (:295-313): only vertices with a migrated
-        # neighbor request migration (round 0: everyone, Initializer
-        # messages all edges :425-466)
-        if moved_prev is not None:
-            if csr_fns is not None:
-                active = csr_fns[1](moved_prev, n_moved_prev)
-            else:
-                active = (
-                    edges.join(_maybe_bcast(moved_prev.select(F.col("id").alias("src"))), "src")
-                    .select(F.col("dst").alias("id"))
-                    .distinct()
-                )
-            decided = decided.join(active.withColumn("act", F.lit(True)), "id", "left").select(
-                "id", "deg", "wdeg", "part", "w_cur", "h_now",
-                F.when(F.col("act").isNotNull(), F.col("want")).otherwise(F.col("part")).alias("want"),
-            )
-        decided = decided.persist(StorageLevel.MEMORY_AND_DISK)
-
-        # fused stats: score (Σ h_now), local edges (Σ w_cur) and
-        # per-target demand (Σ deg of movers) in ONE job — grouped by
-        # the migration target, null group = stayers
-        stats_rows = (
-            decided.groupBy(
-                F.when(F.col("want") != F.col("part"), F.col("want")).alias("tgt")
-            )
-            .agg(
-                F.sum("h_now").alias("sh"),
-                F.sum("w_cur").alias("sw"),
-                F.sum("deg").alias("sd"),
-            )
-            .collect()
-        )
-        score = float(sum((r.sh or 0.0) for r in stats_rows))
-        local_edges = float(sum((r.sw or 0.0) for r in stats_rows))
-        demand = {int(r.tgt): float(r.sd) for r in stats_rows if r.tgt is not None}
-
-        # --- convergence check BEFORE migrating (:700-736) -----------------
-        if len(score_window) >= window and rnd > window:
-            best_prev = max(score_window[-window:])
-            if best_prev != 0 and abs(1.0 - score / best_prev) < threshold:
-                converged = True
-        score_window.append(score)
-        if converged:
-            hist.unpersist()
-            state = decided.select("id", "deg", "wdeg", "part").localCheckpoint(eager=True)
-            decided.unpersist()
-            log.append({
-                "superstep": rnd, "score": score, "migrations": 0,
-                "local_edges_pct": 100.0 * local_edges / max(total_edges, 1),
-                "loads": loads, "_halted": True,
-                "superstep_sec": time.time() - _round_t0,
-            })
-            break
-
-        # --- ComputeMigration (:343-418) -----------------------------------
-        probs = {}
-        for p in range(k_total):
-            remaining = capacity - loads.get(p, 0.0)
-            d = demand.get(p, 0.0)
-            probs[p] = 0.0 if (d == 0 or remaining <= 0) else remaining / d
-        prob_expr = F.create_map(*[x for p in range(k_total) for x in (F.lit(p), F.lit(probs[p]))])
-        u = F.pmod(F.xxhash64("id", F.lit(rnd), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
-        migrated = decided.select(
-            "id", "deg", "wdeg",
-            F.when(
-                (F.col("want") != F.col("part")) & (u < prob_expr[F.col("want")]),
-                F.col("want"),
-            ).otherwise(F.col("part")).alias("part"),
-            F.col("part").alias("old_part"),
-        ).localCheckpoint(eager=True)
-        # fused migration stats: next round's loads AND the migration
-        # counter from one scan of the (cached) migrated state
-        mig_rows = (
-            migrated.groupBy("part")
-            .agg(
-                F.sum("deg").alias("load"),
-                F.sum(F.when(F.col("part") != F.col("old_part"), 1).otherwise(0)).alias("mig"),
-            )
-            .collect()
-        )
-        next_loads = {int(r.part): float(r.load) for r in mig_rows}
-        n_migrations = int(sum(r.mig for r in mig_rows))
-        total_migrations += n_migrations
-        moved_prev = migrated.filter(F.col("part") != F.col("old_part")).select("id")
-        n_moved_prev = n_migrations
-
-        hist.unpersist()
-        decided.unpersist()
-        state = migrated.select("id", "deg", "wdeg", "part")
-
-        load_vals = [loads.get(p, 0.0) for p in range(k_total)]
-        expected = total_edges / k_total
-        log.append({
-            "superstep": rnd,
-            "score": score,
-            "migrations": n_migrations,
-            "total_migrations": total_migrations,
-            "local_edges_pct": 100.0 * local_edges / max(total_edges, 1),
-            "maxmin_unbalance": (max(load_vals) / min(load_vals)) if min(load_vals) > 0 else float("inf"),
-            "max_norm_load": max(load_vals) / expected if expected else 0.0,
-            "loads": loads,  # this round's pre-migration loads
-            "_halted": False,
-            "superstep_sec": time.time() - _round_t0,
-        })
-        loads = next_loads
-
-    return state, rounds, converged, log
+def _ceil3(x: float) -> float:
+    """ceil at 3 decimals (Spinner's computeW, :148-152)."""
+    return math.ceil(x * 1000.0) / 1000.0

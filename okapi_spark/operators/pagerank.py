@@ -48,10 +48,6 @@ from okapi_spark.graph.graph import Graph
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans import scatter
 
-# sql-mode layout sizing: ~300k edge rows per partition keeps each
-# per-superstep task well above the scheduling floor (see pagerank())
-_LAYOUT_TARGET_EDGES = 300_000
-
 
 def pagerank(
     graph: Graph,
@@ -93,18 +89,12 @@ def pagerank(
     if mode not in ("auto", "sql", "csr"):
         raise ValueError(f"unknown pagerank mode {mode!r}")
     spark = graph.edges.sparkSession
-    width = num_partitions or spark.sparkContext.defaultParallelism
-    sql_width = width if num_partitions else _sql_layout_width(graph, width)
-    likely_csr = mode == "csr" or (
-        mode == "auto" and store is None and state_broadcast is None
-        and graph.num_edges() <= fx._FUSE_MAX_EDGES
-    )
-    # n counts through (and so fills) the vertex dictionary the likely
-    # plan reads: the csr id gather's, or the sql plan's
-    graph.vertices_by_id(width if likely_csr else sql_width)
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
+    # n counts through (and so fills) the vertex dictionary both plans
+    # read: the csr id gather's and the sql plan's state0
+    graph.vertices_by_id(num_partitions)
     n = graph.num_vertices()  # scalar memo — no per-call count job
     plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "rank")
-    num_partitions = sql_width if plan["resolved"] == "sql" else width
     if n == 0:
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
     base = (1.0 - damping) / n
@@ -126,16 +116,6 @@ def pagerank(
                         rounds, halt, store)
     res.plan = plan
     return res
-
-
-def _sql_layout_width(graph: Graph, parallelism: int) -> int:
-    """Scale-adaptive sql layout width (guide §2.2: fewer, larger
-    partitions; derived from input size, NOT a local-mode constant): a
-    small graph spread over every core pays more per-superstep task
-    scheduling than compute — measured at 2.4M edges / 32 cores:
-    pagerank_10_sql 2.73s at P=32 vs 1.91s at P=8 (min-of-3). Capped at
-    ``parallelism`` so cluster-scale graphs keep one partition per core."""
-    return max(1, min(parallelism, -(-graph.num_edges() // _LAYOUT_TARGET_EDGES)))
 
 
 def _shares(graph: Graph, weighted: bool) -> DataFrame:

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from okapi_spark.bsp import BSPResult, CheckpointStore, run_supersteps
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.components import apply_min, relax_min
+from okapi_spark.plans import csr_fixpoint as fx
+from okapi_spark.plans.broadcast import auto_state_broadcast
 
 
 def sssp(
@@ -38,26 +40,21 @@ def sssp(
     (the reference leaves them at ∞; filter-out is the relational view).
 
     ``mode="csr"``: relaxation on the csr fixpoint runner over resident
-    staged CSR blocks (see ``mssp``) — identical fixpoint, parity-tested."""
+    staged CSR blocks (see ``mssp``) — identical fixpoint, parity-tested.
+    ``res.plan`` records the mode and the byte gate (csr_fixpoint.plan);
+    an explicit "csr" whose |V|-row frontier would not fit the broadcast
+    budget is rejected."""
+    if mode not in ("sql", "csr"):
+        raise ValueError(f"unknown sssp mode {mode!r}")
+    # csr broadcasts the changed frontier each superstep, |V| rows in the
+    # worst case — the same byte gate as the other csr operators
+    plan = fx.plan(mode, graph, graph.num_vertices(), store, None, None, "distance")
     if mode == "csr":
-        from okapi_spark.plans import csr_fixpoint as fx
-        from okapi_spark.plans.broadcast import auto_state_broadcast
-
-        # the worst-case frontier is |V| rows broadcast to every
-        # executor — same byte gate as the other csr operators
-        n = graph.num_vertices()
-        if not auto_state_broadcast(n, row_bytes=32):
-            raise ValueError(
-                f"mode='csr' broadcasts the changed frontier each superstep and "
-                f"the worst-case frontier is |V|={n} rows, exceeding the "
-                "broadcast budget. Use mode='sql' at cluster-scale |V|."
-            )
         P = num_partitions or graph.edges.sparkSession.sparkContext.defaultParallelism
         res = fx.run(graph, _relax_fixpoint(graph, [int(source)]), max_supersteps, P, store)
-    elif mode == "sql":
-        res = mssp(graph, [int(source)], max_supersteps, store, mode, num_partitions)
     else:
-        raise ValueError(f"unknown sssp mode {mode!r}")
+        res = mssp(graph, [int(source)], max_supersteps, store, mode, num_partitions)
+    res.plan = plan
     res.state = res.state.select("id", "dist")
     return res
 
@@ -69,13 +66,11 @@ def _relax_fixpoint(graph: Graph, origins: list[int]):
     the sql plan. Duplicate source rows and sources that are not graph
     vertices keep the DataFrame loop's output shape: one (o, o, 0) row
     per source row that no relaxation produces."""
-    from okapi_spark.plans.csr_fixpoint import Fixpoint, locate
-
     origs, counts = np.unique(np.asarray(origins, dtype="int64"), return_counts=True)
 
     def init(ids):
         dist = np.full((len(origs), len(ids)), np.inf)
-        pos, hit = locate(ids, origs)
+        pos, hit = fx.locate(ids, origs)
         dist[np.flatnonzero(hit), pos[hit]] = 0.0
         return {"dist": dist, "changed": np.isfinite(dist)}
 
@@ -90,7 +85,7 @@ def _relax_fixpoint(graph: Graph, origins: list[int]):
 
     def output(ids, st):
         j, v = np.nonzero(np.isfinite(st["dist"]))
-        pos, present = locate(ids, origs)
+        pos, present = fx.locate(ids, origs)
         self_d = np.zeros(len(origs))
         self_d[present] = st["dist"][np.flatnonzero(present), pos[present]]
         extra = counts - present  # source rows beyond the relaxation's own
@@ -100,7 +95,7 @@ def _relax_fixpoint(graph: Graph, origins: list[int]):
             "dist": np.r_[st["dist"][j, v], np.repeat(self_d, extra)],
         })
 
-    return Fixpoint(
+    return fx.Fixpoint(
         "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w")),
         init, step, merge, output, "id long, origin long, dist double",
         halt=lambda m, history: m["changed"] == 0,
@@ -149,9 +144,6 @@ def mssp(
         n_sources = len(sources)
 
     if mode == "csr":
-        from okapi_spark.plans import csr_fixpoint as fx
-        from okapi_spark.plans.broadcast import auto_state_broadcast
-
         worst_frontier = graph.num_vertices() * n_sources
         if not auto_state_broadcast(worst_frontier, row_bytes=48):
             raise ValueError(

@@ -558,8 +558,8 @@ def _triangle_count_csr(
 
     Round 6: the staged pivot/membership layout is MEMOIZED on the
     Graph (key ``("tri_blocks", P)``) when the caller does not supply
-    an explicit ``block_dir`` — like ``by_dst`` it is a pure physical
-    layout of the immutable edge set, so repeated counts on one Graph
+    an explicit ``block_dir`` — like the scatter layouts it is a pure
+    physical layout of the immutable edge set, so repeated counts on one Graph
     pay the deg/orient/stage phases once (``deg_sec``/``stage_sec``
     report 0.0 on reuse); Graph.unpersist()/atexit reclaim the files.
     The probe job is sized by ``_PROBE_TASK_EDGES`` (wedge-scale work),

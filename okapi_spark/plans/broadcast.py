@@ -1,8 +1,8 @@
 """Byte-budget gate for the zero-exchange state-broadcast plans.
 
-The iterative operators' sql plans (PageRank/SybilRank/CC/LPA through
-plans/scatter.py, and Spinner) have two physical strategies: broadcast
-the full |V|-row vertex state into the cached dst-partitioned edge
+The iterative operators' sql plans (PageRank, SybilRank, CC, LPA and
+Spinner, all through plans/scatter.py) have two physical strategies:
+broadcast the full |V|-row vertex state into the scatter layout's edge
 scan (zero shuffle exchanges per superstep), or the shuffle fallback
 (scatter's salted (src, salt) layout). The switch must be sized
 in BYTES, not rows — a 20M-row gate ships ~500MB+ of broadcast hash

@@ -50,6 +50,7 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
 
     from okapi_spark.graph.induce import copurchase_edges
+    from okapi_spark.plans import scatter
     from okapi_spark.plans.csr_blocks import pid_frame
     from okapi_spark.session import get_spark
 
@@ -67,7 +68,12 @@ def main() -> None:
     n = vertices.count()
 
     # ---- connected_components: sql broadcast superstep (before) -------
-    edges = g.by_dst(P).select("src", "dst")
+    # the operators' broadcast-mode scatter layout of the (src, dst, w)
+    # frame (plans/scatter.py), hash-partitioned by dst and cached
+    w_edges = scatter.plan(
+        g, "w", lambda: g.edges.select("src", "dst", F.col("weight").alias("w")), P, True
+    ).edges
+    edges = w_edges.select("src", "dst")
     state = vertices.select(
         "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
     )
@@ -107,13 +113,12 @@ def main() -> None:
     )
 
     # ---- lpa_4: sql broadcast round (before) --------------------------
-    w_edges = g.by_dst(P).select("src", "dst", F.col("weight"))
     lstate = vertices.select("id", F.col("id").alias("lbl"))
     lbls = F.broadcast(lstate.select(F.col("id").alias("src"), "lbl"))
     lmsgs = (
         w_edges.join(lbls, "src")
         .groupBy(F.col("dst").alias("id"), "lbl")
-        .agg(F.sum("weight").alias("w"))
+        .agg(F.sum("w").alias("w"))
     )
     argmax = (
         lmsgs.groupBy("id")

@@ -267,7 +267,7 @@ def test_auto_sql_pagerank_builds_one_vertex_dictionary(spark, tmp_path, kw):
         res = pagerank(g, iterations=2, **{kw: arg})
         assert res.plan["resolved"] == "sql"
         dicts = [k for k in g._derived if k[0] == "verts_by_id"]
-        assert dicts == [("verts_by_id", 1)]  # _sql_layout_width of a toy graph
+        assert dicts == [("verts_by_id", spark.sparkContext.defaultParallelism)]  # the sql layout width
     finally:
         g.unpersist()
 

@@ -4,6 +4,7 @@ Spinner balanced mode invariants (FIXTURES.md §4)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.lpa import label_propagation, spinner_partition
@@ -341,3 +342,43 @@ def test_spinner_csr_matches_sql_full_protocol(spark, monkeypatch):
             ).state.collect()
         }
         assert got == want, f"csr p={nparts}"
+
+
+def test_spinner_paths_agree_on_a_salted_hub(spark):
+    """Spinner's three physical paths — the sql broadcast layout, the
+    sql salted layout and csr — run the same protocol, so they give a
+    bit-identical assignment and migration counters through several
+    migrating rounds, here on a weighted graph whose hub (degree > 1024)
+    the salted layout shards over nsalt >= 2 keys. Each records its
+    plan; an explicit csr over the broadcast threshold is refused."""
+    from okapi_spark.plans.scatter import shard_count_expr
+
+    P = 4
+    rng = np.random.RandomState(23)
+    hub = [(0, v, float(rng.randint(1, 4))) for v in range(1, 1201)]
+    rest = [
+        (int(s), int(d), float(w))
+        for s, d, w in zip(rng.randint(1, 1201, 900), rng.randint(1, 1201, 900), rng.randint(1, 4, 900))
+        if s != d
+    ]
+    g = Graph.from_edges(toy_edges(spark, hub + rest))
+    sym = g.symmetrize()
+    nsalt = shard_count_expr("out_deg", P, sym.num_edges())
+    assert sym.degree_weights().filter("src = 0").select(nsalt.alias("n")).first().n >= 2
+    sym.unpersist()
+
+    def run(**kw):
+        res = spinner_partition(g, k=4, max_iterations=3, seed=3, num_partitions=P, **kw)
+        return res, {r.id: r.part for r in res.state.collect()}, [m["migrations"] for m in res.metrics_log]
+
+    want_res, want, want_mig = run(state_broadcast=True)
+    assert want_res.plan["resolved"] == "sql" and want_res.plan["state_broadcast"] is True
+    assert len(want_mig) == 3 and want_mig[0] > 0  # later rounds gate on real movers
+    for kw, resolved in (({"state_broadcast": False}, "sql"), ({"mode": "csr"}, "csr")):
+        res, got, mig = run(**kw)
+        assert res.plan["resolved"] == resolved, kw
+        assert got == want, kw
+        assert mig == want_mig, kw
+    with pytest.raises(ValueError, match="broadcast budget"):
+        spinner_partition(g, k=4, max_iterations=1, mode="csr", broadcast_threshold=10)
+    g.unpersist()

@@ -69,7 +69,8 @@ def test_aux_readers(spark, tmp_path):
 def test_sssp_csr_matches_oracle_and_sql(spark, monkeypatch):
     """mode='csr' (relaxation over resident staged CSR blocks) reaches
     the identical distances as the sql plan and the Dijkstra oracle,
-    across partition counts; unreached vertices stay absent."""
+    across partition counts; unreached vertices stay absent. Both
+    modes record their plan, and csr over the byte budget is refused."""
     from okapi_spark.plans import csr_blocks
 
     # force multi-block staging at toy scale so the partition-count
@@ -88,11 +89,19 @@ def test_sssp_csr_matches_oracle_and_sql(spark, monkeypatch):
     ]
     g = Graph.from_edges(toy_edges(spark, edges))
     want = sssp_oracle(edges + [(d, s, w) for s, d, w in edges], 0)
-    sql = {r.id: r.dist for r in sssp(g, 0, mode="sql").state.collect()}
-    assert sql == want
+    res = sssp(g, 0, mode="sql")
+    assert res.plan["resolved"] == "sql"
+    assert {r.id: r.dist for r in res.state.collect()} == want
     for nparts in (4, 32):
-        got = {r.id: r.dist for r in sssp(g, 0, mode="csr", num_partitions=nparts).state.collect()}
-        assert got == want, f"csr p={nparts}"
+        res = sssp(g, 0, mode="csr", num_partitions=nparts)
+        assert res.plan["resolved"] == "csr"
+        assert {r.id: r.dist for r in res.state.collect()} == want, f"csr p={nparts}"
+    # the csr byte gate is csr_fixpoint.plan's: over budget, csr is refused
+    from okapi_spark.plans import csr_fixpoint as fx
+
+    monkeypatch.setattr(fx, "state_budget_bytes", lambda *a: 0)
+    with pytest.raises(ValueError, match="broadcast budget"):
+        sssp(g, 0, mode="csr")
 
 
 def test_mssp_csr_matches_oracle_and_sql(spark, monkeypatch):

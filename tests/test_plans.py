@@ -42,6 +42,35 @@ def test_superstep_message_plan_zero_exchange(spark):
     g.unpersist()
 
 
+def test_pagerank_sql_superstep_state_plan_zero_exchange(spark, monkeypatch):
+    """PageRank's broadcast-mode sql layout and vertex dictionary are as
+    wide as the shuffle partitioning of its ``state ⟕ msgs`` update join,
+    so no superstep re-shuffles the |V|-row message side (or the state
+    side): every superstep's state plan, as the operator builds it, has
+    zero shuffle exchanges."""
+    from okapi_spark.operators.pagerank import pagerank
+    from okapi_spark.plans import scatter
+
+    exchanges = []
+    run = scatter.run_supersteps
+
+    def spy(state0, superstep, **kw):
+        def step(ss, state):
+            new_state, post = superstep(ss, state)
+            exchanges.append(count_exchanges(new_state))
+            return new_state, post
+
+        return run(state0, step, **kw)
+
+    monkeypatch.setattr(scatter, "run_supersteps", spy)
+    g = Graph.from_edges(generate_edges(spark, 20_000, 1_000))
+    try:
+        pagerank(g, mode="sql", state_broadcast=True, iterations=2)
+    finally:
+        g.unpersist()
+    assert exchanges == [0, 0]
+
+
 def test_fallback_superstep_plan_shape(spark):
     """The cluster-scale fallback (state_broadcast=False): edges stay
     in their cached salted (src, salt) layout, the exploded state

@@ -31,6 +31,7 @@ CALLS = {
     "sybilrank_sql_salted": lambda g, t: sybilrank(g, t, state_broadcast=False),
     "sybilrank_csr": lambda g, t: sybilrank(g, t, mode="csr"),
     "spinner_sql": lambda g, t: spinner_partition(g, k=3, max_iterations=3),
+    "spinner_salted": lambda g, t: spinner_partition(g, k=3, max_iterations=3, state_broadcast=False),
     "spinner_csr": lambda g, t: spinner_partition(g, k=3, max_iterations=3, mode="csr"),
 }
 
