@@ -27,8 +27,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Corpus → link graph → PageRank (converged) → top-20 hubs.
 
     PageRank runs in its default ``mode="auto"``: inside the csr fuse
-    window (and with no checkpoint store) every superstep runs in one
-    fused Spark job; ``res.plan`` records the choice."""
+    window (and with no checkpoint store) every superstep runs in the
+    driver over one gathered csr layout; ``res.plan`` records the
+    choice."""
     from okapi_spark.graph.induce import induce_edges, vertices_table
     from okapi_spark.operators.pagerank import pagerank
     from okapi_spark.sources.corpus import generate_documents

@@ -63,6 +63,13 @@ def apply_min(vals, parts):
     return new, changed
 
 
+def weight_layout(graph: Graph) -> tuple:
+    """(name, frame) of the shared (src, dst, w = weight) csr frame:
+    HashMin, SSSP/MSSP, weighted LPA and Spinner lay out the same
+    rows."""
+    return "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w"))
+
+
 def _hashmin_fixpoint(graph: Graph):
     """csr spec of HashMin in position space: comp[i] is the position
     of the smallest id reached — ids are sorted, so min position IS min
@@ -74,7 +81,7 @@ def _hashmin_fixpoint(graph: Graph):
         return {"comp": comp, "changed": changed}, {"changed": int(np.count_nonzero(changed))}
 
     return Fixpoint(
-        "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w")),
+        *weight_layout(graph),
         lambda ids: {"comp": np.arange(len(ids)), "changed": np.ones(len(ids), dtype=bool)},
         lambda st, blk, res: relax_min(st["comp"], st["changed"], res["spos"], res["dpos"]),
         merge,
@@ -106,15 +113,16 @@ def connected_components(
 
     ``mode="auto"`` (default, round 6): "csr" when byte-safe, without
     a store or an explicit ``state_broadcast`` (a sql-plan knob) and
-    with |E| inside the fuse window (the whole fixpoint in one Spark
-    job); else "sql". HashMin is integer min, so every plan
-    reaches the bit-identical fixpoint. ``res.plan`` records the choice
-    and the gate values behind it (csr_fixpoint.plan).
+    with |E| inside the fuse window (the whole fixpoint in the driver,
+    no Spark job once the Graph's local layout is built); else "sql".
+    HashMin is integer min, so every plan reaches the bit-identical
+    fixpoint. ``res.plan`` records the choice and the gate values
+    behind it (csr_fixpoint.plan).
 
     ``mode="csr"``: HashMin on the csr fixpoint runner
-    (plans/csr_fixpoint.py) over resident staged CSR blocks — gated by
-    the same broadcast byte budget since the round-0 frontier is |V|
-    rows.
+    (plans/csr_fixpoint.py) over the Graph's csr layout (local in the
+    fuse window, staged blocks beyond) — gated by the same broadcast
+    byte budget since the round-0 frontier is |V| rows.
     """
     if mode not in ("auto", "sql", "csr"):
         raise ValueError(f"unknown connected_components mode {mode!r}")
@@ -122,12 +130,9 @@ def connected_components(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
 
-    # memoized vertex dictionary (Graph.derived) — rebuilt per call
-    # before round 6
-    vertices = graph.vertices_by_id(num_partitions)
-    n = graph.num_vertices()  # scalar memo — no per-call count job
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "frontier")
     spec = _hashmin_fixpoint(graph)
+    plan = fx.plan(mode, graph, (spec.name, spec.frame), num_partitions, store,
+                   broadcast_threshold, state_broadcast, "frontier")
     if plan["resolved"] == "csr":
         res = fx.run(graph, spec, max_supersteps, num_partitions, store)
         res.plan = plan
@@ -142,7 +147,7 @@ def connected_components(
     sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
     n_edges = graph.num_edges()
     # frontier size from the previous superstep's metric (|V| at ss 0)
-    last_changed = [n]
+    last_changed = [graph.num_vertices()]
 
     def superstep(ss: int, state: DataFrame):
         # send-on-change: only the frontier scatters; once it is small
@@ -165,7 +170,8 @@ def connected_components(
 
     # superstep 0 of the reference folds the local min over neighbors;
     # here the uniform loop does it — same fixpoint, one extra round
-    state0 = vertices.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
+    state0 = graph.vertices_by_id(num_partitions).select(
+        "id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
     res = sc.run(state0, superstep, max_supersteps, lambda ss, m: m["changed"] == 0, store)
     res.state = res.state.select("id", "comp")
     res.plan = plan

@@ -40,6 +40,7 @@ from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
+from okapi_spark.operators.components import weight_layout
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.csr_blocks import choose_task_count
 from okapi_spark.plans import scatter
@@ -112,18 +113,18 @@ def _block_map(spark, layout: tuple, P: int, k_tasks: int, df: DataFrame, n_rows
 
 
 def _lpa_step(state, blk, res):
-    """One LPA round over one staged block in POSITION space: labels are
+    """One LPA round over one block in POSITION space: labels are
     positions into the sorted id array, so index order IS id order and
-    the min-label tie-break carries over unchanged. The fused
-    (dst, label) group key fits 32 bits for |V| ≤ 46340, where numpy's
-    argsort is ~8x faster than on int64 keys (measured 0.05s vs 0.42s
-    on a 2.4M-edge block set; the per-round sort is the hot loop).
-    Histogram by sort + ``add.reduceat``, then the per-dst argmax: max
-    summed weight, ties to the smallest label. Returns (dsts, labels)."""
+    the min-label tie-break carries over unchanged. Histogram by a
+    STABLE sort of the fused (dst, label) key + ``add.reduceat`` — each
+    group keeps the block's canonical (dst, src, w) row order, so its
+    weight sum is bit-identical in every placement — then the per-dst
+    argmax: max summed weight, ties to the smallest label. Returns
+    (dsts, labels)."""
     lbl = state["lbl"]
     nn = len(lbl)
     key = res["dpos"] * nn + lbl[res["spos"]]
-    order = np.argsort(key.astype(np.int32) if nn <= 46340 else key)
+    order = np.argsort(key, kind="stable")
     g_key = key[order]
     grp = np.flatnonzero(np.r_[True, g_key[1:] != g_key[:-1]])
     sums = np.add.reduceat(blk["w"][order], grp)
@@ -142,8 +143,6 @@ def _lpa_fixpoint(graph: Graph, weighted: bool, converge: bool):
     only computed in that mode — fixed-iteration runs have no halt)."""
     from okapi_spark.plans.csr_fixpoint import Fixpoint
 
-    w_col = F.col("weight") if weighted else F.lit(1.0)
-
     def merge(state, parts):
         lbl = state["lbl"]
         new = lbl.copy()
@@ -158,9 +157,10 @@ def _lpa_fixpoint(graph: Graph, weighted: bool, converge: bool):
     def halt(m, history):
         return m["changed"] == 0 or any(h.get("state_hash") == m["state_hash"] for h in history)
 
+    layout = weight_layout(graph) if weighted else (
+        "w1", lambda: graph.edges.select("src", "dst", F.lit(1.0).alias("w")))
     return Fixpoint(
-        "w" if weighted else "w1", lambda: graph.edges.select("src", "dst", w_col.alias("w")),
-        lambda ids: {"lbl": np.arange(len(ids))}, _lpa_step, merge,
+        *layout, lambda ids: {"lbl": np.arange(len(ids))}, _lpa_step, merge,
         lambda ids, st: pd.DataFrame({"id": ids, "lbl": ids[st["lbl"]]}),
         "id long, lbl long", halt=halt if converge else None, id_cols=("lbl",),
     )
@@ -205,14 +205,15 @@ def label_propagation(
     ``mode="auto"`` (default, round 6): "csr" when it is
     measured-better and byte-safe — fixed-iteration runs without a
     store or an explicit ``state_broadcast`` (a sql-plan knob), |E|
-    within the fuse window (all rounds in one Spark job), label state
-    within the broadcast budget. Everything else resolves to "sql".
+    within the fuse window (all rounds in the driver, no Spark job once
+    the Graph's local layout is built), label state within the
+    broadcast budget. Everything else resolves to "sql".
     ``res.plan`` records the choice and the gate values behind it
     (csr_fixpoint.plan).
 
     ``mode="csr"``: LPA on the csr fixpoint runner
-    (plans/csr_fixpoint.py) over resident staged CSR blocks — the
-    north-rule physical form. Identical results to the sql plans
+    (plans/csr_fixpoint.py) over the Graph's csr layout (local in the
+    fuse window, staged blocks beyond) — the north-rule physical form. Identical results to the sql plans
     (parity-tested); same byte gate as the broadcast plan since the
     label state is NumPy-broadcast.
     """
@@ -222,15 +223,12 @@ def label_propagation(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
 
-    # memoized vertex dictionary (Graph.derived) — rebuilt per call
-    # before round 6
-    vertices = graph.vertices_by_id(num_partitions)
-    n = graph.num_vertices()  # scalar memo — no per-call count job
+    spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
     # auto picks csr only for fixed-iteration runs (measured-better
     # there; convergence runs stay on sql)
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "label",
+    plan = fx.plan(mode, graph, (spec.name, spec.frame), num_partitions, store,
+                   broadcast_threshold, state_broadcast, "label",
                    fixed_iterations=iterations is not None)
-    spec = _lpa_fixpoint(graph, weighted, converge=iterations is None)
     if plan["resolved"] == "csr":
         res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
                      num_partitions, store)
@@ -239,7 +237,8 @@ def label_propagation(
 
     if state_broadcast is None:
         # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
-        state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
+        state_broadcast = auto_state_broadcast(graph.num_vertices(), row_bytes=40,
+                                               rows_override=broadcast_threshold)
     sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
 
     def superstep(ss: int, state: DataFrame):
@@ -299,7 +298,7 @@ def label_propagation(
 
         max_ss = max_supersteps
 
-    state0 = vertices.select("id", F.col("id").alias("lbl"))
+    state0 = graph.vertices_by_id(num_partitions).select("id", F.col("id").alias("lbl"))
     res = sc.run(state0, superstep, max_ss, halt, store)
     res.state = res.state.select("id", "lbl")
     res.plan = plan
@@ -400,22 +399,21 @@ def spinner_partition(
 
     try:
         n = g.num_vertices()
-        plan = fx.plan(mode, g, n, None, broadcast_threshold, state_broadcast, "partition")
+        plan = fx.plan(mode, g, None, num_partitions, None, broadcast_threshold, state_broadcast,
+                       "partition")
         total_edges = g.num_edges()  # directed count of the symmetrized graph
         capacity = total_edges * (1.0 + additional_capacity) / k_total
 
-        def frame() -> DataFrame:
-            return g.edges.select("src", "dst", F.col("weight").alias("w"))
-
+        name, frame = weight_layout(g)
         sc = None
         if mode == "csr":
-            layout = fx.stage(g, "w", frame, num_partitions)
+            layout = fx.stage(g, name, frame, num_partitions)
             k_tasks = choose_task_count(total_edges, num_partitions)
         else:
             if state_broadcast is None:
                 # byte-based gate (VERDICT r3 #4): (id, deg, wdeg, part) ~40B/row
                 state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
-            sc = scatter.plan(g, "w", frame, num_partitions, state_broadcast)
+            sc = scatter.plan(g, name, frame, num_partitions, state_broadcast)
         # the salted layout's join explodes each state row over its nsalt
         shards = [] if sc is None or sc.broadcast else ["nsalt"]
         vcols = ["id", "deg", "wdeg", *shards]
@@ -427,7 +425,7 @@ def spinner_partition(
             F.col("src").alias("id"), F.col("out_deg").alias("deg"), F.col("wsum").alias("wdeg")
         )
         if shards:
-            vertices = sc.with_shards(vertices)
+            vertices = sc.with_shards(vertices, deg="deg")
         part = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(k)).cast("int")
         if prior is not None:
             vertices = vertices.join(

@@ -14,8 +14,8 @@ Two physical strategies, same fixpoint. The default ``mode="auto"``
 picks between them (csr_fixpoint.plan): "csr" when there is no
 checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob),
 |E| inside the csr fuse window and the rank state inside the broadcast
-budget — the whole converged fixpoint is then one Spark job instead of
-~3 per superstep — else "sql". ``BSPResult.plan`` records the choice.
+budget — the whole converged fixpoint then runs in the driver after one
+edge gather, instead of ~3 Spark jobs per superstep — else "sql". ``BSPResult.plan`` records the choice.
 
 * ``mode="sql"`` — ``power_sql``: per superstep one scatter of
   ``rank·share`` over the (src, dst, share) frame, summed per dst, on
@@ -25,15 +25,15 @@ budget — the whole converged fixpoint is then one Spark job instead of
   layout; ``state_broadcast=False`` (cluster-scale |V|) its salted
   (src, salt) shuffle layout.
 * ``mode="csr"`` — the csr fixpoint runner (plans/csr_fixpoint.py):
-  shares (src, dst, share) are staged ONCE per Graph as dst-hashed,
-  dst-sorted memmapped ``.npy`` blocks (plans/csr_blocks.py) and the
-  rank state lives on the driver as a NumPy array. A round gathers
-  ``rank[src]·share`` through memoized ``searchsorted`` positions and
-  sums per dst with ``np.add.reduceat`` — zero per-row Python, zero
-  shuffle (a block owns ALL in-edges of its dsts, so its sums are
-  final), zero edge bytes across the JVM↔Arrow boundary. Inside the
-  fuse window all rounds run in one Spark job; beyond it, or with a
-  checkpoint store, one job per round.
+  shares (src, dst, share) are laid out ONCE per Graph as dst-sorted
+  blocks and the rank state lives on the driver as a NumPy array. A
+  round gathers ``rank[src]·share`` through memoized ``searchsorted``
+  positions and sums per dst with ``np.add.reduceat`` — zero per-row
+  Python, zero shuffle (a block owns ALL in-edges of its dsts, so its
+  sums are final). Inside the fuse window the shares are gathered into
+  the driver once and every round runs there, with or without a
+  checkpoint store; beyond it they are staged as memmapped ``.npy``
+  blocks (plans/csr_blocks.py) and each round is one Spark job.
 """
 
 from __future__ import annotations
@@ -90,11 +90,12 @@ def pagerank(
         raise ValueError(f"unknown pagerank mode {mode!r}")
     spark = graph.edges.sparkSession
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    # n counts through (and so fills) the vertex dictionary both plans
-    # read: the csr id gather's and the sql plan's state0
-    graph.vertices_by_id(num_partitions)
+    # |V| from the local layout on in-window csr calls, else counted
+    # through (and so filling) the vertex dictionary the sql plan's
+    # state0 and the staged id gather read
+    plan = fx.plan(mode, graph, share_layout(graph, weighted), num_partitions, store,
+                   broadcast_threshold, state_broadcast, "rank")
     n = graph.num_vertices()  # scalar memo — no per-call count job
-    plan = fx.plan(mode, graph, n, store, broadcast_threshold, state_broadcast, "rank")
     if n == 0:
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
     base = (1.0 - damping) / n
@@ -125,6 +126,12 @@ def _shares(graph: Graph, weighted: bool) -> DataFrame:
     return graph.edges.join(graph.degree_weights(), "src").select("src", "dst", share.alias("share"))
 
 
+def share_layout(graph: Graph, weighted: bool) -> tuple:
+    """(name, frame) of the share frame, the key every layout of it is
+    memoized under."""
+    return ("pr_w" if weighted else "pr"), lambda: _shares(graph, weighted)
+
+
 def power_sql(graph: Graph, weighted: bool, state0: DataFrame, base: float, damping: float,
               P: int, broadcast: bool, rounds: int, halt=None,
               store: CheckpointStore | None = None) -> BSPResult:
@@ -133,8 +140,7 @@ def power_sql(graph: Graph, weighted: bool, state0: DataFrame, base: float, damp
     per dst, ``rank' = base + damping · msum``. With ``halt(metrics)``
     one scan of the materialized state computes both norms of Δrank;
     without it the rounds are fixed and cost no metric action."""
-    sc = scatter.plan(graph, "pr_w" if weighted else "pr", lambda: _shares(graph, weighted),
-                      P, broadcast)
+    sc = scatter.plan(graph, *share_layout(graph, weighted), P, broadcast)
     n_edges = graph.num_edges()
 
     def superstep(ss: int, state: DataFrame):
@@ -180,7 +186,7 @@ def power_fixpoint(graph: Graph, weighted: bool, init, base: float, damping: flo
         return {"rank": new}, {"max_delta": float(d.max()) if len(d) else 0.0, "l1_delta": float(d.sum())}
 
     return Fixpoint(
-        "pr_w" if weighted else "pr", lambda: _shares(graph, weighted), init, _power_step, merge,
+        *share_layout(graph, weighted), init, _power_step, merge,
         lambda ids, state: pd.DataFrame({"id": ids, "rank": state["rank"]}),
         "id long, rank double", resolve=_segments,
     )

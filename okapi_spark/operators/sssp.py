@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, run_supersteps
 from okapi_spark.graph.graph import Graph
-from okapi_spark.operators.components import apply_min, relax_min
+from okapi_spark.operators.components import apply_min, relax_min, weight_layout
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import auto_state_broadcast
 
@@ -39,19 +39,21 @@ def sssp(
     """Returns state (id long, dist double) — unreachable vertices absent
     (the reference leaves them at ∞; filter-out is the relational view).
 
-    ``mode="csr"``: relaxation on the csr fixpoint runner over resident
-    staged CSR blocks (see ``mssp``) — identical fixpoint, parity-tested.
+    ``mode="csr"``: relaxation on the csr fixpoint runner over the
+    Graph's csr layout (local in the fuse window, staged blocks beyond;
+    see ``mssp``) — identical fixpoint, parity-tested.
     ``res.plan`` records the mode and the byte gate (csr_fixpoint.plan);
     an explicit "csr" whose |V|-row frontier would not fit the broadcast
     budget is rejected."""
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown sssp mode {mode!r}")
-    # csr broadcasts the changed frontier each superstep, |V| rows in the
-    # worst case — the same byte gate as the other csr operators
-    plan = fx.plan(mode, graph, graph.num_vertices(), store, None, None, "distance")
+    # csr holds (and beyond the fuse window broadcasts) the |V|-row
+    # distance state — the same byte gate as the other csr operators
+    P = num_partitions or graph.edges.sparkSession.sparkContext.defaultParallelism
+    spec = _relax_fixpoint(graph, [int(source)])
+    plan = fx.plan(mode, graph, (spec.name, spec.frame), P, store, None, None, "distance")
     if mode == "csr":
-        P = num_partitions or graph.edges.sparkSession.sparkContext.defaultParallelism
-        res = fx.run(graph, _relax_fixpoint(graph, [int(source)]), max_supersteps, P, store)
+        res = fx.run(graph, spec, max_supersteps, P, store)
     else:
         res = mssp(graph, [int(source)], max_supersteps, store, mode, num_partitions)
     res.plan = plan
@@ -96,8 +98,7 @@ def _relax_fixpoint(graph: Graph, origins: list[int]):
         })
 
     return fx.Fixpoint(
-        "w", lambda: graph.edges.select("src", "dst", F.col("weight").alias("w")),
-        init, step, merge, output, "id long, origin long, dist double",
+        *weight_layout(graph), init, step, merge, output, "id long, origin long, dist double",
         halt=lambda m, history: m["changed"] == 0,
     )
 
@@ -118,9 +119,11 @@ def mssp(
     column for source sets that should never transit the driver
     (fraction mode can select O(|V|) sources).
 
-    ``mode="csr"``: relaxation on the csr fixpoint runner over resident
-    staged CSR blocks (see ``_relax_fixpoint``); byte-gated on the
-    worst-case state |V|·|sources| since it is broadcast."""
+    ``mode="csr"``: relaxation on the csr fixpoint runner over the
+    Graph's csr layout (local in the fuse window, staged blocks beyond;
+    see ``_relax_fixpoint``); byte-gated on the worst-case state
+    |V|·|sources| since the driver holds it (and broadcasts it beyond
+    the window)."""
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown mssp mode {mode!r}")
     spark = graph.edges.sparkSession
@@ -144,7 +147,10 @@ def mssp(
         n_sources = len(sources)
 
     if mode == "csr":
-        worst_frontier = graph.num_vertices() * n_sources
+        layout = weight_layout(graph)
+        n = (len(fx.local(graph, *layout).ids) if graph.num_edges() <= fx._FUSE_MAX_EDGES
+             else graph.num_vertices())
+        worst_frontier = n * n_sources
         if not auto_state_broadcast(worst_frontier, row_bytes=48):
             raise ValueError(
                 f"mode='csr' broadcasts the changed frontier each superstep and "

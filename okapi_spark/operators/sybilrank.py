@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from okapi_spark.bsp import BSPResult
 from okapi_spark.graph.graph import Graph
-from okapi_spark.operators.pagerank import power_fixpoint, power_sql
+from okapi_spark.operators.pagerank import power_fixpoint, power_sql, share_layout
 from okapi_spark.plans import csr_fixpoint as fx
 
 
@@ -53,22 +53,22 @@ def sybilrank(
 
     ``mode="csr"``: the same power iteration as a csr spec
     (``power_fixpoint``, base=0, damping=1) on the csr fixpoint runner
-    over the same memoized weighted share blocks — zero exchange, zero
-    edge rescan; same byte gate. ``res.plan`` records the mode and the
-    gate values (csr_fixpoint.plan).
+    over the same memoized weighted shares — in the driver inside the
+    fuse window, else over staged blocks; same byte gate. ``res.plan``
+    records the mode and the gate values (csr_fixpoint.plan).
     """
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown sybilrank mode {mode!r}")
     spark = graph.edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    # memoized vertex dictionary (Graph.derived) — was a per-call
-    # persist that leaked across calls before round 6
-    vertices = graph.vertices_by_id(num_partitions)
+    # |V| from the local layout on in-window csr calls, else through the
+    # memoized vertex dictionary (Graph.derived) the sql state0 reads
+    plan = fx.plan(mode, graph, share_layout(graph, True), num_partitions, None,
+                   broadcast_threshold, state_broadcast, "trust")
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if total_trust is None:
         total_trust = float(n)
-    plan = fx.plan(mode, graph, n, None, broadcast_threshold, state_broadcast, "trust")
     if n == 0:
         # a fixed iteration count (⌈c·log10 N⌉) is undefined on no vertices
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, False, plan=plan)
@@ -96,7 +96,7 @@ def sybilrank(
             # precedent): (id, rank) ~ 32B/row vs the 256MB budget
             state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
         seeds = trusted.select("id").distinct().withColumn("is_trusted", F.lit(True))
-        state0 = vertices.join(seeds, "id", "left").select(
+        state0 = graph.vertices_by_id(num_partitions).join(seeds, "id", "left").select(
             "id", F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0).alias("rank")
         )
         res = power_sql(graph, True, state0, 0.0, 1.0, num_partitions, state_broadcast, power_iterations)

@@ -334,11 +334,11 @@ def triangle_count(
 ) -> int:
     """Total unique triangles.
 
-    ``mode="auto"`` (default, round 6): pick the physical plan by the
-    same byte gate the csr mode already enforces — the staged-kernel
-    count (zero wedge exchange; measured 4.8s → 0.7-1.6s at the bench
-    shape) whenever the 16B/vertex rank-relabel broadcast fits the
-    one-shot array budget (≈16M vertices), else the sql wedge plan,
+    ``mode="auto"`` (default, round 6): the csr count whenever it
+    applies — in the driver inside the csr fuse window, else the
+    staged-kernel count (zero wedge exchange) whenever its 16B/vertex
+    rank-relabel broadcast fits the one-shot array budget (≈16M
+    vertices) — else the sql wedge plan,
     which remains the cluster-scale path. This is the same
     auto-physical-strategy pattern as PageRank's broadcast-vs-salted
     gate; both plans produce the identical exact count (parity-tested,
@@ -347,8 +347,11 @@ def triangle_count(
     passes, so auto defers to sql there.
 
     ``mode="sql"``: the two-join wedge plan above.
-    ``mode="csr"``: resident staged-block kernel (see
-    ``_triangle_count_csr``) — same count, zero wedge shuffle."""
+    ``mode="csr"``: the wedge-probe kernel (see
+    ``_triangle_count_csr``) over one gathered key array in the driver
+    inside the fuse window (no Spark job once gathered), over resident
+    staged blocks beyond it or with an explicit ``block_dir`` — same
+    count, zero wedge shuffle."""
     if mode == "auto" and chunks == 1:
         try:
             n, _phases = _triangle_count_csr(
@@ -450,11 +453,20 @@ def _tri_wedge_pack(pdf, M: int):
     return {"mkeys": np.sort(u * M + v)}
 
 
+def _member_hits(karr, probes) -> int:
+    """How many of ``probes`` occur in the sorted key array ``karr``."""
+    import numpy as np
+
+    pos = np.searchsorted(karr, probes)
+    ok = pos < karr.size
+    return int(np.count_nonzero(np.asarray(karr[pos[ok]]) == probes[ok])) if ok.any() else 0
+
+
 def _probe_membership(keys, M: int, P: int, epoch: int, block_dir: str) -> int:
-    """How many of ``keys`` exist in the oriented edge set: route each
-    key to the pivot block (key // M) % P, binary-search that block's
-    sorted ``mkeys``. Every task may open every block — the memmap
-    pages are shared node-wide through the OS page cache."""
+    """How many of ``keys`` exist in the staged oriented edge set: route
+    each key to the pivot block (key // M) % P, binary-search that
+    block's sorted ``mkeys``. Every task may open every block — the
+    memmap pages are shared node-wide through the OS page cache."""
     import numpy as np
 
     from okapi_spark.plans.csr_blocks import load_block
@@ -463,25 +475,20 @@ def _probe_membership(keys, M: int, P: int, epoch: int, block_dir: str) -> int:
     blkid = (keys // M) % P
     for p in np.unique(blkid):
         mblk = load_block("triw", epoch, int(p), block_dir)
-        if mblk is None:
-            continue
-        karr = mblk["mkeys"]
-        probes = keys[blkid == p]
-        pos = np.searchsorted(karr, probes)
-        ok = pos < karr.size
-        if ok.any():
-            hits += int(np.count_nonzero(np.asarray(karr[pos[ok]]) == probes[ok]))
+        if mblk is not None:
+            hits += _member_hits(mblk["mkeys"], keys[blkid == p])
     return hits
 
 
-def _count_wedge_block(mkeys, M: int, P: int, epoch: int, block_dir: str) -> int:
+def _count_wedge_block(mkeys, M: int, probe) -> int:
     """Closed-wedge count of one pivot block: derive the pivot CSR
     from the sorted key array (u = k // M ascends; neighbors k % M
     ascend within a segment, which is the orientation order), then
     enumerate out-pairs per segment (degree-bucketed vectorized
     gather; hub tail-slices past ``_PAIR_BUCKET_CAP``), buffer
-    closing keys into ``_PROBE_CHUNK`` slabs, membership-probe each
-    slab."""
+    closing keys into ``_PROBE_CHUNK`` slabs, and count each slab's
+    members with ``probe(keys)`` — the staged blocks' routed lookup
+    or the local key array's."""
     import numpy as np
 
     k = np.asarray(mkeys)
@@ -500,7 +507,7 @@ def _count_wedge_block(mkeys, M: int, P: int, epoch: int, block_dir: str) -> int
             np.concatenate(state["buf"]) if len(state["buf"]) > 1 else state["buf"][0]
         )
         state["buf"], state["buffered"] = [], 0
-        state["hits"] += _probe_membership(keys, M, P, epoch, block_dir)
+        state["hits"] += probe(keys)
 
     def push(keys):
         state["buf"].append(keys)
@@ -543,10 +550,42 @@ def _tri_csr_kernel(M: int, P: int, epoch: int, block_dir: str):
                 blk = load_block("triw", epoch, int(pid), block_dir)
                 if blk is None:
                     continue
-                total += _count_wedge_block(blk["mkeys"], M, P, epoch, block_dir)
+                total += _count_wedge_block(
+                    blk["mkeys"], M,
+                    lambda keys: _probe_membership(keys, M, P, epoch, block_dir),
+                )
         yield pd.DataFrame({"n": [total]})
 
     return kernel
+
+
+def _local_wedge_keys(graph: Graph):
+    """The in-window pivot layout, memoized on the Graph: ONE Arrow
+    collect of the canonical edge set, rank-relabeled in NumPy by the
+    same (deg, id) order the staged path broadcasts, packed as the
+    single sorted u·M+v key array (both block faces at once, see
+    ``_tri_wedge_pack``). ``(mkeys, M)``, or None for no edges."""
+    import numpy as np
+
+    from okapi_spark.bsp import no_adaptive
+
+    def build():
+        with no_adaptive(graph.edges.sparkSession):
+            t = _canonical(graph).toArrow()
+        u, v = t.column("u").to_numpy(), t.column("v").to_numpy()
+        if not len(u):
+            return None
+        nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+        M = len(nodes)  # ranks are dense [0, |V|)
+        rank = np.empty(M, dtype=np.int64)
+        # nodes ascend, so a stable degree sort breaks ties by id
+        rank[np.argsort(np.bincount(inv, minlength=M), kind="stable")] = np.arange(M)
+        ru, rv = rank[inv[: len(u)]], rank[inv[len(u):]]
+        mkeys = np.sort(np.minimum(ru, rv) * M + np.maximum(ru, rv))
+        mkeys.setflags(write=False)
+        return mkeys, M
+
+    return graph.derived(("tri_local",), build, cleanup=lambda v: None)
 
 
 def _triangle_count_csr(
@@ -556,7 +595,13 @@ def _triangle_count_csr(
 ) -> tuple[int, dict]:
     """(count, phase_timings) — see the mode="csr" block comment.
 
-    Round 6: the staged pivot/membership layout is MEMOIZED on the
+    With |E| inside the csr fuse window (csr_fixpoint._FUSE_MAX_EDGES)
+    and no explicit ``block_dir`` the count runs in the driver: the
+    local pivot layout (``_local_wedge_keys``) is gathered once per
+    Graph and the wedge enumeration probes its key array directly — a
+    warm count runs no Spark job (phases ``gather_sec``, ``probe_sec``).
+
+    Beyond the window the staged pivot/membership layout is MEMOIZED on the
     Graph (key ``("tri_blocks", P)``) when the caller does not supply
     an explicit ``block_dir`` — like the scatter layouts it is a pure
     physical layout of the immutable edge set, so repeated counts on one Graph
@@ -578,6 +623,16 @@ def _triangle_count_csr(
         pid_frame,
         stage_blocks,
     )
+
+    from okapi_spark.plans import csr_fixpoint as fx
+
+    if block_dir is None and graph.num_edges() <= fx._FUSE_MAX_EDGES:
+        t0 = time.time()
+        lay = _local_wedge_keys(graph)
+        t1 = time.time()
+        n = 0 if lay is None else _count_wedge_block(
+            lay[0], lay[1], functools.partial(_member_hits, lay[0]))
+        return n, {"gather_sec": round(t1 - t0, 2), "probe_sec": round(time.time() - t1, 2)}
 
     spark = graph.edges.sparkSession
     P = num_partitions or spark.sparkContext.defaultParallelism

@@ -1,14 +1,16 @@
-"""Resident CSR block staging for the gather-scatter (csr) modes.
+"""Resident CSR block staging: the beyond-window csr placement.
+
+Inside the csr fuse window (``csr_fixpoint._FUSE_MAX_EDGES``) the csr
+operators gather their edge frame into the driver and stage nothing
+(``csr_fixpoint.local``); this module is the scale path past it, where
+one core can no longer run a round in a few hundred milliseconds.
 
 The first csr implementation drove every superstep with
-``edges.groupBy("pid").applyInPandas(kernel)``: the worker-side cache
-amortized the per-partition *pack* (sort / unique), but Spark still
-streamed the full edge partition JVM -> Arrow -> pandas on every
-superstep before the kernel could hit its cache — the transfer was
-paid and thrown away. Measured at 60M edges that re-ship made the csr
-kernel ~5-8x slower per superstep than the zero-exchange sql plan
-(BENCH.md "LPA csr kernel"), even though the kernel itself scales
-better.
+``edges.groupBy("pid").applyInPandas(kernel)``: Spark streamed the full
+edge partition JVM -> Arrow -> pandas on every superstep before the
+kernel could hit its cache — the transfer was paid and thrown away
+(measured at 60M edges: ~5-8x slower per superstep than the
+zero-exchange sql plan, BENCH.md "LPA csr kernel").
 
 This module materializes each pid-partition's PACKED adjacency arrays
 once — one pass over the edges, the same I/O shape as a shuffle map
@@ -25,29 +27,27 @@ as an executor OOM crash-loop at 240M edges / 8 executor JVMs).
 ``mmap_mode="r"`` makes the OS page cache the single shared,
 kernel-evictable block cache per node: every worker maps the same
 physical pages, a cold read streams from disk once, and re-reads are
-memory-speed with no copy and no CRC pass (the .npz path paid both).
+memory-speed with no copy and no CRC pass.
 
-This is the Spark-idiomatic form of a native engine's resident CSR:
-Spark offers no executor-resident state across jobs, but its own
-shuffle does exactly this (map outputs persisted to local disk and
-re-served). ``block_dir`` must be readable by every executor:
+``block_dir`` must be readable by every executor:
 
 * local / local-cluster masters (this sandbox, and any single-box
   deployment): the default driver tempdir is shared by construction.
-* multi-node cluster: pass a DFS path (HDFS/NFS/fuse mount). The
-  staging write is one pass over the edges; per-superstep reads are
-  remote on a cold node but node-local after the first superstep via
-  the page cache of the DFS client.
+* multi-node cluster: pass a DFS path (HDFS/NFS/fuse mount).
 
-Blocks are keyed by a per-call epoch so concurrent operator calls
-cannot collide; ``cleanup_blocks`` removes the directory when the
-operator returns.
+Blocks are keyed by a per-layout epoch so block sets cannot collide.
+A staged set is memoized on its Graph and its directory is removed by
+``Graph.unpersist()``, with an atexit sweep as the backstop; default
+staging dirs are named after their owner pid, and each new one first
+removes the dirs whose owner is dead (a SIGKILL or OOM kill skips
+atexit).
 """
 
 from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -94,11 +94,43 @@ def _cleanup_all_dirs() -> None:
 atexit.register(_cleanup_all_dirs)
 
 
+# staging dirs are named okapi_csr_blocks_pid<owner pid>_<random>: the
+# atexit sweep never runs on SIGKILL or an OOM kill, so each new dir
+# first removes the ones whose owner is gone
+_DIR_PREFIX = "okapi_csr_blocks_"
+_OWNER = re.compile(re.escape(_DIR_PREFIX) + r"pid(\d+)_")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        return True
+    return True
+
+
+def _sweep_orphan_dirs(root: str) -> list[str]:
+    """Remove the staging dirs under ``root`` whose owner pid is dead
+    (assumes ``root`` is not shared across pid namespaces); returns
+    them."""
+    gone = []
+    for name in os.listdir(root):
+        m = _OWNER.match(name)
+        if m and not _pid_alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+            gone.append(name)
+    return gone
+
+
 def default_block_dir(spark) -> str:
     """A fresh staging directory every executor of this deployment can
-    read. Local masters share the driver's filesystem; for a real
-    multi-node master the caller must supply a DFS path explicitly —
-    refusing is better than silently staging to a driver-only disk."""
+    read, named after its owner pid; orphans of dead owners under the
+    same tempdir are swept first. Local masters share the driver's
+    filesystem; for a real multi-node master the caller must supply a
+    DFS path explicitly — refusing is better than silently staging to
+    a driver-only disk."""
     master = spark.sparkContext.master
     if not (master.startswith("local") or master.startswith("local-cluster")):
         raise ValueError(
@@ -106,7 +138,8 @@ def default_block_dir(spark) -> str:
             "pass block_dir=<DFS path> (the default driver tempdir is only "
             "visible cluster-wide under local/local-cluster masters)"
         )
-    d = tempfile.mkdtemp(prefix="okapi_csr_blocks_")
+    _sweep_orphan_dirs(tempfile.gettempdir())
+    d = tempfile.mkdtemp(prefix=f"{_DIR_PREFIX}pid{os.getpid()}_")
     _LIVE_DIRS.add(d)
     return d
 
@@ -193,10 +226,10 @@ def resolved_arrays(tag: str, epoch: int, pid: int, block_dir: str, name: str, b
     which are pure functions of the block plus the graph's sorted
     vertex-id array) as the sidecar set ``name`` in the staging dir.
 
-    The fused kernels run as ONE task, and Spark's per-core Python
-    workers give no affinity for 1-task jobs — a worker-global cache of
-    the resolved arrays would miss on most repeat calls (measured: the
-    pre-resolve is ~0.4s of a warm lpa_4 call at 2.4M edges). Files in
+    Spark's per-core Python workers give a block no task affinity
+    across jobs — a worker-global cache of the resolved arrays would
+    miss on most repeat calls (measured: the pre-resolve is ~0.4s of a
+    warm lpa_4 call at 2.4M edges). Files in
     the shared staging dir are worker-agnostic: the first toucher
     resolves and writes (a concurrent writer produces identical bytes),
     then re-opens, so every caller gets read-only memmaps from the OS

@@ -1,4 +1,4 @@
-"""One runner for every csr fixpoint: staged CSR blocks + NumPy state.
+"""One runner for every csr fixpoint: a dst-sorted CSR layout + NumPy state.
 
 PageRank, SybilRank, connected components, LPA and SSSP/MSSP reduce
 their ``mode="csr"`` to a ``Fixpoint`` spec of pure NumPy functions
@@ -7,27 +7,38 @@ position in the sorted vertex-id array):
 
 * ``init(ids)`` builds the round-0 state on the driver;
 * ``resolve(blk, ids)`` derives a block's round-invariant arrays
-  (memoized as sidecar files next to the block, csr_blocks);
-* ``step(state, blk, res)`` runs one round over one staged block and
-  returns a part — every in-edge of a dst lives in ONE block
-  (pmod(xxhash64(dst), P) layout), so a part is final for its dsts;
+  (memoized with the block);
+* ``step(state, blk, res)`` runs one round over one block and returns
+  a part — every in-edge of a dst lives in ONE block, so a part is
+  final for its dsts;
 * ``merge(state, parts)`` folds the parts into the next state plus a
   metrics dict; ``halt(metrics, history)`` decides from the metrics;
 * ``output(ids, state)`` decodes the state into the result rows.
 
-The runner owns everything else. Staging (``stage``) packs the edges
-dst-sorted once per Graph. The loop runs in one of two placements:
-inside the fuse window one single-task Spark job holds every block and
-runs all rounds locally, paying the per-job floor once; beyond it each
-round is one job over ``choose_task_count`` tasks that return their
-per-block parts for the driver to merge. Both placements call the
-same functions, so they are bit-identical by construction. With a
-``CheckpointStore`` every job runs one round and the driver itself
-writes the state as ``(id, <state cols>)`` parquet at the store's
-superstep path, committed by the store's ledger — no Spark job; a
-re-run resumes from the ledger tip, and a halted tip returns the
-stored state with no staging and no edge pass. Every broadcast is
-destroyed in a ``finally``.
+The runner owns everything else, and places the loop by |E|:
+
+* **local** (|E| ≤ ``_FUSE_MAX_EDGES``): ``local`` collects
+  ``spec.frame()`` once through Arrow into the driver — one dst-sorted
+  block, its sorted vertex ids and the ``resolve`` arrays, memoized on
+  the Graph — and every round runs in-process. Inside the window a
+  round is milliseconds of single-core NumPy, so a Spark job per call
+  (scheduling, Python workers, block staging) would be nearly all of
+  its cost; a warm call runs no Spark job at all.
+* **staged** (beyond the window): ``stage`` packs the edges as P
+  dst-hashed (pmod(xxhash64(dst), P)), dst-sorted memmapped blocks once
+  per Graph (csr_blocks), and each round is one job over
+  ``choose_task_count`` tasks that return their per-block parts for
+  the driver to merge.
+
+Both placements run one loop body over the same step/merge functions,
+and both packs sort a block by (dst, src, value columns), so a dst's
+segment holds the same rows in the same order wherever it was packed:
+the placements are bit-identical. With a ``CheckpointStore`` the
+driver writes the state after every round as ``(id, <state cols>)``
+parquet at the store's superstep path, committed by the store's
+ledger — no Spark job; a re-run resumes from the ledger tip in either
+placement, and a halted tip returns the stored state with no layout
+and no edge pass. Every broadcast is destroyed in a ``finally``.
 """
 
 from __future__ import annotations
@@ -37,7 +48,8 @@ import os
 import pickle
 import shutil
 import time
-from dataclasses import dataclass, replace
+from contextlib import contextmanager
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 import numpy as np
@@ -52,12 +64,12 @@ from okapi_spark.plans.csr_blocks import (
     pid_frame, resolved_arrays, stage_blocks,
 )
 
-# Below this many edges the per-round mapInPandas job FLOOR (~0.35-0.6s
-# measured at 32 cores: scheduling + Python round trip + Arrow collect,
-# regardless of kernel size — the kernel itself is ~20-40ms) dwarfs the
-# single-core kernel time, so every round runs inside ONE job. 8M edges
-# ≈ 120ms/round single core — still well under the job floor; past it,
+# Up to this many edges every round runs in the driver on the local
+# layout: a per-round mapInPandas job costs a FLOOR (~0.35-0.6s measured
+# at 32 cores: scheduling + Python round trip + Arrow collect) that
+# dwarfs the single-core kernel (8M edges ≈ 120ms/round); past it,
 # per-round jobs with one task per ~2M edges win back the parallelism.
+# Re-measured on 4 cores (BENCH.md "csr placement window").
 _FUSE_MAX_EDGES = 8_000_000
 
 # driver-side monotonic namespace for staged block files — NOT
@@ -67,25 +79,42 @@ _EPOCH_COUNTER = itertools.count(1)
 _GATHER_PANDAS_MAX_ROWS = 1_000_000
 
 # (id, state) bytes per vertex the auto gate budgets for — the csr runner
-# broadcasts the full |V|-row state, like the sql broadcast plan
+# holds the full |V|-row state on the driver (and the staged placement
+# broadcasts it), like the sql broadcast plan
 _STATE_ROW_BYTES = 32
 
 
-def plan(mode: str, graph, n: int, store: CheckpointStore | None,
+def plan(mode: str, graph, layout: tuple | None, P: int, store: CheckpointStore | None,
          broadcast_threshold: int | None, state_broadcast: bool | None,
          what: str, **conditions: bool) -> dict:
     """The plan record of one operator call (``BSPResult.plan``): the
-    requested and resolved mode plus the gate values behind the choice.
+    requested and resolved mode, the csr placement and the gate values
+    behind the choice.
 
     ``mode="auto"`` resolves to "csr" when the fixpoint is fusable — no
     checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob:
     the caller asked for a sql layout), |E| inside the fuse window (the
-    whole fixpoint in one Spark job) and the |V|-row state inside the
+    whole fixpoint in the driver) and the |V|-row state inside the
     broadcast budget — and every operator-specific entry of
     ``conditions`` holds; else to "sql". An explicit "sql"/"csr" is
     kept as asked, but an explicit "csr" whose ``what`` state would not
-    fit the budget is rejected: the runner broadcasts it every round."""
+    fit the budget is rejected.
+
+    ``layout`` is the operator's csr frame as ``(name, frame)``; None
+    for an operator with no local placement (Spinner). A csr candidate
+    inside the window counts |V| from its local layout — the gather the
+    run reads anyway — so only sql and staged calls build the persisted
+    vertex dictionary (the sql plans' state0 and the staged id gather
+    both read it)."""
     n_edges = graph.num_edges()
+    auto_ok = store is None and state_broadcast is None and all(conditions.values())
+    local_ok = layout is not None and n_edges <= _FUSE_MAX_EDGES
+    if local_ok and (mode == "csr" or (mode == "auto" and auto_ok)):
+        n = len(local(graph, *layout).ids)
+    else:
+        if layout is not None:
+            graph.vertices_by_id(P)
+        n = graph.num_vertices()  # counts through the dictionary when it exists
     rec = {
         "requested": mode,
         "n_edges": n_edges,
@@ -99,14 +128,14 @@ def plan(mode: str, graph, n: int, store: CheckpointStore | None,
     fits = rec["state_bytes"] <= rec["state_budget_bytes"]
     if mode == "csr" and not fits:
         raise ValueError(
-            f"mode='csr' broadcasts the full {what} state each superstep; "
-            f"its {rec['state_bytes']} bytes exceed the broadcast budget of "
-            f"{rec['state_budget_bytes']} bytes. Use mode='sql' (state_broadcast=False "
-            "selects the salted shuffle plan at cluster-scale |V|)."
+            f"mode='csr' holds the full {what} state on the driver and broadcasts it "
+            f"beyond the fuse window; its {rec['state_bytes']} bytes exceed the broadcast "
+            f"budget of {rec['state_budget_bytes']} bytes. Use mode='sql' "
+            "(state_broadcast=False selects the salted shuffle plan at cluster-scale |V|)."
         )
-    fusable = (store is None and state_broadcast is None and n_edges <= _FUSE_MAX_EDGES and fits
-               and all(conditions.values()))
+    fusable = auto_ok and n_edges <= _FUSE_MAX_EDGES and fits
     rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
+    rec["placement"] = ("local" if local_ok else "staged") if rec["resolved"] == "csr" else None
     return rec
 
 
@@ -127,8 +156,8 @@ def locate(ids, keys) -> tuple:
 
 @dataclass
 class Fixpoint:
-    name: str  # staged block set (memo key + file tag)
-    frame: Callable[[], DataFrame]  # (src, dst, <value cols>) to stage
+    name: str  # layout name (memo key + staged file tag)
+    frame: Callable[[], DataFrame]  # (src, dst, <value cols>) to lay out
     init: Callable
     step: Callable
     merge: Callable
@@ -139,15 +168,69 @@ class Fixpoint:
     id_cols: tuple = ()  # state arrays holding positions, checkpointed as ids
 
 
+def _sorted_block(cols: dict) -> tuple:
+    """``(block, ids)``: every column sorted by (dst, src, value columns)
+    — a canonical row order, so a dst's segment holds the same rows in
+    the same order whichever placement packed it, and segment
+    reductions are bit-identical across placements — plus the block's
+    sorted vertex ids ``np.unique(src ∪ dst)``. The (dst, src) order is
+    one stable argsort of their dense-position key; only duplicate
+    (src, dst) rows need the value columns, in a full lexsort."""
+    cols = {c: np.asarray(a, dtype="int64" if c in ("src", "dst") else "float64") for c, a in cols.items()}
+    m = len(cols["dst"])
+    ids, inv = np.unique(np.concatenate([cols["dst"], cols["src"]]), return_inverse=True)
+    key = inv[:m] * len(ids) + inv[m:]
+    order = np.argsort(key, kind="stable")
+    vals = [a for c, a in cols.items() if c not in ("src", "dst")]
+    k = key[order]
+    if vals and np.any(k[1:] == k[:-1]):
+        order = np.lexsort([*reversed(vals), key])
+    return {c: a[order] for c, a in cols.items()}, ids
+
+
 def _pack(pdf) -> dict:
-    """Per-partition pack (runs once inside ``stage_blocks``): every
-    staged column sorted by dst — stable, so each dst's segment keeps
-    its incoming row order — for segment-reduce kernels."""
-    order = np.argsort(pdf["dst"].to_numpy(), kind="stable")
-    return {
-        c: pdf[c].to_numpy()[order].astype("int64" if c in ("src", "dst") else "float64")
-        for c in pdf.columns if c != "pid"
-    }
+    """Per-partition pack (runs once inside ``stage_blocks``): the
+    staged columns in the canonical (dst, src, value) order."""
+    return _sorted_block({c: pdf[c].to_numpy() for c in pdf.columns if c != "pid"})[0]
+
+
+def _read_only(arrays: dict) -> dict:
+    for a in arrays.values():
+        a.setflags(write=False)
+    return arrays
+
+
+@dataclass
+class Local:
+    """The in-window layout: one dst-sorted block over every edge, its
+    sorted vertex ids, and the ``resolve`` arrays by resolve name.
+    Read-only, like the staged memmaps."""
+
+    block: dict
+    ids: np.ndarray
+    res: dict = field(default_factory=dict)
+
+    def resolved(self, resolve: Callable) -> dict:
+        if resolve.__name__ not in self.res:
+            self.res[resolve.__name__] = _read_only(dict(resolve(self.block, self.ids)))
+        return self.res[resolve.__name__]
+
+
+def local(graph, name: str, frame: Callable[[], DataFrame]) -> Local:
+    """The local layout of ``frame()`` ONCE per (Graph, name): one Arrow
+    collect into the driver, packed like a staged block. The frames are
+    projections of the edge set, so the ids are V — the Graph's |V|
+    memo is filled from them. Released by ``Graph.unpersist()``."""
+    def build() -> Local:
+        with no_adaptive(graph.edges.sparkSession):
+            t = frame().toArrow()
+        blk, ids = _sorted_block({c: t.column(c).to_numpy() for c in t.column_names})
+        if graph._num_vertices is None:
+            graph._num_vertices = len(ids)
+        ids.setflags(write=False)
+        return Local(_read_only(blk), ids)
+
+    return graph.derived(("csr_local", name), build, cleanup=lambda v: None)
 
 
 def stage(graph, name: str, frame: Callable[[], DataFrame], P: int) -> tuple:
@@ -174,9 +257,10 @@ def stage(graph, name: str, frame: Callable[[], DataFrame], P: int) -> tuple:
 
 
 def ids_sorted(graph, P: int):
-    """Memoized driver-side sorted vertex-id array: every csr call needs
-    it, and it is exactly the |V|·8B payload the state broadcast
-    already budgets for — held on the Graph, no per-call gather job."""
+    """Memoized driver-side sorted vertex-id array of the staged
+    placement (the local one takes its ids from its own gather): the
+    |V|·8B payload the state broadcast already budgets for — held on
+    the Graph, no per-call gather job."""
     return graph.derived(
         ("ids_sorted",),
         lambda: gather_sorted_arrays(graph.vertices_by_id(P).select("id"), graph.num_vertices(), [])[0],
@@ -272,28 +356,6 @@ def round_job(spark, spec: Fixpoint, layout: tuple, P: int, k: int, b_ids, b_sta
     return pid_frame(spark, P, k).mapInPandas(kernel, schema="blob binary")
 
 
-def _fused_job(spark, spec: Fixpoint, layout: tuple, P: int, b_ids, b_run) -> tuple:
-    """Every remaining round in ONE single-task job; returns the final
-    state and the per-round metrics."""
-    spec = _shippable(spec)
-
-    def kernel(pdf_iter):
-        state, history, rounds = b_run.value
-        blocks = _open_blocks(spec, layout, pdf_iter, b_ids)
-        out: list[dict] = []
-        for _ in range(rounds):
-            t0 = time.time()
-            state, m = _round(spec, state, [spec.step(state, blk, res) for blk, res in blocks], history + out)
-            m["superstep_sec"] = time.time() - t0
-            out.append(m)
-            if m["_halted"]:
-                break
-        yield pd.DataFrame({"blob": [pickle.dumps((state, out), protocol=5)]})
-
-    row = pid_frame(spark, P, 1).mapInPandas(kernel, schema="blob binary").collect()[0]
-    return pickle.loads(row.blob)
-
-
 def _write_state(store: CheckpointStore, ss: int, spec: Fixpoint, ids, state: dict) -> None:
     """The state as ``(id, <state cols>)`` parquet (a (k, |V|) array is a
     k-list column) at the store's superstep path, written from the
@@ -335,11 +397,49 @@ def _read_state(store: CheckpointStore, ss: int, spec: Fixpoint) -> tuple:
     return ids, state
 
 
+@contextmanager
+def _placement(graph, spec: Fixpoint, P: int, ids):
+    """Yields this call's ``parts(state)``: one round's step over the
+    local block in the driver inside the fuse window, else one
+    per-round job over the staged blocks (its id broadcast destroyed on
+    exit)."""
+    n_edges = graph.num_edges()
+    if n_edges <= _FUSE_MAX_EDGES:
+        lay = local(graph, spec.name, spec.frame)
+        blk, res = lay.block, lay.resolved(spec.resolve)
+        yield lambda state: [spec.step(state, blk, res)] if len(blk["dst"]) else []
+        return
+    spark = graph.edges.sparkSession
+    sc = spark.sparkContext
+    layout = stage(graph, spec.name, spec.frame, P)
+    k = choose_task_count(n_edges, P)
+    b_ids = sc.broadcast(ids)
+
+    def parts(state: dict) -> list:
+        b_state = sc.broadcast(state)
+        try:
+            blobs = round_job(spark, spec, layout, P, k, b_ids, b_state).collect()
+        finally:
+            b_state.destroy()
+        return [p for r in blobs for p in pickle.loads(r.blob)]
+
+    try:
+        with no_adaptive(spark):
+            yield parts
+    finally:
+        b_ids.destroy()
+
+
 def run(graph, spec: Fixpoint, max_rounds: int, P: int, store: CheckpointStore | None = None) -> BSPResult:
     """Run ``spec`` to halt or ``max_rounds``; resumes from ``store``."""
     spark = graph.edges.sparkSession
-    sc = spark.sparkContext
     n_edges = graph.num_edges()
+
+    def vertex_ids():
+        if n_edges <= _FUSE_MAX_EDGES:
+            return local(graph, spec.name, spec.frame).ids
+        return ids_sorted(graph, P)
+
     start, log, ids = 0, [], None
     if store is not None and (tip := store.latest()) is not None:
         ids, state = _read_state(store, int(tip["superstep"]), spec)
@@ -347,45 +447,24 @@ def run(graph, spec: Fixpoint, max_rounds: int, P: int, store: CheckpointStore |
         start = int(tip["superstep"]) + 1
         if tip["metrics"].get("_halted"):
             return _result(spark, spec, ids, state, start, log)
-        if not np.array_equal(ids, ids_sorted(graph, P)):
+        if not np.array_equal(ids, vertex_ids()):
             raise ValueError("checkpointed state does not match this graph's vertex set")
     if ids is None:
-        ids = ids_sorted(graph, P)
+        ids = vertex_ids()
         state = spec.init(ids)
-    if start >= max_rounds:  # nothing left to run: no staging, no job
+    if start >= max_rounds:  # nothing left to run: no layout, no job
         return _result(spark, spec, ids, state, start, log)
-    layout = stage(graph, spec.name, spec.frame, P)
-    b_ids = sc.broadcast(ids)
-    try:
-        with no_adaptive(spark):
-            if store is None and n_edges <= _FUSE_MAX_EDGES:
-                b_run = sc.broadcast((state, log, max_rounds - start))
-                try:
-                    state, steps = _fused_job(spark, spec, layout, P, b_ids, b_run)
-                finally:
-                    b_run.destroy()
-                for ss, m in enumerate(steps, start):
-                    log.append(m | {"edges_processed": n_edges, "superstep": ss})
-            else:
-                k = choose_task_count(n_edges, P)
-                for ss in range(start, max_rounds):
-                    t0 = time.time()
-                    b_state = sc.broadcast(state)
-                    try:
-                        blobs = round_job(spark, spec, layout, P, k, b_ids, b_state).collect()
-                    finally:
-                        b_state.destroy()
-                    parts = [p for r in blobs for p in pickle.loads(r.blob)]
-                    state, m = _round(spec, state, parts, log)
-                    m["edges_processed"] = n_edges
-                    if store is not None:
-                        _write_state(store, ss, spec, ids, state)
-                        store.log(ss, len(ids), m)
-                    log.append(m | {"superstep_sec": time.time() - t0, "superstep": ss})
-                    if m["_halted"]:
-                        break
-    finally:
-        b_ids.destroy()
+    with _placement(graph, spec, P, ids) as parts:
+        for ss in range(start, max_rounds):
+            t0 = time.time()
+            state, m = _round(spec, state, parts(state), log)
+            m["edges_processed"] = n_edges
+            if store is not None:
+                _write_state(store, ss, spec, ids, state)
+                store.log(ss, len(ids), m)
+            log.append(m | {"superstep_sec": time.time() - t0, "superstep": ss})
+            if m["_halted"]:
+                break
     return _result(spark, spec, ids, state, log[-1]["superstep"] + 1 if log else start, log)
 
 

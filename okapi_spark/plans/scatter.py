@@ -93,6 +93,7 @@ class Scatter:
     edges: DataFrame  # the cached layout: frame columns (+ salt)
     broadcast: bool
     shards: DataFrame | None  # (id, nsalt) in salted mode
+    nsalt: Callable[[str], Column] | None  # nsalt of an out-degree column (salted mode)
 
     def join(self, state: DataFrame, *carry: str | Column, broadcast: bool = False) -> DataFrame:
         """Edges ⋈ state on src: each edge row gains its src's ``carry``
@@ -107,8 +108,14 @@ class Scatter:
         ``msgs`` on id, projected to ``cols`` (+ the carried nsalt)."""
         return state.join(msgs, "id", "left").select(*cols, *([] if self.broadcast else ["nsalt"]))
 
-    def with_shards(self, df: DataFrame) -> DataFrame:
-        """``df`` (id, ...) plus each vertex's shard count (salted mode)."""
+    def with_shards(self, df: DataFrame, deg: str | None = None) -> DataFrame:
+        """``df`` (id, ...) plus each vertex's shard count (salted mode).
+        A ``df`` that carries its out-degree column ``deg`` derives it
+        in place: the census lookup is a left join, and Spark estimates
+        a join's size as the product of its sides, which costs every
+        later join on the state its broadcast."""
+        if deg is not None:
+            return df.withColumn("nsalt", self.nsalt(deg))
         return df.join(self.shards, "id", "left").select(
             *df.columns, F.coalesce("nsalt", F.lit(1)).alias("nsalt")
         )
@@ -137,9 +144,14 @@ def plan(graph, name: str, frame: Callable[[], DataFrame], P: int, broadcast: bo
     """The scatter plan of ``frame()`` (src, dst, <value cols>) over P
     partitions; its layout is built and materialized once per (Graph,
     name, P, broadcast)."""
-    shards = None
+    shards = shard_expr = None
     if not broadcast:
-        nsalt = shard_count_expr("out_deg", P, graph.num_edges())
+        n_edges = graph.num_edges()
+
+        def shard_expr(deg: str) -> Column:
+            return shard_count_expr(deg, P, n_edges)
+
+        nsalt = shard_expr("out_deg")
         census = graph.degree_weights()
         shards = census.select(F.col("src").alias("id"), nsalt.alias("nsalt"))
 
@@ -163,4 +175,4 @@ def plan(graph, name: str, frame: Callable[[], DataFrame], P: int, broadcast: bo
             df.count()
         return df
 
-    return Scatter(graph.derived(("scatter", name, P, broadcast), build), broadcast, shards)
+    return Scatter(graph.derived(("scatter", name, P, broadcast), build), broadcast, shards, shard_expr)

@@ -1,16 +1,22 @@
 """The csr fixpoint runner: every physical path agrees on every input.
 
-For each csr operator the fused placement (all rounds in one job), the
-per-round placement (fuse window patched to 0) and a checkpointed run
-stopped after k rounds and resumed must be BIT-identical — they call
-the same step/merge functions. Each is also compared with
-``mode="sql"``: exactly for the integer operators and shortest paths,
-within 1e-12 for PageRank and SybilRank. Plus job-count pins, the
-degenerate-input regressions and the read-only sidecar contract.
+For each csr operator the local placement (every round in the driver),
+the staged per-round placement (fuse window patched to 0) and a
+checkpointed run stopped after k rounds and resumed — in the same or
+in the other placement — must be BIT-identical: they call the same
+step/merge functions over blocks packed in one canonical row order.
+Each is also compared with ``mode="sql"``: exactly for the integer
+operators and shortest paths, within 1e-12 for PageRank and SybilRank;
+triangle counts agree exactly across the local, staged and sql plans.
+Plus job-count pins per placement, the degenerate-input regressions,
+the staging-dir sweep and the read-only sidecar contract.
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import tempfile
 import uuid
 
 import numpy as np
@@ -24,6 +30,7 @@ from okapi_spark.operators.lpa import label_propagation
 from okapi_spark.operators.pagerank import pagerank
 from okapi_spark.operators.sssp import mssp, sssp
 from okapi_spark.operators.sybilrank import sybilrank
+from okapi_spark.operators.triangles import triangle_count
 from okapi_spark.plans import csr_blocks
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.broadcast import STATE_BROADCAST_BUDGET_BYTES
@@ -113,7 +120,7 @@ def test_csr_paths_agree(spark, monkeypatch, tmp_path, op, inp):
     # several blocks per task set, so per-round jobs span several tasks
     monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 4)
     g = _graph(spark, inp)
-    fused = run(g, "csr", None, None)
+    fused = run(g, "csr", None, None)  # the local placement
     if op in AUTO_CSR:
         auto = run(g, "auto", None, None)
         assert (auto.plan["requested"], auto.plan["resolved"]) == ("auto", "csr")
@@ -154,10 +161,41 @@ def test_mssp_duplicate_source_rows(spark, monkeypatch):
     assert rows.count((7, 7, 0.0)) == 1
 
 
-def test_pagerank_csr_fixed_iters_matches_sql_and_reuses_blocks(spark):
+@pytest.mark.parametrize("inp", list(INPUTS))
+def test_triangle_paths_agree(spark, monkeypatch, tmp_path, inp):
+    """The local count (driver-side key array), the staged count (fuse
+    window patched to 0, and an explicit ``block_dir``) and the sql
+    wedge plan count exactly the same triangles on every input."""
+    g = _graph(spark, inp)
+    local = triangle_count(g, mode="csr")
+    assert local == triangle_count(g, mode="sql")
+    assert local == triangle_count(g, mode="csr", block_dir=str(tmp_path))
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
+    assert local == triangle_count(g, mode="csr")
+
+
+def test_store_resumes_across_placements(spark, monkeypatch, tmp_path):
+    """A checkpoint store written by one placement resumes bit-identically
+    in the other: both write the same (id, state) parquet."""
+    g = _graph(spark, "random")
+    want = pagerank(g, iterations=6, mode="csr")
+    for first, second in ((0, fx._FUSE_MAX_EDGES), (fx._FUSE_MAX_EDGES, 0)):
+        store = CheckpointStore(str(tmp_path / f"pr{first}"))
+        with monkeypatch.context() as mp:
+            mp.setattr(fx, "_FUSE_MAX_EDGES", first)
+            pagerank(g, iterations=3, mode="csr", store=store)
+        with monkeypatch.context() as mp:
+            mp.setattr(fx, "_FUSE_MAX_EDGES", second)
+            _same_run(want, pagerank(g, iterations=6, mode="csr", store=store))
+        assert [e["superstep"] for e in store.lineage()] == list(range(6))
+
+
+def test_pagerank_csr_fixed_iters_matches_sql_and_reuses_blocks(spark, monkeypatch):
     """Fixed-iteration csr ranks match the sql broadcast plan, the
     metrics_log keeps the bench-consumed keys, and a second call on
-    the same Graph reuses the memoized staged blocks."""
+    the same Graph reuses the memoized staged blocks (staged
+    placement: fuse window patched to 0)."""
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
     rng = np.random.default_rng(9)
     edges = [(i, j, 1.0) for i in range(1, 91) for j in range(1, 91) if i != j and rng.random() < 0.06]
     g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long, weight double"))
@@ -192,21 +230,43 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_csr_operator_on_warm_graph_is_one_job(spark):
-    g = _graph(spark, "two_components")
+def _csr_calls(g: Graph) -> dict:
     trusted = _trusted(g)
-    calls = {
+    return {
         "pagerank": lambda: pagerank(g, mode="csr"),
-        "pagerank_auto": lambda: pagerank(g),
         "sybilrank": lambda: sybilrank(g, trusted, mode="csr"),
         "cc": lambda: connected_components(g, mode="csr"),
         "lpa": lambda: label_propagation(g, iterations=4, mode="csr"),
         "sssp": lambda: sssp(g, 1, mode="csr"),
         "mssp": lambda: mssp(g, [1, 7], mode="csr"),
     }
-    for name, call in calls.items():
+
+
+def test_csr_operator_on_warm_graph_is_one_job(spark, monkeypatch):
+    """Staged placement (fuse window patched to 0): each round of a warm
+    csr call is ONE kernel job — no staging, id gather or metric job."""
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
+    g = _graph(spark, "two_components")
+    for name, call in _csr_calls(g).items():
         call()  # cold: stages the blocks, gathers the ids
-        assert _jobs(spark, call) == 1, name
+        warm = []
+        assert _jobs(spark, lambda: warm.append(call())) == warm[0].supersteps, name
+
+
+def test_csr_operator_on_warm_graph_runs_no_job(spark):
+    """Local placement: once a Graph's local layout is gathered, a csr
+    call (and auto PageRank, CC and LPA, and the csr triangle count)
+    runs no Spark job at all."""
+    g = _graph(spark, "two_components")
+    calls = _csr_calls(g) | {
+        "pagerank_auto": lambda: pagerank(g),
+        "cc_auto": lambda: connected_components(g),
+        "lpa_auto": lambda: label_propagation(g, iterations=4),
+        "triangles": lambda: triangle_count(g),
+    }
+    for name, call in calls.items():
+        call()  # cold: gathers the local layout
+        assert _jobs(spark, call) == 0, name
 
 
 def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
@@ -221,7 +281,7 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     assert pr.plan == {
         "requested": "auto", "resolved": "csr", "n_edges": m, "fuse_max_edges": fx._FUSE_MAX_EDGES,
         "state_bytes": 32 * n, "state_budget_bytes": STATE_BROADCAST_BUDGET_BYTES, "store": False,
-        "state_broadcast": None,
+        "state_broadcast": None, "placement": "local",
     }
     resolved = {
         "pr_store": pagerank(g, iterations=1, store=CheckpointStore(str(tmp_path / "pr"))),
@@ -250,9 +310,11 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     assert label_propagation(g, iterations=2).plan["resolved"] == "csr"
     assert pagerank(g, iterations=1, mode="csr", store=CheckpointStore(str(tmp_path / "pr_csr"))).plan[
         "resolved"] == "csr"
+    assert all(res.plan["placement"] is None for res in resolved.values())
     monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
     for res in (pagerank(g, iterations=1), connected_components(g), label_propagation(g, iterations=1)):
         assert (res.plan["resolved"], res.plan["fuse_max_edges"]) == ("sql", 0)
+    assert pagerank(g, iterations=1, mode="csr").plan["placement"] == "staged"
 
 
 @pytest.mark.parametrize("kw", ["store", "state_broadcast"])
@@ -272,10 +334,12 @@ def test_auto_sql_pagerank_builds_one_vertex_dictionary(spark, tmp_path, kw):
         g.unpersist()
 
 
-def test_checkpointed_pagerank_jobs(spark, tmp_path):
-    """A checkpointed csr PageRank of N supersteps on a warm Graph is N
-    kernel jobs: the driver writes and reads the NumPy checkpoints
-    itself, so there is no per-superstep gather, count or parquet job."""
+def test_checkpointed_pagerank_jobs(spark, monkeypatch, tmp_path):
+    """A checkpointed staged csr PageRank of N supersteps on a warm Graph
+    is N kernel jobs (fuse window patched to 0): the driver writes and
+    reads the NumPy checkpoints itself, so there is no per-superstep
+    gather, count or parquet job."""
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
     g = _graph(spark, "star_hub")
     pagerank(g, mode="csr", iterations=1)
     store = CheckpointStore(str(tmp_path / "pr"))
@@ -283,6 +347,39 @@ def test_checkpointed_pagerank_jobs(spark, tmp_path):
     assert _jobs(spark, lambda: pagerank(g, mode="csr", iterations=4, store=store)) == 1
     # the store stays readable by Spark, one (id, rank) row per vertex
     assert store.load(spark, 3).count() == g.num_vertices()
+
+
+def test_checkpointed_local_superstep_runs_no_job(spark, tmp_path):
+    """In the fuse window a checkpointed csr PageRank runs every round in
+    the driver and writes its checkpoints with pyarrow: no Spark job
+    per superstep, and a resume runs none either."""
+    g = _graph(spark, "star_hub")
+    pagerank(g, mode="csr", iterations=1)
+    store = CheckpointStore(str(tmp_path / "pr"))
+    assert _jobs(spark, lambda: pagerank(g, mode="csr", iterations=3, store=store)) == 0
+    res = pagerank(g, mode="csr", iterations=4, store=store)
+    assert res.supersteps == 4 and len(store.lineage()) == 4
+    assert _jobs(spark, lambda: pagerank(g, mode="csr", iterations=5, store=store)) == 0
+    assert store.load(spark, 4).count() == g.num_vertices()
+
+
+def test_orphaned_staging_dirs_are_swept(spark):
+    """Staging dirs carry their owner pid; a new one removes the dirs
+    whose owner is dead (a SIGKILLed or OOM-killed driver never runs
+    its atexit sweep) and keeps a live owner's."""
+    proc = subprocess.Popen(["true"])
+    proc.wait()  # a pid that is gone
+    root = tempfile.gettempdir()
+    dead = tempfile.mkdtemp(prefix=f"okapi_csr_blocks_pid{proc.pid}_", dir=root)
+    open(os.path.join(dead, "b-1-0.src.npy"), "w").close()
+    mine = csr_blocks.default_block_dir(spark)
+    try:
+        assert os.path.basename(mine).startswith(f"okapi_csr_blocks_pid{os.getpid()}_")
+        assert not os.path.exists(dead)
+        csr_blocks.default_block_dir(spark)  # sweeping again spares the live owner's dirs
+        assert os.path.isdir(mine)
+    finally:
+        csr_blocks._cleanup_all_dirs()
 
 
 def test_degenerate_inputs(spark):

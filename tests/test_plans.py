@@ -287,3 +287,44 @@ def test_triangle_orientation_array_plan(spark):
     assert got == expected > 0
     for d in extras:
         d.unpersist()
+
+
+def test_salted_spinner_state_keeps_broadcast_joins(spark, monkeypatch):
+    """Salted Spinner derives each vertex's ``nsalt`` from the degree its
+    state already carries, not by a left join with the shard census: a
+    join's size estimate is the product of its sides, and on that
+    estimate round 0's inner ``hist ⋈ state`` join lost its broadcast
+    and ran as a SortMergeJoin. The state keeps its own size estimate,
+    and the only sort-merge joins left in round 0's persisted decision
+    table are its two left joins onto the state."""
+    from okapi_spark.operators.lpa import spinner_partition
+    from okapi_spark.plans import scatter
+
+    persisted = []
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    persist = cls.persist
+
+    def spy(self, *a, **k):
+        persisted.append(self)
+        return persist(self, *a, **k)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    g = Graph.from_edges(generate_edges(spark, 20_000, 2_000))
+    try:
+        sym = g.symmetrize()
+        sc = scatter.plan(sym, "w", lambda: sym.edges.select("src", "dst", F.col("weight").alias("w")), 4, False)
+        verts = sym.degree_weights().select(F.col("src").alias("id"), F.col("out_deg").alias("deg"))
+
+        def size(df):
+            return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+        assert size(sc.with_shards(verts, deg="deg")) < 2 * size(verts)  # not a product
+        sym.unpersist()
+
+        spinner_partition(g, k=4, max_iterations=1, seed=3, num_partitions=4, state_broadcast=False)
+        decided = [df for df in persisted if "want" in df.columns][0]
+        plan = decided._jdf.queryExecution().executedPlan().toString()
+        smj = [line for line in plan.splitlines() if "SortMergeJoin" in line]
+        assert all("LeftOuter" in line for line in smj), smj
+    finally:
+        g.unpersist()

@@ -84,7 +84,7 @@ def test_symmetric_distinct_fast_path_matches(spark):
     assert sf == ss
 
 
-def test_triangle_count_csr_matches_sql(spark):
+def test_triangle_count_csr_matches_sql(spark, monkeypatch):
     """mode='csr' (resident staged blocks, zero wedge exchange) must
     count exactly what the sql wedge-join plan counts — toy fixture,
     oracle graph, and both canonicalization paths; invariant to the
@@ -102,8 +102,13 @@ def test_triangle_count_csr_matches_sql(spark):
                 edges.append((i, j, 1.0))
     g = Graph.from_edges(toy_edges(spark, edges))
     want_total, _ = triangle_oracle([(s, d) for s, d, _ in edges])
-    assert triangle_count(g, mode="csr", num_partitions=8) == want_total
-    assert triangle_count(g, mode="csr", num_partitions=32) == want_total
+    assert triangle_count(g, mode="csr") == want_total  # local placement
+    from okapi_spark.plans import csr_fixpoint as fx
+
+    with monkeypatch.context() as mp:  # staged placement
+        mp.setattr(fx, "_FUSE_MAX_EDGES", 0)
+        assert triangle_count(g, mode="csr", num_partitions=8) == want_total
+        assert triangle_count(g, mode="csr", num_partitions=32) == want_total
 
     # hub star + clique: pivot out-degree above a forced tiny bucket
     # cap exercises the per-(segment, i) tail-slice path
@@ -152,19 +157,27 @@ def test_triangle_count_csr_hashed_ids_densify(spark, monkeypatch):
     # — the gate guards the STAGING pass.
     g2 = Graph.from_edges(df)
     from okapi_spark.plans import broadcast as B
+    from okapi_spark.plans import csr_fixpoint as fx
 
+    # the broadcast only exists in the staged placement (fuse window 0);
+    # inside the window the driver relabels its own gathered copy
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
     monkeypatch.setattr(B, "auto_state_broadcast", lambda *a, **k: False)
     with pytest.raises(ValueError, match="mode='sql'"):
         triangle_count(g2, mode="csr")
 
 
-def test_triangle_csr_staged_layout_memoized(spark):
+def test_triangle_csr_staged_layout_memoized(spark, monkeypatch):
     """Round-6: the staged pivot/membership layout is memoized per
     Graph — a second count reuses it (deg/stage phases report 0.0) and
-    Graph.unpersist() removes the block files."""
+    Graph.unpersist() removes the block files (staged placement: fuse
+    window patched to 0)."""
     import os
 
     from okapi_spark.operators.triangles import _triangle_count_csr
+    from okapi_spark.plans import csr_fixpoint as fx
+
+    monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
 
     rng = np.random.default_rng(11)
     edges = []
