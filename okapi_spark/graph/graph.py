@@ -153,17 +153,6 @@ class Graph:
             F.count("*").alias("in_deg")
         )
 
-    def degree_histogram(self) -> DataFrame:
-        """log2-bucketed out-degree histogram — the skew census used to
-        pick salting thresholds (SURVEY.md §4.2.2)."""
-        return (
-            self.out_degrees()
-            .withColumn("bucket", F.floor(F.log2("out_deg")))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n_vertices"), F.max("out_deg").alias("max_deg"))
-            .orderBy("bucket")
-        )
-
     def symmetrize(self) -> "Graph":
         """Undirected view: add reverse edges, dedupe — ReverseEdges
         semantics (common/computation/ReverseEdges.java:36-63)."""

@@ -6,11 +6,16 @@ w(a,b) > w(a,c) + w(c,b) — a shorter indirect path exists. The
 reference enumerates triangles by message passing and issues
 removeEdgesRequest for the heavy edge (both directions, :175-190).
 
-Spark: the weighted triangle join plan marks violating edges; removal
-is one anti-join (functional mutation). The ``chunks`` knob reproduces
-ScalableSemimetric's megastep staging (:95-104) — slice wedge starts
-by hash of the low vertex — though Spark's spilling shuffle makes it
-optional until wedge counts explode at extreme scale.
+Spark: the triangles are ``triangles.py``'s enumeration
+(``triangles_df``, its degree-oriented wedge plan, whose oriented edge
+set stays memoized on the Graph until ``Graph.unpersist()``); the
+three canonical edge weights (``triangles._canonical``: the largest
+weight of each unordered pair) are joined onto each triangle and the
+violating edges marked; removal is one anti-join (functional
+mutation). The ``chunks`` knob reproduces ScalableSemimetric's
+megastep staging (:95-104) as the triangle plan's pivot passes, though
+Spark's spilling shuffle makes it optional until wedge counts explode
+at extreme scale.
 """
 
 from __future__ import annotations
@@ -19,64 +24,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from okapi_spark.graph.graph import Graph
-
-
-def _canonical_weighted(graph: Graph) -> DataFrame:
-    if graph.symmetric_distinct:
-        # both directions carry the same weight in a symmetric-distinct
-        # graph, so src<dst picks each pair once — no agg shuffle
-        return graph.edges.filter(F.col("src") < F.col("dst")).select(
-            F.col("src").alias("u"), F.col("dst").alias("v"), F.col("weight").alias("w")
-        )
-    return (
-        graph.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-            "weight",
-        )
-        .groupBy("u", "v")
-        .agg(F.max("weight").alias("w"))
-    )
+from okapi_spark.operators.triangles import _canonical, triangles_df
 
 
 def semimetric_edges(graph: Graph, chunks: int = 1) -> DataFrame:
     """(u, v, w) canonical edges that are semi-metric in ≥1 triangle."""
-    e = _canonical_weighted(graph)
-    parts = []
-    for c in range(chunks):
-        e1 = e.alias("e1")
-        if chunks > 1:
-            e1 = e1.filter(F.pmod(F.xxhash64(F.col("u")), F.lit(chunks)) == c)
-        tri = (
-            e1.join(e.alias("e2"), F.col("e1.v") == F.col("e2.u"))
-            .join(
-                e.alias("e3"),
-                (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-            )
-            .select(
-                F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v").alias("c"),
-                F.col("e1.w").alias("wab"), F.col("e2.w").alias("wbc"), F.col("e3.w").alias("wac"),
-            )
-        )
-        # in triangle (a,b,c): test each of the three edges
-        viol = (
-            tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .where(F.col("wab") > F.col("wbc") + F.col("wac"))
-            .unionByName(
-                tri.select(F.col("b").alias("u"), F.col("c").alias("v"))
-                .where(F.col("wbc") > F.col("wab") + F.col("wac"))
-            )
-            .unionByName(
-                tri.select(F.col("a").alias("u"), F.col("c").alias("v"))
-                .where(F.col("wac") > F.col("wab") + F.col("wbc"))
-            )
-        )
-        parts.append(viol)
-    allviol = parts[0]
-    for p in parts[1:]:
-        allviol = allviol.unionByName(p)
-    return allviol.distinct().join(e, ["u", "v"]).select("u", "v", "w")
+    e = _canonical(graph)
+
+    def weight(u, v, name):
+        return e.select(F.col("u").alias(u), F.col("v").alias(v), F.col("w").alias(name))
+
+    tri = (
+        triangles_df(graph, chunks)
+        .join(weight("low", "mid", "wab"), ["low", "mid"])
+        .join(weight("mid", "high", "wbc"), ["mid", "high"])
+        .join(weight("low", "high", "wac"), ["low", "high"])
+    )
+
+    # in triangle (low, mid, high): test each of the three edges
+    def viol(u, v, w, x, y):
+        edge = F.struct(F.col(u).alias("u"), F.col(v).alias("v"), F.col(w).alias("w"))
+        return F.when(F.col(w) > F.col(x) + F.col(y), edge)
+
+    marked = F.array(
+        viol("low", "mid", "wab", "wbc", "wac"),
+        viol("mid", "high", "wbc", "wab", "wac"),
+        viol("low", "high", "wac", "wab", "wbc"),
+    )
+    return (
+        tri.select(F.explode(marked).alias("e"))
+        .where(F.col("e").isNotNull())
+        .select("e.*")
+        .distinct()
+    )
 
 
 def remove_semimetric(graph: Graph, chunks: int = 1) -> Graph:

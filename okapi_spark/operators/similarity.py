@@ -5,13 +5,17 @@ The reference computes these by broadcasting friend lists as messages
 (graphs/similarity/Jaccard.java:147-185, AdamicAdar.java:105-241,
 ClusteringCoefficient.java:89-192 via common/computation/SendFriends.java)
 with an optional Bloom-filter approximation (Jaccard.java:212-243).
-In Spark none of that is message passing: common-neighbor counting is a
-self-join on the adjacency relation + hash aggregation, which Catalyst
-executes as two shuffles with partial aggregation — the friend list is
-never materialized as a data structure. The Bloom approximation is
-pointless here (the exact join is cheaper than shipping filters) and is
-intentionally not replicated; ``approx`` remains as API parity raising
-to the exact path.
+In Spark none of that is message passing, and none of it enumerates
+wedges here: a common neighbour c of a linked pair (u, v) is exactly
+one triangle {u, v, c}, so all three read ``triangles.py``'s
+enumeration (``triangles_df``) — its degree-oriented wedge plan, whose
+oriented edge set stays memoized on the Graph until
+``Graph.unpersist()``. Jaccard and Adamic-Adar explode each triangle
+into its three (u, v, c) edge rows and aggregate per edge; the
+clustering coefficient counts triangles per corner. The Bloom
+approximation is pointless here (the exact plan is cheaper than
+shipping filters) and is intentionally not replicated; ``approx``
+selects the MinHash estimate instead.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from okapi_spark.graph.graph import Graph
+from okapi_spark.operators.triangles import triangles_df, triangles_per_vertex_all
 
 
 def _adj(graph: Graph) -> DataFrame:
@@ -32,24 +37,26 @@ def _adj(graph: Graph) -> DataFrame:
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
+def _triangle_edges(graph: Graph) -> DataFrame:
+    """(u, v, c): every triangle of ``triangles_df`` as its three edges
+    u < v, each with the triangle's third vertex c — one row per common
+    neighbour c of each linked pair (Jaccard.java:169 message∩adjacency
+    probe)."""
+
+    def edge(u, v, c):
+        return F.struct(F.col(u).alias("u"), F.col(v).alias("v"), F.col(c).alias("c"))
+
+    rows = F.explode(F.array(
+        edge("low", "mid", "high"), edge("low", "high", "mid"), edge("mid", "high", "low")
+    ))
+    return triangles_df(graph).select(rows.alias("t")).select("t.*")
+
+
 def common_neighbors(graph: Graph) -> DataFrame:
     """(u, v, common) for canonical pairs u<v that share ≥1 neighbor AND
-    are connected — the per-edge intersection size both similarity
-    measures start from (Jaccard.java:169 message∩adjacency probe)."""
-    adj = _adj(graph)
-    a, b = adj.alias("a"), adj.alias("b")
-    wedges = a.join(
-        b,
-        (F.col("a.dst") == F.col("b.dst")) & (F.col("a.src") < F.col("b.src")),
-    ).select(F.col("a.src").alias("u"), F.col("b.src").alias("v"), F.col("a.dst").alias("c"))
-    linked = adj.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    return (
-        wedges.join(linked, ["u", "v"], "left_semi")
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("common"))
-    )
+    are connected — the per-edge intersection size Jaccard starts
+    from."""
+    return _triangle_edges(graph).groupBy("u", "v").agg(F.count("*").alias("common"))
 
 
 def jaccard(graph: Graph, distance: bool = False, approx: bool = False) -> DataFrame:
@@ -123,16 +130,11 @@ def adamic_adar(graph: Graph, distance: bool = False) -> DataFrame:
     over common neighbors). Edges without common neighbors get 0."""
     adj = _adj(graph)
     deg = adj.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    a, b = adj.alias("a"), adj.alias("b")
-    wedges = a.join(
-        b,
-        (F.col("a.dst") == F.col("b.dst")) & (F.col("a.src") < F.col("b.src")),
-    ).select(F.col("a.src").alias("u"), F.col("b.src").alias("v"), F.col("a.dst").alias("c"))
     linked = adj.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
     scored = (
-        wedges.join(linked, ["u", "v"], "left_semi")
+        _triangle_edges(graph)
         .join(deg.withColumnRenamed("id", "c"), "c")
         .groupBy("u", "v")
         # decimal sum: exact, order-insensitive addition so the result
@@ -159,8 +161,6 @@ def clustering_coefficient(graph: Graph) -> DataFrame:
     Reference formula (ClusteringCoefficient.java:149-154): value =
     #closed-ordered-neighbor-pairs / (k(k−1)); each triangle at v
     closes TWO ordered pairs, so this equals 2·tri(v)/(k(k−1))."""
-    from okapi_spark.operators.triangles import triangles_per_vertex_all
-
     adj = _adj(graph)
     deg = adj.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     tri = triangles_per_vertex_all(graph)

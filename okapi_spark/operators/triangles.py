@@ -26,6 +26,11 @@ is orders of magnitude smaller (BENCH.md round-3).
 
 For extreme cases the ``chunks`` knob (ScalableSemimetric.java:67-113
 megastep precedent) processes pivot-vertex slices in passes.
+
+This is the engine's only triangle enumeration: Jaccard, Adamic-Adar,
+the clustering coefficient (similarity.py) and semimetric edges
+(semimetric.py) read ``triangles_df``, so all of them share the
+Graph-memoized oriented edge set.
 """
 
 from __future__ import annotations
@@ -54,22 +59,27 @@ ONE_SHOT_ARRAY_BUDGET_BYTES = 256 * 1024 * 1024
 
 
 def _canonical(graph: Graph) -> DataFrame:
-    """Undirected canonical edge set: one row per unordered pair {u,v}.
+    """Undirected canonical edge set: one row (u, v, w) per unordered
+    pair {u, v}, u < v, with w the pair's largest edge weight.
 
     For a ``symmetric_distinct`` graph (induced/symmetrized edge sets)
-    this is the free filter ``src < dst`` — no distinct shuffle of the
-    edge table; otherwise fall back to least/greatest + distinct."""
+    this is the free filter ``src < dst`` — no aggregate shuffle of the
+    edge table, and both directions carry the same weight; otherwise
+    fall back to least/greatest + max aggregate. Callers that read only
+    (u, v) let the optimizer prune the max to a plain distinct."""
     if graph.symmetric_distinct:
         return graph.edges.filter(F.col("src") < F.col("dst")).select(
-            F.col("src").alias("u"), F.col("dst").alias("v")
+            F.col("src").alias("u"), F.col("dst").alias("v"), F.col("weight").alias("w")
         )
     return (
         graph.edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
+            "weight",
         )
-        .distinct()
+        .groupBy("u", "v")
+        .agg(F.max("weight").alias("w"))
     )
 
 
@@ -178,7 +188,7 @@ def _oriented(
         else:
             deg_broadcast = False
     if deg_broadcast == "array":
-        return _oriented_array(graph, e, deg, extras)
+        return _oriented_array(graph, e.select("u", "v"), deg, extras)
     du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
     if deg_broadcast:
@@ -195,7 +205,7 @@ def _oriented(
 
 
 def _oriented_array(
-    graph: Graph, e: DataFrame, deg: DataFrame, extras: list | None = None
+    graph: Graph, e: DataFrame, deg: DataFrame, extras: list
 ) -> tuple[DataFrame, list]:
     """Zero-exchange orientation via a packed-array degree broadcast.
 
@@ -212,7 +222,8 @@ def _oriented_array(
 
     Total order is identical to the join paths: (deg, id) ascending,
     so the three modes produce the same oriented set (equivalence
-    pytest)."""
+    pytest). ``extras`` (the caller's degree handles, empty for the
+    graph-memoized census) are returned with the broadcast handle."""
     import numpy as np
     import pyarrow as pa
 
@@ -242,10 +253,7 @@ def _oriented_array(
             )
 
     oriented = e.mapInArrow(orient, "u long, v long, dv long")
-    # extras=None (legacy direct call): caller owns deg; extras=[] means
-    # deg is the graph-memoized census and must NOT be released here
-    owned = [deg] if extras is None else list(extras)
-    return oriented, owned + [_BroadcastHandle(b)]
+    return oriented, [*extras, _BroadcastHandle(b)]
 
 
 def triangles_df(graph: Graph, chunks: int = 1) -> DataFrame:
@@ -318,11 +326,16 @@ def _triangles_plan(graph: Graph, chunks: int = 1) -> DataFrame:
     # wedge exchange it saves) — see OPTIMIZATION_r06.md.
     closing = o.select(F.col("u").alias("b"), F.col("v").alias("c")).hint("shuffle_hash")
     tri = wedges.join(closing, ["b", "c"], "left_semi")
-    ids = F.array_sort(F.array("a", "b", "c"))
-    tri = tri.select(
-        ids[0].alias("low"), ids[1].alias("mid"), ids[2].alias("high")
+    # codegen'd min/median/max, not array_sort: the optimizer pushes the
+    # inferred not-null filters of downstream joins on (low, mid, high)
+    # into the wedge join, where an interpreted array_sort ran once per
+    # WEDGE (measured ~16s of 41M wedges at sf0.1, semimetric's joins)
+    a, b, c = F.col("a"), F.col("b"), F.col("c")
+    return tri.select(
+        F.least(a, b, c).alias("low"),
+        F.greatest(F.least(a, b), F.least(F.greatest(a, b), c)).alias("mid"),
+        F.greatest(a, b, c).alias("high"),
     )
-    return tri
 
 
 def triangle_count(
@@ -559,33 +572,26 @@ def _tri_csr_kernel(M: int, P: int, epoch: int, block_dir: str):
     return kernel
 
 
-def _local_wedge_keys(graph: Graph):
-    """The in-window pivot layout, memoized on the Graph: ONE Arrow
-    collect of the canonical edge set, rank-relabeled in NumPy by the
-    same (deg, id) order the staged path broadcasts, packed as the
-    single sorted u·M+v key array (both block faces at once, see
-    ``_tri_wedge_pack``). ``(mkeys, M)``, or None for no edges."""
+def _wedge_keys(blk, ids) -> dict:
+    """The in-window pivot layout as a ``resolve`` of the shared local
+    (src, dst, w) layout (``components.weight_layout`` — the gather CC,
+    weighted LPA and SSSP already hold): self-loops dropped, each
+    unordered position pair once (``min·|V|+max``), positions
+    rank-relabeled by the same (deg, id) order the staged path
+    broadcasts, packed as the single sorted u·M+v key array (both block
+    faces at once, see ``_tri_wedge_pack``)."""
     import numpy as np
 
-    from okapi_spark.bsp import no_adaptive
-
-    def build():
-        with no_adaptive(graph.edges.sparkSession):
-            t = _canonical(graph).toArrow()
-        u, v = t.column("u").to_numpy(), t.column("v").to_numpy()
-        if not len(u):
-            return None
-        nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        M = len(nodes)  # ranks are dense [0, |V|)
-        rank = np.empty(M, dtype=np.int64)
-        # nodes ascend, so a stable degree sort breaks ties by id
-        rank[np.argsort(np.bincount(inv, minlength=M), kind="stable")] = np.arange(M)
-        ru, rv = rank[inv[: len(u)]], rank[inv[len(u):]]
-        mkeys = np.sort(np.minimum(ru, rv) * M + np.maximum(ru, rv))
-        mkeys.setflags(write=False)
-        return mkeys, M
-
-    return graph.derived(("tri_local",), build, cleanup=lambda v: None)
+    M = len(ids)  # ranks are dense [0, |V|)
+    a, b = np.searchsorted(ids, blk["src"]), np.searchsorted(ids, blk["dst"])
+    keep = a != b
+    pairs = np.unique(np.minimum(a[keep], b[keep]) * M + np.maximum(a[keep], b[keep]))
+    lo, hi = pairs // M, pairs % M
+    rank = np.empty(M, dtype=np.int64)
+    # positions ascend with ids, so a stable degree sort breaks ties by id
+    rank[np.argsort(np.bincount(np.concatenate([lo, hi]), minlength=M), kind="stable")] = np.arange(M)
+    ru, rv = rank[lo], rank[hi]
+    return {"mkeys": np.sort(np.minimum(ru, rv) * M + np.maximum(ru, rv))}
 
 
 def _triangle_count_csr(
@@ -597,9 +603,11 @@ def _triangle_count_csr(
 
     With |E| inside the csr fuse window (csr_fixpoint._FUSE_MAX_EDGES)
     and no explicit ``block_dir`` the count runs in the driver: the
-    local pivot layout (``_local_wedge_keys``) is gathered once per
-    Graph and the wedge enumeration probes its key array directly — a
-    warm count runs no Spark job (phases ``gather_sec``, ``probe_sec``).
+    pivot key array (``_wedge_keys``) is resolved once per Graph from
+    the shared local (src, dst, w) layout and the wedge enumeration
+    probes it directly — a warm count, or a first count after CC,
+    weighted LPA or SSSP gathered that layout, runs no Spark job
+    (phases ``gather_sec``, ``probe_sec``).
 
     Beyond the window the staged pivot/membership layout is MEMOIZED on the
     Graph (key ``("tri_blocks", P)``) when the caller does not supply
@@ -627,11 +635,14 @@ def _triangle_count_csr(
     from okapi_spark.plans import csr_fixpoint as fx
 
     if block_dir is None and graph.num_edges() <= fx._FUSE_MAX_EDGES:
+        from okapi_spark.operators.components import weight_layout
+
         t0 = time.time()
-        lay = _local_wedge_keys(graph)
+        lay = fx.local(graph, *weight_layout(graph))
+        mkeys = lay.resolved(_wedge_keys)["mkeys"]
         t1 = time.time()
-        n = 0 if lay is None else _count_wedge_block(
-            lay[0], lay[1], functools.partial(_member_hits, lay[0]))
+        n = 0 if not mkeys.size else _count_wedge_block(
+            mkeys, len(lay.ids), functools.partial(_member_hits, mkeys))
         return n, {"gather_sec": round(t1 - t0, 2), "probe_sec": round(time.time() - t1, 2)}
 
     spark = graph.edges.sparkSession
@@ -698,7 +709,7 @@ def _triangle_count_csr(
             try:
                 with no_adaptive(spark):
                     w = (
-                        e.mapInArrow(_orient_ranked, "u long, v long")
+                        e.select("u", "v").mapInArrow(_orient_ranked, "u long, v long")
                         .withColumn("pid", F.pmod(F.col("u"), F.lit(P)).cast("int"))
                         .repartition(P, "pid")
                     )
@@ -759,10 +770,5 @@ def triangles_per_vertex_all(graph: Graph) -> DataFrame:
     the building block for clustering coefficient
     (graphs/ClusteringCoefficient.java:89-192). Materialized
     (localCheckpoint)."""
-    t = _triangles_plan(graph)
-    stacked = (
-        t.select(F.col("low").alias("id"))
-        .unionAll(t.select(F.col("mid").alias("id")))
-        .unionAll(t.select(F.col("high").alias("id")))
-    )
-    return stacked.groupBy("id").agg(F.count("*").alias("triangles")).localCheckpoint(eager=True)
+    corners = _triangles_plan(graph).select(F.explode(F.array("low", "mid", "high")).alias("id"))
+    return corners.groupBy("id").agg(F.count("*").alias("triangles")).localCheckpoint(eager=True)

@@ -269,6 +269,16 @@ def test_csr_operator_on_warm_graph_runs_no_job(spark):
         assert _jobs(spark, call) == 0, name
 
 
+def test_triangle_count_after_cc_runs_no_job(spark):
+    """In the fuse window the csr triangle count resolves its pivot keys
+    from the (src, dst, w) layout CC gathers: its first call on a fresh
+    Graph right after ``connected_components`` runs no Spark job."""
+    g = Graph.from_edges(toy_edges(spark, INPUTS["two_components"][0]))
+    connected_components(g)
+    assert _jobs(spark, lambda: triangle_count(g)) == 0
+    g.unpersist()
+
+
 def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     """mode="auto" resolves through one gate and records it in
     ``res.plan``: csr when fusable, sql with a store, with an explicit
