@@ -132,15 +132,13 @@ def run_supersteps(
     max_supersteps: int,
     halt_fn: HaltFn | None = None,
     store: CheckpointStore | None = None,
-    checkpoint_every: int = 1,
-    verbose: bool = False,
     restore_fn: Callable[[DataFrame], DataFrame] | None = None,
 ) -> BSPResult:
     """Drive the superstep loop to halt/convergence.
 
     Without a store, lineage is truncated with ``localCheckpoint``
-    (fast, not crash-resumable); with a store, parquet write-and-reread
-    every ``checkpoint_every`` supersteps (localCheckpoint in between).
+    (fast, not crash-resumable); with a store, by a parquet
+    write-and-reread every superstep, committed by its ledger line.
     If the store already has lineage, the loop RESUMES from the latest
     complete superstep. ``restore_fn`` is applied once to a restored
     state before resuming — the hook for re-deriving plan-dependent
@@ -170,31 +168,23 @@ def run_supersteps(
         new_state, post = superstep_fn(ss, state)
 
         # materialize exactly once (lineage truncation + metric substrate)
-        if store is not None and (ss % checkpoint_every == 0 or ss == max_supersteps - 1):
+        if store is not None:
             materialized = store.write_state(ss, new_state)
-            on_disk = True
         else:
             materialized = new_state.localCheckpoint(eager=True)
-            on_disk = False
 
         metrics = post(materialized) if callable(post) else dict(post)
         halted = bool(halt_fn(ss, metrics)) if halt_fn else False
         metrics["_halted"] = halted
         if store is not None:
-            if not on_disk and halted:
-                materialized = store.write_state(ss, materialized)
-                on_disk = True
-            if on_disk:
-                store.log(ss, materialized.count(), metrics)
+            store.log(ss, materialized.count(), metrics)
         metrics["superstep_sec"] = time.time() - t0
         metrics["superstep"] = ss
         log.append(metrics)
-        if verbose:
-            print(f"[bsp] {metrics}")
 
         if prev_cached is not None:
             prev_cached.unpersist()
-        prev_cached = materialized if not on_disk else None
+        prev_cached = materialized if store is None else None
         state = materialized
         if halted:
             converged = True

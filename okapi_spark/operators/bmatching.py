@@ -96,10 +96,11 @@ def max_b_matching(
         # round-5 VERDICT "what's wrong" #4) — past that the anti-join
         # falls back to a shuffle join instead of shipping hundreds of
         # MB to every task.
-        from okapi_spark.operators.kcore import BROADCAST_DEAD_BYTES, _DEAD_ROW_BYTES
+        from okapi_spark.operators.kcore import _DEAD_ROW_BYTES
+        from okapi_spark.plans.broadcast import ONE_SHOT_BROADCAST_BUDGET_BYTES
 
         saturated = caps.filter(F.col("cap") <= 0).select("id")
-        if saturated.count() * _DEAD_ROW_BYTES <= BROADCAST_DEAD_BYTES:
+        if saturated.count() * _DEAD_ROW_BYTES <= ONE_SHOT_BROADCAST_BUDGET_BYTES:
             saturated = F.broadcast(saturated)
         edges = (
             edges.join(included.select("u", "v"), ["u", "v"], "left_anti")

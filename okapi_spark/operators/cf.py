@@ -39,15 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from okapi_spark.hashing import hash_uniform
+
 
 def _init_factors(ids: DataFrame, id_col: str, vector_size: int, seed: int, salt: str) -> DataFrame:
     cols = [
-        (
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(f"{salt}:{i}"), F.lit(seed)), F.lit(10**9))
-            .cast("double")
-            / 1e9
-            * 0.01
-        ).alias(f"f{i}")
+        (hash_uniform(F.col(id_col), F.lit(f"{salt}:{i}"), F.lit(seed)) * 0.01).alias(f"f{i}")
         for i in range(vector_size)
     ]
     return ids.select(id_col, F.array(*cols).alias("factors"))

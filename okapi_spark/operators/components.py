@@ -98,18 +98,16 @@ def connected_components(
     store: CheckpointStore | None = None,
     num_partitions: int | None = None,
     state_broadcast: bool | None = None,
-    broadcast_threshold: int | None = None,
-    frontier_broadcast_rows: int | None = None,
     mode: str = "auto",
 ) -> BSPResult:
     """Returns BSPResult state (id long, comp long).
 
     ``state_broadcast``: force the zero-exchange broadcast plan (True),
-    the two-shuffle cluster-scale plan (False), or auto by |V| vs
-    ``broadcast_threshold`` (None). In shuffle mode the frontier is
-    still broadcast adaptively once its row count (known exactly from
-    the previous superstep's changed-metric) drops below
-    ``BROADCAST_FRONTIER_ROWS``.
+    the two-shuffle cluster-scale plan (False), or let the ~32 B/vertex
+    state vs the broadcast budget pick (None, ``res.plan["layout"]``).
+    In shuffle mode the frontier is still broadcast adaptively once its
+    row count (known exactly from the previous superstep's
+    changed-metric) drops below ``BROADCAST_FRONTIER_ROWS``.
 
     ``mode="auto"`` (default, round 6): "csr" when byte-safe, without
     a store or an explicit ``state_broadcast`` (a sql-plan knob) and
@@ -132,19 +130,13 @@ def connected_components(
 
     spec = _hashmin_fixpoint(graph)
     plan = fx.plan(mode, graph, (spec.name, spec.frame), num_partitions, store,
-                   broadcast_threshold, state_broadcast, "frontier")
+                   state_broadcast, "frontier", 32)
     if plan["resolved"] == "csr":
         res = fx.run(graph, spec, max_supersteps, num_partitions, store)
         res.plan = plan
         return res
 
-    if state_broadcast is None:
-        # byte-based gate (kcore.py precedent; VERDICT r3 #4): (id, comp)
-        # state ~32B/row incl. broadcast-relation overhead vs 256MB budget
-        state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
-    if frontier_broadcast_rows is None:
-        frontier_broadcast_rows = BROADCAST_FRONTIER_ROWS
-    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
+    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, plan["layout"] == "broadcast")
     n_edges = graph.num_edges()
     # frontier size from the previous superstep's metric (|V| at ss 0)
     last_changed = [graph.num_vertices()]
@@ -153,7 +145,7 @@ def connected_components(
         # send-on-change: only the frontier scatters; once it is small
         # enough it is broadcast even over the salted layout
         joined = sc.join(state.filter("changed"), "comp",
-                         broadcast=last_changed[0] <= frontier_broadcast_rows)
+                         broadcast=last_changed[0] <= BROADCAST_FRONTIER_ROWS)
         msgs = joined.groupBy(F.col("dst").alias("id")).agg(F.min("comp").alias("cand"))
         new_state = sc.update(
             state, msgs, "id",

@@ -19,12 +19,11 @@ from pyspark.sql import functions as F
 
 from okapi_spark.bsp import CheckpointStore, run_supersteps
 from okapi_spark.graph.graph import Graph
+from okapi_spark.plans import broadcast
 
 # broadcast the pruned-vertex set into the anti-join only while its
-# estimated size (rows × 8B ids + overhead) fits a sane executor
-# broadcast budget — a row-count gate at 20M rows would ship hundreds
-# of MB to every task
-BROADCAST_DEAD_BYTES = 64 * 1024 * 1024
+# estimated size (rows × this) fits the one-shot broadcast budget — a
+# row-count gate at 20M rows would ship hundreds of MB to every task
 _DEAD_ROW_BYTES = 16  # 8B long + per-row structural overhead
 
 
@@ -44,7 +43,7 @@ def kcore(
         deg = state.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
         dead = deg.filter(F.col("deg") < k).select("id").persist(StorageLevel.MEMORY_AND_DISK)
         n_dead = dead.count()
-        if n_dead * _DEAD_ROW_BYTES <= BROADCAST_DEAD_BYTES:
+        if n_dead * _DEAD_ROW_BYTES <= broadcast.ONE_SHOT_BROADCAST_BUDGET_BYTES:
             dead = F.broadcast(dead)
         new_edges = (
             state.join(dead.withColumnRenamed("id", "src"), "src", "left_anti")

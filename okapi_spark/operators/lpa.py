@@ -40,11 +40,11 @@ from pyspark.storagelevel import StorageLevel
 
 from okapi_spark.bsp import BSPResult, CheckpointStore
 from okapi_spark.graph.graph import Graph
+from okapi_spark.hashing import hash_uniform
 from okapi_spark.operators.components import weight_layout
 from okapi_spark.plans import csr_fixpoint as fx
 from okapi_spark.plans.csr_blocks import choose_task_count
 from okapi_spark.plans import scatter
-from okapi_spark.plans.broadcast import auto_state_broadcast
 
 
 def _block_part_hist(blk, ids, part):
@@ -184,7 +184,6 @@ def label_propagation(
     store: CheckpointStore | None = None,
     num_partitions: int | None = None,
     state_broadcast: bool | None = None,
-    broadcast_threshold: int | None = None,
     mode: str = "auto",
 ) -> BSPResult:
     """Classic synchronous LPA. Returns state (id long, lbl long).
@@ -194,13 +193,13 @@ def label_propagation(
 
     ``mode="sql"``: per round one scatter of the source labels on the
     shared sql message plan (plans/scatter.py), then the (dst, label)
-    weight histogram and its argmax. ``state_broadcast``: LPA's label
-    state is a full |V|-row table every round (unlike CC there is no
-    shrinking frontier), so the zero-exchange broadcast layout is only
-    safe when |V| fits a broadcast — auto-selected vs
-    ``broadcast_threshold``; above it the salted layout runs (the
-    exploded state shuffles into the src join, the histogram agg
-    combines map-side).
+    weight histogram and its argmax. LPA's label state is a full |V|-row
+    table every round (unlike CC there is no shrinking frontier), so the
+    zero-exchange broadcast layout runs only while the ~40 B/vertex
+    state fits the broadcast budget; above it the salted layout runs
+    (the exploded state shuffles into the src join, the histogram agg
+    combines map-side). ``res.plan["layout"]`` records which;
+    ``state_broadcast`` forces one.
 
     ``mode="auto"`` (default, round 6): "csr" when it is
     measured-better and byte-safe — fixed-iteration runs without a
@@ -227,19 +226,14 @@ def label_propagation(
     # auto picks csr only for fixed-iteration runs (measured-better
     # there; convergence runs stay on sql)
     plan = fx.plan(mode, graph, (spec.name, spec.frame), num_partitions, store,
-                   broadcast_threshold, state_broadcast, "label",
-                   fixed_iterations=iterations is not None)
+                   state_broadcast, "label", 40, fixed_iterations=iterations is not None)
     if plan["resolved"] == "csr":
         res = fx.run(graph, spec, iterations if iterations is not None else max_supersteps,
                      num_partitions, store)
         res.plan = plan
         return res
 
-    if state_broadcast is None:
-        # byte-based gate (VERDICT r3 #4): label/part state ~32-40B/row
-        state_broadcast = auto_state_broadcast(graph.num_vertices(), row_bytes=40,
-                                               rows_override=broadcast_threshold)
-    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, state_broadcast)
+    sc = scatter.plan(graph, spec.name, spec.frame, num_partitions, plan["layout"] == "broadcast")
 
     def superstep(ss: int, state: DataFrame):
         hist = (
@@ -318,7 +312,6 @@ def spinner_partition(
     repartition: int = 0,
     num_partitions: int | None = None,
     state_broadcast: bool | None = None,
-    broadcast_threshold: int | None = None,
     mode: str = "sql",
 ) -> BSPResult:
     """Spinner balanced k-way partitioning — spinner/Spinner.java:103-736,
@@ -330,10 +323,10 @@ def spinner_partition(
     — run on the shared sql message plan (plans/scatter.py) over the
     symmetrized (src, dst, w) edges: the zero-exchange broadcast layout
     while the ~40 B/row (id, deg, wdeg, part) state fits the broadcast
-    budget (``state_broadcast``, gated like LPA's), else the salted
-    (src, salt) layout, the state then carrying each vertex's
-    ``nsalt``. ``mode="csr"``: the same two jobs run over resident
-    staged CSR blocks (``_block_map``); every |V|-scale scoring /
+    budget (csr_fixpoint.plan, like LPA's; ``state_broadcast`` forces
+    one), else the salted (src, salt) layout, the state then carrying
+    each vertex's ``nsalt``. ``mode="csr"``: the same two jobs run over
+    resident staged CSR blocks (``_block_map``); every |V|-scale scoring /
     migration step, including the hash-uniform coin flips, is the SAME
     SQL in both modes, so the protocol is identical by construction.
     ``res.plan`` records the mode and the byte gate
@@ -399,8 +392,7 @@ def spinner_partition(
 
     try:
         n = g.num_vertices()
-        plan = fx.plan(mode, g, None, num_partitions, None, broadcast_threshold, state_broadcast,
-                       "partition")
+        plan = fx.plan(mode, g, None, num_partitions, None, state_broadcast, "partition", 40)
         total_edges = g.num_edges()  # directed count of the symmetrized graph
         capacity = total_edges * (1.0 + additional_capacity) / k_total
 
@@ -410,10 +402,7 @@ def spinner_partition(
             layout = fx.stage(g, name, frame, num_partitions)
             k_tasks = choose_task_count(total_edges, num_partitions)
         else:
-            if state_broadcast is None:
-                # byte-based gate (VERDICT r3 #4): (id, deg, wdeg, part) ~40B/row
-                state_broadcast = auto_state_broadcast(n, row_bytes=40, rows_override=broadcast_threshold)
-            sc = scatter.plan(g, name, frame, num_partitions, state_broadcast)
+            sc = scatter.plan(g, name, frame, num_partitions, plan["layout"] == "broadcast")
         # the salted layout's join explodes each state row over its nsalt
         shards = [] if sc is None or sc.broadcast else ["nsalt"]
         vcols = ["id", "deg", "wdeg", *shards]
@@ -436,7 +425,7 @@ def spinner_partition(
             down = F.pmod(F.xxhash64("id", F.lit("down"), F.lit(seed)), F.lit(k_total)).cast("int")
             part = F.when(part >= k_total, down).otherwise(part)
         elif repartition > 0:
-            u0 = F.pmod(F.xxhash64("id", F.lit("up"), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
+            u0 = hash_uniform("id", F.lit("up"), F.lit(seed))
             new = (F.lit(k) + F.pmod(F.xxhash64("id", F.lit("new"), F.lit(seed)), F.lit(repartition))).cast("int")
             part = F.when(u0 < F.lit(repartition / k_total), new).otherwise(part)
         state = vertices.select(*vcols, part.alias("part")).localCheckpoint(eager=True)
@@ -579,7 +568,7 @@ def spinner_partition(
                     d = demand.get(p, 0.0)
                     probs[p] = 0.0 if (d == 0 or remaining <= 0) else remaining / d
                 prob_expr = F.create_map(*[x for p in range(k_total) for x in (F.lit(p), F.lit(probs[p]))])
-                u = F.pmod(F.xxhash64("id", F.lit(rnd), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9
+                u = hash_uniform("id", F.lit(rnd), F.lit(seed))
                 migrated = decided.select(
                     *vcols,
                     F.when(

@@ -15,15 +15,15 @@ picks between them (csr_fixpoint.plan): "csr" when there is no
 checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob),
 |E| inside the csr fuse window and the rank state inside the broadcast
 budget — the whole converged fixpoint then runs in the driver after one
-edge gather, instead of ~3 Spark jobs per superstep — else "sql". ``BSPResult.plan`` records the choice.
+edge gather, instead of ~3 Spark jobs per superstep — else "sql".
+``BSPResult.plan`` records the choice.
 
 * ``mode="sql"`` — ``power_sql``: per superstep one scatter of
   ``rank·share`` over the (src, dst, share) frame, summed per dst, on
-  the shared sql message plan (plans/scatter.py). ``state_broadcast``
-  (default: the ~32 B/vertex rank state within the broadcast budget,
-  or |V| ≤ ``broadcast_threshold``) picks its zero-exchange broadcast
-  layout; ``state_broadcast=False`` (cluster-scale |V|) its salted
-  (src, salt) shuffle layout.
+  the shared sql message plan (plans/scatter.py). Its zero-exchange
+  broadcast layout runs while the ~32 B/vertex rank state fits the
+  broadcast budget, else its salted (src, salt) shuffle layout
+  (``res.plan["layout"]``); ``state_broadcast`` forces one.
 * ``mode="csr"`` — the csr fixpoint runner (plans/csr_fixpoint.py):
   shares (src, dst, share) are laid out ONCE per Graph as dst-sorted
   blocks and the rank state lives on the driver as a NumPy array. A
@@ -60,7 +60,6 @@ def pagerank(
     num_partitions: int | None = None,
     iterations: int | None = None,
     state_broadcast: bool | None = None,
-    broadcast_threshold: int | None = None,
     tol_norm: str = "max",
 ) -> BSPResult:
     """Returns BSPResult whose state is (id long, rank double) and whose
@@ -94,7 +93,7 @@ def pagerank(
     # through (and so filling) the vertex dictionary the sql plan's
     # state0 and the staged id gather read
     plan = fx.plan(mode, graph, share_layout(graph, weighted), num_partitions, store,
-                   broadcast_threshold, state_broadcast, "rank")
+                   state_broadcast, "rank", 32)
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if n == 0:
         return BSPResult(spark.createDataFrame([], "id long, rank double"), 0, iterations is None, plan=plan)
@@ -110,11 +109,9 @@ def pagerank(
             spec.halt = lambda m, history: halt(m)
         res = fx.run(graph, spec, rounds, num_partitions, store)
     else:
-        if state_broadcast is None:
-            state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
         state0 = graph.vertices_by_id(num_partitions).select("id", F.lit(1.0 / n).alias("rank"))
-        res = power_sql(graph, weighted, state0, base, damping, num_partitions, state_broadcast,
-                        rounds, halt, store)
+        res = power_sql(graph, weighted, state0, base, damping, num_partitions,
+                        plan["layout"] == "broadcast", rounds, halt, store)
     res.plan = plan
     return res
 

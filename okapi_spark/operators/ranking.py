@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from okapi_spark.hashing import hash_uniform
+
 
 def popularity_ranking(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Returns (user_factors, item_factors) with 1-D popularity scores
@@ -59,10 +61,7 @@ def random_ranking(ratings: DataFrame, vector_size: int = 10, seed: int = 42) ->
 
     def mk(ids: DataFrame, salt: str) -> DataFrame:
         cols = [
-            (
-                F.pmod(F.xxhash64("id", F.lit(f"{salt}:{i}"), F.lit(seed)), F.lit(10**9)).cast("double")
-                / 1e9 - 0.5
-            ).alias(f"f{i}")
+            (hash_uniform("id", F.lit(f"{salt}:{i}"), F.lit(seed)) - 0.5).alias(f"f{i}")
             for i in range(vector_size)
         ]
         return ids.select("id", F.array(*cols).alias("factors"))
@@ -80,10 +79,7 @@ def random_ranking(ratings: DataFrame, vector_size: int = 10, seed: int = 42) ->
 def _init_factors(ids: DataFrame, salt: str, vector_size: int, seed: int,
                   scale: float = 0.1) -> DataFrame:
     cols = [
-        (
-            F.pmod(F.xxhash64("id", F.lit(f"{salt}:{i}"), F.lit(seed)), F.lit(10**9)).cast("double")
-            / 1e9 * scale
-        ).alias(f"f{i}")
+        (hash_uniform("id", F.lit(f"{salt}:{i}"), F.lit(seed)) * scale).alias(f"f{i}")
         for i in range(vector_size)
     ]
     return ids.select("id", F.array(*cols).alias("factors"))

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, run_supersteps
 from okapi_spark.graph.graph import Graph
+from okapi_spark.hashing import hash_uniform
 from okapi_spark.operators.components import apply_min, relax_min, weight_layout
 from okapi_spark.plans import csr_fixpoint as fx
-from okapi_spark.plans.broadcast import auto_state_broadcast
 
 
 def sssp(
@@ -42,21 +42,10 @@ def sssp(
     ``mode="csr"``: relaxation on the csr fixpoint runner over the
     Graph's csr layout (local in the fuse window, staged blocks beyond;
     see ``mssp``) — identical fixpoint, parity-tested.
-    ``res.plan`` records the mode and the byte gate (csr_fixpoint.plan);
-    an explicit "csr" whose |V|-row frontier would not fit the broadcast
-    budget is rejected."""
-    if mode not in ("sql", "csr"):
-        raise ValueError(f"unknown sssp mode {mode!r}")
-    # csr holds (and beyond the fuse window broadcasts) the |V|-row
-    # distance state — the same byte gate as the other csr operators
-    P = num_partitions or graph.edges.sparkSession.sparkContext.defaultParallelism
-    spec = _relax_fixpoint(graph, [int(source)])
-    plan = fx.plan(mode, graph, (spec.name, spec.frame), P, store, None, None, "distance")
-    if mode == "csr":
-        res = fx.run(graph, spec, max_supersteps, P, store)
-    else:
-        res = mssp(graph, [int(source)], max_supersteps, store, mode, num_partitions)
-    res.plan = plan
+    ``res.plan`` records the mode and the byte gate (csr_fixpoint.plan,
+    ~32 B/vertex distance state); an explicit "csr" whose state would
+    not fit the broadcast budget is rejected."""
+    res = _shortest_paths(graph, [int(source)], 32, "distance", max_supersteps, store, mode, num_partitions)
     res.state = res.state.select("id", "dist")
     return res
 
@@ -121,46 +110,54 @@ def mssp(
 
     ``mode="csr"``: relaxation on the csr fixpoint runner over the
     Graph's csr layout (local in the fuse window, staged blocks beyond;
-    see ``_relax_fixpoint``); byte-gated on the worst-case state
-    |V|·|sources| since the driver holds it (and broadcasts it beyond
-    the window)."""
+    see ``_relax_fixpoint``); byte-gated on the worst-case state,
+    48 B per (vertex, source), since the driver holds it (and
+    broadcasts it beyond the window). ``res.plan`` records the gate."""
+    if isinstance(sources, DataFrame):
+        sources = sources.select(F.col("id").cast("long").alias("id"))
+        n_sources = sources.count()
+    else:
+        n_sources = len(sources)
+    return _shortest_paths(graph, sources, 48 * n_sources, "|V|·|sources| distance", max_supersteps,
+                           store, mode, num_partitions)
+
+
+def _shortest_paths(graph: Graph, sources: list[int] | DataFrame, row_bytes: int, what: str,
+                    max_supersteps: int, store: CheckpointStore | None, mode: str,
+                    num_partitions: int | None) -> BSPResult:
+    """SSSP/MSSP through ``csr_fixpoint.plan``: the csr relaxation, or
+    the sql frontier loop (no scatter layout, so no vertex dictionary:
+    the gate counts |V| directly)."""
     if mode not in ("sql", "csr"):
-        raise ValueError(f"unknown mssp mode {mode!r}")
+        raise ValueError(f"unknown shortest-paths mode {mode!r}")
+    spark = graph.edges.sparkSession
+    P = num_partitions or spark.sparkContext.defaultParallelism
+    plan = fx.plan(mode, graph, weight_layout(graph), P, store, None, what, row_bytes, scatter=False)
+    if plan["resolved"] == "csr":
+        origins = sources if not isinstance(sources, DataFrame) else [r.id for r in sources.collect()]
+        res = fx.run(graph, _relax_fixpoint(graph, origins), max_supersteps, P, store)
+    else:
+        res = _relax_sql(graph, sources, max_supersteps, store)
+    res.plan = plan
+    return res
+
+
+def _relax_sql(graph: Graph, sources: list[int] | DataFrame, max_supersteps: int,
+               store: CheckpointStore | None) -> BSPResult:
+    """The sql frontier loop: per superstep the improved (id, origin,
+    dist) rows scatter along their out-edges, min-aggregated per
+    (dst, origin) and full-outer-merged into the state."""
     spark = graph.edges.sparkSession
     edges = graph.edges
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-
     if isinstance(sources, DataFrame):
         state0 = sources.select(
-            F.col("id").cast("long").alias("id"),
-            F.col("id").cast("long").alias("origin"),
-            F.lit(0.0).alias("dist"),
-            F.lit(True).alias("changed"),
+            "id", F.col("id").alias("origin"), F.lit(0.0).alias("dist"), F.lit(True).alias("changed")
         )
-        n_sources = state0.count()
     else:
         state0 = spark.createDataFrame(
             [(int(s), int(s), 0.0, True) for s in sources],
             "id long, origin long, dist double, changed boolean",
         )
-        n_sources = len(sources)
-
-    if mode == "csr":
-        layout = weight_layout(graph)
-        n = (len(fx.local(graph, *layout).ids) if graph.num_edges() <= fx._FUSE_MAX_EDGES
-             else graph.num_vertices())
-        worst_frontier = n * n_sources
-        if not auto_state_broadcast(worst_frontier, row_bytes=48):
-            raise ValueError(
-                f"mode='csr' broadcasts the changed frontier each superstep and "
-                f"the worst case is |V|·|sources|={worst_frontier} rows, "
-                "exceeding the broadcast budget. Use mode='sql'."
-            )
-        origins = sources if not isinstance(sources, DataFrame) else [
-            r.id for r in state0.select("id").collect()
-        ]
-        return fx.run(graph, _relax_fixpoint(graph, origins), max_supersteps, num_partitions, store)
 
     def superstep(ss: int, state: DataFrame) -> tuple[DataFrame, dict]:
         frontier = state.filter("changed").select(F.col("id").alias("src"), "origin", "dist")
@@ -201,5 +198,5 @@ def mssp_sources_by_fraction(graph: Graph, fraction: float, seed: int = 0) -> Da
     must stay distributed (VERDICT r4 "what's wrong" #3) — feed it to
     ``mssp`` directly."""
     v = graph.vertices()
-    u = (F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(10**9)).cast("double")) / 1e9
+    u = hash_uniform("id", F.lit(seed))
     return v.filter(u < fraction).select("id")

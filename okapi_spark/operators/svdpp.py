@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from okapi_spark.hashing import hash_uniform
+
 STEP_SCHEMA = (
     "kind string, id long, src long, b double, f array<double>, w array<double>, rmse double"
 )
@@ -45,20 +47,14 @@ STEP_SCHEMA = (
 
 def _init(ids: DataFrame, vector_size: int, seed: int, salt: str, with_weights: bool) -> DataFrame:
     f_cols = [
-        (
-            F.pmod(F.xxhash64("id", F.lit(f"{salt}:f{i}"), F.lit(seed)), F.lit(10**9)).cast("double")
-            / 1e9 * 0.01
-        ).alias(f"f{i}")
+        (hash_uniform("id", F.lit(f"{salt}:f{i}"), F.lit(seed)) * 0.01).alias(f"f{i}")
         for i in range(vector_size)
     ]
     w_cols = [
-        (
-            F.pmod(F.xxhash64("id", F.lit(f"{salt}:w{i}"), F.lit(seed)), F.lit(10**9)).cast("double")
-            / 1e9 * 0.01
-        ).alias(f"w{i}")
+        (hash_uniform("id", F.lit(f"{salt}:w{i}"), F.lit(seed)) * 0.01).alias(f"w{i}")
         for i in range(vector_size)
     ]
-    b = (F.pmod(F.xxhash64("id", F.lit(f"{salt}:b"), F.lit(seed)), F.lit(10**9)).cast("double") / 1e9)
+    b = hash_uniform("id", F.lit(f"{salt}:b"), F.lit(seed))
     out = ids.select(
         "id",
         b.alias("baseline"),

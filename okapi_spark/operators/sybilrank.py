@@ -35,7 +35,6 @@ def sybilrank(
     iteration_multiplier: float = 1.0,
     total_trust: float | None = None,
     state_broadcast: bool | None = None,
-    broadcast_threshold: int | None = None,
     mode: str = "sql",
     num_partitions: int | None = None,
 ) -> BSPResult:
@@ -45,11 +44,11 @@ def sybilrank(
     ``mode="sql"``: weighted PageRank's sql power plan (``power_sql``,
     base=0, damping=1) over the memoized weighted shares — one scatter
     per power iteration on the shared sql message plan
-    (plans/scatter.py). ``state_broadcast``: the trust state is |V|
-    rows every power iteration, so its zero-exchange broadcast layout
-    is auto-gated on estimated state bytes vs the shared 256MB budget
-    (plans/broadcast.py; ``broadcast_threshold`` overrides with an
-    explicit row count); above it the salted layout runs.
+    (plans/scatter.py). The trust state is |V| rows every power
+    iteration, so its zero-exchange broadcast layout runs while the
+    ~32 B/vertex state fits the broadcast budget (csr_fixpoint.plan),
+    else the salted layout (``res.plan["layout"]``);
+    ``state_broadcast`` forces one.
 
     ``mode="csr"``: the same power iteration as a csr spec
     (``power_fixpoint``, base=0, damping=1) on the csr fixpoint runner
@@ -65,7 +64,7 @@ def sybilrank(
     # |V| from the local layout on in-window csr calls, else through the
     # memoized vertex dictionary (Graph.derived) the sql state0 reads
     plan = fx.plan(mode, graph, share_layout(graph, True), num_partitions, None,
-                   broadcast_threshold, state_broadcast, "trust")
+                   state_broadcast, "trust", 32)
     n = graph.num_vertices()  # scalar memo — no per-call count job
     if total_trust is None:
         total_trust = float(n)
@@ -91,15 +90,12 @@ def sybilrank(
 
         res = fx.run(graph, power_fixpoint(graph, True, init, 0.0, 1.0), power_iterations, num_partitions)
     else:
-        if state_broadcast is None:
-            # byte-budgeted gate (plans/broadcast.py, CC/LPA/PageRank
-            # precedent): (id, rank) ~ 32B/row vs the 256MB budget
-            state_broadcast = plan["state_bytes"] <= plan["state_budget_bytes"]
         seeds = trusted.select("id").distinct().withColumn("is_trusted", F.lit(True))
         state0 = graph.vertices_by_id(num_partitions).join(seeds, "id", "left").select(
             "id", F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0).alias("rank")
         )
-        res = power_sql(graph, True, state0, 0.0, 1.0, num_partitions, state_broadcast, power_iterations)
+        res = power_sql(graph, True, state0, 0.0, 1.0, num_partitions, plan["layout"] == "broadcast",
+                        power_iterations)
     # stored value = trust / weighted degree (the census's Σw)
     deg = graph.degree_weights().select(F.col("src").alias("id"), F.col("wsum").alias("deg"))
     res.state = res.state.join(deg, "id", "left").select(

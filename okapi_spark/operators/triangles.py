@@ -39,23 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from okapi_spark.graph.graph import Graph
-
-# One-shot plans pay the serial driver-side broadcast-relation build
-# against only TWO join uses (vs hundreds for per-superstep state
-# broadcasts), so their economic budget is far below the 256MB
-# iterative default — 64MB (≈2M vertices) per the measured A/B in
-# BENCH.md "Triangle orientation broadcast A/B".
-ONE_SHOT_BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
-
-# The ARRAY orientation path broadcasts two packed int64 numpy arrays
-# (sorted ids + degrees, 16B/vertex) via sc.broadcast's torrent
-# transport instead of a BroadcastHashJoin relation: no driver-side
-# hash-relation build (the serial floor the A/B measured at |V|=6M),
-# ~2x smaller payload, and the lookup is a vectorized searchsorted in
-# mapInArrow. That cheaper floor buys it a 4x wider budget: 256MB ≈
-# 16M vertices. Past this, the shuffle_hash fallback remains the
-# cluster-scale plan (nothing |V|-sized ships anywhere).
-ONE_SHOT_ARRAY_BUDGET_BYTES = 256 * 1024 * 1024
+from okapi_spark.plans import broadcast
 
 
 def _canonical(graph: Graph) -> DataFrame:
@@ -172,8 +156,6 @@ def _oriented(
     ``searchsorted`` in ``mapInArrow`` — still zero edge exchanges but
     without the driver-side hash-relation build that made the
     relation broadcast lose at |V| = 6M (see ``_oriented_array``)."""
-    from okapi_spark.plans.broadcast import auto_state_broadcast
-
     e = _canonical(graph)
     # the |V|-row table feeds both join legs (and the gate's count
     # action): memoized census projection for symmetric graphs, else a
@@ -181,9 +163,9 @@ def _oriented(
     deg, extras = _degree_source(graph, e)
     if deg_broadcast is None:
         n = deg.count()
-        if auto_state_broadcast(n, row_bytes=32, budget_bytes=ONE_SHOT_BROADCAST_BUDGET_BYTES):
+        if n * 32 <= broadcast.ONE_SHOT_BROADCAST_BUDGET_BYTES:
             deg_broadcast = True
-        elif auto_state_broadcast(n, row_bytes=16, budget_bytes=ONE_SHOT_ARRAY_BUDGET_BYTES):
+        elif n * 16 <= broadcast.STATE_BROADCAST_BUDGET_BYTES:
             deg_broadcast = "array"
         else:
             deg_broadcast = False
@@ -624,7 +606,6 @@ def _triangle_count_csr(
 
     from okapi_spark.bsp import no_adaptive
     from okapi_spark.plans.csr_fixpoint import _EPOCH_COUNTER, gather_sorted_arrays
-    from okapi_spark.plans.broadcast import auto_state_broadcast
     from okapi_spark.plans.csr_blocks import (
         cleanup_blocks,
         default_block_dir,
@@ -671,13 +652,11 @@ def _triangle_count_csr(
             # once; the canonical set (src < dst) stages no self-loop
             sum_d, nv = int(row[0]), int(row[1])
             M = nv  # ranks are dense [0, |V|) by construction
-            if not auto_state_broadcast(
-                nv, row_bytes=16, budget_bytes=ONE_SHOT_ARRAY_BUDGET_BYTES
-            ):
+            if nv * 16 > broadcast.STATE_BROADCAST_BUDGET_BYTES:
                 raise ValueError(
                     f"mode='csr' rank-relabels vertices through a packed-array "
-                    f"degree broadcast (16B/vertex); |V|={nv} exceeds the one-shot "
-                    "array budget — use mode='sql' at cluster-scale |V|."
+                    f"degree broadcast (16B/vertex); |V|={nv} exceeds the state broadcast "
+                    "budget — use mode='sql' at cluster-scale |V|."
                 )
             import numpy as np
 

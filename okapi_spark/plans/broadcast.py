@@ -1,46 +1,29 @@
-"""Byte-budget gate for the zero-exchange state-broadcast plans.
+"""The engine's broadcast byte budgets — the one place they live.
 
-The iterative operators' sql plans (PageRank, SybilRank, CC, LPA and
-Spinner, all through plans/scatter.py) have two physical strategies:
-broadcast the full |V|-row vertex state into the scatter layout's edge
-scan (zero shuffle exchanges per superstep), or the shuffle fallback
-(scatter's salted (src, salt) layout). The switch must be sized
-in BYTES, not rows — a 20M-row gate ships ~500MB+ of broadcast hash
-relation to every executor every superstep, which is well past what a
-4-8GB executor tolerates (k-core learned this first: kcore.py's
-BROADCAST_DEAD_BYTES). Budget default 256MB: comfortably inside a
-default 1g broadcast/storage headroom, re-shipped once per superstep.
+Every broadcast-or-shuffle switch is sized in BYTES, not rows — a
+20M-row gate ships ~500MB+ of broadcast relation to every executor,
+which is well past what a 4-8GB executor tolerates. A caller compares
+its row-byte estimate × rows against one of two budgets:
 
-Row-byte estimates are the unsafe-row payload plus broadcast
-hash-relation overhead (~2x), per operator: (id, comp/rank/label) ~
-32B, Spinner's (id, deg, wdeg, part) ~ 40B.
+* ``STATE_BROADCAST_BUDGET_BYTES`` (256MB) — an iterative operator's
+  |V|-row state (csr_fixpoint.plan: PageRank, SybilRank, CC, LPA,
+  Spinner, SSSP/MSSP; row estimates are the unsafe-row payload plus
+  broadcast hash-relation overhead, ~2x), re-shipped once per
+  superstep, and the triangle count's packed-array rank broadcast
+  (16B/vertex through ``sc.broadcast``: no driver-side hash-relation
+  build). Comfortably inside a default 1g broadcast/storage headroom.
+* ``ONE_SHOT_BROADCAST_BUDGET_BYTES`` (64MB, ≈2M vertices at 32B) — a
+  broadcast hash relation the driver builds for one or two joins: the
+  triangle orientation's degree relation (BENCH.md "Triangle
+  orientation broadcast A/B": the serial relation build pays off
+  against only two join uses far below the iterative budget), and the
+  k-core dead set and b-matching saturated set anti-joins (16B/row).
+
+Tests trip a gate by monkeypatching a budget here; callers read it
+through this module at call time.
 """
 
 from __future__ import annotations
 
 STATE_BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
-
-
-def auto_state_broadcast(
-    n_rows: int,
-    row_bytes: int,
-    rows_override: int | None = None,
-    budget_bytes: int | None = None,
-) -> bool:
-    """True -> take the broadcast plan.
-
-    ``rows_override`` preserves the explicit row-count knob (callers
-    passing ``broadcast_threshold=N`` get exactly the old behavior);
-    by default the decision is estimated bytes vs the 256MB budget.
-    """
-    return n_rows * row_bytes <= state_budget_bytes(row_bytes, rows_override, budget_bytes)
-
-
-def state_budget_bytes(
-    row_bytes: int, rows_override: int | None = None, budget_bytes: int | None = None
-) -> int:
-    """The byte budget ``auto_state_broadcast`` compares against: the
-    explicit row-count knob in bytes when given, else the budget."""
-    if rows_override is not None:
-        return rows_override * row_bytes
-    return budget_bytes or STATE_BROADCAST_BUDGET_BYTES
+ONE_SHOT_BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from okapi_spark.bsp import BSPResult, CheckpointStore, no_adaptive
-from okapi_spark.plans.broadcast import state_budget_bytes
+from okapi_spark.plans import broadcast
 from okapi_spark.plans.csr_blocks import (
     choose_task_count, cleanup_blocks, default_block_dir, load_block,
     pid_frame, resolved_arrays, stage_blocks,
@@ -78,49 +78,53 @@ _EPOCH_COUNTER = itertools.count(1)
 
 _GATHER_PANDAS_MAX_ROWS = 1_000_000
 
-# (id, state) bytes per vertex the auto gate budgets for — the csr runner
-# holds the full |V|-row state on the driver (and the staged placement
-# broadcasts it), like the sql broadcast plan
-_STATE_ROW_BYTES = 32
-
-
-def plan(mode: str, graph, layout: tuple | None, P: int, store: CheckpointStore | None,
-         broadcast_threshold: int | None, state_broadcast: bool | None,
-         what: str, **conditions: bool) -> dict:
-    """The plan record of one operator call (``BSPResult.plan``): the
-    requested and resolved mode, the csr placement and the gate values
-    behind the choice.
+def plan(mode: str, graph, frame: tuple | None, P: int, store: CheckpointStore | None,
+         state_broadcast: bool | None, what: str, row_bytes: int, scatter: bool = True,
+         **conditions: bool) -> dict:
+    """The one broadcast gate of the iterative operators, and the plan
+    record of a call (``BSPResult.plan``): the requested and resolved
+    mode, the csr ``placement``, the sql ``layout`` and the gate values
+    behind them. ``row_bytes`` is the operator's per-vertex state
+    estimate; ``state_bytes`` = |V|·``row_bytes`` against
+    ``state_budget_bytes`` (plans/broadcast.py) is the comparison that
+    decides, wherever the state goes — held (and beyond the fuse window
+    broadcast) by the csr runner, or broadcast by the sql scatter plan.
 
     ``mode="auto"`` resolves to "csr" when the fixpoint is fusable — no
     checkpoint store, no explicit ``state_broadcast`` (a sql-plan knob:
     the caller asked for a sql layout), |E| inside the fuse window (the
-    whole fixpoint in the driver) and the |V|-row state inside the
-    broadcast budget — and every operator-specific entry of
-    ``conditions`` holds; else to "sql". An explicit "sql"/"csr" is
-    kept as asked, but an explicit "csr" whose ``what`` state would not
-    fit the budget is rejected.
+    whole fixpoint in the driver) and the state inside the budget — and
+    every operator-specific entry of ``conditions`` holds; else to
+    "sql". An explicit "sql"/"csr" is kept as asked, but an explicit
+    "csr" whose ``what`` state would not fit the budget is rejected.
 
-    ``layout`` is the operator's csr frame as ``(name, frame)``; None
+    A "csr" call's ``placement`` is "local" inside the fuse window (on
+    an operator with a local layout) else "staged"; a "sql" call's
+    ``layout`` is the scatter plan's "broadcast" when the state fits
+    (or ``state_broadcast`` asks for it) else "salted" — None for an
+    operator without a scatter plan (``scatter=False``: SSSP/MSSP).
+
+    ``frame`` is the operator's csr frame as ``(name, frame)``; None
     for an operator with no local placement (Spinner). A csr candidate
     inside the window counts |V| from its local layout — the gather the
-    run reads anyway — so only sql and staged calls build the persisted
-    vertex dictionary (the sql plans' state0 and the staged id gather
-    both read it)."""
+    run reads anyway — so only scatter and staged calls build the
+    persisted vertex dictionary (the scatter plans' state0 and the
+    staged id gather both read it); the others count |V| directly."""
     n_edges = graph.num_edges()
     auto_ok = store is None and state_broadcast is None and all(conditions.values())
-    local_ok = layout is not None and n_edges <= _FUSE_MAX_EDGES
+    local_ok = frame is not None and n_edges <= _FUSE_MAX_EDGES
     if local_ok and (mode == "csr" or (mode == "auto" and auto_ok)):
-        n = len(local(graph, *layout).ids)
+        n = len(local(graph, *frame).ids)
     else:
-        if layout is not None:
+        if frame is not None and (scatter or mode == "csr"):
             graph.vertices_by_id(P)
         n = graph.num_vertices()  # counts through the dictionary when it exists
     rec = {
         "requested": mode,
         "n_edges": n_edges,
         "fuse_max_edges": _FUSE_MAX_EDGES,
-        "state_bytes": n * _STATE_ROW_BYTES,
-        "state_budget_bytes": state_budget_bytes(_STATE_ROW_BYTES, broadcast_threshold),
+        "state_bytes": n * row_bytes,
+        "state_budget_bytes": broadcast.STATE_BROADCAST_BUDGET_BYTES,
         "store": store is not None,
         "state_broadcast": state_broadcast,
         **conditions,
@@ -130,12 +134,14 @@ def plan(mode: str, graph, layout: tuple | None, P: int, store: CheckpointStore 
         raise ValueError(
             f"mode='csr' holds the full {what} state on the driver and broadcasts it "
             f"beyond the fuse window; its {rec['state_bytes']} bytes exceed the broadcast "
-            f"budget of {rec['state_budget_bytes']} bytes. Use mode='sql' "
-            "(state_broadcast=False selects the salted shuffle plan at cluster-scale |V|)."
+            f"budget of {rec['state_budget_bytes']} bytes. Use mode='sql'."
         )
     fusable = auto_ok and n_edges <= _FUSE_MAX_EDGES and fits
     rec["resolved"] = ("csr" if fusable else "sql") if mode == "auto" else mode
     rec["placement"] = ("local" if local_ok else "staged") if rec["resolved"] == "csr" else None
+    rec["layout"] = None
+    if rec["resolved"] == "sql" and scatter:
+        rec["layout"] = "broadcast" if (fits if state_broadcast is None else state_broadcast) else "salted"
     return rec
 
 

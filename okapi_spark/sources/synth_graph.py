@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from okapi_spark.hashing import hash_uniform
+
 
 def generate_edges(
     spark: SparkSession,
@@ -66,7 +68,7 @@ def watts_strogatz(
         F.explode(F.sequence(F.lit(1), F.lit(edges_per_vertex))).alias("off"),
     )
     ring_dst = F.pmod(F.col("src") + F.col("off"), F.lit(n_vertices))
-    u = F.pmod(F.xxhash64("src", "off", F.lit(f"rewire:{seed}")), F.lit(10**9)).cast("double") / 1e9
+    u = hash_uniform("src", "off", F.lit(f"rewire:{seed}"))
     # uniform over [0, n) \ {src}: draw in [0, n-1), shift past src
     rnd = F.pmod(F.xxhash64("src", "off", F.lit(f"target:{seed}")), F.lit(n_vertices - 1))
     rnd_dst = rnd + F.when(rnd >= F.col("src"), F.lit(1)).otherwise(F.lit(0))
@@ -78,6 +80,6 @@ def watts_strogatz(
         )
         .distinct()
     )
-    ut = F.pmod(F.xxhash64("id", F.lit(f"trust:{seed}")), F.lit(10**9)).cast("double") / 1e9
+    ut = hash_uniform("id", F.lit(f"trust:{seed}"))
     labels = base.select("id", (ut < F.lit(float(trust_probability))).alias("is_trusted"))
     return edges, labels

@@ -5,7 +5,9 @@ from __future__ import annotations
 import numpy as np
 
 from okapi_spark.graph.graph import Graph
+from okapi_spark.operators import components
 from okapi_spark.operators.components import connected_components
+from okapi_spark.plans import broadcast
 from tests.conftest import FIVE_VERTEX, toy_edges
 from tests.oracles import components_oracle
 
@@ -38,7 +40,7 @@ def test_cc_multi_component(spark):
     assert got == want
 
 
-def test_cc_shuffle_branch_matches_broadcast(spark):
+def test_cc_shuffle_branch_matches_broadcast(spark, monkeypatch):
     """The cluster-scale two-shuffle plan (state_broadcast=False, no
     adaptive frontier broadcast) must reach the identical fixpoint as
     the zero-exchange broadcast plan."""
@@ -49,9 +51,8 @@ def test_cc_shuffle_branch_matches_broadcast(spark):
     edges = [(s, d, w) for s, d, w in edges if s != d]
     g = Graph.from_edges(toy_edges(spark, edges))
     res_b = connected_components(g, max_supersteps=100, state_broadcast=True)
-    res_s = connected_components(
-        g, max_supersteps=100, state_broadcast=False, frontier_broadcast_rows=0
-    )
+    monkeypatch.setattr(components, "BROADCAST_FRONTIER_ROWS", 0)
+    res_s = connected_components(g, max_supersteps=100, state_broadcast=False)
     assert res_b.converged and res_s.converged
     # an explicit state_broadcast asks for a sql layout
     assert res_b.plan["resolved"] == res_s.plan["resolved"] == "sql"
@@ -99,9 +100,10 @@ def test_cc_csr_matches_oracle_and_sql_plans(spark, monkeypatch):
         assert got == want, f"csr p={nparts}"
 
 
-def test_cc_csr_byte_gate(spark):
+def test_cc_csr_byte_gate(spark, monkeypatch):
     import pytest as _pytest
 
     g = Graph.from_edges(toy_edges(spark, FIVE_VERTEX))
+    monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 32 * 2)
     with _pytest.raises(ValueError, match="broadcast budget"):
-        connected_components(g, mode="csr", broadcast_threshold=2)
+        connected_components(g, mode="csr")

@@ -26,14 +26,13 @@ import pytest
 from okapi_spark.bsp import CheckpointStore
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.components import connected_components
-from okapi_spark.operators.lpa import label_propagation
+from okapi_spark.operators.lpa import label_propagation, spinner_partition
 from okapi_spark.operators.pagerank import pagerank
 from okapi_spark.operators.sssp import mssp, sssp
 from okapi_spark.operators.sybilrank import sybilrank
 from okapi_spark.operators.triangles import triangle_count
-from okapi_spark.plans import csr_blocks
+from okapi_spark.plans import broadcast, csr_blocks
 from okapi_spark.plans import csr_fixpoint as fx
-from okapi_spark.plans.broadcast import STATE_BROADCAST_BUDGET_BYTES
 from tests.conftest import FIVE_VERTEX, toy_edges
 
 STAR = [(0, i, 1.0) for i in range(1, 13)] + [(1, 2, 1.0)]
@@ -290,13 +289,16 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     pr = pagerank(g)
     assert pr.plan == {
         "requested": "auto", "resolved": "csr", "n_edges": m, "fuse_max_edges": fx._FUSE_MAX_EDGES,
-        "state_bytes": 32 * n, "state_budget_bytes": STATE_BROADCAST_BUDGET_BYTES, "store": False,
-        "state_broadcast": None, "placement": "local",
+        "state_bytes": 32 * n, "state_budget_bytes": broadcast.STATE_BROADCAST_BUDGET_BYTES,
+        "store": False, "state_broadcast": None, "placement": "local", "layout": None,
     }
+    with monkeypatch.context() as mp:
+        mp.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 32 * (n - 1))
+        over_budget = pagerank(g, iterations=1)
     resolved = {
         "pr_store": pagerank(g, iterations=1, store=CheckpointStore(str(tmp_path / "pr"))),
         "pr_state_broadcast": pagerank(g, iterations=1, state_broadcast=True),
-        "pr_threshold": pagerank(g, iterations=1, broadcast_threshold=n - 1),
+        "pr_over_budget": over_budget,
         "pr_sql": pagerank(g, iterations=1, mode="sql"),
         "cc_store": connected_components(g, store=CheckpointStore(str(tmp_path / "cc"))),
         "cc_state_broadcast": connected_components(g, state_broadcast=True),
@@ -312,7 +314,10 @@ def test_auto_plan_resolution(spark, monkeypatch, tmp_path):
     for name in ("pr_state_broadcast", "cc_state_broadcast", "lpa_state_broadcast"):
         assert resolved[name].plan["state_broadcast"] is True, name
     assert resolved["cc_salted"].plan["state_broadcast"] is False
-    p = resolved["pr_threshold"].plan
+    for name, res in resolved.items():
+        salted = name in ("cc_salted", "lpa_salted", "pr_over_budget")
+        assert res.plan["layout"] == ("salted" if salted else "broadcast"), name
+    p = resolved["pr_over_budget"].plan
     assert p["state_budget_bytes"] == 32 * (n - 1) < p["state_bytes"]
     assert resolved["pr_sql"].plan["requested"] == "sql"
     assert not resolved["lpa_converge"].plan["fixed_iterations"]
@@ -342,6 +347,63 @@ def test_auto_sql_pagerank_builds_one_vertex_dictionary(spark, tmp_path, kw):
         assert dicts == [("verts_by_id", spark.sparkContext.defaultParallelism)]  # the sql layout width
     finally:
         g.unpersist()
+
+
+def test_sql_sssp_builds_no_vertex_dictionary(spark):
+    """The sql shortest-paths loop reads no vertex dictionary, so its
+    gate counts |V| without building (and persisting) one."""
+    g = Graph.from_edges(toy_edges(spark, FIVE_VERTEX))
+    try:
+        res = sssp(g, 1, mode="sql")
+        assert res.plan["resolved"] == "sql" and res.plan["state_bytes"] == 32 * g.num_vertices()
+        assert not [k for k in g._derived if k[0] == "verts_by_id"]
+    finally:
+        g.unpersist()
+
+
+# name -> (call(g, mode), per-vertex state bytes, whether its sql plan
+# has a scatter layout)
+GATED = {
+    "pagerank": (lambda g, m: pagerank(g, iterations=1, mode=m), 32, True),
+    "sybilrank": (lambda g, m: sybilrank(g, _trusted(g), mode=m), 32, True),
+    "cc": (lambda g, m: connected_components(g, mode=m), 32, True),
+    "lpa": (lambda g, m: label_propagation(g, iterations=1, mode=m), 40, True),
+    "spinner": (lambda g, m: spinner_partition(g, k=2, max_iterations=1, mode=m), 40, True),
+    "sssp": (lambda g, m: sssp(g, 1, mode=m), 32, False),
+    "mssp": (lambda g, m: mssp(g, [1, 2], mode=m), 48 * 2, False),
+}
+
+
+@pytest.mark.parametrize("op", list(GATED))
+def test_one_gate_records_the_plan(spark, monkeypatch, op):
+    """csr_fixpoint.plan decides every iterative operator's physical plan
+    from one estimate — |V| · the operator's state row bytes against the
+    state budget — and records that comparison: a sql call's scatter
+    layout is "broadcast" while the state fits and "salted" once it
+    does not (None for SSSP/MSSP, which have no scatter layout), and an
+    explicit csr call over the budget is refused. LPA's 40 B decide
+    its auto call too: between 32·|V| and 40·|V| it runs salted sql."""
+    call, row_bytes, has_scatter = GATED[op]
+    g = _graph(spark, "two_components")
+    n = g.num_vertices()
+    for budget in (broadcast.STATE_BROADCAST_BUDGET_BYTES, row_bytes * n - 1):
+        monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", budget)
+        p = call(g, "sql").plan
+        assert (p["requested"], p["resolved"], p["placement"]) == ("sql", "sql", None)
+        assert (p["state_bytes"], p["state_budget_bytes"]) == (row_bytes * n, budget)
+        fits = p["state_bytes"] <= p["state_budget_bytes"]
+        assert p["layout"] == (("broadcast" if fits else "salted") if has_scatter else None)
+    with pytest.raises(ValueError, match="broadcast budget"):
+        call(g, "csr")
+    if op == "lpa":
+        monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 36 * n)
+        p = label_propagation(g, iterations=1).plan
+        assert (p["requested"], p["resolved"], p["placement"], p["layout"]) == ("auto", "sql", None, "salted")
+        assert p["state_bytes"] == 40 * n > p["state_budget_bytes"]
+    monkeypatch.undo()
+    p = call(g, "csr").plan
+    assert (p["requested"], p["resolved"], p["layout"]) == ("csr", "csr", None)
+    assert p["placement"] == ("staged" if op == "spinner" else "local")
 
 
 def test_checkpointed_pagerank_jobs(spark, monkeypatch, tmp_path):

@@ -8,6 +8,7 @@ import pytest
 
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.lpa import label_propagation, spinner_partition
+from okapi_spark.plans import broadcast
 from tests.conftest import toy_edges
 
 
@@ -302,13 +303,12 @@ def test_lpa_csr_tie_break_and_random_graph_parity(spark, monkeypatch):
     }
 
 
-def test_lpa_csr_byte_gate(spark):
+def test_lpa_csr_byte_gate(spark, monkeypatch):
     edges = _two_communities()
     g = Graph.from_edges(toy_edges(spark, edges))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="broadcast budget"):
-        label_propagation(g, iterations=1, mode="csr", broadcast_threshold=3)
+    monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 40 * 3)
+    with pytest.raises(ValueError, match="broadcast budget"):
+        label_propagation(g, iterations=1, mode="csr")
 
 
 def test_spinner_csr_matches_sql_full_protocol(spark, monkeypatch):
@@ -344,13 +344,13 @@ def test_spinner_csr_matches_sql_full_protocol(spark, monkeypatch):
         assert got == want, f"csr p={nparts}"
 
 
-def test_spinner_paths_agree_on_a_salted_hub(spark):
+def test_spinner_paths_agree_on_a_salted_hub(spark, monkeypatch):
     """Spinner's three physical paths — the sql broadcast layout, the
     sql salted layout and csr — run the same protocol, so they give a
     bit-identical assignment and migration counters through several
     migrating rounds, here on a weighted graph whose hub (degree > 1024)
     the salted layout shards over nsalt >= 2 keys. Each records its
-    plan; an explicit csr over the broadcast threshold is refused."""
+    plan; an explicit csr over the broadcast budget is refused."""
     from okapi_spark.plans.scatter import shard_count_expr
 
     P = 4
@@ -379,6 +379,7 @@ def test_spinner_paths_agree_on_a_salted_hub(spark):
         assert res.plan["resolved"] == resolved, kw
         assert got == want, kw
         assert mig == want_mig, kw
+    monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 40 * 10)
     with pytest.raises(ValueError, match="broadcast budget"):
-        spinner_partition(g, k=4, max_iterations=1, mode="csr", broadcast_threshold=10)
+        spinner_partition(g, k=4, max_iterations=1, mode="csr")
     g.unpersist()

@@ -97,9 +97,9 @@ def test_sssp_csr_matches_oracle_and_sql(spark, monkeypatch):
         assert res.plan["resolved"] == "csr"
         assert {r.id: r.dist for r in res.state.collect()} == want, f"csr p={nparts}"
     # the csr byte gate is csr_fixpoint.plan's: over budget, csr is refused
-    from okapi_spark.plans import csr_fixpoint as fx
+    from okapi_spark.plans import broadcast
 
-    monkeypatch.setattr(fx, "state_budget_bytes", lambda *a: 0)
+    monkeypatch.setattr(broadcast, "STATE_BROADCAST_BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match="broadcast budget"):
         sssp(g, 0, mode="csr")
 

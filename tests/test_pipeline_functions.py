@@ -1,5 +1,5 @@
 """Training-data pipeline functions: text stats, dedup tiers,
-similarity search, multimodal plumbing."""
+similarity search."""
 
 from __future__ import annotations
 
@@ -18,7 +18,6 @@ from okapi_spark.functions.dedup import (
     simhash16,
     simhash_near_dups,
 )
-from okapi_spark.functions.multimodal import extract_features, synthesize_media
 from okapi_spark.functions.simsearch import cosine_near_dups, cosine_topk, lsh_topk
 from okapi_spark.functions.text import doc_stats
 
@@ -175,100 +174,6 @@ def test_cosine_near_dups_lsh_matches_exact(spark):
     assert len(exact) >= 1  # the planted pair exists
 
 
-def test_multimodal_feature_extraction(spark):
-    media = synthesize_media(spark, n=64)
-    feats = extract_features(media, feature_dim=8)
-    rows = feats.collect()
-    assert len(rows) == 64
-    assert all(len(r.feature) == 8 for r in rows)
-    # deterministic: same input → same features
-    again = {r.media_id: list(r.feature) for r in extract_features(media, feature_dim=8).collect()}
-    for r in rows:
-        assert again[r.media_id] == list(r.feature)
-    # decode stub is explicit for non-OKPX payloads (real codecs absent)
-    from okapi_spark.functions.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x00")
-
-
-def test_multimodal_real_decode_roundtrip(spark):
-    """OKPX/OKPA payloads decode end-to-end with pure NumPy — the
-    decode→featurize path runs for real on the synthetic corpus."""
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import (
-        decode_audio,
-        decode_image,
-        encode_image,
-    )
-
-    px = np.arange(5 * 7 * 3, dtype=np.uint8).reshape(5, 7, 3)
-    assert (decode_image(encode_image(px)) == px).all()
-
-    media = synthesize_media(spark, n=48)
-    rows = media.collect()
-    kinds = {r.kind for r in rows}
-    assert kinds == {"image", "audio", "video"}
-    for r in rows:
-        if r.kind == "image":
-            arr = decode_image(bytes(r.payload))
-            assert arr.shape == (r.height, r.width, 3)
-        elif r.kind == "audio":
-            rate, samples = decode_audio(bytes(r.payload))
-            assert rate == 8000 and len(samples) > 0
-        else:
-            with pytest.raises(NotImplementedError):
-                decode_image(bytes(r.payload))
-    # pixel-derived features: all-zero vs all-255 images separate on
-    # the mean-channel dims (a hash-fake could not guarantee this)
-    z = encode_image(np.zeros((4, 4, 3), dtype=np.uint8))
-    o = encode_image(np.full((4, 4, 3), 255, dtype=np.uint8))
-    df = spark.createDataFrame(
-        [(1, z), (2, o)], "media_id long, payload binary"
-    )
-    feats = {r.media_id: r.feature for r in extract_features(df, feature_dim=8).collect()}
-    assert feats[1][0] == 0.0 and abs(feats[2][0] - 1.0) < 1e-6
-
-
-def test_multimodal_totality_and_rectangular_features(spark):
-    """ADVICE r4 items: (1) corrupt payloads carrying the OKPX/OKPA
-    magic fall back to the hash feature instead of failing the task;
-    (2) truncated headers raise the descriptive ValueError (not a bare
-    struct/numpy error); (3) the feature column stays rectangular at
-    feature_dim > 32 (hash fallback used to cap at one digest)."""
-    import struct as _struct
-
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import (
-        _AUD_MAGIC,
-        decode_audio,
-        decode_image,
-        encode_image,
-    )
-
-    # (2) header/body validation raises ValueError, not struct/numpy errors
-    with pytest.raises(ValueError):
-        decode_image(b"OKPX\x01")  # magic + partial header
-    with pytest.raises(ValueError):
-        decode_audio(b"OKPA\x01\x40\x1f\x00")  # partial header
-    with pytest.raises(ValueError):
-        # odd-length body: would hit numpy's buffer error un-checked
-        decode_audio(_AUD_MAGIC + _struct.pack("<BII", 1, 8000, 2) + b"\x01\x02\x03")
-
-    # (1)+(3): corrupt-magic rows flow through extract_features, and a
-    # 40-dim run is rectangular across decoded and fallback rows
-    ok = encode_image(np.zeros((4, 4, 3), dtype=np.uint8))
-    df = spark.createDataFrame(
-        [(1, ok), (2, b"OKPX\x01"), (3, _AUD_MAGIC + b"\x07"), (4, b"opaque")],
-        "media_id long, payload binary",
-    )
-    feats = {r.media_id: r.feature for r in extract_features(df, feature_dim=40).collect()}
-    assert set(feats) == {1, 2, 3, 4}
-    assert all(len(v) == 40 for v in feats.values())
-
-
 def test_ivf_topk_recall_and_exact_degeneration(spark):
     from okapi_spark.functions.simsearch import ivf_topk
 
@@ -315,773 +220,3 @@ def test_lang_id_and_token_counts(spark):
     assert got[5].ws == 3
     # foo|123|bar|,|baz|! → 6 BPE-ish units
     assert got[5].bpe == 6
-
-
-def _encode_png(px, filter_types):
-    """Minimal test-side PNG encoder (spec-forward filtering) so the
-    library decoder is exercised against independently built bytes."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, c = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    raw = b""
-    prev = np.zeros(w * c, dtype=np.int16)
-    for y in range(h):
-        cur = px[y].reshape(-1).astype(np.int16)
-        f = filter_types[y % len(filter_types)]
-        if f == 0:
-            filt = cur
-        elif f == 1:  # Sub
-            left = np.concatenate([np.zeros(c, dtype=np.int16), cur[:-c]])
-            filt = cur - left
-        elif f == 2:  # Up
-            filt = cur - prev
-        elif f == 3:  # Average
-            left = np.concatenate([np.zeros(c, dtype=np.int16), cur[:-c]])
-            filt = cur - ((left + prev) >> 1)
-        else:  # Paeth
-            left = np.concatenate([np.zeros(c, dtype=np.int16), cur[:-c]])
-            ul = np.concatenate([np.zeros(c, dtype=np.int16), prev[:-c]])
-            p = left + prev - ul
-            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - ul)
-            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul))
-            filt = cur - pred
-        raw += bytes([f]) + (filt & 0xFF).astype(np.uint8).tobytes()
-        prev = cur
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decode_all_filters_and_color_types():
-    """The built-in pure-zlib/NumPy PNG decoder recovers exact pixels
-    through every scanline filter (None/Sub/Up/Average/Paeth) and all
-    four 8-bit color types."""
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    rng = np.random.RandomState(7)
-    for c in (1, 2, 3, 4):
-        px = rng.randint(0, 256, size=(9, 5, c)).astype(np.uint8)
-        payload = _encode_png(px, filter_types=[0, 1, 2, 3, 4])
-        out = decode_image(payload)
-        assert out.shape == (9, 5, c)
-        assert (out == px).all(), f"PNG c={c} pixel mismatch"
-
-
-def test_bmp_pnm_wav_decode():
-    import struct as _struct
-
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_audio, decode_image
-
-    # --- 24-bit bottom-up BMP with 4-byte row padding (w=3 -> stride 12)
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, size=(4, 3, 3)).astype(np.uint8)
-    stride = (3 * 3 + 3) & ~3
-    rows = b""
-    for y in range(3, -1, -1):  # bottom-up
-        row = px[y][:, ::-1].tobytes()  # RGB -> BGR
-        rows += row + b"\x00" * (stride - len(row))
-    bmp = (
-        b"BM" + _struct.pack("<IHHI", 54 + len(rows), 0, 0, 54)
-        + _struct.pack("<IiiHHIIiiII", 40, 3, 4, 1, 24, 0, len(rows), 0, 0, 0, 0)
-        + rows
-    )
-    assert (decode_image(bmp) == px).all()
-
-    # --- P6 PPM with a comment line
-    ppm = b"P6\n# test\n3 2\n255\n" + px[:2].tobytes()
-    assert (decode_image(ppm) == px[:2]).all()
-    # --- P5 PGM
-    gray = px[:, :, 0]
-    pgm = b"P5 3 4 255\n" + gray.tobytes()
-    assert (decode_image(pgm)[:, :, 0] == gray).all()
-
-    # --- stereo PCM16 WAV averages to mono
-    samples = np.array([[100, 300], [-200, -400], [32000, 32000]], dtype="<i2")
-    data = samples.tobytes()
-    wav = (
-        b"RIFF" + _struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + _struct.pack("<IHHIIHH", 16, 1, 2, 8000, 32000, 4, 16)
-        + b"data" + _struct.pack("<I", len(data)) + data
-    )
-    rate, mono = decode_audio(wav)
-    assert rate == 8000
-    assert list(mono) == [200, -300, 32000]
-
-
-# --- baseline JPEG: test-side encoder + decoder tests -------------------
-
-# Annex K quantization tables (natural/row-major order here; DQT stores
-# them zigzagged below).
-_JPEG_QL = [
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-]
-_JPEG_QC = [
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-]
-# Annex K Huffman table specs: (BITS[1..16], HUFFVAL). The decoder reads
-# whatever tables the DHT segment carries, so encoder/decoder stay
-# self-consistent by construction; the asserts guard canonical validity.
-_DC_L = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0], list(range(12)))
-_DC_C = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0], list(range(12)))
-_AC_L = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-        0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-        0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-        0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-        0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-        0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-        0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-        0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-        0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-_AC_C = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-        0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-        0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-        0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-        0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-        0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-        0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-        0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-        0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-        0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-        0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-        0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-        0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-for _bits, _vals in (_DC_L, _DC_C, _AC_L, _AC_C):
-    assert sum(_bits) == len(_vals)
-
-
-class _JpegBitWriter:
-    """MSB-first bit accumulator with 0xFF byte stuffing (T.81
-    B.1.1.5); flush pads the final partial byte with 1-bits."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value, length):
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc, self.nbits = 0, 0
-
-    def flush(self):
-        while self.nbits:
-            self.put(1, 1)
-
-
-def _jpeg_codes(bits, vals):
-    """Canonical Huffman assignment (same walk as the decoder LUT):
-    symbol -> (code, length)."""
-    codes, code, i = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[vals[i]] = (code, length)
-            code += 1
-            i += 1
-        code <<= 1
-    return codes
-
-
-def _jpeg_quality_scale(tbl, quality):
-    import numpy as np
-
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return np.clip((np.array(tbl, dtype=np.int64) * scale + 50) // 100, 1, 255)
-
-
-def _jpeg_quantize(px, quality, subsample):
-    """Shared encoder front half: color transform, subsampling, forward
-    DCT, quantization. Returns (gray, h_img, w_img, samp, qzig,
-    quantized-blocks-per-component, mcus_x, mcus_y)."""
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import _DCT_C, _ZIGZAG
-
-    px = np.asarray(px)
-    gray = px.ndim == 2
-    h_img, w_img = px.shape[:2]
-    if gray:
-        planes = [px.astype(np.float64)]
-        samp = [(1, 1)]
-    else:
-        rgb = px.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        planes = [y, cb, cr]
-        samp = [(2, 2), (1, 1), (1, 1)] if subsample == "420" else [(1, 1)] * 3
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    qzig = [
-        _jpeg_quality_scale(_JPEG_QL, quality)[_ZIGZAG],
-        _jpeg_quality_scale(_JPEG_QC, quality)[_ZIGZAG],
-    ]
-    qnat = [np.zeros(64, dtype=np.int64) for _ in range(2)]
-    for t in range(2):
-        qnat[t][_ZIGZAG] = qzig[t]
-
-    mcus_x = -(-w_img // (8 * hmax))
-    mcus_y = -(-h_img // (8 * vmax))
-
-    def comp_blocks(plane, sh, sv):
-        # downsample by box mean to the component resolution, pad by
-        # edge replication to whole MCUs, return (rows, cols, 8, 8)
-        fy, fx = vmax // sv, hmax // sh
-        if fy > 1 or fx > 1:
-            ph = -(-plane.shape[0] // fy) * fy
-            pw = -(-plane.shape[1] // fx) * fx
-            plane = np.pad(plane, ((0, ph - plane.shape[0]), (0, pw - plane.shape[1])), mode="edge")
-            plane = plane.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        rows, cols = mcus_y * sv, mcus_x * sh
-        plane = np.pad(
-            plane,
-            ((0, rows * 8 - plane.shape[0]), (0, cols * 8 - plane.shape[1])),
-            mode="edge",
-        )
-        return plane.reshape(rows, 8, cols, 8).transpose(0, 2, 1, 3)
-
-    quantized = []
-    for ci, (plane, (sh, sv)) in enumerate(zip(planes, samp)):
-        blocks = comp_blocks(plane, sh, sv) - 128.0
-        freq = np.einsum("ij,rcjk,kl->rcil", _DCT_C, blocks, _DCT_C.T)
-        qt = qnat[0 if ci == 0 else 1].reshape(8, 8)
-        quantized.append(np.round(freq / qt).astype(np.int64))
-    return gray, h_img, w_img, samp, qzig, quantized, mcus_x, mcus_y
-
-
-def _encode_jpeg(px, quality=90, subsample="444", restart_interval=0):
-    """Minimal test-side baseline JPEG encoder (spec-forward: forward
-    DCT + Annex K tables) so the library decoder is exercised against
-    independently built bytes. Supports gray (HxW) and RGB (HxWx3),
-    4:4:4 or 4:2:0 chroma, and DRI/RSTn restart intervals."""
-    import struct
-
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import _ZIGZAG
-
-    gray, h_img, w_img, samp, qzig, quantized, mcus_x, mcus_y = _jpeg_quantize(
-        px, quality, subsample
-    )
-
-    dc_codes = [_jpeg_codes(*_DC_L), _jpeg_codes(*_DC_C)]
-    ac_codes = [_jpeg_codes(*_AC_L), _jpeg_codes(*_AC_C)]
-
-    def encode_block(bw, zz, pred, tid):
-        diff = int(zz[0]) - pred
-        t = abs(diff).bit_length()
-        code, length = dc_codes[tid][t]
-        bw.put(code, length)
-        if t:
-            bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        run = 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                code, length = ac_codes[tid][0xF0]
-                bw.put(code, length)
-                run -= 16
-            s = abs(v).bit_length()
-            code, length = ac_codes[tid][(run << 4) | s]
-            bw.put(code, length)
-            bw.put(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if run:
-            code, length = ac_codes[tid][0x00]
-            bw.put(code, length)
-        return int(zz[0])
-
-    bw = _JpegBitWriter()
-    preds = [0] * len(quantized)
-    entropy = bytearray()
-    rst = 0
-    for m in range(mcus_x * mcus_y):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            entropy += bw.out + bytes([0xFF, 0xD0 + (rst % 8)])
-            rst += 1
-            bw = _JpegBitWriter()
-            preds = [0] * len(quantized)
-        my, mx = divmod(m, mcus_x)
-        for ci, (sh, sv) in enumerate(samp):
-            tid = 0 if ci == 0 else 1
-            for by in range(sv):
-                for bx in range(sh):
-                    nat = quantized[ci][my * sv + by, mx * sh + bx].reshape(64)
-                    preds[ci] = encode_block(bw, nat[_ZIGZAG], preds[ci], tid)
-    bw.flush()
-    entropy += bw.out
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    ntab = 1 if gray else 2
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65 * ntab)
-    for t in range(ntab):
-        out += bytes([t]) + bytes(int(x) for x in qzig[t])
-    ncomp = len(quantized)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h_img, w_img, ncomp)
-    for ci, (sh, sv) in enumerate(samp):
-        out += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    tables = [(0, 0, _DC_L), (1, 0, _AC_L)] + ([] if gray else [(0, 1, _DC_C), (1, 1, _AC_C)])
-    for tc, th, (bits, vals) in tables:
-        out += b"\xff\xc4" + struct.pack(">H", 2 + 17 + len(vals))
-        out += bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for ci in range(ncomp):
-        td_ta = 0 if ci == 0 else 0x11
-        out += bytes([ci + 1, td_ta])
-    out += b"\x00\x3f\x00"
-    out += entropy + b"\xff\xd9"
-    return bytes(out)
-
-
-# Flat AC Huffman table for the progressive test encoder: every symbol
-# we can emit — (r<<4)|s for s<=10 plus the EOB-run symbols (nb<<4) and
-# ZRL — at a fixed 8-bit code (176 symbols < 255, so the all-ones code
-# stays unused as T.81 C.2 requires). Annex K tables lack the EOB-run
-# symbols progressive scans need, and the decoder reads tables from
-# DHT anyway.
-_AC_FLAT_SYMS = [x for x in range(256) if (x & 0xF) <= 10]
-_AC_FLAT = ([0] * 7 + [len(_AC_FLAT_SYMS)] + [0] * 8, _AC_FLAT_SYMS)
-
-
-def _encode_jpeg_progressive(px, quality=90, subsample="444"):
-    """Test-side progressive (SOF2) encoder: spectral selection AND
-    successive approximation (T.81 Annex G), so the library decoder's
-    DC-first / DC-refine / AC-first (EOB runs) / AC-refine (correction
-    bits) paths are all exercised against independently built bytes.
-
-    Scan script: DC first interleaved (Al=1); per component AC first
-    over split bands 1-5 and 6-63 at Al=2; DC refine (Ah=1,Al=0); per
-    component AC refine of both bands at Ah=2→Al=1 then Ah=1→Al=0.
-    Every coefficient bit reaches Al=0, so decoding MUST reproduce the
-    baseline decode of the same quantized coefficients exactly."""
-    import struct
-
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import _ZIGZAG
-
-    gray, h_img, w_img, samp, qzig, quantized, mcus_x, mcus_y = _jpeg_quantize(
-        px, quality, subsample
-    )
-    ncomp = len(quantized)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    dc_codes = _jpeg_codes(*_DC_L)
-    ac_codes = _jpeg_codes(*_AC_FLAT)
-
-    def extend_bits(v, t):
-        return v if v >= 0 else v + (1 << t) - 1
-
-    def comp_grid(ci):
-        # the non-interleaved block raster the decoder walks:
-        # ceil(ceil(dim*sampling/max)/8) per axis (T.81 A.2.2)
-        sh, sv = samp[ci]
-        bw_ = -(-(-(-w_img * sh // hmax)) // 8)
-        bh_ = -(-(-(-h_img * sv // vmax)) // 8)
-        return bw_, bh_
-
-    def zz_block(ci, by, bx):
-        return quantized[ci][by, bx].reshape(64)[_ZIGZAG]
-
-    def dc_first_scan(al):
-        bwr = _JpegBitWriter()
-        preds = [0] * ncomp
-        for m in range(mcus_x * mcus_y):
-            my, mx = divmod(m, mcus_x)
-            for ci, (sh, sv) in enumerate(samp):
-                for by in range(sv):
-                    for bx in range(sh):
-                        val = int(quantized[ci][my * sv + by, mx * sh + bx][0, 0]) >> al
-                        diff = val - preds[ci]
-                        preds[ci] = val
-                        t = abs(diff).bit_length()
-                        code, length = dc_codes[t]
-                        bwr.put(code, length)
-                        if t:
-                            bwr.put(extend_bits(diff, t), t)
-        bwr.flush()
-        return bytes(bwr.out)
-
-    def dc_refine_scan(al):
-        bwr = _JpegBitWriter()
-        for m in range(mcus_x * mcus_y):
-            my, mx = divmod(m, mcus_x)
-            for ci, (sh, sv) in enumerate(samp):
-                for by in range(sv):
-                    for bx in range(sh):
-                        c = int(quantized[ci][my * sv + by, mx * sh + bx][0, 0])
-                        bwr.put((c >> al) & 1, 1)
-        bwr.flush()
-        return bytes(bwr.out)
-
-    def ac_first_scan(ci, ss, se, al):
-        bw_, bh_ = comp_grid(ci)
-        bwr = _JpegBitWriter()
-        eobrun = 0
-
-        def flush_eob():
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                code, length = ac_codes[nb << 4]
-                bwr.put(code, length)
-                if nb:
-                    bwr.put(eobrun - (1 << nb), nb)
-                eobrun = 0
-
-        for u in range(bw_ * bh_):
-            by, bx = divmod(u, bw_)
-            zz = zz_block(ci, by, bx)
-            vals = [
-                (1 if int(zz[k]) >= 0 else -1) * (abs(int(zz[k])) >> al)
-                for k in range(ss, se + 1)
-            ]
-            nz = [i for i, v in enumerate(vals) if v != 0]
-            if not nz:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eob()
-                continue
-            flush_eob()
-            r = 0
-            for i in range(nz[-1] + 1):
-                v = vals[i]
-                if v == 0:
-                    r += 1
-                    continue
-                while r > 15:
-                    code, length = ac_codes[0xF0]
-                    bwr.put(code, length)
-                    r -= 16
-                s = abs(v).bit_length()
-                code, length = ac_codes[(r << 4) | s]
-                bwr.put(code, length)
-                bwr.put(extend_bits(v, s), s)
-                r = 0
-            if nz[-1] < len(vals) - 1:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eob()
-        flush_eob()
-        bwr.flush()
-        return bytes(bwr.out)
-
-    def ac_refine_scan(ci, ss, se, al):
-        # T.81 G.1.2.3 encoder side (the libjpeg AC-refine algorithm):
-        # correction bits for history-nonzero coefficients are buffered
-        # and emitted after the next run/EOB symbol, in position order.
-        bw_, bh_ = comp_grid(ci)
-        bwr = _JpegBitWriter()
-        eobrun = 0
-        be_bits: list[int] = []
-
-        def flush_eob():
-            nonlocal eobrun, be_bits
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                code, length = ac_codes[nb << 4]
-                bwr.put(code, length)
-                if nb:
-                    bwr.put(eobrun - (1 << nb), nb)
-                for b in be_bits:
-                    bwr.put(b, 1)
-                eobrun, be_bits = 0, []
-
-        for u in range(bw_ * bh_):
-            by, bx = divmod(u, bw_)
-            zz = zz_block(ci, by, bx)
-            raw = [int(zz[k]) for k in range(ss, se + 1)]
-            absv = [abs(v) >> al for v in raw]
-            eob = -1
-            for i, t in enumerate(absv):
-                if t == 1:
-                    eob = i
-            r = 0
-            br: list[int] = []
-            for i, t in enumerate(absv):
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15 and i <= eob:
-                    flush_eob()
-                    code, length = ac_codes[0xF0]
-                    bwr.put(code, length)
-                    r -= 16
-                    for b in br:
-                        bwr.put(b, 1)
-                    br = []
-                if t > 1:  # history-nonzero: correction bit only
-                    br.append(t & 1)
-                    continue
-                flush_eob()
-                code, length = ac_codes[(r << 4) | 1]
-                bwr.put(code, length)
-                bwr.put(1 if raw[i] > 0 else 0, 1)
-                for b in br:
-                    bwr.put(b, 1)
-                br = []
-                r = 0
-            if r > 0 or br:
-                eobrun += 1
-                be_bits.extend(br)
-                if eobrun == 0x7FFF:
-                    flush_eob()
-        flush_eob()
-        bwr.flush()
-        return bytes(bwr.out)
-
-    def sos(comp_list, ss, se, ah, al):
-        seg = struct.pack(">HB", 6 + 2 * len(comp_list), len(comp_list))
-        for cid, td, ta in comp_list:
-            seg += bytes([cid, (td << 4) | ta])
-        seg += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + seg
-
-    all_comps = [(ci + 1, 0, 0) for ci in range(ncomp)]
-    scans = [(sos(all_comps, 0, 0, 0, 1), dc_first_scan(1))]
-    for ci in range(ncomp):
-        one = [(ci + 1, 0, 0)]
-        scans.append((sos(one, 1, 5, 0, 2), ac_first_scan(ci, 1, 5, 2)))
-        scans.append((sos(one, 6, 63, 0, 2), ac_first_scan(ci, 6, 63, 2)))
-    scans.append((sos(all_comps, 0, 0, 1, 0), dc_refine_scan(0)))
-    for ah, al in ((2, 1), (1, 0)):
-        for ci in range(ncomp):
-            one = [(ci + 1, 0, 0)]
-            scans.append((sos(one, 1, 5, ah, al), ac_refine_scan(ci, 1, 5, al)))
-            scans.append((sos(one, 6, 63, ah, al), ac_refine_scan(ci, 6, 63, al)))
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    ntab = 1 if gray else 2
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65 * ntab)
-    for t in range(ntab):
-        out += bytes([t]) + bytes(int(x) for x in qzig[t])
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h_img, w_img, ncomp)
-    for ci, (sh, sv) in enumerate(samp):
-        out += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    for tc, th, (bits, vals) in ((0, 0, _DC_L), (1, 0, _AC_FLAT)):
-        out += b"\xff\xc4" + struct.pack(">H", 2 + 17 + len(vals))
-        out += bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-    for header, entropy in scans:
-        out += header + entropy
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _psnr(a, b):
-    import numpy as np
-
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    return 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
-
-
-def _smooth_test_image(h, w, seed=3):
-    """Low-frequency content + mild noise — the signal class JPEG is
-    designed for, so roundtrip PSNR is a meaningful fidelity check."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    base = np.stack(
-        [
-            128 + 90 * np.sin(xx / 9.0) * np.cos(yy / 7.0),
-            128 + 80 * np.cos(xx / 13.0 + 1.0),
-            128 + 70 * np.sin((xx + yy) / 11.0),
-        ],
-        axis=2,
-    )
-    rng = np.random.RandomState(seed)
-    return np.clip(base + rng.normal(0, 3, size=(h, w, 3)), 0, 255).astype(np.uint8)
-
-
-def test_jpeg_roundtrip_444():
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    px = _smooth_test_image(41, 53)  # non-multiple-of-8 dims exercise padding/crop
-    payload = _encode_jpeg(px, quality=90, subsample="444")
-    out = decode_image(payload)
-    assert out.shape == (41, 53, 3) and out.dtype == np.uint8
-    assert _psnr(out, px) > 33.0
-
-
-def test_jpeg_roundtrip_420_with_restart_markers():
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    px = _smooth_test_image(35, 49, seed=5)
-    payload = _encode_jpeg(px, quality=85, subsample="420", restart_interval=2)
-    assert b"\xff\xdd" in payload and b"\xff\xd0" in payload  # DRI + RST0 present
-    out = decode_image(payload)
-    assert out.shape == (35, 49, 3) and out.dtype == np.uint8
-    assert _psnr(out, px) > 28.0
-
-
-def test_jpeg_progressive_matches_baseline_exactly():
-    """Progressive (SOF2) with spectral selection + successive
-    approximation refined down to Al=0 carries exactly the same
-    quantized coefficients as the baseline encoding — so the decodes
-    must be bit-identical, not merely close."""
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    px = _smooth_test_image(41, 53)
-    base = decode_image(_encode_jpeg(px, quality=90, subsample="444"))
-    payload = _encode_jpeg_progressive(px, quality=90, subsample="444")
-    assert payload[3] == 0xE0 and b"\xff\xc2" in payload  # SOF2 present
-    prog = decode_image(payload)
-    assert np.array_equal(prog, base)
-    assert _psnr(prog, px) > 33.0
-
-
-def test_jpeg_progressive_420_gray_and_sparse():
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    px = _smooth_test_image(35, 49, seed=5)
-    base = decode_image(_encode_jpeg(px, quality=85, subsample="420"))
-    prog = decode_image(_encode_jpeg_progressive(px, quality=85, subsample="420"))
-    assert np.array_equal(prog, base)
-
-    gray = px[:, :, 0]
-    bg = decode_image(_encode_jpeg(gray, quality=92))
-    pg = decode_image(_encode_jpeg_progressive(gray, quality=92))
-    assert np.array_equal(pg, bg)
-
-    # low quality → mostly-zero bands → long EOB runs and ZRL paths
-    px3 = _smooth_test_image(64, 80, seed=11)
-    b3 = decode_image(_encode_jpeg(px3, quality=25, subsample="420"))
-    p3 = decode_image(_encode_jpeg_progressive(px3, quality=25, subsample="420"))
-    assert np.array_equal(p3, b3)
-
-
-def test_jpeg_gray_and_constant_color():
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    gray = _smooth_test_image(24, 24)[:, :, 0]
-    out = decode_image(_encode_jpeg(gray, quality=92))
-    assert out.shape == (24, 24, 1)
-    assert _psnr(out[:, :, 0], gray) > 33.0
-
-    flat = np.full((16, 16, 3), 130, dtype=np.uint8)
-    out = decode_image(_encode_jpeg(flat, quality=75))
-    # constant image has only DC energy; quantization error is tiny
-    assert np.abs(out.astype(int) - 130).max() <= 3
-
-
-def test_jpeg_unsupported_and_truncated():
-    import struct
-
-    import pytest as _pytest
-
-    from okapi_spark.functions.multimodal import decode_image
-
-    # arithmetic-coded (SOF9) is an honest stub, not a wrong answer
-    # (progressive SOF2 is decoded for real since round 5)
-    sof9 = b"\xff\xd8\xff\xc9" + struct.pack(">HBHHB", 8, 8, 16, 16, 1)
-    with _pytest.raises(NotImplementedError):
-        decode_image(sof9)
-    # progressive stream truncated before any SOS fails loudly, as
-    # does an SOF whose component list is cut off mid-segment
-    sof2 = (
-        b"\xff\xd8\xff\xc2"
-        + struct.pack(">HBHHB", 11, 8, 16, 16, 1)
-        + bytes([1, 0x11, 0])
-    )
-    with _pytest.raises(ValueError):
-        decode_image(sof2)
-    sof2_cut = b"\xff\xd8\xff\xc2" + struct.pack(">HBHHB", 8, 8, 16, 16, 1)
-    with _pytest.raises(ValueError):
-        decode_image(sof2_cut)
-    # truncated entropy stream fails loudly with ValueError
-    px = _smooth_test_image(16, 16)
-    payload = _encode_jpeg(px, quality=90)
-    with _pytest.raises(ValueError):
-        decode_image(payload[: len(payload) // 2])
-
-
-def test_jpeg_flows_through_extract_features(spark):
-    """A JPEG payload takes the real decode branch of extract_features
-    (feature == featurize(decode(payload)), not the hash fallback)."""
-    import numpy as np
-
-    from okapi_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        _image_feature,
-        decode_image,
-        extract_features,
-    )
-
-    px = _smooth_test_image(17, 19, seed=9)
-    payload = _encode_jpeg(px, quality=88)
-    row = [(1, "image", "image/jpeg", 19, 17, None, bytearray(payload))]
-    df = spark.createDataFrame(row, MEDIA_SCHEMA)
-    got = extract_features(df, feature_dim=8).collect()[0]
-    expected = _image_feature(decode_image(payload), 8)
-    assert np.allclose(np.array(got.feature, dtype=np.float32), expected)

@@ -162,7 +162,7 @@ def test_triangle_count_csr_hashed_ids_densify(spark, monkeypatch):
     # the broadcast only exists in the staged placement (fuse window 0);
     # inside the window the driver relabels its own gathered copy
     monkeypatch.setattr(fx, "_FUSE_MAX_EDGES", 0)
-    monkeypatch.setattr(B, "auto_state_broadcast", lambda *a, **k: False)
+    monkeypatch.setattr(B, "STATE_BROADCAST_BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match="mode='sql'"):
         triangle_count(g2, mode="csr")
 
